@@ -8,23 +8,20 @@ Covers SURVEY §2.2:
 - D11 envelope construction           (RecordMaker.createRecord:58-96)
 - D12 event-time assignment           (handleRowModifications:429)
 - D13 envelope SMT op remap i/u/d/r -> c/u/d/t (EnvelopeTransformation.apply:30-66)
-- S5  binary segment decode analog — a vectorized Arrow (pandas) UDF parsing a
-      serialized payload into typed cells, standing in for Cassandra's
-      CommitLogReader (Cassandra4CommitLogSegmentReader.java:29-33).
+- S5  serialized-payload decode analog — from_json parsing a JSON payload
+      into typed cells, standing in for Cassandra's CommitLogReader
+      (Cassandra4CommitLogSegmentReader.java:29-33); the binary layout's
+      vectorized decoder is functions/binary_codec.py.
 
-Everything except the binary path is pure Catalyst column expressions
-(whole-stage codegen, no Python in the hot loop).
+Everything here is pure Catalyst column expressions (whole-stage codegen, no
+Python in the hot loop).
 """
 
 from __future__ import annotations
 
-import json
+from pyspark.sql import Column, DataFrame, functions as F
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-from pyspark.sql.functions import pandas_udf
-
-from ..model import CELLS_TYPE, REGULAR_COLUMNS
+from ..model import CELLS_TYPE
 
 # ---------------------------------------------------------------------------
 # classification — D3/D4. Our synthetic log carries the op code directly, but
@@ -278,13 +275,9 @@ def explode_mt_batch_mutations(log: DataFrame) -> DataFrame:
 # S5 analog — binary payload decode.
 #
 # The generator can serialize `cells` to a compact JSON byte payload (the
-# stand-in for Cassandra's binary mutation encoding). Two decoders with
-# identical semantics:
-#   decode_payload_jvm   — from_json, stays in whole-stage codegen (hot path)
-#   decode_payload_arrow — @pandas_udf over Arrow record batches (the
-#                          vectorized-UDF decode mandated by the north star;
-#                          per-batch Python, never per-row Spark rows)
-# Tests assert the two produce identical cells.
+# stand-in for Cassandra's binary mutation encoding); decode_payload_jvm
+# parses it with from_json, inside whole-stage codegen. The vectorized
+# decode of the real binary layout is functions/binary_codec.py.
 # ---------------------------------------------------------------------------
 
 _PAYLOAD_JSON_SCHEMA = CELLS_TYPE
@@ -316,35 +309,3 @@ def decode_payload_jvm(df: DataFrame) -> DataFrame:
         F.from_json(F.decode(F.col("payload"), "utf-8"), _PAYLOAD_JSON_SCHEMA,
                     {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}),
     ).drop("payload")
-
-
-@pandas_udf(CELLS_TYPE)
-def _decode_cells_arrow(payload: pd.Series) -> pd.DataFrame:
-    """Arrow-vectorized payload decode: one Python call per record batch.
-
-    Returns a pandas DataFrame whose columns are the cell structs; pandas
-    dict-of-dict columns map onto the nested StructType via Arrow.
-    """
-    def parse(b):
-        if b is None:
-            return {n: None for n in REGULAR_COLUMNS}
-        d = json.loads(bytes(b).decode("utf-8"))
-        out = {}
-        for n in REGULAR_COLUMNS:
-            c = d.get(n)
-            if c is None:
-                out[n] = None
-                continue
-            v = c.get("value")
-            if n == "ts" and v is not None:
-                v = pd.Timestamp(v).tz_localize(None) if pd.Timestamp(v).tzinfo is None else pd.Timestamp(v).tz_convert("UTC").tz_localize(None)
-            out[n] = {"value": v, "deletion_ts": c.get("deletion_ts"), "set": bool(c.get("set", False))}
-        return out
-
-    parsed = payload.map(parse)
-    return pd.DataFrame({n: parsed.map(lambda d, n=n: d[n]) for n in REGULAR_COLUMNS})
-
-
-def decode_payload_arrow(df: DataFrame) -> DataFrame:
-    """Arrow pandas-UDF decode of the binary payload (S5 fidelity path)."""
-    return df.withColumn("cells", _decode_cells_arrow(F.col("payload"))).drop("payload")

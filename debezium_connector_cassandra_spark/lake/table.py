@@ -110,6 +110,15 @@ class LakeTable:
     def exists(cls, path: str) -> bool:
         return os.path.exists(os.path.join(path, "_current"))
 
+    @classmethod
+    def open_or_create(
+        cls, spark: SparkSession, path: str, schema: T.StructType, key_col: str, n_buckets: int
+    ) -> "LakeTable":
+        """Open the table at ``path``; create it empty when absent."""
+        if cls.exists(path):
+            return cls(spark, path)
+        return cls.create(spark, path, schema, key_col, n_buckets)
+
     # -- manifest plumbing -------------------------------------------------
     def _write_manifest(self, manifest: dict) -> None:
         v = manifest["version"]

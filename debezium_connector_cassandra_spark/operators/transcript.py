@@ -31,21 +31,30 @@ ASSEMBLY_SCHEMA = T.StructType(
 )
 
 
+def open_assembly(spark, path: str, target):
+    """Open (or create) a maintained transcript view at ``path``. The view
+    MUST share the state's bucket function: ``refresh_assembly`` rewrites
+    the state bucket ids a batch's pre-scan reports as assembly buckets."""
+    from ..lake.table import LakeTable
+
+    n_buckets = target.state.manifest()["n_buckets"]
+    return LakeTable.open_or_create(spark, path, ASSEMBLY_SCHEMA, "conv_id", n_buckets)
+
+
 def refresh_assembly(
     assembly,
     target,
-    batch_keys: DataFrame,
+    buckets: list[int],
     role_col: str | None = "role",
     text_col: str = "text",
 ) -> None:
     """Maintained-view refresh step shared by every ingest front-end
     (CdcRunner, CdcStream, MultiTableRunner/Stream, SnapshotProcessor):
-    re-assemble exactly the state buckets the batch's conversations hash
-    into and COW-swap them.  Whole-bucket recompute-from-state is
+    re-assemble the given state buckets — the batch's touched buckets from
+    its pre-scan — and COW-swap them.  Whole-bucket recompute-from-state is
     idempotent under replay and drops fully-deleted conversations; the
-    assembly table shares the state's bucket function, so the state read
-    is file-pruned to the touched buckets."""
-    buckets = assembly.buckets_for_keys(batch_keys.select("conv_id").distinct())
+    assembly table shares the state's bucket function, so state bucket ids
+    are assembly bucket ids and the state read is file-pruned to them."""
     if not buckets:
         return
     touched = target.read_transcripts(buckets=buckets)

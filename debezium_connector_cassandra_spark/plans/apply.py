@@ -30,7 +30,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..lake.table import LakeTable
+from ..functions.decode import UNSUPPORTED_KINDS
+from ..lake.table import LakeTable, bucket_expr
 from ..model import STATE_SCHEMA, state_schema_for
 from ..operators.dedup import dedup_events
 from ..operators.lww import (
@@ -120,6 +121,81 @@ class CdcTarget:
         return self.state.read(buckets=buckets, version=version).select(*cols)
 
 
+_KINDS = ("d", "p", "r")
+
+
+def prescan(log: DataFrame, targets: dict[str, CdcTarget]) -> list[dict]:
+    """The batch's one narrow pre-scan: a single column-pruned job whose
+    output feeds both ``apply_batch`` (via ``batch_stats``) and the
+    offsets/lineage bookkeeping.
+
+    Returns one dict per (table, segment, log_partition) group present in
+    ``log``: ``fqtn`` ("" for a single-table log without keyspace/table
+    columns), ``segment_id``, ``log_partition``, the row count ``n``,
+    ``max_pos``, ``max_wt``, ``n_unsup`` (unsupported-kind rows, which still
+    advance offsets but are skipped by the apply), per-kind tombstone counts
+    ``n_d``/``n_p``/``n_r`` over supported rows, and ``bucket_pairs``: the
+    touched (state bucket, tombstone-store bucket) pairs of ``targets[fqtn]``,
+    computed with ``bucket_expr`` itself. The pair set is bounded by the
+    bucket-count product, never by event count."""
+    multi = "keyspace" in log.columns and "table" in log.columns
+    keys = [c for c in ("keyspace", "table", "segment_id", "log_partition") if c in log.columns]
+    unsup = F.lit(False)
+    if "table_kind" in log.columns:
+        unsup = F.coalesce(F.col("table_kind").isin(*UNSUPPORTED_KINDS), unsup)
+
+    def pair(t: CdcTarget) -> F.Column:
+        sm, tm = t.state.manifest(), t.tombstones.manifest()
+        return F.struct(
+            bucket_expr(sm["key_col"], sm["n_buckets"]).alias("sb"),
+            bucket_expr(tm["key_col"], tm["n_buckets"]).alias("tb"),
+        )
+
+    if multi:  # each table's rows get the pair of its own target
+        pairs = F
+        for fqtn, t in targets.items():
+            ks, table = fqtn.split(".", 1)
+            pairs = pairs.when((F.col("keyspace") == ks) & (F.col("table") == table), pair(t))
+    else:
+        pairs = pair(targets[""])
+    rows = (
+        log.groupBy(*keys)
+        .agg(
+            F.count("*").alias("n"),
+            F.max("position").alias("max_pos"),
+            F.max("writetime").alias("max_wt"),
+            F.sum(unsup.cast("long")).alias("n_unsup"),
+            *[F.sum(((F.col("op") == k) & ~unsup).cast("long")).alias(f"n_{k}") for k in _KINDS],
+            F.collect_set(pairs).alias("bucket_pairs"),
+        )
+        .collect()
+    )
+    return [
+        {
+            **r.asDict(),
+            "fqtn": f"{r['keyspace']}.{r['table']}" if multi else "",
+            "bucket_pairs": [(p["sb"], p["tb"]) for p in r["bucket_pairs"]],
+        }
+        for r in rows
+    ]
+
+
+def batch_stats(rows: list[dict]) -> dict:
+    """``apply_batch``'s ``stats`` for the pre-scan rows of one table's
+    slice: applied-event and per-kind counts plus the touched bucket pairs
+    (a superset when skipped rows are included — an extra bucket only costs
+    an idempotent rewrite)."""
+    stats = {"n": sum(r["n"] - r["n_unsup"] for r in rows)}
+    stats.update({k: sum(r[f"n_{k}"] for r in rows) for k in _KINDS})
+    stats["bucket_pairs"] = sorted({p for r in rows for p in r["bucket_pairs"]})
+    return stats
+
+
+def state_buckets(stats: dict) -> list[int]:
+    """The state bucket ids a batch touches, from its ``batch_stats``."""
+    return sorted({sb for sb, _ in stats["bucket_pairs"]})
+
+
 def apply_batch(
     target: CdcTarget,
     batch: DataFrame,
@@ -128,11 +204,11 @@ def apply_batch(
 ) -> dict:
     """Apply one decoded mutation batch to the target. Returns metrics.
 
-    ``stats`` — optional precomputed ``{"n": total, "d": ..., "p": ...,
-    "r": ...}`` event counts (the runner folds them into its narrow
-    offsets/lineage pre-scan, so the batch is scanned exactly once at full
-    width — by the reduction). When absent, a single column-pruned counting
-    job computes them here.
+    ``stats`` — the batch's ``batch_stats`` (event counts per op kind and
+    the touched bucket pairs). The front-ends take it from the pre-scan they
+    already run for offsets and lineage, so the batch is scanned exactly
+    once at full width, by the reduction. When absent, ``prescan`` computes
+    it here in one narrow job.
 
     Steps map to SURVEY operators: D3-D12 are upstream in decode ->
     R6 (reduce+merge) -> tombstone persistence (Cassandra gc_grace analog).
@@ -160,24 +236,9 @@ def apply_batch(
     if strict_dedup:
         batch = dedup_events(batch)
     if stats is None:
-        # one job: total + per-op-kind event counts (column-pruned scan;
-        # the batch is NOT cached — a pass over it is a pruned parquet
-        # scan, cheaper than materializing wide rows)
-        stats = (
-            batch.agg(
-                F.count("*").alias("n"),
-                *[
-                    F.coalesce(
-                        F.sum(F.when(F.col("op") == k, 1).otherwise(0)), F.lit(0)
-                    ).alias(k)
-                    for k in ("d", "p", "r")
-                ],
-            )
-            .collect()[0]
-            .asDict()
-        )
+        stats = batch_stats(prescan(batch, {"": target}))
     n_events = stats["n"]
-    kind_counts = {k: stats[k] for k in ("d", "p", "r")}
+    kind_counts = {k: stats[k] for k in _KINDS}
     n_tombs = sum(kind_counts.values())
     _mark("stats")
 
@@ -192,32 +253,11 @@ def apply_batch(
         batch, kinds=tuple(k for k in ("p", "r") if kind_counts.get(k))
     )  # 'd' is folded into the reduction, never joined
 
-    # --- touched buckets -----------------------------------------------
-    # Distinct (state bucket, tombstone-store bucket) pairs over every
-    # conv_id the batch touches — upsert/delete keys AND partition/range
-    # tombstone targets are all just the batch's conv_ids. The runner
-    # folds the pairs into its narrow pre-scan (``stats["bucket_pairs"]``,
-    # a bounded collect_set) so the steady-state loop never runs a
-    # discovery job; direct callers fall back to one column-pruned
-    # map-side-combined distinct, bounded by the bucket-count product.
-    # This replaces two separate jobs that each materialized the
-    # full-width key reduction just to enumerate buckets.
-    pairs = stats.get("bucket_pairs") if isinstance(stats, dict) else None
-    if pairs is None:
-        from ..lake.table import bucket_expr
-
-        state_m = target.state.manifest()
-        store_m = target.tombstones.manifest()
-        pairs = [
-            (r["_sb"], r["_tb"])
-            for r in batch.select(
-                bucket_expr(state_m["key_col"], state_m["n_buckets"]).alias("_sb"),
-                bucket_expr(store_m["key_col"], store_m["n_buckets"]).alias("_tb"),
-            )
-            .distinct()
-            .collect()
-        ]
-    bucket_ids = sorted({sb for sb, _ in pairs})
+    # the pre-scan's touched (state bucket, tombstone-store bucket) pairs:
+    # the batch's conv_ids, upsert/delete keys and partition/range targets
+    # alike, so no discovery job re-reads the batch
+    pairs = stats["bucket_pairs"]
+    bucket_ids = state_buckets(stats)
     _mark("touched-buckets")
 
     # --- per-key reduction (i/u/d in ONE hash agg) ---------------------
@@ -244,53 +284,50 @@ def apply_batch(
         )
 
     # --- kill + merge target (only touched buckets are read/rewritten)
-    try:
-        if target.state.is_empty():
-            merged = drop_invisible(batch_state)
-        else:
-            tgt = target.state.read(buckets=bucket_ids)
-            if new_tombs.partition is not None or new_tombs.range is not None:
-                # conv-grain kills for target keys absent from the batch
-                tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
-            merged = merge_states(tgt, batch_state)
+    if target.state.is_empty():
+        merged = drop_invisible(batch_state)
+    else:
+        tgt = target.state.read(buckets=bucket_ids)
+        if new_tombs.partition is not None or new_tombs.range is not None:
+            # conv-grain kills for target keys absent from the batch
+            tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
+        merged = merge_states(tgt, batch_state)
 
-        if bucket_ids:
-            new_version = target.state.overwrite_buckets(merged, bucket_ids)
-        else:
-            new_version = target.state.current_version()
-        _mark("merge+cow-write")
+    if bucket_ids:
+        new_version = target.state.overwrite_buckets(merged, bucket_ids)
+    else:
+        new_version = target.state.current_version()
+    _mark("merge+cow-write")
 
-        # --- persist new tombstones for future out-of-order batches -------
-        if n_tombs:
-            d_rows = (
-                reduced.where(F.col("_d_wt").isNotNull()).select(
-                    F.lit("d").alias("kind"),
-                    "conv_id",
-                    F.col("turn_idx").alias("lo"),
-                    F.col("turn_idx").alias("hi"),
-                    F.lit(True).alias("lo_incl"),
-                    F.lit(True).alias("hi_incl"),
-                    F.col("_d_wt").alias("wt"),
-                )
-                if kind_counts["d"]
-                else None
+    # --- persist new tombstones for future out-of-order batches -------
+    if n_tombs:
+        d_rows = (
+            reduced.where(F.col("_d_wt").isNotNull()).select(
+                F.lit("d").alias("kind"),
+                "conv_id",
+                F.col("turn_idx").alias("lo"),
+                F.col("turn_idx").alias("hi"),
+                F.lit(True).alias("lo_incl"),
+                F.lit(True).alias("hi_incl"),
+                F.col("_d_wt").alias("wt"),
             )
-            tomb_rows = tombstones_to_rows(new_tombs, extra=d_rows)
-            if n_tombs <= 20_000:
-                # driver-side flush, no Spark job (offset-flush analog)
-                target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
-            else:
-                target.tombstones.append(tomb_rows)
-        _mark("tombstone-append")
+            if kind_counts["d"]
+            else None
+        )
+        tomb_rows = tombstones_to_rows(new_tombs, extra=d_rows)
+        if n_tombs <= 20_000:
+            # driver-side flush, no Spark job (offset-flush analog)
+            target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
+        else:
+            target.tombstones.append(tomb_rows)
+    _mark("tombstone-append")
 
-        return {
-            "n_events": n_events,
-            "n_buckets_rewritten": len(bucket_ids),
-            "n_new_tombstones": n_tombs,
-            "state_version": new_version,
-        }
-    finally:
-        reduced.unpersist()
+    return {
+        "n_events": n_events,
+        "n_buckets_rewritten": len(bucket_ids),
+        "n_new_tombstones": n_tombs,
+        "state_version": new_version,
+    }
 
 
 def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:

@@ -39,9 +39,11 @@ def get_spark(
         # floor on scan parallelism: commit-log segment directories hold many
         # small parquet files (one per producer partition); the default
         # open-cost packing folds them into a handful of splits, serializing
-        # the map side. The floor tracks the session's core count (cluster
-        # deployments set SPARK_GRAFT_CPUS to the executor-core total), so it
-        # is scale-adaptive, not a local-mode constant. Large files are
+        # the map side. The floor is deliberately at least 64 splits, even on
+        # a few cores: a small host then still gets split-level parallelism
+        # across its task slots instead of a handful of packed splits. Above
+        # 64 cores it tracks the core count (cluster deployments set
+        # SPARK_GRAFT_CPUS to the executor-core total). Large files are
         # unaffected (maxPartitionBytes still caps split size).
         .config("spark.sql.files.minPartitionNum", str(max(64, int(cpus))))
         .config("spark.sql.adaptive.enabled", "true")

@@ -198,7 +198,7 @@ class SnapshotProcessor:
         interrupted snapshots restart from scratch, which is safe because
         snapshot inserts are idempotent upserts (same property the reference
         relies on, SnapshotProcessor.java:51-55)."""
-        from ..plans.apply import apply_batch  # local import to avoid cycle
+        from ..plans.apply import apply_batch, batch_stats, prescan, state_buckets  # local: avoids a cycle
 
         if not self.tables_to_snapshot(mode):
             self.metrics.set_table_count(0)
@@ -209,12 +209,10 @@ class SnapshotProcessor:
         fqtn = "agents.transcripts"
         try:
             mutations = snapshot_to_mutations(source, snapshot_writetime)
-            stats = apply_batch(self.runner.target, mutations)
-            if getattr(self.runner, "assembly", None) is not None:
-                # snapshot rows change state too — the maintained view follows
-                from ..operators.transcript import refresh_assembly
-
-                refresh_assembly(self.runner.assembly, self.runner.target, mutations)
+            pre = batch_stats(prescan(mutations, {"": self.runner.target}))
+            stats = apply_batch(self.runner.target, mutations, stats=pre)
+            # snapshot rows change state too — the maintained view follows
+            self.runner._refresh_assembly(state_buckets(pre))
             self.metrics.set_rows_scanned(fqtn, stats.get("n_events", 0))
             self.metrics.complete_table()
         except Exception:

@@ -10,17 +10,17 @@ own topic/target, while offsets advance on the shared log.
 Spark formulation:
 - the log (model.MULTI_TABLE_LOG_SCHEMA) carries (keyspace, table) routing
   columns and a per-table serialized payload;
-- one NARROW pre-scan per batch (grouped by fqtn, segment, log_partition)
-  yields per-table offsets/lineage stats and per-table op-kind counts;
-- per table: filter + `from_json` decode with that table's cells schema
-  (whole-stage codegen — the multi-table analog of decode.decode_payload_jvm)
-  then the standard apply_batch into that table's own CdcTarget;
+- the ingest core's one narrow pre-scan (streaming/ingest.py) groups by
+  (fqtn, segment, log_partition): per-table offsets/lineage stats, op-kind
+  counts and touched buckets;
+- per table: filter + decode with that table's cells schema, then the
+  standard apply_batch into that table's own CdcTarget;
 - bookkeeping is PER TABLE (fqtn column): offsets are (fqtn, log_partition)
   watermarks, lineage rows are (fqtn, segment) grained. A segment is globally
-  'done' when every table's apply committed — the runner marks per-table
-  lineage as each apply lands, so a crash mid-batch resumes with only the
-  un-committed tables replaying (idempotent merges make the replay a no-op
-  for tables that already applied).
+  'done' when every table's apply committed — the runner commits each
+  table's offsets and lineage as its apply lands, so a crash mid-batch
+  resumes with only the un-committed tables replaying (idempotent merges
+  make the replay a no-op for tables that already applied).
 
 Snapshot table selection (S7) is the real anti-join the reference performs
 (SnapshotProcessor.getTablesToSnapshot:154-161): cdc-enabled tables MINUS
@@ -31,29 +31,18 @@ from __future__ import annotations
 
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..lake.table import LakeTable
 from ..model import (
-    GC_SCHEMA,
-    METRICS_SCHEMA,
     MT_LINEAGE_SCHEMA,
     MT_OFFSETS_SCHEMA,
     MULTI_TABLE_LOG_SCHEMA,
     TableSpec,
 )
-from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
+from ..plans.apply import CdcTarget, apply_batch, batch_stats, gc_tombstones, prescan, state_buckets
 from ..sources.log_scan import discover_segments
-
-_KINDS = ("d", "p", "r")
-
-
-def _prune_mt_offsets(df):
-    """Keep only the per-(table, log_partition) watermark row (snapshot
-    sentinel rows are each their own group's max)."""
-    df = df.sort_values(["fqtn", "log_partition", "segment_id", "position", "updated_at"])
-    return df.groupby(["fqtn", "log_partition"], as_index=False).tail(1).reset_index(drop=True)
+from .ingest import COMPLETES, Batch, StreamDriver, drain, gc_sweep, open_bookkeeping
 
 
 def decode_table_payload(df: DataFrame, spec: TableSpec) -> DataFrame:
@@ -66,111 +55,6 @@ def decode_table_payload(df: DataFrame, spec: TableSpec) -> DataFrame:
             spec.cells_type(),
             {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
         ),
-    ).drop("payload", "keyspace", "table")
-
-
-def decode_table_payload_arrow(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """Arrow pandas-UDF twin of decode_table_payload for ANY TableSpec —
-    the vectorized-UDF decode the north star mandates, generalized from the
-    fixed-schema `functions.decode.decode_payload_arrow`.
-
-    Fully vectorized (the flattened-column technique the binary codec uses,
-    functions/binary_codec.py): the whole Arrow batch's payloads join into
-    ONE newline-delimited buffer parsed by a single ``pyarrow.json``
-    C++ call against the spec's explicit cell schema — no per-row
-    ``json.loads`` and no per-row Python dict assembly; each decoded cell
-    column leaves the UDF as an Arrow StructArray-backed pandas series.
-    Timestamp cell values parse as ISO8601 strings and convert with one
-    vectorized ``pd.to_datetime`` per column. Tests assert bit-parity with
-    the JVM path (test_arrow_decode_matches_jvm_per_spec)."""
-    import io
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.json as pj
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    names = [n for n, _ in spec.payload]
-    ts_cols = {n for n, t in spec.payload if t.simpleString() == "timestamp"}
-    from pyspark.sql import types as _T
-
-    if any(isinstance(t, _T.MapType) for _, t in spec.payload):
-        # Arrow's JSON parser has no map-type support; map cells ride the
-        # default JVM from_json path (decode_table_payload), which is also
-        # the production hot path
-        raise ValueError(
-            "decode_table_payload_arrow does not support map-typed cells; "
-            "use decode_table_payload (the JVM from_json default)"
-        )
-
-    def _cell_schema(parse: bool) -> pa.Schema:
-        """Arrow cell layout; with ``parse=True`` timestamp values stay
-        strings (pd.to_datetime handles the offset suffix afterwards)."""
-        fields = []
-        for n, t in spec.payload:
-            if n in ts_cols:
-                # parse as ISO string, emit naive UTC micros (the JVM path's
-                # semantics after session-tz normalization)
-                vt = pa.string() if parse else pa.timestamp("us")
-            else:
-                vt = to_arrow_type(t)
-            fields.append(
-                pa.field(
-                    n,
-                    pa.struct(
-                        [
-                            pa.field("value", vt),
-                            pa.field("deletion_ts", pa.int64()),
-                            pa.field("set", pa.bool_()),
-                        ]
-                    ),
-                )
-            )
-        return pa.schema(fields)
-
-    parse_schema = _cell_schema(parse=True)
-    out_types = {n: f.type for n, f in zip(names, _cell_schema(parse=False))}
-
-    def _finalize(name: str, arr: pa.StructArray) -> pd.Series:
-        value = arr.field("value")
-        if name in ts_cols:
-            ts = pd.to_datetime(value.to_pandas(), format="ISO8601", utc=True)
-            value = pa.Array.from_pandas(
-                ts.dt.tz_localize(None), type=pa.timestamp("us")
-            )
-        set_ = pc.fill_null(arr.field("set"), False)
-        rebuilt = pa.StructArray.from_arrays(
-            [value, arr.field("deletion_ts"), set_],
-            fields=list(out_types[name]),
-            mask=arr.is_null(),
-        )
-        # Spark's pandas serializer iterates struct rows expecting
-        # dict-or-None; hand it Arrow's C-level dict materialization
-        return rebuilt.to_pandas()
-
-    @pandas_udf(spec.cells_type())
-    def _decode(payload: pd.Series) -> pd.DataFrame:
-        if len(payload) == 0:
-            return pd.DataFrame({n: pd.Series([], dtype=object) for n in names})
-        # one buffer, one C++ parse for the whole batch (NULL payload rows
-        # parse as {} -> all-null cells; the outer mask nulls the struct)
-        buf = b"\n".join(b"{}" if b is None else bytes(b) for b in payload)
-        tab = pj.read_json(
-            io.BytesIO(buf),
-            parse_options=pj.ParseOptions(
-                explicit_schema=parse_schema, unexpected_field_behavior="ignore"
-            ),
-        )
-        return pd.DataFrame(
-            {n: _finalize(n, tab.column(n).combine_chunks()) for n in names}
-        )
-
-    # a NULL payload (tombstone op) must decode to a NULL struct, matching
-    # from_json(NULL); the UDF can only emit per-field nulls, so mask here
-    return df.withColumn(
-        "cells",
-        F.when(F.col("payload").isNotNull(), _decode(F.col("payload"))),
     ).drop("payload", "keyspace", "table")
 
 
@@ -237,19 +121,15 @@ class MultiTableRunner:
         self.targets: dict[str, CdcTarget] = {}
         for fqtn, spec in self.specs.items():
             self._ensure_target(fqtn, spec)
-        # tombstone GC (gc_grace analog, same contract as CdcRunner): horizon
-        # = max applied writetime - grace, swept across EVERY table's store
-        if gc_grace_us is not None and gc_grace_us < 0:
-            raise ValueError("gc_grace_us must be >= 0")
-        self.gc_grace_us = gc_grace_us
-        self.gc_every_batches = max(int(gc_every_batches), 1)
-        self._max_writetime: int | None = None
-        self.offsets = self._bookkeeping("_offsets", MT_OFFSETS_SCHEMA)
-        self.lineage = self._bookkeeping("_lineage", MT_LINEAGE_SCHEMA)
-        self.metrics = self._bookkeeping("_metrics", METRICS_SCHEMA)
-        self.gc_log = self._bookkeeping("_gc", GC_SCHEMA) if gc_grace_us is not None else None
-        self.offsets.compaction_transform = _prune_mt_offsets
-        self._done = self._load_done()
+        # tombstone GC sweeps EVERY table's store (same contract as CdcRunner)
+        statuses = open_bookkeeping(
+            self, target_root, MT_OFFSETS_SCHEMA, MT_LINEAGE_SCHEMA, gc_grace_us, gc_every_batches
+        )
+        # fqtn -> the segments that table has fully applied
+        self._done: dict[str, set[int]] = {f: set() for f in self.specs}
+        for (fqtn, seg), st in statuses.items():
+            if st & set(COMPLETES):
+                self._done.setdefault(fqtn, set()).add(seg)
         from ..sources.snapshot import SnapshotMetrics
 
         self.metrics_snapshot = SnapshotMetrics()
@@ -273,20 +153,9 @@ class MultiTableRunner:
             self.changes_tables = getattr(self, "changes_tables", {})
             self.changes_tables[fqtn] = ChangesExport(self.spark, f"{path}/changes")
         if fqtn in self.maintain_assembly:
-            from ..operators.transcript import ASSEMBLY_SCHEMA
+            from ..operators.transcript import open_assembly
 
-            apath = f"{path}/assembly"
-            if LakeTable.exists(apath):
-                self.assemblies[fqtn] = LakeTable(self.spark, apath)
-            else:
-                # share the table's state bucket function (pruned refreshes)
-                self.assemblies[fqtn] = LakeTable.create(
-                    self.spark,
-                    apath,
-                    ASSEMBLY_SCHEMA,
-                    "conv_id",
-                    self.targets[fqtn].state.manifest()["n_buckets"],
-                )
+            self.assemblies[fqtn] = open_assembly(self.spark, f"{path}/assembly", self.targets[fqtn])
 
     def apply_table_changes(self, up_to_segment: int, discovered: list[int]) -> None:
         """Replay table create/drop DDL effective at or before
@@ -320,46 +189,9 @@ class MultiTableRunner:
             else:
                 raise ValueError(f"unknown table change action: {action!r}")
 
-    def _bookkeeping(self, name: str, schema) -> LakeTable:
-        path = f"{self.target_root}/{name}"
-        if LakeTable.exists(path):
-            return LakeTable(self.spark, path)
-        return LakeTable.create(
-            self.spark, path, schema, key_col=schema.fields[0].name, n_buckets=1
-        )
-
-    # -- recovered checkpoint state ------------------------------------------
-    def _load_done(self) -> dict[str, set[int]]:
-        """fqtn -> set of segments that table has fully applied."""
-        done: dict[str, set[int]] = {f: set() for f in self.specs}
-        if self.lineage.is_empty():
-            return done
-        rows = (
-            self.lineage.read()
-            .where(F.col("status") == "done")
-            .select("fqtn", "segment_id")
-            .distinct()
-            .collect()
-        )
-        for r in rows:
-            done.setdefault(r["fqtn"], set()).add(r["segment_id"])
-        return done
-
     def checkpointed_offsets(self) -> dict[tuple[str, int], tuple[int, int]]:
         """(fqtn, log_partition) -> (segment_id, position) high-watermark."""
-        if self.offsets.is_empty():
-            return {}
-        rows = (
-            self.offsets.read()
-            .groupBy("fqtn", "log_partition")
-            .agg(F.max(F.struct("segment_id", "position")).alias("w"))
-            .select("fqtn", "log_partition", "w.segment_id", "w.position")
-            .collect()
-        )
-        return {
-            (r["fqtn"], r["log_partition"]): (r["segment_id"], r["position"])
-            for r in rows
-        }
+        return dict(self._watermarks)
 
     # -- planning -------------------------------------------------------------
     def pending_segments(self) -> list[int]:
@@ -374,85 +206,47 @@ class MultiTableRunner:
         ]
 
     def _read_log(self, segment_ids: list[int]) -> DataFrame:
-        if self.batch_mutations:
-            from ..functions.decode import explode_mt_batch_mutations
-            from ..model import MT_BATCH_LOG_SCHEMA
+        from ..functions.decode import explode_mt_batch_mutations
+        from ..model import MT_BATCH_LOG_SCHEMA
 
-            raw = (
-                self.spark.read.schema(MT_BATCH_LOG_SCHEMA)
-                .parquet(self.log_path)
-                .where(F.col("segment_id").isin(*[int(s) for s in segment_ids]))
-            )
-            return explode_mt_batch_mutations(raw)
-        return (
-            self.spark.read.schema(MULTI_TABLE_LOG_SCHEMA)
-            .parquet(self.log_path)
-            .where(F.col("segment_id").isin(*[int(s) for s in segment_ids]))
+        schema = MT_BATCH_LOG_SCHEMA if self.batch_mutations else MULTI_TABLE_LOG_SCHEMA
+        log = self.spark.read.schema(schema).parquet(self.log_path).where(
+            F.col("segment_id").isin(*[int(s) for s in segment_ids])
         )
+        return explode_mt_batch_mutations(log) if self.batch_mutations else log
+
+    def _decode(self, df: DataFrame, spec: TableSpec) -> DataFrame:
+        """One table's payload decode: per-table from_json (codegen), or the
+        per-TableSpec binary layout + vectorized numpy decoder
+        (functions/binary_codec.py)."""
+        if self.payload_format == "binary":
+            from ..functions.binary_codec import decode_table_payload_binary
+
+            return decode_table_payload_binary(df, spec)
+        return decode_table_payload(df, spec)
+
+    @staticmethod
+    def _of_table(df: DataFrame, spec: TableSpec) -> DataFrame:
+        return df.where((F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table))
 
     # -- one batch --------------------------------------------------------------
     def run_batch(self, segment_ids: list[int]) -> dict:
-        t0 = time.time()
-        batch_id = int(t0 * 1000)
         log = self._read_log(segment_ids)
-
-        # ONE narrow pre-scan: per (table, segment, log_partition) counts,
-        # max positions, and per-kind sums — offsets + lineage + apply stats
-        seg_rows = (
-            log.groupBy("keyspace", "table", "segment_id", "log_partition")
-            .agg(
-                F.count("*").alias("n"),
-                F.max("position").alias("max_pos"),
-                F.max("writetime").alias("max_wt"),
-                *[
-                    F.sum((F.col("op") == k).cast("long")).alias(f"n_{k}")
-                    for k in _KINDS
-                ],
-            )
-            .collect()
-        )
-        # candidate applied-writetime high watermark (tombstone-GC horizon
-        # input) — folded into self._max_writetime only after EVERY
-        # per-table apply in this batch commits, so a mid-loop failure can
-        # never leave the horizon ahead of not-yet-applied events
-        batch_max_wt = max(
-            (r["max_wt"] for r in seg_rows if r["max_wt"] is not None),
-            default=None,
-        )
-        by_table: dict[str, list] = {f: [] for f in self.specs}
-        for r in seg_rows:
-            fqtn = f"{r['keyspace']}.{r['table']}"
-            if fqtn in by_table:
-                by_table[fqtn].append(r)
-
+        batch = Batch(self, log, segment_ids)
         results = {}
-        n_applied = 0
-        now_ms = int(time.time() * 1000)
         for fqtn, spec in self.specs.items():
             done = self._done.setdefault(fqtn, set())
             pending = [s for s in segment_ids if s not in done]
             if not pending:
                 continue
-            pending_set = set(pending)
-            rows = [r for r in by_table[fqtn] if r["segment_id"] in pending_set]
-            stats = {"n": sum(r["n"] for r in rows)}
-            stats.update({k: sum(r[f"n_{k}"] for r in rows) for k in _KINDS})
+            stats = batch.stats(fqtn, pending)
             if stats["n"]:
-                sub = log.where(
-                    (F.col("keyspace") == spec.keyspace)
-                    & (F.col("table") == spec.table)
-                    & F.col("segment_id").isin(*[int(s) for s in pending])
+                sub = self._decode(
+                    self._of_table(log, spec).where(F.col("segment_id").isin(*[int(s) for s in pending])),
+                    spec,
                 )
-                if self.payload_format == "binary":
-                    from ..functions.binary_codec import (
-                        decode_table_payload_binary,
-                    )
-
-                    sub = decode_table_payload_binary(sub, spec)
-                else:
-                    sub = decode_table_payload(sub, spec)
                 results[fqtn] = apply_batch(self.targets[fqtn], sub, stats=stats)
-                self._refresh_assembly(fqtn, sub)
+                self._refresh_assembly(fqtn, state_buckets(stats))
                 if self.export_changes:
                     # MT batches consume whole segments, so the decoded slice
                     # is per-segment complete — export directly from it
@@ -469,132 +263,35 @@ class MultiTableRunner:
                     )
             else:
                 results[fqtn] = {"n_events": 0}
-            # per-table offsets: max (segment, position) per log partition
-            best: dict[int, tuple[int, int]] = {}
-            for r in rows:
-                cand = (r["segment_id"], r["max_pos"])
-                if best.get(r["log_partition"], (-2, -2)) < cand:
-                    best[r["log_partition"]] = cand
-            offset_rows = [
-                {
-                    "fqtn": fqtn,
-                    "log_partition": lp,
-                    "segment_id": seg,
-                    "position": pos,
-                    "updated_at": now_ms,
-                }
-                for lp, (seg, pos) in sorted(best.items())
-            ]
-            lineage_rows = []
-            seen = {}
-            for r in rows:
-                seen.setdefault(r["segment_id"], []).append(r)
-            for seg in pending:
-                for r in seen.get(seg, []):
-                    lineage_rows.append(
-                        {
-                            "fqtn": fqtn,
-                            "segment_id": r["segment_id"],
-                            "log_partition": r["log_partition"],
-                            "status": "done",
-                            "n_events": r["n"],
-                        }
-                    )
-                if seg not in seen:  # zero rows for this table in the segment
-                    lineage_rows.append(
-                        {
-                            "fqtn": fqtn,
-                            "segment_id": int(seg),
-                            "log_partition": -1,
-                            "status": "done",
-                            "n_events": 0,
-                        }
-                    )
-                self._done[fqtn].add(seg)
-            # durable per-table bookkeeping lands right after THIS table's
-            # apply commits — a crash mid-batch resumes with only the
-            # not-yet-committed tables replaying (idempotent merges make any
-            # overlap a no-op). This is the "marks per-table lineage as each
-            # apply lands" contract from the module docstring.
-            self.offsets.append_small(offset_rows)
-            self.lineage.append_small(lineage_rows)
-            n_applied += stats["n"]
-
-        # every per-table apply committed — the batch's writetimes are now
-        # APPLIED and may advance the GC horizon
-        if batch_max_wt is not None and (
-            self._max_writetime is None or batch_max_wt > self._max_writetime
-        ):
-            self._max_writetime = batch_max_wt
-
-        n_decoded = sum(r["n"] for r in seg_rows)
-        wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append_small(
-            [
-                {
-                    "batch_id": batch_id,
-                    "segment_lo": min(segment_ids),
-                    "segment_hi": max(segment_ids),
-                    "n_decoded": n_decoded,
-                    "n_deduped": n_applied,
-                    "n_applied": n_applied,
-                    "n_skipped": 0,
-                    "wall_ms": wall_ms,
-                }
-            ]
-        )
-        return {
-            "batch_id": batch_id,
-            "segments": segment_ids,
-            "n_decoded": n_decoded,
-            "wall_ms": wall_ms,
-            "tables": results,
-        }
+            # this table's bookkeeping lands right after its apply commits —
+            # the per-table crash contract of the module docstring
+            batch.commit("done", fqtn, pending)
+        # every per-table apply committed: the batch's writetimes may now
+        # advance the GC horizon
+        return {**batch.close(), "tables": results}
 
     # -- tombstone GC (gc_grace, swept across every table) -------------------
     def gc(self) -> dict:
         """Purge each table's stored tombstones below (max applied writetime
         - gc_grace_us); one ``_gc`` audit row per table per invocation. Same
         safety argument as CdcRunner.gc()."""
-        if self.gc_grace_us is None:
-            raise ValueError("tombstone GC is disabled; pass gc_grace_us to enable")
-        if self._max_writetime is None:
+        horizon, res = gc_sweep(self, gc_tombstones)
+        if horizon is None:
             return {"n_purged": 0, "tables": {}}
-        horizon = int(self._max_writetime) - int(self.gc_grace_us)
-        batch_id = int(time.time() * 1000)
-        per_table, audit_rows, total = {}, [], 0
-        for fqtn, target in self.targets.items():
-            res = gc_tombstones(target, horizon)
-            per_table[fqtn] = res["n_purged"]
-            total += res["n_purged"]
-            audit_rows.append(
-                {
-                    "batch_id": batch_id,
-                    "fqtn": fqtn,
-                    "horizon_wt": horizon,
-                    "n_purged": res["n_purged"],
-                    "n_kept": res["n_kept"],
-                }
-            )
-        self.gc_log.append_small(audit_rows)
-        return {"n_purged": total, "horizon_wt": horizon, "tables": per_table}
+        return {
+            "n_purged": sum(r["n_purged"] for r in res.values()),
+            "horizon_wt": horizon,
+            "tables": {fqtn: r["n_purged"] for fqtn, r in res.items()},
+        }
 
     # -- the loop -----------------------------------------------------------
     def run(self, max_batches: int | None = None) -> list[dict]:
-        results = []
-        n = 0
-        while True:
-            pending = self.pending_segments()
-            if not pending or (max_batches is not None and n >= max_batches):
-                break
-            results.append(self.run_batch(pending[: self.segments_per_batch]))
-            n += 1
-            if self.gc_grace_us is not None and n % self.gc_every_batches == 0:
-                self.gc()
-        return results
+        """Drain pending segments through the ingest core's loop (see
+        CdcRunner.run; failures propagate)."""
+        return drain(self, max_batches)
 
     # -- user-facing reads ----------------------------------------------------
-    def _refresh_assembly(self, fqtn: str, batch_keys: DataFrame) -> None:
+    def _refresh_assembly(self, fqtn: str, buckets: list[int]) -> None:
         """Maintained-view step (no-op for tables without a view)."""
         if fqtn not in self.assemblies:
             return
@@ -604,7 +301,7 @@ class MultiTableRunner:
         refresh_assembly(
             self.assemblies[fqtn],
             self.targets[fqtn],
-            batch_keys,
+            buckets,
             role_col=cfg.get("role"),
             text_col=cfg["text"],
         )
@@ -656,8 +353,9 @@ class MultiTableRunner:
             for fqtn in todo:
                 src = self.specs[fqtn].normalize(sources[fqtn])
                 mutations = snapshot_to_mutations(src, snapshot_writetime)
-                out[fqtn] = apply_batch(self.targets[fqtn], mutations)
-                self._refresh_assembly(fqtn, mutations)
+                stats = batch_stats(prescan(mutations, {"": self.targets[fqtn]}))
+                out[fqtn] = apply_batch(self.targets[fqtn], mutations, stats=stats)
+                self._refresh_assembly(fqtn, state_buckets(stats))
                 self.metrics_snapshot.set_rows_scanned(
                     fqtn, out[fqtn].get("n_events", 0)
                 )
@@ -673,6 +371,7 @@ class MultiTableRunner:
                         }
                     ]
                 )
+                self._watermarks[(fqtn, -1)] = (-1, -1)
         except Exception:
             self.metrics_snapshot.abort_snapshot()
             raise
@@ -681,22 +380,16 @@ class MultiTableRunner:
         return out
 
 
-class MultiTableStream:
+class MultiTableStream(StreamDriver):
     """Structured-Streaming front-end over a MULTI-TABLE commit log — the
     reference's primary operating shape (streaming AND multi-table at once:
     one CommitLogProcessor thread feeding per-table decode via SchemaHolder,
     MultipleTablesProcessingTest.java:27-106). The multi-table twin of
     stream.CdcStream: readStream over the shared log directory, and inside
-    each foreachBatch a per-table filter + decode + apply, with PER-TABLE
-    offsets and ``streamed`` lineage.
-
-    Same ordering contract as CdcStream (see its module docstring): the file
-    source delivers arbitrary file subsets per micro-batch, so no watermark
-    pre-filter (re-applying is an idempotent no-op; filtering loses late
-    files), and lineage is ``streamed`` — never ``done`` — because a
-    micro-batch cannot prove segment completeness. The batch front-end
-    treats ``streamed`` segments as pending and re-applies them in full when
-    the job switches front-ends (bounded, idempotent).
+    each foreachBatch a per-table filter + decode + apply, committed with
+    PER-TABLE offsets and ``streamed`` lineage. Same ordering contract as
+    CdcStream (no watermark pre-filter; see its module docstring) and the
+    same ``streamed`` status effects (see the ingest core's status table).
 
     Table lifecycle DDL (table_changes) is a batch-front-end feature: the
     create/drop ledger needs the discovered segment range, which a streaming
@@ -715,97 +408,24 @@ class MultiTableStream:
         self.max_files_per_trigger = max_files_per_trigger
 
     def _source(self) -> DataFrame:
-        if self.runner.batch_mutations:
-            from ..model import MT_BATCH_LOG_SCHEMA
+        from ..model import MT_BATCH_LOG_SCHEMA
 
-            schema = MT_BATCH_LOG_SCHEMA
-        else:
-            schema = MULTI_TABLE_LOG_SCHEMA
-        reader = self.runner.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        return reader.parquet(self.runner.log_path)
+        return self._read_stream(
+            MT_BATCH_LOG_SCHEMA if self.runner.batch_mutations else MULTI_TABLE_LOG_SCHEMA
+        )
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         r = self.runner
         if r.batch_mutations:
             # same explode-before-everything the batch front-end does
             from ..functions.decode import explode_mt_batch_mutations
 
             batch_df = explode_mt_batch_mutations(batch_df)
-        seg_rows = (
-            batch_df.groupBy("keyspace", "table", "segment_id", "log_partition")
-            .agg(F.count("*").alias("n"), F.max("position").alias("max_pos"))
-            .collect()
-        )
-        if not seg_rows:
-            return
-        now_ms = int(_time.time() * 1000)
-        by_table: dict[str, list] = {}
-        for row in seg_rows:
-            by_table.setdefault(f"{row['keyspace']}.{row['table']}", []).append(row)
+        batch = Batch(r, batch_df)
         for fqtn, spec in r.specs.items():
-            rows = by_table.get(fqtn)
-            if not rows:
-                continue
-            sub = batch_df.where(
-                (F.col("keyspace") == spec.keyspace)
-                & (F.col("table") == spec.table)
-            )
-            if r.payload_format == "binary":
-                from ..functions.binary_codec import decode_table_payload_binary
-
-                sub = decode_table_payload_binary(sub, spec)
-            else:
-                sub = decode_table_payload(sub, spec)
-            apply_batch(r.targets[fqtn], sub)
-            r._refresh_assembly(fqtn, sub)
-            best: dict[int, tuple[int, int]] = {}
-            for row in rows:
-                cand = (row["segment_id"], row["max_pos"])
-                if best.get(row["log_partition"], (-2, -2)) < cand:
-                    best[row["log_partition"]] = cand
-            r.offsets.append_small(
-                [
-                    {
-                        "fqtn": fqtn,
-                        "log_partition": lp,
-                        "segment_id": seg,
-                        "position": pos,
-                        "updated_at": now_ms,
-                    }
-                    for lp, (seg, pos) in sorted(best.items())
-                ]
-            )
-            r.lineage.append_small(
-                [
-                    {
-                        "fqtn": fqtn,
-                        "segment_id": row["segment_id"],
-                        "log_partition": row["log_partition"],
-                        "status": "streamed",
-                        "n_events": row["n"],
-                    }
-                    for row in rows
-                ]
-            )
-
-    def start(self, checkpoint_dir: str, available_now: bool = True):
-        writer = (
-            self._source()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_available(self, checkpoint_dir: str, timeout_sec: int = 600) -> None:
-        """Drain all currently-available segments and stop — the streaming
-        twin of MultiTableRunner.run()."""
-        q = self.start(checkpoint_dir, available_now=True)
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
+            stats = batch.stats(fqtn)
+            if stats["n"]:
+                apply_batch(r.targets[fqtn], r._decode(r._of_table(batch_df, spec), spec), stats=stats)
+                r._refresh_assembly(fqtn, state_buckets(stats))
+        if batch.rows:
+            batch.commit("streamed")

@@ -1,45 +1,26 @@
-"""The micro-batch driver loop — Spark lifecycle replacing SURVEY §3.1.
+"""The single-table pull front-end — Spark lifecycle replacing SURVEY §3.1.
 
-One iteration:
-  read _offsets -> discover unprocessed (segment, position) ranges ->
-  scan log slice (partition-pruned, position-pushdown) -> decode/envelope ->
-  apply_batch (dedup -> LWW reduce -> tombstones -> COW merge) ->
-  append _offsets + _lineage + _metrics.
-
-Exactly-once: state commit happens inside apply_batch BEFORE offsets are
-appended; a crash between the two replays the batch, which is a no-op
-because the merge is idempotent (strict writetime comparisons). This is the
-same at-least-once + idempotent-replay contract as the reference
-(FileOffsetWriter monotonic offsets + offset skip-check + reprocess bypass,
-R5/R8) — but here the *table state* is exactly-once by construction.
-
-Scan economy (the 100 TB shape): one batch touches the log exactly twice —
-a NARROW pre-scan (segment_id, log_partition, position, op — four small
-columns, column-pruned at the parquet reader) that yields the per-segment
-offsets/lineage stats AND the op-kind counts in a single job, then the one
-full-width pass inside apply_batch's reduction. No other job re-reads the
-batch. Bookkeeping state (done/open segments, offset watermarks) is cached
-on the runner instance — loaded once per runner lifetime, maintained
-in-memory afterwards (single-writer, like the reference's file-locked
-FileOffsetWriter) — so the steady-state loop runs zero bookkeeping-read jobs
-per batch.
+One iteration: discover unprocessed segments -> scan the log slice
+(partition-pruned, position-pushdown) -> decode/envelope -> apply_batch. The
+pre-scan, the commit, the drain loop and the GC sweep are the ingest core's
+(streaming/ingest.py), which states the exactly-once contract and what each
+lineage status does. The log is read twice per batch: by the narrow pre-scan
+and by the reduction inside apply_batch.
 
 Offset filtering is applied ONLY to segments known to be partially applied
-(status 'open': the position-limited live tail). Fully pending segments are
+(status 'open': the position-limited live tail), up to the offset watermarks
+that lie inside them (a watermark past the segment filters nothing there, so
+at worst applied rows re-apply idempotently). Fully pending segments are
 always read in full, because a global (segment, position) watermark is only
 a safe skip-filter when events were applied in watermark order — which the
 Structured Streaming front-end cannot guarantee (file delivery order is
 arbitrary). Re-applying rows is harmless (idempotent merge); *dropping*
-never-applied rows is permanent loss — so the filter is scoped to the one
-case where the invariant holds by construction.
+never-applied rows is permanent loss.
 
-Backpressure (R2 bounded queue analog) = ``segments_per_batch``: the batch
-sizing knob bounding memory/shuffle per iteration.
-
-Error handling (R3/R7/R8): a failing segment batch is recorded in _lineage
-with status 'error' (archive-to-error-folder analog); ``reprocess`` replays
-named segments with the offset check bypassed (reference
-reprocessingCommitLogs set, CommitLogProcessor.java:113-117).
+Backpressure (R2 bounded queue analog) is ``segments_per_batch``. Errors
+(R3/R7/R8): ``run(on_error='isolate')`` quarantines a failing segment with
+an 'error' lineage row; ``reprocess`` replays named segments with the offset
+check bypassed (reprocessingCommitLogs, CommitLogProcessor.java:113-117).
 """
 
 from __future__ import annotations
@@ -48,22 +29,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.decode import split_unsupported, with_envelope
 from ..lake.table import LakeTable
-from ..model import GC_SCHEMA, LINEAGE_SCHEMA, METRICS_SCHEMA, OFFSETS_SCHEMA
-from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
+from ..model import LINEAGE_SCHEMA, OFFSETS_SCHEMA
+from ..plans.apply import CdcTarget, apply_batch, gc_tombstones, state_buckets
 from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
-from ..functions.decode import with_envelope
-
-_KINDS = ("d", "p", "r")
-
-
-def _prune_offsets(df):
-    """Offsets compaction transform: keep only the max (segment_id, position)
-    row per log_partition (snapshot sentinel partitions included — their
-    single row is their own max)."""
-    df = df.sort_values(["log_partition", "segment_id", "position", "updated_at"])
-    return df.groupby("log_partition", as_index=False).tail(1).reset_index(drop=True)
+from .ingest import COMPLETES, Batch, drain, gc_sweep, open_bookkeeping
+from .ingest import prune_offsets as _prune_offsets  # noqa: F401  (importable here too)
 
 
 class CdcRunner:
@@ -158,55 +131,25 @@ class CdcRunner:
         # Deterministic-from-state => idempotent under batch replay, and the
         # refresh lands BEFORE offsets (same crash-safety side as the state).
         self.maintain_assembly = maintain_assembly
+        self.assembly = None
         if maintain_assembly:
-            from ..operators.transcript import ASSEMBLY_SCHEMA
+            from ..operators.transcript import open_assembly
 
-            apath = f"{target_path}/assembly"
-            if LakeTable.exists(apath):
-                self.assembly = LakeTable(spark, apath)
-            else:
-                # MUST share the state's actual bucket function: the refresh
-                # prunes the state read by the assembly's bucket ids
-                self.assembly = LakeTable.create(
-                    spark,
-                    apath,
-                    ASSEMBLY_SCHEMA,
-                    "conv_id",
-                    self.target.state.manifest()["n_buckets"],
-                )
-        else:
-            self.assembly = None
-        # tombstone GC (Cassandra gc_grace analog): when set, run() purges
-        # stored tombstones below (max applied writetime - gc_grace_us) every
-        # gc_every_batches batches. Size the grace from the producer's
-        # bounded writetime-inversion window (for the bundled generator:
-        # sources.generator.writetime_inversion_window_us) — purging inside
-        # that window could let a late out-of-order upsert beat a purged
-        # delete, so the horizon must trail it.
-        if gc_grace_us is not None and gc_grace_us < 0:
-            raise ValueError("gc_grace_us must be >= 0")
-        self.gc_grace_us = gc_grace_us
-        self.gc_every_batches = max(int(gc_every_batches), 1)
-        self._max_writetime: int | None = None
-        self.offsets = self._bookkeeping("_offsets", OFFSETS_SCHEMA)
-        self.lineage = self._bookkeeping("_lineage", LINEAGE_SCHEMA)
-        self.metrics = self._bookkeeping("_metrics", METRICS_SCHEMA)
-        self.gc_log = self._bookkeeping("_gc", GC_SCHEMA) if gc_grace_us is not None else None
-        # superseded offsets are dead weight — compaction keeps only the
-        # per-partition watermark (the reference's offset FILE likewise holds
-        # only current values, FileOffsetWriter.java:96-119)
-        self.offsets.compaction_transform = _prune_offsets
+            self.assembly = open_assembly(spark, f"{target_path}/assembly", self.target)
         # single-writer in-memory bookkeeping caches (recovered from the
-        # tables once, here; maintained incrementally afterwards)
-        self._watermarks = self._load_watermarks()
-        self._done, self._open, self._errored = self._load_lineage_status()
-        self._open_positions = self._load_open_positions()
+        # tables once, here; maintained by the ingest core's commit)
+        statuses = open_bookkeeping(
+            self, target_path, OFFSETS_SCHEMA, LINEAGE_SCHEMA, gc_grace_us, gc_every_batches
+        )
+        self._done = {s for s, st in statuses.items() if st & set(COMPLETES)}
+        # open: a position-limited tail; errored: quarantined (R8)
+        self._open = {s for s, st in statuses.items() if "open" in st} - self._done
+        self._errored = {s for s, st in statuses.items() if "error" in st} - self._done
 
-    def _bookkeeping(self, name: str, schema) -> LakeTable:
-        path = f"{self.target_path}/{name}"
-        if LakeTable.exists(path):
-            return LakeTable(self.spark, path)
-        return LakeTable.create(self.spark, path, schema, key_col=schema.fields[0].name, n_buckets=1)
+    @property
+    def targets(self) -> dict[str, CdcTarget]:
+        """The one target under the ingest core's single-table key ""."""
+        return {"": self.target}
 
     def _resolve_log_schema(self, log_schema):
         """D3 safety: the canonical read schema silently DROPS a ``table_kind``
@@ -254,64 +197,6 @@ class CdcRunner:
         )
 
     # -- checkpoint state (recovered once per runner lifetime) ---------------
-    def _load_watermarks(self) -> dict[int, tuple[int, int]]:
-        if self.offsets.is_empty():
-            return {}
-        rows = (
-            self.offsets.read()
-            .groupBy("log_partition")
-            .agg(F.max(F.struct("segment_id", "position")).alias("w"))
-            .select("log_partition", "w.segment_id", "w.position")
-            .collect()
-        )
-        return {r["log_partition"]: (r["segment_id"], r["position"]) for r in rows}
-
-    def _load_lineage_status(self) -> tuple[set[int], set[int], set[int]]:
-        """(done, open, errored) segment sets. A segment is open while it has
-        an 'open' row (position-limited tail) and no completing row yet;
-        errored while it has an 'error' row and no completing row ('done' or
-        a successful 'reprocess' both complete it)."""
-        if self.lineage.is_empty():
-            return set(), set(), set()
-        rows = (
-            self.lineage.read()
-            .groupBy("segment_id")
-            .agg(F.collect_set("status").alias("statuses"))
-            .collect()
-        )
-        done = {
-            r["segment_id"]
-            for r in rows
-            if "done" in r["statuses"] or "reprocess" in r["statuses"]
-        }
-        open_ = {
-            r["segment_id"]
-            for r in rows
-            if "open" in r["statuses"] and r["segment_id"] not in done
-        }
-        errored = {
-            r["segment_id"]
-            for r in rows
-            if "error" in r["statuses"] and r["segment_id"] not in done
-        }
-        return done, open_, errored
-
-    def _load_open_positions(self) -> dict[int, dict[int, int]]:
-        """For each open segment: log_partition -> max applied position."""
-        if not self._open or self.offsets.is_empty():
-            return {}
-        rows = (
-            self.offsets.read()
-            .where(F.col("segment_id").isin(*[int(s) for s in self._open]))
-            .groupBy("segment_id", "log_partition")
-            .agg(F.max("position").alias("pos"))
-            .collect()
-        )
-        out: dict[int, dict[int, int]] = {}
-        for r in rows:
-            out.setdefault(r["segment_id"], {})[r["log_partition"]] = r["pos"]
-        return out
-
     def checkpointed_offsets(self) -> dict[int, tuple[int, int]]:
         """log_partition -> (segment_id, position) high-watermark (R5)."""
         return dict(self._watermarks)
@@ -327,7 +212,40 @@ class CdcRunner:
         with reprocess() after fixing the data (R8)."""
         return set(self._errored)
 
+    # -- the per-row pipeline (shared with CdcStream) ----------------------
+    def _read(self, segment_ids: list[int]) -> DataFrame:
+        """Scan the named segments (partition-pruned). Logged batches
+        explode first, so every change of a batch shares its offset and
+        (default) writetime and the offset checkpoint advances atomically
+        per batch (handleMutation:255-272)."""
+        log = read_mutation_log(self.spark, self.log_path, schema=self.log_schema).where(
+            F.col("segment_id").isin(*[int(s) for s in segment_ids])
+        )
+        if self.batch_mutations:
+            from ..functions.decode import explode_batch_mutations
+
+            log = explode_batch_mutations(log)
+        return log
+
+    def _classify(self, log: DataFrame) -> DataFrame:
+        """D3 full form: mutations against COUNTER / MATERIALIZED_VIEW /
+        SECONDARY_INDEX tables are skipped (PartitionType guard,
+        Cassandra4CommitLogReadHandlerImpl.java:102-168) — the pre-scan
+        already counted them, and they still advance offsets/lineage. D9
+        full form: separate start/end range markers pair (per conv, log
+        order) before the apply or export sees them."""
+        if "table_kind" in log.columns:
+            log = split_unsupported(log)[0].drop("table_kind")
+        if self.unpaired_range_markers:
+            from ..operators.tombstones import pair_range_markers
+
+            log = pair_range_markers(log)
+        return log
+
     def _decode_payload(self, log: DataFrame) -> DataFrame:
+        """S5: decode serialized payload bytes into typed cells ('json' =
+        from_json codegen twin; 'binary' = the real binary layout with the
+        vectorized numpy decoder, binary_codec.py)."""
         if self.payload_format == "binary":
             from ..functions.binary_codec import decode_payload_binary
 
@@ -335,6 +253,17 @@ class CdcRunner:
         from ..functions.decode import decode_payload_jvm
 
         return decode_payload_jvm(log)
+
+    def _decode(self, log: DataFrame) -> DataFrame:
+        """The apply-side decode: payload bytes (when the log carries them)
+        and the D10 field exclusion. The full envelope (ts_ms, source, ...)
+        is NOT built on the apply hot path — it exists for the export
+        surface; the apply needs only cells."""
+        if self.decode_binary:
+            log = self._decode_payload(log)
+        if self.excluded_fields:
+            log = with_envelope(log, excluded_fields=self.excluded_fields).select(*log.columns)
+        return log
 
     # -- planning -----------------------------------------------------------
     def pending_segments(self) -> list[int]:
@@ -356,131 +285,34 @@ class CdcRunner:
         truncates the LAST segment at a byte position — the live-segment
         incremental-tail mode (S4): a later batch resumes past the
         checkpointed position."""
-        t0 = time.time()
-        batch_id = int(t0 * 1000)
         if self.schema_changes:
             # R9: replay DDL onto the lake BEFORE applying batches that carry
             # the new shape (SchemaChangeListener scenario)
             from .schema_evolution import replay_schema_changes
 
             replay_schema_changes(self.target, self.schema_changes, max(segment_ids))
-        log = read_mutation_log(self.spark, self.log_path, schema=self.log_schema).where(
-            F.col("segment_id").isin(*[int(s) for s in segment_ids])
-        )
+        log = self._read(segment_ids)
         # resume-past-checkpoint filter, scoped to OPEN (partially applied)
         # segments only — see module docstring for why a global watermark
         # filter is unsafe
         if not reprocess:
-            for seg, lp_pos in self._open_positions.items():
-                if seg not in segment_ids:
-                    continue
+            for seg in sorted(self._open & set(segment_ids)):
                 behind = F.lit(False)
-                for lp, pos in sorted(lp_pos.items()):
-                    behind = behind | (
-                        (F.col("log_partition") == lp) & (F.col("position") <= pos)
-                    )
+                for lp, (wseg, pos) in sorted(self._watermarks.items()):
+                    if wseg == seg:
+                        behind = behind | (
+                            (F.col("log_partition") == lp) & (F.col("position") <= pos)
+                        )
                 log = log.where((F.col("segment_id") != int(seg)) | ~behind)
         if position_limit is not None:
             last = max(segment_ids)
             log = log.where(
                 (F.col("segment_id") < last) | (F.col("position") <= position_limit)
             )
-        if self.batch_mutations:
-            # explode BEFORE classification so every change of a batch shares
-            # its offset and (default) writetime; the offset checkpoint then
-            # advances atomically per batch (handleMutation:255-272)
-            from ..functions.decode import explode_batch_mutations
-
-            log = explode_batch_mutations(log)
-
-        # D3 full form: mutations against COUNTER / MATERIALIZED_VIEW /
-        # SECONDARY_INDEX tables are counted-and-skipped (PartitionType
-        # guard, Cassandra4CommitLogReadHandlerImpl.java:102-168). Skipped
-        # rows still advance offsets/lineage — the reference reads past them
-        # — so the pre-scan sees the full log and only the apply is filtered.
-        from ..functions.decode import UNSUPPORTED_KINDS
-
-        has_kind = "table_kind" in log.columns
-        is_unsup = (
-            F.coalesce(
-                F.col("table_kind").isin(*UNSUPPORTED_KINDS.keys()), F.lit(False)
-            )
-            if has_kind
-            else F.lit(False)
-        )
-
-        # ONE narrow pre-scan job (5 pruned columns): per-segment offsets +
-        # lineage stats, the global op-kind counts apply_batch needs, AND
-        # the touched (state bucket, tombstone-store bucket) pairs — folded
-        # so the batch is scanned exactly once before the reduction. The
-        # collect_set is bounded by the bucket-count product per group
-        # (tombstone-store buckets derive from the state count), never by
-        # event count.
-        state_m = self.target.state.manifest()
-        store_m = self.target.tombstones.manifest()
-        bucket_pair = (
-            f"named_struct('sb', CAST(pmod(xxhash64({state_m['key_col']}), "
-            f"{state_m['n_buckets']}) AS INT), "
-            f"'tb', CAST(pmod(xxhash64({store_m['key_col']}), "
-            f"{store_m['n_buckets']}) AS INT))"
-        )
-        seg_rows = (
-            log.groupBy("segment_id", "log_partition")
-            .agg(
-                F.count("*").alias("n"),
-                F.max("position").alias("max_pos"),
-                F.max("writetime").alias("max_wt"),
-                F.sum(is_unsup.cast("long")).alias("n_unsup"),
-                *[
-                    F.sum(((F.col("op") == k) & ~is_unsup).cast("long")).alias(f"n_{k}")
-                    for k in _KINDS
-                ],
-                F.expr(f"collect_set({bucket_pair}) AS bucket_pairs"),
-            )
-            .collect()
-        )
-        n_decoded = sum(r["n"] for r in seg_rows)
-        # candidate applied-writetime high watermark — the tombstone-GC
-        # horizon input. Computed here from the pre-scan, but folded into
-        # self._max_writetime only AFTER apply_batch commits: advancing it
-        # first would let a gc() between a failed apply and its replay purge
-        # tombstones a never-applied event still needs to lose to
-        # (deleted-row resurrection).
-        batch_max_wt = max(
-            (r["max_wt"] for r in seg_rows if r["max_wt"] is not None),
-            default=None,
-        )
-        n_skipped = sum(r["n_unsup"] for r in seg_rows)
-        batch_stats = {"n": n_decoded - n_skipped}
-        batch_stats.update({k: sum(r[f"n_{k}"] for r in seg_rows) for k in _KINDS})
-        # touched-bucket superset (skipped-kind rows may add buckets; extra
-        # buckets only cost an idempotent rewrite, never correctness)
-        batch_stats["bucket_pairs"] = sorted(
-            {(p["sb"], p["tb"]) for r in seg_rows for p in r["bucket_pairs"]}
-        )
-        if has_kind:
-            log = log.where(~is_unsup).drop("table_kind")
-
-        if self.unpaired_range_markers:
-            # D9 full form: the log carries separate start/end bound markers;
-            # pair them (per conv, log order) before the apply sees them
-            from ..operators.tombstones import pair_range_markers
-
-            log = pair_range_markers(log)
-        if self.decode_binary:
-            # S5: the log carries serialized payload bytes (the commit-log
-            # fidelity mode) — decode into typed cells before applying.
-            # 'json' = from_json codegen twin; 'binary' = the real binary
-            # layout with the vectorized numpy decoder (binary_codec.py)
-            log = self._decode_payload(log)
-        if self.excluded_fields:
-            # D10 field-exclude rewrites cells; the full envelope (ts_ms,
-            # source, ...) is NOT built on the apply hot path — it exists for
-            # the export surface (with_envelope), the apply needs only cells
-            log = with_envelope(log, excluded_fields=self.excluded_fields).select(
-                *[c for c in log.columns]
-            )
-
+        # the ingest core's one narrow pre-scan, over the raw slice: skipped
+        # rows still advance offsets/lineage, as the reference reads past them
+        batch = Batch(self, log, segment_ids)
+        log = self._decode(self._classify(log))
         if self.validate_writetimes:
             from ..operators.lww import validate_unique_writetimes
 
@@ -489,164 +321,53 @@ class CdcRunner:
             from ..operators.routing import route_df
 
             log = route_df(log, self.routing_mode, self.n_queues).drop("queue")
-        stats = apply_batch(self.target, log, stats=batch_stats)
-        # state committed — the batch's writetimes are now APPLIED and may
-        # advance the GC horizon
-        if batch_max_wt is not None and (
-            self._max_writetime is None or batch_max_wt > self._max_writetime
-        ):
-            self._max_writetime = batch_max_wt
-        if self.assembly is not None:
-            self._refresh_assembly(log)
+        stats = batch.stats()
+        applied = apply_batch(self.target, log, stats=stats)
+        self._refresh_assembly(state_buckets(stats))
 
-        now_ms = int(time.time() * 1000)
-        # offsets: per log partition, the max (segment, position) this batch
-        # has durably applied (idx-watermark analog, S4)
-        best: dict[int, tuple[int, int]] = {}
-        for r in seg_rows:
-            cur = best.get(r["log_partition"])
-            cand = (r["segment_id"], r["max_pos"])
-            if cur is None or cand > cur:
-                best[r["log_partition"]] = cand
-        self.offsets.append_small(
-            [
-                {
-                    "log_partition": lp,
-                    "segment_id": seg,
-                    "position": pos,
-                    "updated_at": now_ms,
-                }
-                for lp, (seg, pos) in sorted(best.items())
-            ]
+        # a position-limited tail leaves the last segment un-finalized
+        open_segment = max(segment_ids) if position_limit is not None and not reprocess else None
+        finalized = [s for s in segment_ids if s != open_segment]
+        if self.changes is not None and finalized:
+            self._export(finalized)
+        out = batch.commit(
+            "reprocess" if reprocess else "done", segments=segment_ids, open_segment=open_segment
         )
-        for lp, cand in best.items():
-            if self._watermarks.get(lp, (-2, -2)) < cand:
-                self._watermarks[lp] = cand
-
-        # lineage: per-segment completion (EOF/archive analog, R3/R7); a
-        # position-limited tail leaves the last segment un-finalized. Every
-        # batch segment gets a row EVEN IF it contributed zero events (an
-        # already-drained tail or an empty segment directory) — otherwise it
-        # would stay pending forever and run() would spin.
-        open_segment = max(segment_ids) if position_limit is not None else None
-        lineage_rows = [
-            {
-                "segment_id": r["segment_id"],
-                "log_partition": r["log_partition"],
-                "status": "reprocess" if reprocess else (
-                    "open" if r["segment_id"] == open_segment else "done"
-                ),
-                "n_events": r["n"],
-            }
-            for r in seg_rows
-        ]
-        seen_segs = {r["segment_id"] for r in seg_rows}
-        for seg in segment_ids:
-            if seg not in seen_segs and seg != open_segment:
-                lineage_rows.append(
-                    {
-                        "segment_id": int(seg),
-                        "log_partition": -1,
-                        "status": "reprocess" if reprocess else "done",
-                        "n_events": 0,
-                    }
-                )
-        self.lineage.append_small(lineage_rows)
-        if not reprocess:
-            for row in lineage_rows:
-                seg = row["segment_id"]
-                if row["status"] == "done":
-                    self._done.add(seg)
-                    self._open.discard(seg)
-                    self._open_positions.pop(seg, None)
-                elif row["status"] == "open":
-                    self._open.add(seg)
-            if open_segment is not None:
-                lp_pos = self._open_positions.setdefault(open_segment, {})
-                for r in seg_rows:
-                    if r["segment_id"] == open_segment:
-                        lp_pos[r["log_partition"]] = max(
-                            lp_pos.get(r["log_partition"], -1), r["max_pos"]
-                        )
-
-        # R4 export half: persist change envelopes for segments FINALIZED by
-        # this batch (complete row sets only — see lake/changes.py). A fresh
-        # unfiltered read of just those segments guarantees completeness even
-        # when the apply slice was position/offset-filtered; replays and
-        # reprocess rewrite the same partitions idempotently.
-        if self.changes is not None:
-            done_now = sorted(
-                {r["segment_id"] for r in lineage_rows if r["status"] in ("done", "reprocess")}
-            )
-            if done_now:
-                from ..lake.changes import envelope_rows
-
-                full = read_mutation_log(
-                    self.spark, self.log_path, schema=self.log_schema
-                ).where(F.col("segment_id").isin(*[int(s) for s in done_now]))
-                if self.batch_mutations:
-                    from ..functions.decode import explode_batch_mutations
-
-                    full = explode_batch_mutations(full)
-                if "table_kind" in full.columns:
-                    # skipped partition types emit no change events either
-                    from ..functions.decode import split_unsupported
-
-                    full, _ = split_unsupported(full)
-                    full = full.drop("table_kind")
-                if self.unpaired_range_markers:
-                    # same D9 pairing the apply path ran — without it each
-                    # range delete would export as TWO unpaired 't' marker
-                    # rows instead of one paired event
-                    from ..operators.tombstones import pair_range_markers
-
-                    full = pair_range_markers(full)
-                if self.decode_binary:
-                    full = self._decode_payload(full)
-                env = envelope_rows(
-                    full,
-                    excluded_fields=self.excluded_fields,
-                    tombstones_on_delete=self.tombstones_on_delete,
-                )
-                self.changes.write_segments(env, done_now)
-                if self.traces is not None:
-                    # two deterministic spans per emitted record (backdated
-                    # write + read with CDC lag); same segment-overwrite
-                    # idempotence as the changes export
-                    from ..operators.tracing import trace_spans
-
-                    self.traces.write_segments(
-                        trace_spans(env, read_ts_ms=now_ms), done_now
-                    )
-
         if self.commit_log_transfer is not None:
-            for row in lineage_rows:
-                if row["status"] in ("done", "reprocess"):
-                    self.commit_log_transfer.on_success(row["segment_id"])
+            # R7 post-process: archive a segment AFTER its state commit,
+            # export and lineage landed
+            for seg in finalized:
+                self.commit_log_transfer.on_success(seg)
+        return {**out, "n_skipped": batch.n_skipped, **applied}
 
-        wall_ms = int((time.time() - t0) * 1000)
-        self.metrics.append_small(
-            [
-                {
-                    "batch_id": batch_id,
-                    "segment_lo": min(segment_ids),
-                    "segment_hi": max(segment_ids),
-                    "n_decoded": n_decoded,
-                    "n_deduped": stats["n_events"],
-                    "n_applied": stats["n_events"],
-                    "n_skipped": n_skipped,
-                    "wall_ms": wall_ms,
-                }
-            ]
+    def _export(self, segment_ids: list[int]) -> None:
+        """R4 export half: persist change envelopes for segments this batch
+        finalizes (complete row sets only — see lake/changes.py). A fresh
+        unfiltered read of just those segments guarantees completeness even
+        when the apply slice was position/offset-filtered; replays and
+        reprocess rewrite the same partitions idempotently. The apply's
+        classify step runs here too: skipped partition types emit no change
+        events, and an unpaired range delete exports as one paired event."""
+        from ..lake.changes import envelope_rows
+
+        full = self._classify(self._read(segment_ids))
+        if self.decode_binary:
+            full = self._decode_payload(full)
+        env = envelope_rows(
+            full,
+            excluded_fields=self.excluded_fields,
+            tombstones_on_delete=self.tombstones_on_delete,
         )
-        return {
-            "batch_id": batch_id,
-            "segments": segment_ids,
-            "n_decoded": n_decoded,
-            "n_skipped": n_skipped,
-            "wall_ms": wall_ms,
-            **stats,
-        }
+        self.changes.write_segments(env, segment_ids)
+        if self.traces is not None:
+            # two deterministic spans per emitted record (backdated write +
+            # read with CDC lag); same segment-overwrite idempotence as the
+            # changes export
+            from ..operators.tracing import trace_spans
+
+            self.traces.write_segments(
+                trace_spans(env, read_ts_ms=int(time.time() * 1000)), segment_ids
+            )
 
     # -- R10 metrics surface -------------------------------------------------
     def streaming_metrics(self) -> dict:
@@ -698,16 +419,17 @@ class CdcRunner:
         }
 
     # -- maintained downstream view (transcript assembly IVM) ----------------
-    def _refresh_assembly(self, batch_log: DataFrame) -> None:
-        """Re-assemble exactly the state buckets this batch's conversations
-        hash into and COW-swap them (`LakeTable.overwrite_buckets`). The
-        assembly shares the state's bucket function, so the state read is
-        file-pruned to the touched buckets; whole-bucket recompute-from-
-        state makes the refresh idempotent AND makes deleted conversations
-        vanish (their bucket is rewritten without them)."""
+    def _refresh_assembly(self, buckets: list[int]) -> None:
+        """Re-assemble exactly the state buckets a batch touched and
+        COW-swap them (`LakeTable.overwrite_buckets`); whole-bucket
+        recompute-from-state makes the refresh idempotent AND makes deleted
+        conversations vanish (their bucket is rewritten without them). A
+        no-op without a maintained view."""
+        if self.assembly is None:
+            return
         from ..operators.transcript import refresh_assembly
 
-        refresh_assembly(self.assembly, self.target, batch_log)
+        refresh_assembly(self.assembly, self.target, buckets)
 
     def read_assembly(self) -> DataFrame:
         """The maintained per-conversation transcript view."""
@@ -725,44 +447,23 @@ class CdcRunner:
         event's writetime lands above it, so purged tombstones can never be
         out-raced by a late upsert. One audit row per invocation lands in
         the ``_gc`` bookkeeping table."""
-        if self.gc_grace_us is None:
-            raise ValueError("tombstone GC is disabled; pass gc_grace_us to enable")
-        if self._errored:
+        if self._errored and self.gc_grace_us is not None:
             # quarantined segments hold not-yet-applied events whose
             # writetimes may sit at or below the current horizon; purging
             # now could let their later replay (reprocess) out-race a
             # purged delete. Skip until the quarantine clears.
             return {"n_purged": 0, "n_kept": 0, "horizon_wt": None}
-        if self._max_writetime is None:
+        horizon, res = gc_sweep(self, gc_tombstones)
+        if horizon is None:
             return {"n_purged": 0, "n_kept": 0, "horizon_wt": None}
-        horizon = int(self._max_writetime) - int(self.gc_grace_us)
-        res = gc_tombstones(self.target, horizon)
-        self.gc_log.append_small(
-            [
-                {
-                    "batch_id": int(time.time() * 1000),
-                    "fqtn": "",
-                    "horizon_wt": horizon,
-                    "n_purged": res["n_purged"],
-                    "n_kept": res["n_kept"],
-                }
-            ]
-        )
-        return {"n_purged": res["n_purged"], "n_kept": res["n_kept"], "horizon_wt": horizon}
+        return {"n_purged": res[""]["n_purged"], "n_kept": res[""]["n_kept"], "horizon_wt": horizon}
 
     def _mark_error(self, segment_id: int) -> None:
         """Quarantine a failing segment (R3's archive-to-error-folder flow):
         an 'error' lineage row, exclusion from future planning, and the
         CommitLogTransfer.on_error move when a transfer is configured."""
         self.lineage.append_small(
-            [
-                {
-                    "segment_id": int(segment_id),
-                    "log_partition": -1,
-                    "status": "error",
-                    "n_events": 0,
-                }
-            ]
+            [{"segment_id": int(segment_id), "log_partition": -1, "status": "error", "n_events": 0}]
         )
         self._errored.add(int(segment_id))
         if self.commit_log_transfer is not None:
@@ -770,46 +471,12 @@ class CdcRunner:
 
     # -- the loop -----------------------------------------------------------
     def run(self, max_batches: int | None = None, on_error: str = "raise") -> list[dict]:
-        """Drain pending segments in segment order, segments_per_batch at a
-        time (Trigger.AvailableNow-style). With ``gc_grace_us`` set, stored
-        tombstones are GC'd every ``gc_every_batches`` batches, so the store
-        stays bounded over an arbitrarily long run.
-
-        ``on_error``: 'raise' propagates the first failure (default);
-        'isolate' is the reference's error-folder flow (CommitLogProcessor's
-        per-commit-log error handling): a failing batch is retried segment
-        by segment to pin the fault, the failing segment(s) get an 'error'
-        lineage row + CommitLogTransfer.on_error and drop out of planning,
-        and the drain continues — ``reprocess()`` replays them once fixed.
-        Safe because batches are independent up to the idempotent merge:
-        skipping a segment cannot corrupt others' state, only defer that
-        segment's events."""
-        if on_error not in ("raise", "isolate"):
-            raise ValueError(f"unknown on_error mode {on_error!r}")
-        results = []
-        n = 0
-        while True:
-            pending = self.pending_segments()
-            if not pending or (max_batches is not None and n >= max_batches):
-                break
-            batch = pending[: self.segments_per_batch]
-            if on_error == "raise":
-                results.append(self.run_batch(batch))
-            else:
-                try:
-                    results.append(self.run_batch(batch))
-                except Exception:
-                    # isolate: one segment at a time; single-segment failures
-                    # are the faulty ones
-                    for seg in batch:
-                        try:
-                            results.append(self.run_batch([seg]))
-                        except Exception:
-                            self._mark_error(seg)
-            n += 1
-            if self.gc_grace_us is not None and n % self.gc_every_batches == 0:
-                self.gc()
-        return results
+        """Drain pending segments through the ingest core's loop
+        (``ingest.drain``: GC cadence, ``on_error`` 'raise' | 'isolate').
+        Isolated segments get an 'error' lineage row and
+        CommitLogTransfer.on_error; ``reprocess()`` replays them once
+        fixed."""
+        return drain(self, max_batches, on_error)
 
     def reprocess(self, segment_ids: list[int]) -> dict:
         """R8 error-segment reprocessing: replay named segments bypassing the
@@ -821,8 +488,4 @@ class CdcRunner:
         if self.commit_log_transfer is not None:
             for seg in segment_ids:
                 self.commit_log_transfer.restore(seg)
-        result = self.run_batch(segment_ids, reprocess=True)
-        for seg in segment_ids:
-            self._errored.discard(int(seg))
-            self._done.add(int(seg))
-        return result
+        return self.run_batch(segment_ids, reprocess=True)

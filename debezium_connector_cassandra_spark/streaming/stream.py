@@ -5,9 +5,9 @@ This is the push-style dual of CdcRunner's pull loop — the closest Spark
 analog of the reference's directory watcher (S1: blocks on ENTRY_CREATE,
 AbstractDirectoryWatcher.java:24): Spark's file-stream source tracks newly
 appearing files under ``segment_id=N/`` partitions, and each micro-batch
-flows through ``apply_batch`` (idempotent, so Spark's at-least-once
-foreachBatch contract still yields exactly-once table state — the same
-argument as the batch runner's crash-replay story).
+flows through the ingest core (streaming/ingest.py) and ``apply_batch``
+(idempotent, so Spark's at-least-once foreachBatch contract still yields
+exactly-once table state).
 
 Ordering caveat (why there is NO offset pre-filter here): the file source
 does not deliver files in (segment, position) order — with
@@ -15,12 +15,8 @@ does not deliver files in (segment, position) order — with
 Filtering a micro-batch against a high-watermark would silently DROP rows
 of late-delivered files (Spark's checkpoint marks them consumed; they are
 never re-read) — permanent loss. Re-applying rows, by contrast, is free
-(idempotent merge). So every delivered row is applied, and lineage is
-recorded with status ``streamed`` — never ``done``, because a micro-batch
-cannot know whether it saw ALL of a segment's files. The batch front-end
-treats ``streamed`` segments as pending and re-applies them in full when
-the job switches front-ends (a bounded, idempotent re-read — the price of
-the file source's unordered delivery).
+(idempotent merge). So every delivered row is applied and committed with
+lineage status ``streamed`` (see the ingest core's status table).
 
 Use ``Trigger.AvailableNow`` (``available_now=True``) to drain everything
 present and stop — the streaming equivalent of ``CdcRunner.run()``; omit it
@@ -29,13 +25,13 @@ for a continuously tailing daemon like the reference.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.decode import split_unsupported
 from ..lake.table import LakeTable
 from ..model import MUTATION_LOG_SCHEMA
-from ..plans.apply import apply_batch
+from ..plans.apply import apply_batch, batch_stats, prescan, state_buckets
+from .ingest import Batch, StreamDriver
 from .runner import CdcRunner
 
 # Persistent range-marker context (the RangeTombstoneContext.java:20-40
@@ -57,7 +53,7 @@ RANGE_CTX_SCHEMA = T.StructType(
 )
 
 
-class CdcStream:
+class CdcStream(StreamDriver):
     def __init__(
         self,
         runner: CdcRunner,
@@ -81,18 +77,11 @@ class CdcStream:
         # mis-pair whenever the file source splits a conversation's markers
         # across batches in arbitrary order (see that method's docstring)
         self._range_ctx: LakeTable | None = None
-        if settle_lag_segments is not None and not getattr(
-            runner, "unpaired_range_markers", False
-        ):
+        if settle_lag_segments is not None and not runner.unpaired_range_markers:
             raise ValueError("settle_lag_segments requires unpaired_range_markers=True")
-        if getattr(runner, "unpaired_range_markers", False):
-            path = f"{runner.target_path}/_range_ctx"
-            self._range_ctx = (
-                LakeTable(runner.spark, path)
-                if LakeTable.exists(path)
-                else LakeTable.create(
-                    runner.spark, path, RANGE_CTX_SCHEMA, key_col="conv_id", n_buckets=1
-                )
+        if runner.unpaired_range_markers:
+            self._range_ctx = LakeTable.open_or_create(
+                runner.spark, f"{runner.target_path}/_range_ctx", RANGE_CTX_SCHEMA, "conv_id", 1
             )
 
     def _source(self) -> DataFrame:
@@ -104,11 +93,8 @@ class CdcStream:
             schema = self.runner.spark.read.parquet(self.runner.log_path).schema
         elif schema is None:
             schema = MUTATION_LOG_SCHEMA
-        reader = self.runner.spark.readStream.schema(schema)
-        if self.max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        df = reader.parquet(self.runner.log_path)
-        if getattr(self.runner, "batch_mutations", False):
+        df = self._read_stream(schema)
+        if self.runner.batch_mutations:
             return df  # cells travel inside the changes array
         if "cells" not in df.columns and not self.runner.decode_binary:
             raise ValueError(
@@ -118,32 +104,24 @@ class CdcStream:
         return df
 
     def _handle_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # Every delivered row is applied — no watermark pre-filter (see
-        # module docstring: filtering against out-of-order file delivery
-        # loses data; re-applying is a harmless idempotent no-op). Spark
-        # replays a failed micro-batch (at-least-once); apply_batch keeps
-        # the table state exactly-once.
-        # offsets/lineage stats over the RAW batch (skipped unsupported rows
-        # still advance offsets, matching the batch front-end's pre-scan)
-        if getattr(self.runner, "batch_mutations", False):
+        # every delivered row is applied: no watermark pre-filter (see the
+        # module docstring); a replayed micro-batch re-applies idempotently
+        r = self.runner
+        if r.batch_mutations:
             # logged batches explode before everything else, exactly like the
             # batch front-end (shared offset per batch — handleMutation:255-272)
             from ..functions.decode import explode_batch_mutations
 
             batch_df = explode_batch_mutations(batch_df)
-        seg_rows = (
-            batch_df.groupBy("segment_id", "log_partition")
-            .agg(F.count("*").alias("n"), F.max("position").alias("max_pos"))
-            .collect()
-        )
-        if not seg_rows:
+        # the pre-scan runs over the RAW batch: skipped unsupported rows still
+        # advance offsets, matching the batch front-end
+        batch = Batch(r, batch_df)
+        if not batch.rows:
             return
+        stats = batch.stats()
         if "table_kind" in batch_df.columns:
             # D3 classify-and-skip, same as the batch front-end
-            from ..functions.decode import split_unsupported
-
-            supported, _ = split_unsupported(batch_df)
-            batch_df = supported.drop("table_kind")
+            batch_df = split_unsupported(batch_df)[0].drop("table_kind")
         if self._range_ctx is not None:
             # defer every bound marker into the durable context (pairing is
             # NOT safe inside a micro-batch); the rest of the batch applies
@@ -168,57 +146,21 @@ class CdcStream:
                 )
             )
             batch_df = batch_df.where(F.col("op") != "r")
-            for r in seg_rows:
-                if self._max_segment_seen is None or r["segment_id"] > self._max_segment_seen:
-                    self._max_segment_seen = r["segment_id"]
-            if self.settle_lag_segments is not None and self._max_segment_seen is not None:
+            stats = {**stats, "n": stats["n"] - stats["r"], "r": 0}
+            seen = max(row["segment_id"] for row in batch.rows)
+            if self._max_segment_seen is None or seen > self._max_segment_seen:
+                self._max_segment_seen = seen
+            if self.settle_lag_segments is not None:
                 # continuous-mode watermark: markers whose segment can no
                 # longer receive out-of-order siblings pair and apply now
                 self.finalize_ranges(
                     settle_below=int(self._max_segment_seen) - int(self.settle_lag_segments)
                 )
-        if self.runner.decode_binary:
-            # same codec selection as the batch front-end (json | binary)
-            batch_df = self.runner._decode_payload(batch_df)
-        if self.runner.excluded_fields:
-            from ..functions.decode import with_envelope
-
-            batch_df = with_envelope(
-                batch_df, excluded_fields=self.runner.excluded_fields
-            ).select(*[c for c in batch_df.columns])
-        apply_batch(self.runner.target, batch_df)
-        if self.runner.assembly is not None:
-            # maintained view: refresh the touched buckets BEFORE offsets,
-            # same crash-safety side as the state (idempotent recompute)
-            self.runner._refresh_assembly(batch_df)
-        now_ms = int(time.time() * 1000)
-        best: dict[int, tuple[int, int]] = {}
-        for r in seg_rows:
-            cand = (r["segment_id"], r["max_pos"])
-            if best.get(r["log_partition"], (-2, -2)) < cand:
-                best[r["log_partition"]] = cand
-        self.runner.offsets.append_small(
-            [
-                {"log_partition": lp, "segment_id": s, "position": p, "updated_at": now_ms}
-                for lp, (s, p) in sorted(best.items())
-            ]
-        )
-        for lp, cand in best.items():
-            if self.runner._watermarks.get(lp, (-2, -2)) < cand:
-                self.runner._watermarks[lp] = cand
-        # 'streamed', never 'done': a micro-batch sees an arbitrary file
-        # subset, so segment completeness is unknowable here
-        self.runner.lineage.append_small(
-            [
-                {
-                    "segment_id": r["segment_id"],
-                    "log_partition": r["log_partition"],
-                    "status": "streamed",
-                    "n_events": r["n"],
-                }
-                for r in seg_rows
-            ]
-        )
+        apply_batch(r.target, r._decode(batch_df), stats=stats)
+        # maintained view: refresh the touched buckets BEFORE offsets, same
+        # crash-safety side as the state (idempotent recompute)
+        r._refresh_assembly(state_buckets(stats))
+        batch.commit("streamed")
 
     def finalize_ranges(self, settle_below: int | None = None) -> dict:
         """Pair the accumulated bound markers and apply the reconstructed
@@ -309,13 +251,13 @@ class CdcStream:
                 "schema_version",
                 F.lit(False).alias("snapshot"),
             )
-            n_paired = paired.count()
+            stats = batch_stats(prescan(paired, self.runner.targets))
+            n_paired = stats["n"]
             if n_paired:
-                apply_batch(self.runner.target, paired)
-                if self.runner.assembly is not None:
-                    # late range tombstones change state for their convs —
-                    # the maintained view must follow
-                    self.runner._refresh_assembly(paired)
+                apply_batch(self.runner.target, paired, stats=stats)
+                # late range tombstones change state for their convs — the
+                # maintained view must follow
+                self.runner._refresh_assembly(state_buckets(stats))
             dangling = m.where(~(is_paired_end | is_consumed_start)).select(
                 *[f.name for f in RANGE_CTX_SCHEMA.fields]
             )
@@ -327,23 +269,10 @@ class CdcStream:
             m.unpersist()
         return {"n_paired": n_paired, "n_dangling": n_dangling}
 
-    def start(self, checkpoint_dir: str, available_now: bool = True):
-        writer = (
-            self._source()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def run_available(self, checkpoint_dir: str, timeout_sec: int = 600) -> None:
+    def run_available(self, checkpoint_dir: str, timeout_sec: float = 600) -> None:
         """Drain all currently-available segments and stop (the streaming
         twin of CdcRunner.run()). With unpaired_range_markers, the drained
         context is complete, so the deferred markers pair and apply here."""
-        q = self.start(checkpoint_dir, available_now=True)
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
+        super().run_available(checkpoint_dir, timeout_sec)
         if self._range_ctx is not None:
             self.finalize_ranges()

@@ -5,6 +5,7 @@ plus resume and snapshot-selection (anti-join) coverage.
 """
 
 import json
+import math
 import os
 
 import pandas as pd
@@ -212,6 +213,9 @@ def test_multi_table_streaming_parity(spark, mt_log, tmp_path):
             tuple(r) for r in r_batch.targets[spec.fqtn].read_transcripts().collect()
         )
         assert a == b, spec.fqtn
+    # one _metrics row per non-empty micro-batch (3 files per trigger)
+    n_files = sum(f.endswith(".parquet") for _, _, fs in os.walk(mt_log) for f in fs)
+    assert r_stream.metrics.read().count() == math.ceil(n_files / 3)
     # per-table 'streamed' lineage landed for every table with events
     lin = r_stream.lineage.read().where(F.col("status") == "streamed")
     assert {r["fqtn"] for r in lin.select("fqtn").distinct().collect()} == {
@@ -316,23 +320,3 @@ def test_multi_table_changes_export(spark, mt_log, tmp_path):
         assert {(r["keyspace"], r["table"]) for r in src} == {
             (spec.keyspace, spec.table)
         }
-
-
-def test_arrow_decode_matches_jvm_per_spec(spark, mt_log):
-    """decode_table_payload_arrow (pandas UDF) is bit-identical to the JVM
-    from_json path for every table spec, including the timestamp payload."""
-    from debezium_connector_cassandra_spark.streaming.multi_table import (
-        decode_table_payload,
-        decode_table_payload_arrow,
-    )
-
-    raw = spark.read.parquet(mt_log)
-    for spec in SPECS:
-        sub = raw.where(
-            (F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table)
-        ).limit(300)
-        jvm = decode_table_payload(sub, spec).select("segment_id", "position", "cells")
-        arrow = decode_table_payload_arrow(sub, spec).select("segment_id", "position", "cells")
-        j = {(r["segment_id"], r["position"]): r["cells"] for r in jvm.collect()}
-        a = {(r["segment_id"], r["position"]): r["cells"] for r in arrow.collect()}
-        assert j == a, f"decode mismatch for {spec.fqtn}"

@@ -1,15 +1,10 @@
-"""Unit tests: decode paths (Arrow == JVM), training-data operators,
-multimodal stub contract."""
+"""Unit tests: decode paths, training-data operators, multimodal stub
+contract."""
 
 import pytest
 from pyspark.sql import Row, functions as F
 
-from debezium_connector_cassandra_spark.functions.decode import (
-    decode_payload_arrow,
-    decode_payload_jvm,
-    encode_payload,
-    with_envelope,
-)
+from debezium_connector_cassandra_spark.functions.decode import with_envelope
 from debezium_connector_cassandra_spark.operators.multimodal import (
     attach_payload,
     decode_media,
@@ -26,23 +21,6 @@ from debezium_connector_cassandra_spark.operators.text_dedup import (
     simhash_near_dups,
 )
 from debezium_connector_cassandra_spark.sources.generator import gen_mutation_log
-
-
-def test_arrow_decode_matches_jvm(spark):
-    """S5 analog: the Arrow pandas-UDF payload decoder and the JVM from_json
-    decoder produce identical cells."""
-    log = gen_mutation_log(spark, 300, n_convs=20, seed=11)
-    # ts cell type complicates JSON round-trips; compare the string/long cells
-    enc = encode_payload(log)
-    via_jvm = decode_payload_jvm(enc).select(
-        "segment_id", "position", "cells.role", "cells.text", "cells.tool"
-    )
-    via_arrow = decode_payload_arrow(enc).select(
-        "segment_id", "position", "cells.role", "cells.text", "cells.tool"
-    )
-    a = sorted(via_jvm.collect(), key=lambda r: (r["segment_id"], r["position"]))
-    b = sorted(via_arrow.collect(), key=lambda r: (r["segment_id"], r["position"]))
-    assert a == b
 
 
 def test_field_exclude_only_strips_upserts(spark):

@@ -1,6 +1,10 @@
 """Structured Streaming front-end + salted reduction equivalence."""
 
+import math
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from debezium_connector_cassandra_spark.operators.lww import (
     reduce_events,
@@ -32,7 +36,7 @@ def test_structured_streaming_drain(spark, tmp_path):
     log = gen_mutation_log(spark, 1200, n_convs=30, events_per_segment=300, seed=31)
     log_path = str(tmp_path / "log")
     write_mutation_log(log, log_path)
-    runner = CdcRunner(spark, log_path, str(tmp_path / "t"), n_buckets=8)
+    runner = CdcRunner(spark, log_path, str(tmp_path / "t"), n_buckets=8, gc_grace_us=0)
     stream = CdcStream(runner, max_files_per_trigger=8)
     ckpt = str(tmp_path / "ckpt")
     stream.run_available(ckpt)
@@ -44,3 +48,19 @@ def test_structured_streaming_drain(spark, tmp_path):
     # offsets advanced to the log head
     offs = runner.checkpointed_offsets()
     assert offs and all(seg >= 0 for seg, _ in offs.values())
+    # one _metrics row per non-empty micro-batch (8 files per trigger), none
+    # for the empty second drain
+    n_files = sum(
+        f.endswith(".parquet") for _, _, fs in os.walk(log_path) for f in fs
+    )
+    assert runner.metrics.read().count() == math.ceil(n_files / 8)
+    # 'streamed' never advances the GC horizon: even with zero grace, a
+    # following sweep purges nothing
+    assert runner._max_writetime is None
+    assert runner.gc()["n_purged"] == 0
+    # a drain cut short by its timeout stops the query and fails loudly
+    cut = CdcStream(
+        CdcRunner(spark, log_path, str(tmp_path / "t2"), n_buckets=8), max_files_per_trigger=1
+    )
+    with pytest.raises(TimeoutError, match="ckpt_cut"):
+        cut.run_available(str(tmp_path / "ckpt_cut"), timeout_sec=0.001)
