@@ -892,14 +892,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # --- multi-table / multi-keyspace capture (KeyspaceTable + SchemaHolder;
     # reference MultipleTablesProcessingTest.java:27-106): one log interleaves
     # two tables with DIFFERENT payload schemas; each is routed, decoded with
-    # its own cells schema (from_json via decode_table_payload) and reduced in
+    # its own cells schema (from_json via decode_payload_jvm) and reduced in
     # isolation — tombstones of one table never affect the other.
     def cdc_multi_table(spark, sf_dir):
         from pyspark.sql import types as T
 
         from debezium_connector_cassandra_spark.model import TableSpec
-        from debezium_connector_cassandra_spark.streaming.multi_table import (
-            decode_table_payload,
+        from debezium_connector_cassandra_spark.functions.decode import (
+            decode_payload_jvm,
         )
 
         flat = _flat_log(spark, sf_dir).withColumn(
@@ -965,7 +965,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.lit(1).alias("schema_version"),
                 F.lit(False).alias("snapshot"),
             )
-            dec = decode_table_payload(log, spec)
+            dec = decode_payload_jvm(log, spec)
             st = _state_pipeline(dec, ["a", "b"], ("i", "u", "d", "p", "r"))
             outs.append(st.select(F.lit(spec.fqtn).alias("fqtn"), "conv_id", "turn_idx", "a", "b"))
         return outs[0].unionByName(outs[1])

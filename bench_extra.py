@@ -4,12 +4,11 @@
 NOT the driver's bench — bench.py stays frozen. This file exists to
  * time individual headline queries in isolation (noop sink, warm cache,
    N trials, median/min) so optimizations are attributed per query;
- * time the end-to-end pipeline with CDC_APPLY_TIMING step marks;
  * count Spark jobs per query via the status tracker.
 
 Usage:
   python bench_extra.py queries [name ...]   # per-query isolation
-  python bench_extra.py pipeline             # pipeline with step marks
+  python bench_extra.py pipeline             # end-to-end pipeline wall
 """
 
 from __future__ import annotations
@@ -79,7 +78,6 @@ def bench_queries(names: list[str], trials: int = 5) -> None:
 
 
 def bench_pipeline() -> None:
-    os.environ.setdefault("CDC_APPLY_TIMING", "1")
     from debezium_connector_cassandra_spark.session import get_spark
 
     import bench as b

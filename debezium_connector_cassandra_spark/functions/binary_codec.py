@@ -1,32 +1,40 @@
 """S5 full form — a REAL binary commit-log payload codec.
 
 The reference delegates segment parsing to Cassandra's own binary reader
-(``Cassandra4CommitLogSegmentReader.java:29-33``); without a live Cassandra
-the engine defines its own compact binary mutation encoding (little-endian,
-schema-ordered) and decodes it with a FULLY VECTORIZED numpy parser inside
-``mapInPandas`` — zero per-row Python in the decode hot path (the previous
-JSON payload mode remains as the cross-check twin; tests assert bit-parity).
+(``Cassandra4CommitLogSegmentReader.java:29-33``), which decodes every
+mutation against its table's schema (SchemaHolder lookup + one
+CommitLogReader). Without a live Cassandra the engine defines its own
+compact binary mutation encoding, driven the same way by the table's
+``TableSpec``: one record layout for every table, and single-table capture
+is the ``TRANSCRIPTS_SPEC`` case. The JSON payload (``decode.encode_payload``
+/ ``decode_payload_jvm``) remains as the cross-check twin; tests assert
+parity.
 
-Record layout for the transcript cells struct (role, text, tool: string;
-ts: timestamp->epoch-micros i64), all little-endian:
+Record layout, n = len(spec.payload) cells, B = ceil(n/8), little-endian:
 
-    offset  size  field
-    0       1     set bitmap        (bit i: cell i carries a value/assignment)
-    1       1     null bitmap       (bit i: set cell i assigns NULL)
-    2       1     deletion bitmap   (bit i: cell i has deletion_ts)
-    3       32    deletion_ts[4]    (i64 each; garbage where bit unset)
-    35      8     ts value          (i64 epoch micros; garbage when unset/null)
-    43      12    str lengths [3]   (u32 role, text, tool; 0 when unset/null)
-    55      ...   string bytes      (role || text || tool, utf-8)
+    offset   size  field
+    0        B     set bitmap       (bit i%8 of byte i//8: cell i carries a
+                                     value or assignment)
+    B        B     null bitmap      (set cell i assigns NULL)
+    2B       B     deletion bitmap  (cell i has deletion_ts)
+    3B       8n    deletion_ts[n]   (i64; 0 where the bit is unset)
+    3B+8n    8n    value slots[n]   (i64: int/bool value, double bit pattern,
+                                     timestamp epoch micros, or the byte
+                                     length of a string cell's tail; 0 when
+                                     the cell is unset or NULL)
+    3B+16n   ...   string tails     (set non-NULL string cells, cell order,
+                                     utf-8)
 
-Fixed-width header + length-prefixed tails is what makes the decoder
-vectorizable: every field position is arithmetic over the record-start
-offsets (which Arrow hands us for free) — the string gathers use the
-standard segment-gather (repeat + arange) trick, one fancy-index per column.
+Supported cell types: string, tinyint..bigint, boolean, double, timestamp.
+Others raise — collection/UDT payloads use the JSON codec.
 
-The ENCODER is producer-side (the Cassandra-node analog writing segments) —
-it runs once per synthetic log build, off the measured path, so it uses a
-plain per-row pack. The DECODER is the hot path and is pure numpy.
+A fixed-width header plus length-prefixed tails is what makes both
+directions vectorizable: every header field is arithmetic over the record
+start offsets (one structured-dtype view), and the string tails move with
+the segment index trick (repeat + arange), one fancy-index per column. The
+encoder and the decoder are each one numpy kernel per Arrow batch inside
+``mapInPandas`` — no per-row Python. ``_encode_cells_py`` is the scalar
+reference packer the vectorized encoder is tested byte-for-byte against.
 """
 
 from __future__ import annotations
@@ -38,333 +46,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-_STR_COLS = ("role", "text", "tool")
-_ALL_COLS = ("role", "text", "tool", "ts")  # schema order == bit order
-_FIXED = 55
-
-
-# ---------------------------------------------------------------------------
-# encoder (producer side, cold path)
-# ---------------------------------------------------------------------------
-
-def _encode_cells_py(cells) -> bytes | None:
-    """Pack ONE cells struct (Row / dict) into the binary layout."""
-    if cells is None:
-        return None
-
-    def cell(name):
-        c = cells[name] if isinstance(cells, dict) else getattr(cells, name)
-        if c is None:
-            return None, None, False
-        get = (lambda f: c.get(f)) if isinstance(c, dict) else (lambda f: getattr(c, f))
-        return get("value"), get("deletion_ts"), bool(get("set"))
-
-    set_b = null_b = del_b = 0
-    dels = [0] * 4
-    ts_val = 0
-    strs = []
-    lens = [0, 0, 0]
-    for i, name in enumerate(_ALL_COLS):
-        value, deletion_ts, is_set = cell(name)
-        if is_set:
-            set_b |= 1 << i
-            if value is None:
-                null_b |= 1 << i
-            elif name == "ts":
-                t = pd.Timestamp(value)
-                ts_val = t.value // 1000  # ns -> us
-            else:
-                b = str(value).encode("utf-8")
-                strs.append(b)
-                lens[i] = len(b)
-        if deletion_ts is not None:
-            del_b |= 1 << i
-            dels[i] = int(deletion_ts)
-    head = struct.pack(
-        "<BBB4qq3I", set_b, null_b, del_b, *dels, ts_val, *lens
-    )
-    return head + b"".join(strs)
-
-
-# packed (no alignment padding) header layout — itemsize must equal _FIXED
-_HEADER_DTYPE = np.dtype(
-    [
-        ("set", "u1"),
-        ("null", "u1"),
-        ("del", "u1"),
-        ("dels", "<i8", 4),
-        ("ts", "<i8"),
-        ("lens", "<u4", 3),
-    ]
-)
-assert _HEADER_DTYPE.itemsize == _FIXED
-
-
-def _scatter_segments(buf: np.ndarray, pos: np.ndarray, lens: np.ndarray, src: np.ndarray) -> None:
-    """Reverse of _segment_gather: write contiguous src segments to
-    buf[pos[i] : pos[i]+lens[i]] — vectorized (repeat + arange)."""
-    total = int(lens.sum())
-    if total == 0:
-        return
-    ends = np.cumsum(lens)
-    starts_src = ends - lens
-    idx = np.repeat(pos - starts_src, lens) + np.arange(total, dtype=np.int64)
-    buf[idx] = src
-
-
-def encode_payload_binary(df: DataFrame) -> DataFrame:
-    """cells -> binary payload (producer analog), numpy-packed per Arrow
-    batch: the fixed 55-byte headers materialize as ONE structured-dtype
-    array view (bitmaps / deletion stamps / ts / lengths are all fixed-width
-    arithmetic) and string tails scatter with the decoder's gather trick in
-    reverse — no per-row Python pack loop. The cells struct is flattened to
-    primitive columns JVM-side first so the UDF sees numpy-native Series,
-    and the payload bytes come back as one Arrow BinaryArray over the shared
-    output buffer."""
-    passthrough = [f for f in df.schema.fields if f.name != "cells"]
-    pass_names = [f.name for f in passthrough]
-    out_schema = T.StructType(
-        passthrough + [T.StructField("payload", T.BinaryType(), True)]
-    )
-    flat_cols = {"_has_cells": F.col("cells").isNotNull()}
-    for name in _ALL_COLS:
-        c = F.col("cells")[name]
-        flat_cols[f"_{name}_value"] = c["value"]
-        # nullable int64 degrades to float64 across Arrow->pandas (silent
-        # precision loss past 2^53) — ship a non-null value + presence flag
-        flat_cols[f"_{name}_del"] = F.coalesce(c["deletion_ts"], F.lit(0).cast("long"))
-        flat_cols[f"_{name}_hasdel"] = c["deletion_ts"].isNotNull()
-        flat_cols[f"_{name}_set"] = F.coalesce(c["set"], F.lit(False))
-    flat = df.select(*pass_names, *[v.alias(k) for k, v in flat_cols.items()])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-
-        for pdf in batches:
-            n = len(pdf)
-            present = pdf["_has_cells"].to_numpy(dtype=bool)
-            m = int(present.sum())
-            head = np.zeros(m, dtype=_HEADER_DTYPE)
-            str_bufs: list[np.ndarray] = []
-            str_lens: list[np.ndarray] = []
-            for i, name in enumerate(_ALL_COLS):
-                bit = np.uint8(1 << i)
-                is_set = pdf[f"_{name}_set"].to_numpy(dtype=bool)[present]
-                has_del = pdf[f"_{name}_hasdel"].to_numpy(dtype=bool)[present]
-                head["del"] |= np.where(has_del, bit, 0).astype(np.uint8)
-                head["dels"][:, i] = pdf[f"_{name}_del"].to_numpy(dtype=np.int64)[present]
-                head["set"] |= np.where(is_set, bit, 0).astype(np.uint8)
-                vals = pdf[f"_{name}_value"][present]
-                if name == "ts":
-                    ns = vals.to_numpy(dtype="datetime64[ns]")
-                    is_null = is_set & pd.isna(ns)
-                    head["ts"] = np.where(
-                        pd.isna(ns), 0, ns.view(np.int64) // 1000
-                    )
-                else:
-                    enc = vals.map(
-                        lambda v: None if v is None else str(v).encode("utf-8")
-                    )
-                    is_null = is_set & enc.isna().to_numpy()
-                    lens = np.fromiter(
-                        (0 if b is None else len(b) for b in enc),
-                        dtype=np.int64,
-                        count=m,
-                    )
-                    # unset cells write no tail and a zero length
-                    lens = np.where(is_set & ~is_null, lens, 0)
-                    head["lens"][:, i] = lens.astype(np.uint32)
-                    joined = b"".join(
-                        b for b, keep in zip(enc, is_set & ~is_null) if keep and b is not None
-                    )
-                    str_bufs.append(np.frombuffer(joined, dtype=np.uint8))
-                    str_lens.append(lens)
-                head["null"] |= np.where(is_null, bit, 0).astype(np.uint8)
-            tail_lens = sum(str_lens) if str_lens else np.zeros(m, dtype=np.int64)
-            rec_lens = _FIXED + tail_lens
-            ends = np.cumsum(rec_lens)
-            out_starts = (ends - rec_lens).astype(np.int64)
-            buf = np.empty(int(ends[-1]) if m else 0, dtype=np.uint8)
-            # headers: one scatter of the structured view
-            hidx = (out_starts[:, None] + np.arange(_FIXED)[None, :]).ravel()
-            buf[hidx] = head.view(np.uint8)
-            # string tails: per column, positions advance past prior columns
-            pos = out_starts + _FIXED
-            for src, lens in zip(str_bufs, str_lens):
-                _scatter_segments(buf, pos, lens, src)
-                pos = pos + lens
-            offsets = np.concatenate([[0], ends]) if m else np.zeros(1, dtype=np.int64)
-            if m and int(offsets[-1]) > _INT32_MAX:
-                arr = pa.LargeBinaryArray.from_buffers(
-                    pa.large_binary(), m,
-                    [None, pa.py_buffer(offsets.astype(np.int64)), pa.py_buffer(buf)],
-                )
-            else:
-                arr = pa.BinaryArray.from_buffers(
-                    pa.binary(), m,
-                    [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)],
-                )
-            payload = np.full(n, None, dtype=object)
-            payload[np.flatnonzero(present)] = arr.to_numpy(zero_copy_only=False)
-            cols = {c: pdf[c] for c in pass_names}
-            cols["payload"] = payload
-            yield pd.DataFrame(cols)
-
-    return flat.mapInPandas(run, out_schema)
-
-
-# ---------------------------------------------------------------------------
-# decoder (hot path, vectorized)
-# ---------------------------------------------------------------------------
-
-_FLAT_FIELDS: list[tuple[str, T.DataType]] = []
-for _c in _ALL_COLS:
-    _FLAT_FIELDS.append(
-        (f"_{_c}_value", T.TimestampType() if _c == "ts" else T.StringType())
-    )
-    _FLAT_FIELDS.append((f"_{_c}_del", T.LongType()))
-    _FLAT_FIELDS.append((f"_{_c}_set", T.BooleanType()))
-
-
-def _segment_gather(data: np.ndarray, pos: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Gather variable-length segments data[pos[i] : pos[i]+lens[i]] into one
-    contiguous buffer + end-offsets — vectorized (repeat + arange trick)."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.uint8), np.zeros(len(lens) + 1, dtype=np.int64)
-    ends = np.cumsum(lens)
-    starts_out = ends - lens
-    idx = np.repeat(pos - starts_out, lens) + np.arange(total, dtype=np.int64)
-    offsets = np.concatenate([[0], ends])
-    return data[idx], offsets
-
-
-_INT32_MAX = np.iinfo(np.int32).max
-
-
-def _string_array(offs: np.ndarray, buf: np.ndarray):
-    """Zero-copy Arrow string build from int64 end-offsets + utf-8 buffer.
-
-    A batch whose concatenated string bytes exceed 2^31 would silently wrap
-    under an int32 offset cast (corrupted strings, no error) — such batches
-    switch to LargeStringArray with true int64 offsets instead."""
-    import pyarrow as pa
-
-    if len(offs) and int(offs[-1]) > _INT32_MAX:
-        return pa.LargeStringArray.from_buffers(
-            len(offs) - 1,
-            pa.py_buffer(offs.astype(np.int64)),
-            pa.py_buffer(buf),
-        )
-    return pa.StringArray.from_buffers(
-        len(offs) - 1,
-        pa.py_buffer(offs.astype(np.int32)),
-        pa.py_buffer(buf),
-    )
-
-
-def _decode_batch(payload: pd.Series) -> dict[str, np.ndarray | pd.Series]:
-    """Decode one Arrow batch of binary payloads — pure numpy, no per-row
-    Python. NULL payloads (tombstone ops) yield all-unset rows; the caller
-    masks the struct to NULL JVM-side."""
-    n = len(payload)
-    present = payload.notna().to_numpy()
-    # concatenate present records into one buffer with record offsets
-    blobs = payload[present]
-    rec_lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=len(blobs))
-    data = (
-        np.frombuffer(b"".join(blobs), dtype=np.uint8)
-        if len(blobs)
-        else np.empty(0, dtype=np.uint8)
-    )
-    starts = np.concatenate([[0], np.cumsum(rec_lens)[:-1]]) if len(blobs) else np.empty(0, dtype=np.int64)
-    starts = starts.astype(np.int64)
-
-    def u8(off):
-        return data[starts + off] if len(starts) else np.empty(0, dtype=np.uint8)
-
-    def i64(off):
-        if not len(starts):
-            return np.empty(0, dtype=np.int64)
-        idx = (starts[:, None] + (off + np.arange(8))[None, :]).ravel()
-        return data[idx].view(np.int64) if idx.size else np.empty(0, dtype=np.int64)
-
-    def u32(off):
-        if not len(starts):
-            return np.empty(0, dtype=np.uint32)
-        idx = (starts[:, None] + (off + np.arange(4))[None, :]).ravel()
-        return data[idx].view(np.uint32) if idx.size else np.empty(0, dtype=np.uint32)
-
-    set_b, null_b, del_b = u8(0), u8(1), u8(2)
-    out: dict[str, object] = {}
-    str_lens = [u32(43 + 4 * i).astype(np.int64) for i in range(3)]
-    str_pos = []
-    pos = starts + _FIXED
-    for i in range(3):
-        str_pos.append(pos)
-        pos = pos + str_lens[i]
-
-    import pyarrow as pa
-
-    present_idx = np.flatnonzero(present)
-
-    def expand_obj(vals_obj):
-        """Scatter per-present-record object values back to batch grain."""
-        full = np.full(n, None, dtype=object)
-        full[present_idx] = vals_obj
-        return full
-
-    for i, name in enumerate(_ALL_COLS):
-        bit = 1 << i
-        is_set = (set_b & bit) > 0
-        is_null = (null_b & bit) > 0
-        has_del = (del_b & bit) > 0
-        has_val = is_set & ~is_null
-        dels = i64(3 + 8 * i)
-        if name == "ts":
-            raw = i64(35)
-            full = np.full(n, np.datetime64("NaT"), dtype="datetime64[ns]")
-            if len(starts):
-                full[present_idx[has_val]] = (raw[has_val] * 1000).astype(
-                    "datetime64[ns]"
-                )
-            out[f"_{name}_value"] = pd.Series(full)
-        else:
-            lens_i = np.where(has_val, str_lens[i], 0).astype(np.int64)
-            buf, offs = _segment_gather(data, str_pos[i], lens_i)
-            # zero-copy Arrow string build — utf-8 materializes C-side,
-            # no per-record Python decode loop
-            arr = _string_array(offs, buf)
-            svals = arr.to_numpy(zero_copy_only=False)
-            svals = np.where(has_val, svals, None) if len(starts) else svals
-            out[f"_{name}_value"] = expand_obj(svals)
-        dels_obj = dels.astype(object)
-        if len(starts):
-            dels_obj[~has_del] = None
-        out[f"_{name}_del"] = expand_obj(dels_obj)
-        set_full = np.zeros(n, dtype=bool)
-        if len(starts):
-            set_full[present_idx] = is_set
-        out[f"_{name}_set"] = set_full
-    return out
-
-
-# ---------------------------------------------------------------------------
-# generic per-TableSpec codec (multi-table S5: one segment interleaves every
-# cdc table's mutations; each decodes against ITS schema — SchemaHolder +
-# CommitLogReadHandler pair). Generalized layout, n = len(spec.payload):
-#
-#   0        B      set bitmap      (B = ceil(n/8), little-endian bit i)
-#   B        B      null bitmap
-#   2B       B      deletion bitmap
-#   3B       8n     deletion_ts[n]  (i64)
-#   3B+8n    8n     value slots[n]  (i64: numeric/micros value, or the
-#                                    byte-length of this cell's string tail)
-#   3B+16n   ...    string tails, cell order, utf-8
-#
-# Supported cell types: string, bigint/int, double (bit-pattern in the
-# slot), timestamp (epoch micros). Others raise — declared boundary.
-# ---------------------------------------------------------------------------
+from ..model import TRANSCRIPTS_SPEC
 
 
 def _spec_kinds(spec) -> list[str]:
@@ -384,249 +66,292 @@ def _spec_kinds(spec) -> list[str]:
         else:
             raise NotImplementedError(
                 f"binary codec: unsupported cell type {s!r} for {name!r} "
-                "(string/int/double/timestamp supported; use the JSON codec "
-                "for collection/UDT payloads)"
+                "(string/int/boolean/double/timestamp supported; use the JSON "
+                "codec for collection/UDT payloads)"
             )
     return kinds
 
 
-def encode_table_payload_binary(df: DataFrame, spec) -> DataFrame:
-    """cells -> binary payload under ``spec``'s layout (producer side)."""
-    import math
-
-    from pyspark.sql.functions import pandas_udf
-
-    names = [n for n, _ in spec.payload]
-    kinds = _spec_kinds(spec)
-    n = len(names)
-    nb = math.ceil(n / 8)
-
-    def pack_row(row: dict) -> bytes | None:
-        if all(v is None for v in row.values()):
-            return None
-        set_b = bytearray(nb)
-        null_b = bytearray(nb)
-        del_b = bytearray(nb)
-        dels = [0] * n
-        slots = [0] * n
-        tails = []
-        for i, (name, kind) in enumerate(zip(names, kinds)):
-            c = row[name]
-            if c is None:
-                continue
-            get = (lambda f: c.get(f)) if isinstance(c, dict) else (lambda f: getattr(c, f))
-            if get("deletion_ts") is not None:
-                del_b[i // 8] |= 1 << (i % 8)
-                dels[i] = int(get("deletion_ts"))
-            if not get("set"):
-                continue
-            set_b[i // 8] |= 1 << (i % 8)
-            v = get("value")
-            if v is None:
-                null_b[i // 8] |= 1 << (i % 8)
-            elif kind == "str":
-                b = str(v).encode("utf-8")
-                tails.append(b)
-                slots[i] = len(b)
-            elif kind in ("int", "bool"):
-                slots[i] = int(v)
-            elif kind == "double":
-                slots[i] = struct.unpack("<q", struct.pack("<d", float(v)))[0]
-            else:  # ts
-                slots[i] = pd.Timestamp(v).value // 1000
-        return (
-            bytes(set_b) + bytes(null_b) + bytes(del_b)
-            + struct.pack(f"<{n}q", *dels)
-            + struct.pack(f"<{n}q", *slots)
-            + b"".join(tails)
-        )
-
-    @pandas_udf(T.BinaryType())
-    def _enc(cells: pd.DataFrame) -> pd.Series:
-        cols = {nm: cells[nm] for nm in names}
-        return pd.Series(
-            [
-                pack_row({nm: cols[nm].iloc[i] for nm in names})
-                for i in range(len(cells))
-            ]
-        )
-
-    return df.withColumn("payload", _enc(F.col("cells"))).drop("cells")
-
-
-def decode_table_payload_binary(df: DataFrame, spec) -> DataFrame:
-    """Binary payload -> ``spec``'s typed cells — vectorized numpy decode
-    (the per-TableSpec twin of decode_payload_binary; drops the routing
-    columns like multi_table.decode_table_payload does)."""
-    import math
-
-    names = [n for n, _ in spec.payload]
-    kinds = _spec_kinds(spec)
-    n = len(names)
-    nb = math.ceil(n / 8)
-    fixed = 3 * nb + 16 * n
-
-    flat_fields: list[tuple[str, T.DataType]] = []
-    for (nm, dtype), kind in zip(spec.payload, kinds):
-        flat_fields.append((f"_{nm}_value", dtype))
-        flat_fields.append((f"_{nm}_del", T.LongType()))
-        flat_fields.append((f"_{nm}_set", T.BooleanType()))
-
-    passthrough = [
-        f for f in df.schema.fields if f.name not in ("payload", "keyspace", "table")
-    ]
-    out_schema = T.StructType(
-        passthrough
-        + [T.StructField("_has_cells", T.BooleanType(), False)]
-        + [T.StructField(nm, dt, True) for nm, dt in flat_fields]
+def _header_dtype(n: int) -> np.dtype:
+    """The fixed record header for n cells, packed (no alignment padding)."""
+    nb = (n + 7) // 8
+    return np.dtype(
+        [
+            ("set", "u1", (nb,)),
+            ("null", "u1", (nb,)),
+            ("del", "u1", (nb,)),
+            ("dels", "<i8", (n,)),
+            ("slots", "<i8", (n,)),
+        ]
     )
+
+
+def _segment_index(pos: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat byte index of the segments [pos[i], pos[i]+lens[i]) laid end to
+    end — vectorized (repeat + arange). Indexing with it gathers the
+    segments into one contiguous buffer; assigning through it scatters one
+    contiguous buffer back out."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if len(ends) else 0
+    return np.repeat(pos - (ends - lens), lens) + np.arange(total, dtype=np.int64)
+
+
+def _varbinary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(int64 offsets, uint8 data) of a large_string / large_binary array."""
+    _, offs, data = arr.buffers()
+    offsets = np.frombuffer(offs, dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
+    return offsets, (
+        np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
+    )
+
+
+# ---------------------------------------------------------------------------
+# encoder (producer side — the Cassandra-node analog writing segments)
+# ---------------------------------------------------------------------------
+
+def _encode_cells_py(cells, spec=TRANSCRIPTS_SPEC) -> bytes | None:
+    """Scalar reference packer: ONE cells struct (Row / dict) -> payload."""
+    if cells is None:
+        return None
+    kinds = _spec_kinds(spec)
+    n = len(kinds)
+    nb = (n + 7) // 8
+    set_b, null_b, del_b = bytearray(nb), bytearray(nb), bytearray(nb)
+    dels, slots, tails = [0] * n, [0] * n, []
+    for i, ((name, _), kind) in enumerate(zip(spec.payload, kinds)):
+        c = cells[name]
+        if c is None:
+            continue
+        byte, bit = i // 8, 1 << (i % 8)
+        if c["deletion_ts"] is not None:
+            del_b[byte] |= bit
+            dels[i] = int(c["deletion_ts"])
+        if not c["set"]:
+            continue
+        set_b[byte] |= bit
+        v = c["value"]
+        if v is None:
+            null_b[byte] |= bit
+        elif kind == "str":
+            tails.append(str(v).encode("utf-8"))
+            slots[i] = len(tails[-1])
+        elif kind == "double":
+            slots[i] = struct.unpack("<q", struct.pack("<d", float(v)))[0]
+        elif kind == "ts":
+            slots[i] = pd.Timestamp(v).value // 1000  # ns -> us
+        else:  # int / bool
+            slots[i] = int(v)
+    return (
+        bytes(set_b + null_b + del_b)
+        + struct.pack(f"<{n}q", *dels)
+        + struct.pack(f"<{n}q", *slots)
+        + b"".join(tails)
+    )
+
+
+def _flat_value(v: F.Column, kind: str) -> F.Column:
+    """A cell value as the encoder kernel reads it. Nullable integers
+    degrade to float64 across Arrow -> pandas (silent precision loss past
+    2^53), so numeric kinds ship non-null with the NULL flag beside them."""
+    if kind in ("int", "bool"):
+        return F.coalesce(v.cast("long"), F.lit(0).cast("long"))
+    if kind == "double":
+        return F.coalesce(v, F.lit(0.0))
+    return v  # str: object with None; ts: datetime64 with NaT
+
+
+def _encode_batch(pdf: pd.DataFrame, spec) -> np.ndarray:
+    """Pack one Arrow batch of flattened cells (``encode_payload_binary``'s
+    ``_c{i}_*`` columns) into payloads — pure numpy. The headers fill one
+    structured array; the string tails scatter with the segment index.
+    Returns an object array of bytes, None where the cells struct is NULL."""
+    import pyarrow as pa
+
+    kinds = _spec_kinds(spec)
+    present = pdf["_has_cells"].to_numpy(dtype=bool)
+    dtype = _header_dtype(len(kinds))
+    head = np.zeros(int(present.sum()), dtype=dtype)
+    tails = []  # (source bytes, source starts, lengths) per string cell
+    for i, kind in enumerate(kinds):
+        def col(field, np_dtype=None):
+            return pdf[f"_c{i}_{field}"].to_numpy(dtype=np_dtype)[present]
+
+        byte, bit = i // 8, np.uint8(1 << (i % 8))
+        is_set = col("set", bool)
+        is_null = is_set & col("null", bool)
+        has_val = is_set & ~is_null
+        head["set"][:, byte] |= is_set * bit
+        head["null"][:, byte] |= is_null * bit
+        head["del"][:, byte] |= col("hasdel", bool) * bit
+        head["dels"][:, i] = col("del", np.int64)
+        if kind == "str":
+            offs, data = _varbinary_buffers(
+                pa.array(pdf[f"_c{i}_value"][present], type=pa.large_string(), from_pandas=True)
+            )
+            lens = np.where(has_val, np.diff(offs), 0)
+            tails.append((data, offs[:-1], lens))
+            slot = lens
+        elif kind == "ts":
+            slot = col("value", "datetime64[ns]").view(np.int64) // 1000
+        elif kind == "double":
+            slot = col("value", np.float64).view(np.int64)
+        else:
+            slot = col("value", np.int64)
+        head["slots"][:, i] = np.where(has_val, slot, 0)
+
+    rec_lens = np.zeros(len(present), dtype=np.int64)
+    rec_lens[present] = dtype.itemsize + sum(lens for _, _, lens in tails)
+    offsets = np.concatenate([[0], np.cumsum(rec_lens)])
+    buf = np.empty(int(offsets[-1]), dtype=np.uint8)
+    starts = offsets[:-1][present]
+    buf[(starts[:, None] + np.arange(dtype.itemsize)).ravel()] = head.view(np.uint8)
+    pos = starts + dtype.itemsize
+    for data, src, lens in tails:
+        buf[_segment_index(pos, lens)] = data[_segment_index(src, lens)]
+        pos = pos + lens
+    arr = pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(),
+        len(present),
+        [pa.py_buffer(np.packbits(present, bitorder="little")), pa.py_buffer(offsets), pa.py_buffer(buf)],
+    )
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def encode_payload_binary(df: DataFrame, spec=TRANSCRIPTS_SPEC) -> DataFrame:
+    """cells -> binary payload under ``spec``'s layout (producer side). The
+    cells struct is flattened to primitive columns JVM-side first so the
+    kernel sees numpy-native Series; the payload column replaces cells at
+    the end of the row."""
+    kinds = _spec_kinds(spec)
+    passthrough = [f for f in df.schema.fields if f.name != "cells"]
     pass_names = [f.name for f in passthrough]
+    out_schema = T.StructType(passthrough + [T.StructField("payload", T.BinaryType(), True)])
+    flat_cols = [F.col("cells").isNotNull().alias("_has_cells")]
+    for i, ((name, _), kind) in enumerate(zip(spec.payload, kinds)):
+        c = F.col("cells")[name]
+        flat_cols += [
+            F.coalesce(c["set"], F.lit(False)).alias(f"_c{i}_set"),
+            c["value"].isNull().alias(f"_c{i}_null"),
+            c["deletion_ts"].isNotNull().alias(f"_c{i}_hasdel"),
+            F.coalesce(c["deletion_ts"], F.lit(0).cast("long")).alias(f"_c{i}_del"),
+            _flat_value(c["value"], kind).alias(f"_c{i}_value"),
+        ]
 
-    def decode_batch(payload: pd.Series) -> dict:
-        import pyarrow as pa
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols = {c: pdf[c] for c in pass_names}
+            cols["payload"] = _encode_batch(pdf, spec)
+            yield pd.DataFrame(cols)
 
-        n_rows = len(payload)
-        present = payload.notna().to_numpy()
-        blobs = payload[present]
-        rec_lens = np.fromiter((len(b) for b in blobs), dtype=np.int64, count=len(blobs))
-        data = (
-            np.frombuffer(b"".join(blobs), dtype=np.uint8)
-            if len(blobs)
-            else np.empty(0, dtype=np.uint8)
-        )
-        starts = (
-            np.concatenate([[0], np.cumsum(rec_lens)[:-1]]).astype(np.int64)
-            if len(blobs)
-            else np.empty(0, dtype=np.int64)
-        )
-        present_idx = np.flatnonzero(present)
+    return df.select(*pass_names, *flat_cols).mapInPandas(run, out_schema)
 
-        def u8(off):
-            return data[starts + off] if len(starts) else np.empty(0, dtype=np.uint8)
 
-        def i64(off):
-            if not len(starts):
-                return np.empty(0, dtype=np.int64)
-            idx = (starts[:, None] + (off + np.arange(8))[None, :]).ravel()
-            return data[idx].view(np.int64)
+# ---------------------------------------------------------------------------
+# decoder (hot path)
+# ---------------------------------------------------------------------------
 
-        def expand_obj(vals_obj):
-            full = np.full(n_rows, None, dtype=object)
-            full[present_idx] = vals_obj
-            return full
+def _decode_batch(payload: pd.Series, spec) -> dict[str, np.ndarray | pd.Series]:
+    """Decode one Arrow batch of payloads into flat ``_c{i}_value`` /
+    ``_c{i}_del`` / ``_c{i}_set`` columns — pure numpy. NULL payloads
+    (tombstone ops) yield all-unset rows; the caller masks the struct to
+    NULL JVM-side."""
+    import pyarrow as pa
 
-        out: dict = {}
-        slots = [i64(3 * nb + 8 * n + 8 * i) for i in range(n)]
-        # string tail positions: cumulative over string cells in order
-        pos = starts + fixed
-        str_pos: dict[int, np.ndarray] = {}
-        for i, kind in enumerate(kinds):
+    kinds = _spec_kinds(spec)
+    dtype = _header_dtype(len(kinds))
+    arr = pa.array(payload, type=pa.large_binary(), from_pandas=True)
+    offsets, data = _varbinary_buffers(arr)
+    present = arr.is_valid().to_numpy(zero_copy_only=False)
+    present_idx = np.flatnonzero(present)
+    starts = offsets[:-1][present]
+    n_rows = len(payload)
+    head = data[(starts[:, None] + np.arange(dtype.itemsize)).ravel()].view(dtype)
+
+    def expand(vals: np.ndarray) -> np.ndarray:
+        """Scatter per-present-record object values back to batch grain."""
+        full = np.full(n_rows, None, dtype=object)
+        full[present_idx] = vals
+        return full
+
+    out: dict[str, np.ndarray | pd.Series] = {}
+    pos = starts + dtype.itemsize  # next string tail, per record
+    for i, kind in enumerate(kinds):
+        byte, bit = i // 8, 1 << (i % 8)
+        is_set = (head["set"][:, byte] & bit) > 0
+        has_val = is_set & ~((head["null"][:, byte] & bit) > 0)
+        has_del = (head["del"][:, byte] & bit) > 0
+        slot = head["slots"][:, i]
+        if kind == "ts":
+            full = np.full(n_rows, np.datetime64("NaT"), dtype="datetime64[ns]")
+            full[present_idx[has_val]] = (slot[has_val] * 1000).astype("datetime64[ns]")
+            out[f"_c{i}_value"] = pd.Series(full)
+        else:
             if kind == "str":
-                str_pos[i] = pos
-                pos = pos + np.where(
-                    ((u8(i // 8) >> (i % 8)) & 1).astype(bool)
-                    & ~((u8(nb + i // 8) >> (i % 8)) & 1).astype(bool),
-                    slots[i],
-                    0,
-                )
-        for i, (nm, kind) in enumerate(zip(names, kinds)):
-            byte_i, bit_i = i // 8, i % 8
-            is_set = ((u8(byte_i) >> bit_i) & 1).astype(bool)
-            is_null = ((u8(nb + byte_i) >> bit_i) & 1).astype(bool)
-            has_del = ((u8(2 * nb + byte_i) >> bit_i) & 1).astype(bool)
-            has_val = is_set & ~is_null
-            dels = i64(3 * nb + 8 * i)
-            if kind == "str":
-                lens_i = np.where(has_val, slots[i], 0).astype(np.int64)
-                buf, offs = _segment_gather(data, str_pos[i], lens_i)
-                arr = _string_array(offs, buf)
-                svals = arr.to_numpy(zero_copy_only=False)
-                svals = np.where(has_val, svals, None) if len(starts) else svals
-                out[f"_{nm}_value"] = expand_obj(svals)
-            elif kind == "ts":
-                full = np.full(n_rows, np.datetime64("NaT"), dtype="datetime64[ns]")
-                if len(starts):
-                    full[present_idx[has_val]] = (slots[i][has_val] * 1000).astype(
-                        "datetime64[ns]"
-                    )
-                out[f"_{nm}_value"] = pd.Series(full)
+                lens = np.where(has_val, slot, 0)
+                buf = data[_segment_index(pos, lens)]
+                pos = pos + lens
+                # zero-copy Arrow string build — utf-8 materializes C-side
+                vals = pa.LargeStringArray.from_buffers(
+                    len(lens),
+                    pa.py_buffer(np.concatenate([[0], np.cumsum(lens)])),
+                    pa.py_buffer(buf),
+                ).to_numpy(zero_copy_only=False)
+            elif kind == "double":
+                vals = slot.view(np.float64).astype(object)
+            elif kind == "bool":
+                vals = (slot != 0).astype(object)
             else:
-                if kind == "double":
-                    vals = slots[i].view(np.float64).astype(object)
-                elif kind == "bool":
-                    vals = (slots[i] != 0).astype(object)
-                else:
-                    vals = slots[i].astype(object)
-                if len(starts):
-                    vals[~has_val] = None
-                out[f"_{nm}_value"] = expand_obj(vals)
-            dels_obj = dels.astype(object)
-            if len(starts):
-                dels_obj[~has_del] = None
-            out[f"_{nm}_del"] = expand_obj(dels_obj)
-            set_full = np.zeros(n_rows, dtype=bool)
-            if len(starts):
-                set_full[present_idx] = is_set
-            out[f"_{nm}_set"] = set_full
-        return out
+                vals = slot.astype(object)
+            vals[~has_val] = None
+            out[f"_c{i}_value"] = expand(vals)
+        dels = head["dels"][:, i].astype(object)
+        dels[~has_del] = None
+        out[f"_c{i}_del"] = expand(dels)
+        set_full = np.zeros(n_rows, dtype=bool)
+        set_full[present_idx] = is_set
+        out[f"_c{i}_set"] = set_full
+    return out
+
+
+def decode_payload_binary(df: DataFrame, spec=TRANSCRIPTS_SPEC) -> DataFrame:
+    """Binary payload -> ``spec``'s typed cells. mapInPandas with a flat
+    intermediate schema (numpy-friendly primitive columns); the cells struct
+    reassembles JVM-side in whole-stage codegen, with NULL-payload rows
+    mapping to a NULL struct exactly like ``from_json(NULL)`` in the JSON
+    twin. Drops the multi-table routing columns, like
+    ``decode.decode_payload_jvm``."""
+    passthrough = [f for f in df.schema.fields if f.name not in ("payload", "keyspace", "table")]
+    pass_names = [f.name for f in passthrough]
+    flat_fields = []
+    for i, (_, dtype) in enumerate(spec.payload):
+        flat_fields += [
+            T.StructField(f"_c{i}_value", dtype, True),
+            T.StructField(f"_c{i}_del", T.LongType(), True),
+            T.StructField(f"_c{i}_set", T.BooleanType(), True),
+        ]
+    out_schema = T.StructType(
+        passthrough + [T.StructField("_has_cells", T.BooleanType(), False)] + flat_fields
+    )
+    _spec_kinds(spec)  # unsupported types fail at plan construction
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cols = {c: pdf[c] for c in pass_names}
             cols["_has_cells"] = pdf["payload"].notna()
-            cols.update(decode_batch(pdf["payload"]))
+            cols.update(_decode_batch(pdf["payload"], spec))
             yield pd.DataFrame(cols)
 
     flat = df.drop("keyspace", "table").mapInPandas(run, out_schema)
-    cell_structs = [
-        F.struct(
-            F.col(f"_{nm}_value").alias("value"),
-            F.col(f"_{nm}_del").cast("long").alias("deletion_ts"),
-            F.col(f"_{nm}_set").alias("set"),
-        ).alias(nm)
-        for nm in names
-    ]
-    return (
-        flat.withColumn(
-            "cells", F.when(F.col("_has_cells"), F.struct(*cell_structs))
-        )
-        .drop("_has_cells", *[nm for nm, _ in flat_fields])
-    )
-
-
-def decode_payload_binary(df: DataFrame) -> DataFrame:
-    """Binary payload -> typed cells. mapInPandas with a flat intermediate
-    schema (numpy-friendly primitive columns); the cells struct reassembles
-    JVM-side in whole-stage codegen, with NULL-payload rows mapping to a
-    NULL struct exactly like ``from_json(NULL)`` in the JSON twin."""
-    passthrough = [f for f in df.schema.fields if f.name != "payload"]
-    out_schema = T.StructType(
-        passthrough
-        + [T.StructField("_has_cells", T.BooleanType(), False)]
-        + [T.StructField(nm, dt, True) for nm, dt in _FLAT_FIELDS]
-    )
-    pass_names = [f.name for f in passthrough]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {c: pdf[c] for c in pass_names}
-            cols["_has_cells"] = pdf["payload"].notna()
-            cols.update(_decode_batch(pdf["payload"]))
-            yield pd.DataFrame(cols)
-
-    flat = df.mapInPandas(run, out_schema)
-    cell_structs = []
-    for name in _ALL_COLS:
-        cell_structs.append(
+    cells = F.struct(
+        *[
             F.struct(
-                F.col(f"_{name}_value").alias("value"),
-                F.col(f"_{name}_del").cast("long").alias("deletion_ts"),
-                F.col(f"_{name}_set").alias("set"),
+                F.col(f"_c{i}_value").alias("value"),
+                F.col(f"_c{i}_del").alias("deletion_ts"),
+                F.col(f"_c{i}_set").alias("set"),
             ).alias(name)
-        )
-    return (
-        flat.withColumn(
-            "cells", F.when(F.col("_has_cells"), F.struct(*cell_structs))
-        )
-        .drop("_has_cells", *[nm for nm, _ in _FLAT_FIELDS])
+            for i, (name, _) in enumerate(spec.payload)
+        ]
+    )
+    return flat.withColumn("cells", F.when(F.col("_has_cells"), cells)).drop(
+        "_has_cells", *[f.name for f in flat_fields]
     )

@@ -21,23 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..model import CELLS_TYPE
-
-# ---------------------------------------------------------------------------
-# classification — D3/D4. Our synthetic log carries the op code directly, but
-# the classifier re-derives partition/row types from structural evidence the
-# way the reference does (null clustering key == partition-level operation;
-# liveness/deletion flags pick the row type), so the semantics are testable.
-# ---------------------------------------------------------------------------
-
-def partition_type() -> Column:
-    """PartitionType analog: ROW_LEVEL_MODIFICATION vs PARTITION_KEY_ROW_DELETION."""
-    return (
-        F.when(F.col("op") == "p", F.lit("PARTITION_KEY_ROW_DELETION"))
-        .when(F.col("op") == "r", F.lit("ROW_RANGE_DELETION"))
-        .otherwise(F.lit("ROW_LEVEL_MODIFICATION"))
-    )
-
+from ..model import TRANSCRIPTS_SPEC, TableSpec
+from .sql import string_lit
 
 # D3 full form — the reference classifies mutations against COUNTER /
 # MATERIALIZED_VIEW / SECONDARY_INDEX tables as unsupported partition types
@@ -53,12 +38,12 @@ UNSUPPORTED_KINDS: dict[str, str] = {
 
 
 def partition_type_full(kind_col: str = "table_kind") -> Column:
-    """partition_type() extended with the unsupported classes (getPartitionType
-    full switch): an unsupported table kind wins over the op-derived class."""
-    expr = partition_type()
-    for kind, ptype in UNSUPPORTED_KINDS.items():
-        expr = F.when(F.col(kind_col) == kind, F.lit(ptype)).otherwise(expr)
-    return expr
+    """PartitionType of an unsupported-kind row (getPartitionType full
+    switch). Only ``split_unsupported``'s skipped rows reach it; the
+    supported classes come from ``with_envelope``'s CASE."""
+    return F.create_map(*[F.lit(x) for kv in UNSUPPORTED_KINDS.items() for x in kv])[
+        F.col(kind_col)
+    ]
 
 
 def split_unsupported(df: DataFrame, kind_col: str = "table_kind"):
@@ -83,42 +68,6 @@ def split_unsupported(df: DataFrame, kind_col: str = "table_kind"):
         .agg(F.count("*").alias("n_skipped"))
     )
     return supported, skipped
-
-
-def row_type() -> Column:
-    """RowType analog: INSERT iff liveness set; DELETE iff row deletion set;
-    else UPDATE (reference RowType predicates :226-236)."""
-    return (
-        F.when(F.col("op") == "i", F.lit("INSERT"))
-        .when(F.col("op") == "u", F.lit("UPDATE"))
-        .when(F.col("op") == "d", F.lit("DELETE"))
-        .when(F.col("op") == "r", F.lit("RANGE_TOMBSTONE"))
-        .when(F.col("op") == "p", F.lit("PARTITION_DELETE"))
-        .otherwise(F.lit("UNKNOWN"))
-    )
-
-
-def debezium_op() -> Column:
-    """D13 SMT remap: i/u/d/r -> c/u/d/t (+ our p -> d at partition grain)."""
-    return (
-        F.when(F.col("op") == "i", F.lit("c"))
-        .when(F.col("op") == "u", F.lit("u"))
-        .when(F.col("op").isin("d", "p"), F.lit("d"))
-        .otherwise(F.lit("t"))
-    )
-
-
-def source_struct(cluster: str = "synthetic", keyspace: str = "agents", table: str = "transcripts") -> Column:
-    """SourceInfo analog (reference SourceInfo.java:22-46)."""
-    return F.struct(
-        F.lit(cluster).alias("cluster"),
-        F.concat(F.lit("CommitLog-7-"), F.col("segment_id").cast("string"), F.lit(".log")).alias("file"),
-        F.col("position").alias("pos"),
-        F.lit(keyspace).alias("keyspace"),
-        F.lit(table).alias("table"),
-        F.col("snapshot").alias("snapshot"),
-        F.col("writetime").alias("ts_micro"),
-    )
 
 
 def with_envelope(
@@ -163,10 +112,10 @@ def with_envelope(
         "CAST(writetime / 1000 AS BIGINT) AS ts_ms",
         "CASE WHEN op = 'i' THEN 'c' WHEN op = 'u' THEN 'u' "
         "WHEN op IN ('d','p') THEN 'd' ELSE 't' END AS envelope_op",
-        f"named_struct('cluster', '{cluster}', "
+        f"named_struct('cluster', {string_lit(cluster)}, "
         "'file', concat('CommitLog-7-', CAST(segment_id AS STRING), '.log'), "
         "'pos', position, "
-        f"'keyspace', '{keyspace}', 'table', '{table}', "
+        f"'keyspace', {string_lit(keyspace)}, 'table', {string_lit(table)}, "
         "'snapshot', snapshot, 'ts_micro', writetime) AS source",
         "CASE WHEN op = 'p' THEN 'PARTITION_KEY_ROW_DELETION' "
         "WHEN op = 'r' THEN 'ROW_RANGE_DELETION' "
@@ -272,40 +221,41 @@ def explode_mt_batch_mutations(log: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S5 analog — binary payload decode.
+# S5 analog — payload decode.
 #
-# The generator can serialize `cells` to a compact JSON byte payload (the
-# stand-in for Cassandra's binary mutation encoding); decode_payload_jvm
-# parses it with from_json, inside whole-stage codegen. The vectorized
-# decode of the real binary layout is functions/binary_codec.py.
+# A log can carry each mutation's cells serialized as a payload (the
+# stand-in for Cassandra's binary mutation encoding), decoded against the
+# table's TableSpec (the SchemaHolder lookup): JSON bytes parse with
+# from_json inside whole-stage codegen; the binary layout decodes with
+# functions/binary_codec.py's vectorized numpy kernel.
 # ---------------------------------------------------------------------------
 
-_PAYLOAD_JSON_SCHEMA = CELLS_TYPE
+# full MICROSECOND precision — the default to_json format truncates to
+# millis, silently dropping the sub-ms part of Cassandra's micro-precision
+# timestamps (the binary codec twin exposed the asymmetry)
+_JSON_OPTIONS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
 
 
 def encode_payload(df: DataFrame) -> DataFrame:
-    """Serialize cells -> binary payload (producer-side analog).
-
-    timestampFormat carries full MICROSECOND precision — the default to_json
-    format truncates to millis, silently dropping the sub-ms part of
-    Cassandra's micro-precision timestamps (the decoder side always parsed
-    SSSSSS; the binary codec twin exposed the asymmetry)."""
+    """Serialize cells -> JSON payload bytes (producer-side analog)."""
     return df.withColumn(
-        "payload",
-        F.encode(
-            F.to_json(
-                F.col("cells"),
-                {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
-            ),
-            "utf-8",
-        ),
+        "payload", F.encode(F.to_json(F.col("cells"), _JSON_OPTIONS), "utf-8")
     ).drop("cells")
 
 
-def decode_payload_jvm(df: DataFrame) -> DataFrame:
-    """from_json JVM decode — used in the benchmark hot path."""
+def decode_payload_jvm(df: DataFrame, spec: TableSpec = TRANSCRIPTS_SPEC) -> DataFrame:
+    """JSON payload -> ``spec``'s typed cells with JVM ``from_json`` (codegen
+    path). Drops the payload and the multi-table routing columns."""
     return df.withColumn(
         "cells",
-        F.from_json(F.decode(F.col("payload"), "utf-8"), _PAYLOAD_JSON_SCHEMA,
-                    {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}),
-    ).drop("payload")
+        F.from_json(F.decode(F.col("payload"), "utf-8"), spec.cells_type(), _JSON_OPTIONS),
+    ).drop("payload", "keyspace", "table")
+
+
+def decode_payload(df: DataFrame, spec: TableSpec, payload_format: str) -> DataFrame:
+    """The one json/binary dispatch of every front-end's payload decode."""
+    if payload_format == "binary":
+        from .binary_codec import decode_payload_binary
+
+        return decode_payload_binary(df, spec)
+    return decode_payload_jvm(df, spec)

@@ -9,7 +9,7 @@ touch only their cells, INSERT sets primary-key liveness
 
 Spark formulation (order-insensitive, hence segment-parallel):
 
-1. ``reduce_upserts``  — one hash aggregation per batch key:
+1. ``reduce_events``   — one hash aggregation per batch key:
    for each payload column take the cell from the upsert with max
    (writetime, segment_id, position) among those that SET the column
    (``max(when(set, struct(wt, seg, pos, value, deletion_ts)))`` — struct max
@@ -41,12 +41,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.sql import ident
+
 NEG_INF = -(1 << 62)
-
-
-def batch_payload_columns(batch: DataFrame) -> list[str]:
-    """Payload columns carried by a decoded batch's cells struct."""
-    return [f.name for f in batch.schema["cells"].dataType.fields]
 
 
 def _batch_payload_fields(batch: DataFrame) -> list[tuple[str, object]]:
@@ -90,11 +87,12 @@ def _winner(col: str, dtype=None) -> F.Column:
     plan-building form).
     """
     if dtype is None or _orderable(dtype):
+        cell = f"cells.{ident(col)}"
         return F.expr(
-            f"max(CASE WHEN cells.{col}.set THEN named_struct("
+            f"max(CASE WHEN {cell}.set THEN named_struct("
             f"'wt', writetime, 'seg', segment_id, 'pos', position, "
-            f"'value', cells.{col}.value, 'deletion_ts', cells.{col}.deletion_ts"
-            f") END) AS _w_{col}"
+            f"'value', {cell}.value, 'deletion_ts', {cell}.deletion_ts"
+            f") END) AS {ident('_w_' + col)}"
         )
     c = F.col("cells")[col]
     value_struct = F.struct(
@@ -127,10 +125,6 @@ def reduce_events(batch: DataFrame) -> DataFrame:
     aggs.append(F.expr("max(CASE WHEN op = 'i' THEN writetime END) AS _live_wt"))
     aggs.append(F.expr("max(CASE WHEN op = 'd' THEN writetime END) AS _d_wt"))
     return keyed.groupBy("conv_id", "turn_idx").agg(*aggs)
-
-
-# backwards-compatible alias (upserts-only call sites pre-filter the batch)
-reduce_upserts = reduce_events
 
 
 def reduce_events_salted(batch: DataFrame, salt_buckets: int = 16) -> DataFrame:
@@ -211,7 +205,7 @@ def finalize_state(reduced_with_tomb: DataFrame, as_of_us: int | None = None) ->
     cols, wts = [], []
     alive_any = []
     for c in payload:
-        w = f"_w_{c}"
+        w = ident(f"_w_{c}")
         alive = f"({w} IS NOT NULL AND {w}.wt > {tomb})"
         if as_of_us is None:
             value_live = f"{w}.deletion_ts IS NULL"
@@ -221,9 +215,10 @@ def finalize_state(reduced_with_tomb: DataFrame, as_of_us: int | None = None) ->
                 f"({w}.deletion_ts IS NULL OR {w}.deletion_ts > {int(as_of_us)})"
             )
             counts = f"({alive} AND {value_live})"  # expired cell holds nothing
-        cols.append(f"CASE WHEN {alive} AND {value_live} THEN {w}.value END AS {c}")
+        cols.append(f"CASE WHEN {alive} AND {value_live} THEN {w}.value END AS {ident(c)}")
         wts.append(
-            f"CASE WHEN {alive if as_of_us is None else counts} THEN {w}.wt END AS _wt_{c}"
+            f"CASE WHEN {alive if as_of_us is None else counts} THEN {w}.wt END "
+            f"AS {ident('_wt_' + c)}"
         )
         alive_any.append(counts)
     if not alive_any:
@@ -245,7 +240,7 @@ def drop_invisible(state: DataFrame) -> DataFrame:
     """Drop kill-carrier rows and the _kill_wt column — yields pure STATE."""
     payload = state_payload_columns(state)
     visible = " OR ".join(
-        ["_live_wt IS NOT NULL"] + [f"_wt_{c} IS NOT NULL" for c in payload]
+        ["_live_wt IS NOT NULL"] + [f"{ident('_wt_' + c)} IS NOT NULL" for c in payload]
     )
     return state.where(visible).drop("_kill_wt")
 

@@ -42,14 +42,6 @@ class TombstoneSet:
     partition: DataFrame | None  # (conv_id, wt)             op='p', pre-agg max wt
     range: DataFrame | None      # (conv_id, lo, hi, lo_incl, hi_incl, wt)  op='r'
 
-    def prune(self, kind_counts: dict) -> "TombstoneSet":
-        """Null out relations a per-kind count proved empty."""
-        return TombstoneSet(
-            row=self.row if kind_counts.get("d") else None,
-            partition=self.partition if kind_counts.get("p") else None,
-            range=self.range if kind_counts.get("r") else None,
-        )
-
 
 def extract_tombstones(
     batch: DataFrame, kinds: tuple[str, ...] = ("d", "p", "r")
@@ -150,16 +142,6 @@ def pair_range_markers(log: DataFrame) -> DataFrame:
     return rest.unionByName(paired)
 
 
-def range_covers(lo, hi, lo_incl, hi_incl, turn) -> "F.Column":
-    """Bound predicate with inclusivity methods (reference RangeData bound
-    kinds, CassandraSchemaFactory.java:347-423). The hot path
-    (``tomb_wt_for_keys``) inlines this predicate as a SQL string — one
-    py4j round trip; this Column form is the reusable public twin."""
-    above = F.when(lo_incl, turn >= lo).otherwise(turn > lo)
-    below = F.when(hi_incl, turn <= hi).otherwise(turn < hi)
-    return above & below
-
-
 def tomb_wt_for_keys(
     keys: DataFrame, tombs: TombstoneSet, keys_unique: bool = False
 ) -> DataFrame:
@@ -192,6 +174,8 @@ def tomb_wt_for_keys(
         r_applicable = (
             r_keys
             .join(tombs.range, "conv_id")
+            # bound predicate with inclusivity methods (reference RangeData
+            # bound kinds, CassandraSchemaFactory.java:347-423)
             .where(
                 "(CASE WHEN lo_incl THEN turn_idx >= lo ELSE turn_idx > lo END)"
                 " AND (CASE WHEN hi_incl THEN turn_idx <= hi ELSE turn_idx < hi END)"

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.sql import ident, string_lit
+
 # the maintained downstream-view relation (CdcRunner(maintain_assembly=True))
 ASSEMBLY_SCHEMA = T.StructType(
     [
@@ -111,19 +113,19 @@ def assemble_transcripts(
     still occupies its slot, matching the reference's sparse-cell
     semantics, SURVEY §2 D7/D8).  ``role_col=None`` emits bare text
     lines (tables without a role column)."""
+    text = f"coalesce({ident(text_col)}, '')"
     if role_col is None:
-        line = f"coalesce({text_col}, '')"
+        line = text
     else:
-        line = f"concat(coalesce({role_col}, '?'), ': ', coalesce({text_col}, ''))"
-    sep_sql = sep.replace("\\", "\\\\").replace("'", "\\'")
+        line = f"concat(coalesce({ident(role_col)}, '?'), ': ', {text})"
     # SQL-string projection/aggregation (single py4j round trips — see
     # operators/lww.py)
     return (
         state.selectExpr(
-            f"{conv_col} AS conv_id",
-            f"{turn_col} AS turn_idx",
-            f"length(coalesce({text_col}, '')) AS _tc",
-            f"named_struct('t', {turn_col}, 'line', {line}) AS _e",
+            f"{ident(conv_col)} AS conv_id",
+            f"{ident(turn_col)} AS turn_idx",
+            f"length({text}) AS _tc",
+            f"named_struct('t', {ident(turn_col)}, 'line', {line}) AS _e",
         )
         .groupBy("conv_id")
         .agg(
@@ -132,7 +134,7 @@ def assemble_transcripts(
             F.expr("sum(_tc) AS total_chars"),
             F.expr(
                 "array_join(transform(array_sort(collect_list(_e)), "
-                f"x -> x.line), '{sep_sql}') AS transcript"
+                f"x -> x.line), {string_lit(sep)}) AS transcript"
             ),
         )
     )

@@ -23,9 +23,6 @@ Scale shape of one batch (the plan .explain should show):
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -33,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..functions.decode import UNSUPPORTED_KINDS
 from ..lake.table import LakeTable, bucket_expr
 from ..model import STATE_SCHEMA, state_schema_for
-from ..operators.dedup import dedup_events
 from ..operators.lww import (
     drop_invisible,
     finalize_state,
@@ -199,7 +195,6 @@ def state_buckets(stats: dict) -> list[int]:
 def apply_batch(
     target: CdcTarget,
     batch: DataFrame,
-    strict_dedup: bool = False,
     stats: dict | None = None,
 ) -> dict:
     """Apply one decoded mutation batch to the target. Returns metrics.
@@ -220,27 +215,13 @@ def apply_batch(
     exactly-once table state. The reference needs the skip-check because its
     downstream (ordered Kafka emission) is duplication-sensitive; a
     set-oriented semilattice apply is not. This deletes a full-width shuffle
-    per batch. ``strict_dedup=True`` adds the explicit dropDuplicates pass
-    (useful when exact per-event metrics must not double-count).
+    per batch.
     """
-    timing = os.environ.get("CDC_APPLY_TIMING")
-    _t0 = time.time()
-
-    def _mark(step: str) -> None:
-        nonlocal _t0
-        if timing:
-            now = time.time()
-            print(f"[apply_batch] {step}: {now - _t0:.2f}s", file=sys.stderr, flush=True)
-            _t0 = now
-
-    if strict_dedup:
-        batch = dedup_events(batch)
     if stats is None:
         stats = batch_stats(prescan(batch, {"": target}))
     n_events = stats["n"]
     kind_counts = {k: stats[k] for k in _KINDS}
     n_tombs = sum(kind_counts.values())
-    _mark("stats")
 
     stored_empty = target.tombstones.is_empty()
 
@@ -258,7 +239,6 @@ def apply_batch(
     # alike, so no discovery job re-reads the batch
     pairs = stats["bucket_pairs"]
     bucket_ids = state_buckets(stats)
-    _mark("touched-buckets")
 
     # --- per-key reduction (i/u/d in ONE hash agg) ---------------------
     # NOT cached: each consumer prunes it differently (the merge needs
@@ -297,7 +277,6 @@ def apply_batch(
         new_version = target.state.overwrite_buckets(merged, bucket_ids)
     else:
         new_version = target.state.current_version()
-    _mark("merge+cow-write")
 
     # --- persist new tombstones for future out-of-order batches -------
     if n_tombs:
@@ -320,7 +299,6 @@ def apply_batch(
             target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
         else:
             target.tombstones.append(tomb_rows)
-    _mark("tombstone-append")
 
     return {
         "n_events": n_events,

@@ -33,6 +33,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.decode import decode_payload
 from ..lake.table import LakeTable
 from ..model import (
     MT_LINEAGE_SCHEMA,
@@ -43,19 +44,6 @@ from ..model import (
 from ..plans.apply import CdcTarget, apply_batch, batch_stats, gc_tombstones, prescan, state_buckets
 from ..sources.log_scan import discover_segments
 from .ingest import COMPLETES, Batch, StreamDriver, drain, gc_sweep, open_bookkeeping
-
-
-def decode_table_payload(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """Decode one table's serialized payload into typed cells (S5, per-table
-    schema from the SchemaHolder analog). JVM `from_json` — codegen path."""
-    return df.withColumn(
-        "cells",
-        F.from_json(
-            F.decode(F.col("payload"), "utf-8"),
-            spec.cells_type(),
-            {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"},
-        ),
-    ).drop("payload", "keyspace", "table")
 
 
 class MultiTableRunner:
@@ -216,14 +204,8 @@ class MultiTableRunner:
         return explode_mt_batch_mutations(log) if self.batch_mutations else log
 
     def _decode(self, df: DataFrame, spec: TableSpec) -> DataFrame:
-        """One table's payload decode: per-table from_json (codegen), or the
-        per-TableSpec binary layout + vectorized numpy decoder
-        (functions/binary_codec.py)."""
-        if self.payload_format == "binary":
-            from ..functions.binary_codec import decode_table_payload_binary
-
-            return decode_table_payload_binary(df, spec)
-        return decode_table_payload(df, spec)
+        """One table's payload decode against its own TableSpec."""
+        return decode_payload(df, spec, self.payload_format)
 
     @staticmethod
     def _of_table(df: DataFrame, spec: TableSpec) -> DataFrame:

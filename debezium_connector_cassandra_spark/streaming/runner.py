@@ -29,9 +29,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.decode import split_unsupported, with_envelope
+from ..functions.decode import decode_payload, split_unsupported, with_envelope
 from ..lake.table import LakeTable
-from ..model import LINEAGE_SCHEMA, OFFSETS_SCHEMA
+from ..model import LINEAGE_SCHEMA, OFFSETS_SCHEMA, TRANSCRIPTS_SPEC
 from ..plans.apply import CdcTarget, apply_batch, gc_tombstones, state_buckets
 from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
@@ -243,16 +243,9 @@ class CdcRunner:
         return log
 
     def _decode_payload(self, log: DataFrame) -> DataFrame:
-        """S5: decode serialized payload bytes into typed cells ('json' =
-        from_json codegen twin; 'binary' = the real binary layout with the
-        vectorized numpy decoder, binary_codec.py)."""
-        if self.payload_format == "binary":
-            from ..functions.binary_codec import decode_payload_binary
-
-            return decode_payload_binary(log)
-        from ..functions.decode import decode_payload_jvm
-
-        return decode_payload_jvm(log)
+        """S5: decode serialized payload bytes into typed cells, the
+        TRANSCRIPTS_SPEC case of the per-TableSpec decode."""
+        return decode_payload(log, TRANSCRIPTS_SPEC, self.payload_format)
 
     def _decode(self, log: DataFrame) -> DataFrame:
         """The apply-side decode: payload bytes (when the log carries them)

@@ -17,6 +17,7 @@ from debezium_connector_cassandra_spark.functions.decode import (
     decode_payload_jvm,
     encode_payload,
 )
+from debezium_connector_cassandra_spark.model import TRANSCRIPTS_SPEC
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
     write_mutation_log,
@@ -54,19 +55,31 @@ def test_binary_roundtrip_bit_exact(spark, log):
 
 def test_vectorized_encoder_byte_parity_with_scalar_pack(spark, log):
     """The numpy-packed encoder emits BYTE-IDENTICAL payloads to the scalar
-    reference packer (_encode_cells_py) — not just decode-equivalent."""
+    reference packer (_encode_cells_py) — not just decode-equivalent — for
+    the transcript table and for the multi-table ``runs`` spec (bigint and
+    boolean slots)."""
     from debezium_connector_cassandra_spark.functions.binary_codec import (
         _encode_cells_py,
     )
 
-    sub = log.limit(400)
-    got = {
-        (r["segment_id"], r["position"]): r["payload"]
-        for r in encode_payload_binary(sub).select("segment_id", "position", "payload").collect()
-    }
-    for r in sub.select("segment_id", "position", "cells").collect():
-        want = _encode_cells_py(r["cells"].asDict(recursive=True)) if r["cells"] is not None else None
-        assert got[(r["segment_id"], r["position"])] == want
+    specs, mt_log = _mt_setup(spark)
+    runs = specs[1]
+    cases = [
+        (TRANSCRIPTS_SPEC, log.limit(400)),
+        (runs, decode_payload_jvm(mt_log.where(F.col("table") == runs.table), runs).limit(400)),
+    ]
+    for spec, sub in cases:
+        got = {
+            (r["segment_id"], r["position"]): r["payload"]
+            for r in encode_payload_binary(sub, spec)
+            .select("segment_id", "position", "payload")
+            .collect()
+        }
+        rows = sub.select("segment_id", "position", "cells").collect()
+        assert len(rows) == len(got) > 0, spec.fqtn
+        for r in rows:
+            want = _encode_cells_py(r["cells"], spec)
+            assert got[(r["segment_id"], r["position"])] == want, spec.fqtn
 
 
 def test_binary_matches_json_twin(spark, log):
@@ -131,8 +144,48 @@ def test_deletion_ts_and_sparse_cells_survive(spark):
     back = decode_payload_binary(encode_payload_binary(spark_df))
     assert _sorted_rows(back) == _sorted_rows(spark_df)
 
+    # the same branches for every numeric slot kind, edge values included,
+    # byte-identical to the scalar reference packer
+    import datetime
 
-# --- generic per-TableSpec codec (multi-table S5) --------------------------
+    from debezium_connector_cassandra_spark.functions.binary_codec import (
+        _encode_cells_py,
+    )
+    from debezium_connector_cassandra_spark.model import TableSpec
+
+    numeric = TableSpec(
+        keyspace="ks", table="numeric",
+        payload=(
+            ("n32", T.IntegerType()), ("n64", T.LongType()),
+            ("flag", T.BooleanType()), ("x", T.DoubleType()),
+            ("at", T.TimestampType()),
+        ),
+    )
+
+    def cell(value, deletion_ts=None, is_set=True):
+        return {"value": value, "deletion_ts": deletion_ts, "set": is_set}
+
+    rows = [
+        (1, 0, "i", {"n32": cell(-(2**31)), "n64": cell(2**63 - 1), "flag": cell(False),
+                     "x": cell(-0.0),
+                     "at": cell(datetime.datetime(1969, 12, 31, 23, 59, 59, 999999))}),
+        (1, 16, "u", {"n32": cell(None, 5), "n64": cell(None, is_set=False),
+                      "flag": cell(True, 9), "x": cell(float("inf")), "at": cell(None)}),
+        (1, 32, "u", {"n32": cell(7), "n64": cell(-(2**63)), "flag": cell(None),
+                      "x": cell(-1e308, 11), "at": cell(datetime.datetime(2200, 1, 1, 0, 0, 0, 1))}),
+        (1, 48, "d", None),
+    ]
+    schema = T.StructType(schema.fields[:3] + [T.StructField("cells", numeric.cells_type())])
+    spark_df = spark.createDataFrame(rows, schema)
+    enc = encode_payload_binary(spark_df, numeric)
+    assert {r["position"]: r["payload"] for r in enc.collect()} == {
+        r["position"]: _encode_cells_py(r["cells"], numeric) for r in spark_df.collect()
+    }
+    back = decode_payload_binary(enc, numeric)
+    assert _sorted_rows(back) == _sorted_rows(spark_df)
+
+
+# --- other TableSpecs (multi-table S5) --------------------------------------
 
 def _mt_setup(spark):
     from pyspark.sql import types as T
@@ -164,37 +217,25 @@ def _mt_setup(spark):
 
 
 def test_spec_codec_parity_with_json(spark):
-    from debezium_connector_cassandra_spark.functions.binary_codec import (
-        decode_table_payload_binary,
-        encode_table_payload_binary,
-    )
-    from debezium_connector_cassandra_spark.streaming.multi_table import (
-        decode_table_payload,
-    )
 
     specs, log = _mt_setup(spark)
     for spec in specs:
         sl = log.where(
             (F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table)
         )
-        via_json = decode_table_payload(sl, spec)
-        reencoded = encode_table_payload_binary(via_json, spec).withColumns(
+        via_json = decode_payload_jvm(sl, spec)
+        reencoded = encode_payload_binary(via_json, spec).withColumns(
             {"keyspace": F.lit(spec.keyspace), "table": F.lit(spec.table)}
         )
-        via_bin = decode_table_payload_binary(reencoded, spec)
+        via_bin = decode_payload_binary(reencoded, spec)
         cols = ["segment_id", "position", "cells"]
         assert _sorted_rows(via_bin.select(*cols)) == \
             _sorted_rows(via_json.select(*cols)), spec.fqtn
 
 
 def test_multi_table_runner_binary_state_equals_json(spark, tmp_path):
-    from debezium_connector_cassandra_spark.functions.binary_codec import (
-        decode_table_payload_binary,
-        encode_table_payload_binary,
-    )
     from debezium_connector_cassandra_spark.streaming.multi_table import (
         MultiTableRunner,
-        decode_table_payload,
     )
 
     specs, log = _mt_setup(spark)
@@ -207,7 +248,7 @@ def test_multi_table_runner_binary_state_equals_json(spark, tmp_path):
             (F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table)
         )
         parts.append(
-            encode_table_payload_binary(decode_table_payload(sl, spec), spec)
+            encode_payload_binary(decode_payload_jvm(sl, spec), spec)
             .withColumns(
                 {"keyspace": F.lit(spec.keyspace), "table": F.lit(spec.table)}
             )

@@ -1,13 +1,35 @@
 """Property test: the binary codec's pure core round-trips ARBITRARY cells
 (random strings incl. unicode/empty, random set/null/deletion combinations,
-random timestamps) — no Spark in the loop, so hypothesis can hammer it."""
+random values of every supported cell kind) — no Spark in the loop, so
+hypothesis can hammer it. Two specs: the transcript table and a numeric one
+covering every kind the codec supports. The vectorized encoder kernel must
+also emit the scalar reference packer's bytes exactly."""
+
+import struct
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import types as T
 
 from debezium_connector_cassandra_spark.functions.binary_codec import (
     _decode_batch,
+    _encode_batch,
     _encode_cells_py,
+    _spec_kinds,
+)
+from debezium_connector_cassandra_spark.model import TRANSCRIPTS_SPEC, TableSpec
+
+NUMERIC_SPEC = TableSpec(
+    keyspace="ks",
+    table="numeric",
+    payload=(
+        ("n32", T.IntegerType()),
+        ("n64", T.LongType()),
+        ("flag", T.BooleanType()),
+        ("x", T.DoubleType()),
+        ("at", T.TimestampType()),
+        ("label", T.StringType()),
+    ),
 )
 
 _text = st.one_of(
@@ -17,66 +39,93 @@ _text = st.one_of(
 )
 _del_ts = st.one_of(st.none(), st.integers(min_value=-(2**62), max_value=2**62))
 _micros = st.integers(min_value=0, max_value=4_000_000_000_000_000)  # ~ year 2096
+_VALUES = {  # by Spark type
+    "string": _text,
+    "int": st.one_of(st.none(), st.integers(min_value=-(2**31), max_value=2**31 - 1)),
+    "bigint": st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+    "boolean": st.one_of(st.none(), st.booleans()),
+    "double": st.one_of(st.none(), st.floats(allow_nan=True, allow_infinity=True)),
+    "timestamp": st.one_of(st.none(), _micros.map(lambda u: pd.Timestamp(u * 1000))),
+}
 
 
-def _cell(value_strategy):
+def _cells(spec):
     return st.fixed_dictionaries(
         {
-            "value": value_strategy,
-            "deletion_ts": _del_ts,
-            "set": st.booleans(),
+            name: st.fixed_dictionaries(
+                {"value": _VALUES[dtype.simpleString()], "deletion_ts": _del_ts, "set": st.booleans()}
+            )
+            for name, dtype in spec.payload
         }
     )
 
 
-_cells = st.fixed_dictionaries(
-    {
-        "role": _cell(_text),
-        "text": _cell(_text),
-        "tool": _cell(_text),
-        "ts": _cell(
-            st.one_of(st.none(), _micros.map(lambda u: pd.Timestamp(u * 1000)))
-        ),
-    }
-)
+def _rows(spec):
+    return st.lists(st.one_of(st.none(), _cells(spec)), min_size=1, max_size=8)
 
 
-def _norm(cells):
-    """The decode-visible form: unset cells lose their value; values of set
-    cells stringify (the codec stores strings); dels survive regardless."""
-    out = {}
-    for name, c in cells.items():
-        v = c["value"] if c["set"] else None
-        if v is not None and name != "ts":
-            v = str(v)
-        out[name] = {"value": v, "deletion_ts": c["deletion_ts"], "set": c["set"]}
-    return out
+def _flat_frame(rows, spec) -> pd.DataFrame:
+    """The flattened columns encode_payload_binary ships to the kernel."""
+    kinds = _spec_kinds(spec)
+    flat = {"_has_cells": [r is not None for r in rows]}
+    for i, ((name, _), kind) in enumerate(zip(spec.payload, kinds)):
+        cs = [None if r is None else r[name] for r in rows]
+        values = [None if c is None else c["value"] for c in cs]
+        flat[f"_c{i}_set"] = [c is not None and c["set"] for c in cs]
+        flat[f"_c{i}_null"] = [v is None for v in values]
+        flat[f"_c{i}_hasdel"] = [c is not None and c["deletion_ts"] is not None for c in cs]
+        flat[f"_c{i}_del"] = [0 if c is None or c["deletion_ts"] is None else c["deletion_ts"] for c in cs]
+        if kind == "ts":
+            flat[f"_c{i}_value"] = pd.Series(values, dtype="datetime64[ns]")
+        elif kind == "str":
+            flat[f"_c{i}_value"] = pd.Series(values, dtype=object)
+        elif kind == "double":
+            flat[f"_c{i}_value"] = [0.0 if v is None else v for v in values]
+        else:
+            flat[f"_c{i}_value"] = pd.Series([0 if v is None else int(v) for v in values], dtype="int64")
+    return pd.DataFrame(flat)
+
+
+def _same(got, want, kind) -> bool:
+    if want is None:
+        return got is None or got is pd.NaT or (kind == "ts" and pd.isna(got))
+    if kind == "ts":
+        return pd.Timestamp(got) == want
+    if kind == "double":  # bit-exact, NaN payloads and -0.0 included
+        return struct.pack("<d", got) == struct.pack("<d", want)
+    if kind == "str":
+        return got == str(want)
+    return got == want and type(got) is type(want)
+
+
+def _check_roundtrip(rows, spec):
+    payloads = pd.Series([_encode_cells_py(r, spec) for r in rows], dtype=object)
+    assert list(_encode_batch(_flat_frame(rows, spec), spec)) == list(payloads)
+    dec = _decode_batch(payloads, spec)
+    for i, r in enumerate(rows):
+        for j, ((name, _), kind) in enumerate(zip(spec.payload, _spec_kinds(spec))):
+            got_v = dec[f"_c{j}_value"][i]
+            if r is None:
+                assert dec[f"_c{j}_set"][i] == False  # noqa: E712
+                assert _same(got_v, None, kind)
+                assert dec[f"_c{j}_del"][i] is None
+                continue
+            # decode-visible form: unset cells lose their value; dels
+            # survive regardless
+            c = r[name]
+            want_v = c["value"] if c["set"] else None
+            assert bool(dec[f"_c{j}_set"][i]) == c["set"], (i, name)
+            assert dec[f"_c{j}_del"][i] == c["deletion_ts"], (i, name)
+            assert _same(got_v, want_v, kind), (i, name, got_v, want_v)
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(st.one_of(st.none(), _cells), min_size=1, max_size=8))
+@given(_rows(TRANSCRIPTS_SPEC))
 def test_roundtrip_arbitrary_cells(rows):
-    payloads = pd.Series(
-        [None if r is None else _encode_cells_py(r) for r in rows], dtype=object
-    )
-    dec = _decode_batch(payloads)
-    for i, r in enumerate(rows):
-        if r is None:
-            for name in ("role", "text", "tool", "ts"):
-                assert dec[f"_{name}_set"][i] == False  # noqa: E712
-                assert dec[f"_{name}_value"][i] is None or dec[f"_{name}_value"][i] is pd.NaT
-                assert dec[f"_{name}_del"][i] is None
-            continue
-        want = _norm(r)
-        for name in ("role", "text", "tool", "ts"):
-            w = want[name]
-            assert bool(dec[f"_{name}_set"][i]) == w["set"], (i, name)
-            assert dec[f"_{name}_del"][i] == w["deletion_ts"], (i, name)
-            got_v = dec[f"_{name}_value"][i]
-            if name == "ts":
-                if w["value"] is None:
-                    assert got_v is pd.NaT or pd.isna(got_v)
-                else:
-                    assert pd.Timestamp(got_v) == w["value"], (i, name)
-            else:
-                assert got_v == w["value"], (i, name)
+    _check_roundtrip(rows, TRANSCRIPTS_SPEC)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_rows(NUMERIC_SPEC))
+def test_roundtrip_arbitrary_numeric_cells(rows):
+    _check_roundtrip(rows, NUMERIC_SPEC)

@@ -144,8 +144,8 @@ def _spec_with(payload):
 
 
 def test_collection_payload_round_trip(spark):
-    from debezium_connector_cassandra_spark.streaming.multi_table import (
-        decode_table_payload,
+    from debezium_connector_cassandra_spark.functions.decode import (
+        decode_payload_jvm,
     )
 
     tm = TypeMapper()
@@ -175,7 +175,7 @@ def test_collection_payload_round_trip(spark):
         F.lit("ks").alias("keyspace"), F.lit("t").alias("table"),
         F.encode(F.to_json(cells), "utf-8").alias("payload"),
     )
-    decoded = decode_table_payload(encoded, spec).select("cells.*").collect()
+    decoded = decode_payload_jvm(encoded, spec).select("cells.*").collect()
     assert decoded[0]["tags"]["value"] == ["a", "b"]
     assert decoded[0]["attrs"]["value"] == {"k": 1}
     assert decoded[0]["pair"]["value"]["_0"] == 7
@@ -418,3 +418,50 @@ def test_full_apply_with_collection_payload(spark, tmp_path):
     assert list(rows[("c1", 1)]["tags"]) == ["a"]
     assert rows[("c1", 1)]["attrs"] == {"k": 2, "m": 3}
     assert rows[("c2", 2)]["attrs"] == {"q": 7}
+
+
+def test_full_apply_with_quoted_identifiers(spark, tmp_path):
+    """Payload columns that need quoting in SQL text (a reserved word, a
+    space, a dash) through the full lake apply, the state read and the
+    transcript assembly; a keyspace containing a quote through the
+    envelope's SourceInfo literals."""
+    from debezium_connector_cassandra_spark.functions.decode import with_envelope
+    from debezium_connector_cassandra_spark.operators.transcript import assemble_transcripts
+    from debezium_connector_cassandra_spark.plans.apply import CdcTarget, apply_batch
+
+    payload = (("order", T.IntegerType()), ("my col", T.StringType()), ("a-b", T.StringType()))
+    tgt = CdcTarget.create(spark, str(tmp_path / "t"), n_buckets=4, payload=dict(payload))
+    b1 = _mk_log(
+        spark,
+        payload,
+        [
+            (0, 0, "i", "c1", 1, 100, {"order": (1, True), "my col": ("user", True), "a-b": ("hi", True)}),
+            (0, 1, "i", "c1", 2, 110, {"order": (2, True), "my col": ("bot", True), "a-b": ("yo", True)}),
+            (0, 2, "i", "c2", 1, 120, {"order": (3, True), "a-b": ("x", True)}),
+        ],
+    )
+    b2 = _mk_log(
+        spark,
+        payload,
+        [
+            (1, 0, "u", "c1", 2, 300, {"a-b": ("yo!", True)}),
+            (1, 1, "d", "c2", 1, 400, {}),
+        ],
+    )
+    apply_batch(tgt, b1)
+    apply_batch(tgt, b2)
+    state = tgt.read_transcripts()
+    rows = {(r["conv_id"], r["turn_idx"]): r for r in state.collect()}
+    assert set(rows) == {("c1", 1), ("c1", 2)}
+    assert (rows[("c1", 2)]["order"], rows[("c1", 2)]["my col"], rows[("c1", 2)]["a-b"]) == (2, "bot", "yo!")
+
+    (doc,) = assemble_transcripts(state, role_col="my col", text_col="a-b", sep=" | ").collect()
+    assert (doc["conv_id"], doc["n_turns"], doc["transcript"]) == ("c1", 2, "user: hi | bot: yo!")
+
+    env = with_envelope(
+        b1.withColumn("snapshot", F.lit(False)),
+        excluded_fields=("a-b",), cluster="c\\1", keyspace="o'neil", table="my table",
+    )
+    src = env.select("source.*").first()
+    assert (src["cluster"], src["keyspace"], src["table"]) == ("c\\1", "o'neil", "my table")
+    assert env.where("cells.`a-b`.value IS NOT NULL").count() == 0
