@@ -195,13 +195,11 @@ def tomb_wt_for_keys(
     return out.withColumn("tomb_wt", F.expr(tomb)).drop(*wt_cols)
 
 
-def tombstones_to_rows(tombs: TombstoneSet, extra: DataFrame | None = None) -> DataFrame:
+def tombstones_to_rows(tombs: TombstoneSet) -> DataFrame:
     """Flatten a TombstoneSet to a single storable relation (the persistent
     tombstone store — Cassandra's analog of tombstones retained until
     gc_grace, needed so an out-of-order upsert arriving in a *later* batch
-    still loses to an earlier-seen delete with a higher writetime).
-    ``extra`` appends an already-flattened relation (e.g. folded 'd' rows
-    harvested from the key reduction)."""
+    still loses to an earlier-seen delete with a higher writetime)."""
     parts = []
     if tombs.row is not None:
         parts.append(
@@ -225,8 +223,6 @@ def tombstones_to_rows(tombs: TombstoneSet, extra: DataFrame | None = None) -> D
                 F.lit("r").alias("kind"), "conv_id", "lo", "hi", "lo_incl", "hi_incl", "wt"
             )
         )
-    if extra is not None:
-        parts.append(extra)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

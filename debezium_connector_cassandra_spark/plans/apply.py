@@ -225,14 +225,15 @@ def apply_batch(
 
     stored_empty = target.tombstones.is_empty()
 
-    # conv-grain tombstones only: the row-delete ('d') kind is FOLDED
-    # into the key reduction below (same grouping key, zero extra
+    # the batch's tombstones of every kind it carries, for the store flush.
+    # Only the conv-grain kinds are joined: the row-delete ('d') kind is
+    # FOLDED into the key reduction below (same grouping key, zero extra
     # shuffle) and applied to the target inside the merge join via
-    # _kill_wt — so every remaining tombstone join is a small
-    # broadcastable conv-grain relation.
+    # _kill_wt — so every tombstone join is a small broadcastable
+    # conv-grain relation.
     new_tombs = extract_tombstones(
-        batch, kinds=tuple(k for k in ("p", "r") if kind_counts.get(k))
-    )  # 'd' is folded into the reduction, never joined
+        batch, kinds=tuple(k for k in _KINDS if kind_counts[k])
+    )
 
     # the pre-scan's touched (state bucket, tombstone-store bucket) pairs:
     # the batch's conv_ids, upsert/delete keys and partition/range targets
@@ -241,10 +242,7 @@ def apply_batch(
     bucket_ids = state_buckets(stats)
 
     # --- per-key reduction (i/u/d in ONE hash agg) ---------------------
-    # NOT cached: each consumer prunes it differently (the merge needs
-    # full width once; the tombstone flush needs only the _d_wt grain),
-    # so recomputing the pruned shapes is cheaper than materializing the
-    # wide struct rows into the columnar cache and reading them back.
+    # NOT cached: its one consumer is the merge, which reads it once
     reduced = reduce_events(batch)
 
     pr_tombs = TombstoneSet(row=None, partition=new_tombs.partition, range=new_tombs.range)
@@ -280,20 +278,10 @@ def apply_batch(
 
     # --- persist new tombstones for future out-of-order batches -------
     if n_tombs:
-        d_rows = (
-            reduced.where(F.col("_d_wt").isNotNull()).select(
-                F.lit("d").alias("kind"),
-                "conv_id",
-                F.col("turn_idx").alias("lo"),
-                F.col("turn_idx").alias("hi"),
-                F.lit(True).alias("lo_incl"),
-                F.lit(True).alias("hi_incl"),
-                F.col("_d_wt").alias("wt"),
-            )
-            if kind_counts["d"]
-            else None
-        )
-        tomb_rows = tombstones_to_rows(new_tombs, extra=d_rows)
+        # the 'd' rows come from extract_tombstones' narrow 'd'-only
+        # aggregate (the same max writetime per key as _d_wt): reading them
+        # from the uncached reduction would run it a second time
+        tomb_rows = tombstones_to_rows(new_tombs)
         if n_tombs <= 20_000:
             # driver-side flush, no Spark job (offset-flush analog)
             target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])

@@ -3,6 +3,30 @@
 Local-mode knobs mirror what a 1000-executor deployment would set cluster-wide:
 AQE on (runtime coalescing + skew-join splitting), Arrow enabled for every
 pandas-UDF exchange, shuffle partitions sized to the parallelism at hand.
+
+Compile once, not every micro-batch. A CDC batch plans ~23 short Spark
+queries, and the same plan shapes recur in every batch. Three settings make
+the JVM compile each shape once and reuse it:
+
+- ``-XX:TieredStopAtLevel=1`` keeps HotSpot at C1. The optimizing C2 tier
+  pays off only on long-running hot loops; on ~20k-event batches its
+  compiler threads spent about half of each batch's CPU optimizing
+  generated classes that the batch used only briefly.
+- ``spark.sql.codegen.useIdInClassName=false`` leaves the codegen stage id
+  out of the generated class, so identical stage code from different
+  queries, batches and AQE re-plans hits one cache entry and reuses its
+  JIT-compiled code.
+- ``spark.sql.codegen.cache.maxEntries=2000`` holds far more than one
+  batch's working set (the default of 100 does not), while still bounding
+  metaspace over an unbounded run. It is a static setting, so it is set
+  before the session exists.
+
+The JIT flag goes into ``spark.driver.defaultJavaOptions``, which Spark puts
+in front of the caller's ``spark.driver.extraJavaOptions``, so a caller that
+sets its own options keeps it. It covers the driver JVM only, and only when
+``get_spark`` launches that JVM: in local mode this is the JVM that runs every
+task. Cluster executors take their options from ``spark.executor.*``, which is
+left as it is.
 """
 
 from __future__ import annotations
@@ -55,6 +79,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
+        # compile each plan shape once (module docstring)
+        .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,6 +15,14 @@ def spark():
     yield s
 
 
+def assert_keys_unique(df):
+    """At most one row per (conv_id, turn_idx): the claim behind every
+    ``tomb_wt_for_keys(..., keys_unique=True)`` call on a reduction output
+    or a state table."""
+    dups = df.groupBy("conv_id", "turn_idx").count().where("count > 1").limit(5).collect()
+    assert not dups, f"duplicate (conv_id, turn_idx) keys: {dups}"
+
+
 def assert_state_equal(engine_df, oracle_df):
     """Row-for-row comparison under stable (conv_id, turn_idx) ordering —
     the per-row invariant from BASELINE.json input_hint."""

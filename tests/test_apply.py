@@ -11,7 +11,7 @@ import pytest
 from debezium_connector_cassandra_spark.plans.apply import CdcTarget, apply_batch
 from debezium_connector_cassandra_spark.sources.generator import gen_mutation_log
 
-from .conftest import assert_state_equal
+from .conftest import assert_keys_unique, assert_state_equal
 from .oracle import replay
 
 
@@ -21,6 +21,7 @@ def run_and_compare(spark, tmp_path, log_df, n_buckets=8, batch_by_segment=False
         segs = sorted(r[0] for r in log_df.select("segment_id").distinct().collect())
         for s in segs:
             apply_batch(target, log_df.where(log_df.segment_id == s))
+            assert_keys_unique(target.state.read())
     else:
         apply_batch(target, log_df)
     oracle = replay(log_df.toPandas())
@@ -146,11 +147,17 @@ def test_delete_beats_equal_and_later_upserts(spark, tmp_path):
     assert got.loc[0, "text"] == "b"
 
 
-def test_out_of_order_upsert_vs_stored_tombstone(spark, tmp_path):
+@pytest.mark.parametrize(
+    "delete",
+    [(0, 0, 0, "p", "c1", None, 5000, None), (0, 0, 0, "d", "c1", 3, 5000, None)],
+    ids=["partition_delete", "row_delete"],
+)
+def test_out_of_order_upsert_vs_stored_tombstone(spark, tmp_path, delete):
     """A later BATCH carrying an older-writetime upsert must lose to a
     tombstone applied in an earlier batch (persistent tombstone store —
-    Cassandra gc_grace semantics)."""
-    rows1 = [(0, 0, 0, "p", "c1", None, 5000, None)]
+    Cassandra gc_grace semantics), for a conv-grain partition delete and for
+    a key-grain row delete alike."""
+    rows1 = [delete]
     rows2 = [(1, 0, 1, "i", "c1", 3, 4000, ("user", "zombie", None, None))]
     target = CdcTarget.create(spark, str(tmp_path / "t"), n_buckets=4)
     apply_batch(target, _manual_log(spark, rows1))

@@ -20,6 +20,7 @@ from debezium_connector_cassandra_spark.operators.tombstones import (
     tomb_wt_for_keys,
 )
 
+from .conftest import assert_keys_unique
 from .oracle import replay
 
 CONVS = ["c0", "c1"]
@@ -105,7 +106,11 @@ def _engine_state(spark, rows):
     log = spark.createDataFrame(rows, LOG_SCHEMA)
     tombs = extract_tombstones(log)
     tombs.row = None
-    reduced = tomb_wt_for_keys(reduce_events(log), tombs)
+    keys = reduce_events(log)
+    # the random logs carry exact duplicates; the reduction still yields
+    # one row per key (apply_batch's keys_unique=True rests on it)
+    assert_keys_unique(keys)
+    reduced = tomb_wt_for_keys(keys, tombs)
     state = drop_invisible(finalize_state(reduced))
     pdf = state.select("conv_id", "turn_idx", *PAYLOAD).toPandas()
     pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
