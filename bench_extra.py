@@ -10,6 +10,8 @@ Usage:
   python bench_extra.py queries [name ...]   # per-query isolation
   python bench_extra.py pipeline             # end-to-end pipeline wall
   python bench_extra.py compile [seed]       # per-batch compile cost
+  python bench_extra.py jobs [seed]          # per-batch jobs/tasks/CPU by call site
+  python bench_extra.py skew [n_events] [pairs]  # uniform vs 40%-hot-key stress
 """
 
 from __future__ import annotations
@@ -121,15 +123,11 @@ def _jvm_thread_cpu(pid: int) -> dict:
     return out
 
 
-def bench_compile(seed: int = 1, timed_batches: int = 3) -> None:
-    """Where one steady_merge-shaped batch's CPU goes: codegen compiles,
-    JVM CPU by thread group, Python driver CPU. Typed log of 20k-event
-    segments over 5,000 conversations x 40 turns, tombstone GC after every
-    batch; a bulk set-up batch of 3 segments, then ``timed_batches``
-    one-segment batches, one JSON line each."""
-    import resource
-
-    from debezium_connector_cassandra_spark.session import get_spark
+def _steady_runner(spark, seed: int, timed_batches: int, workdir: str):
+    """A steady_merge-shaped ``CdcRunner``: typed log of 20k-event segments
+    over 5,000 conversations x 40 turns, tombstone GC after every batch.
+    Returns ``(runner, setup_segments)``; the set-up batch drains
+    ``setup_segments`` segments at once, then one segment per batch."""
     from debezium_connector_cassandra_spark.sources.generator import (
         gen_mutation_log,
         write_mutation_log,
@@ -137,18 +135,40 @@ def bench_compile(seed: int = 1, timed_batches: int = 3) -> None:
     )
     from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
 
-    spark = get_spark(app_name="cdc-bench-extra-compile")
-    jvm = spark._jvm
-    pid = jvm.java.lang.ProcessHandle.current().pid()
-    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    workdir = tempfile.mkdtemp(prefix="cdc_bx_compile_")
     setup_segments, seg = 3, 20_000
     log = gen_mutation_log(spark, (setup_segments + timed_batches) * seg, n_convs=5_000,
                            max_turns=40, events_per_segment=seg, seed=seed)
     write_mutation_log(log, f"{workdir}/log")
     runner = CdcRunner(spark, f"{workdir}/log", f"{workdir}/target", segments_per_batch=1,
                        gc_grace_us=writetime_inversion_window_us(), gc_every_batches=1)
+    return runner, setup_segments
+
+
+def _steady_batches(runner, setup_segments: int, timed_batches: int):
+    """(label, run) per batch, as perfbench's steady_merge drains them: a
+    bulk set-up batch, then timed batches through the drain loop (apply,
+    then the tombstone GC sweep)."""
+    yield "setup", lambda: [runner.run_batch(runner.pending_segments()[:setup_segments])]
+    for i in range(timed_batches):
+        yield f"timed{i + 1}", lambda: runner.run(max_batches=1)
+
+
+def bench_compile(seed: int = 1, timed_batches: int = 3) -> None:
+    """Where one steady_merge-shaped batch's CPU goes: codegen compiles,
+    JVM CPU by thread group, Python driver CPU. A bulk set-up batch of 3
+    segments, then ``timed_batches`` one-segment batches, one JSON line
+    each."""
+    import resource
+
+    from debezium_connector_cassandra_spark.session import get_spark
+
+    spark = get_spark(app_name="cdc-bench-extra-compile")
+    jvm = spark._jvm
+    pid = jvm.java.lang.ProcessHandle.current().pid()
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    workdir = tempfile.mkdtemp(prefix="cdc_bx_compile_")
+    runner, setup_segments = _steady_runner(spark, seed, timed_batches, workdir)
 
     def snapshot():
         ru = resource.getrusage(resource.RUSAGE_SELF)
@@ -170,15 +190,155 @@ def bench_compile(seed: int = 1, timed_batches: int = 3) -> None:
             "driver_py_cpu_s": round(b["py"] - a["py"], 2),
         }), flush=True)
 
-    # as perfbench's steady_merge: a bulk set-up batch, then timed batches
-    # through the drain loop (apply, then the tombstone GC sweep)
     try:
-        batch("setup", lambda: [runner.run_batch(runner.pending_segments()[:setup_segments])])
-        for i in range(timed_batches):
-            batch(f"timed{i + 1}", lambda: runner.run(max_batches=1))
+        for label, run in _steady_batches(runner, setup_segments, timed_batches):
+            batch(label, run)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
+
+def _jobs_by_group(event_log: str) -> dict[str, dict]:
+    """Jobs, tasks, executor run time and executor CPU time per job group
+    and call site, from an uncompressed Spark event log. A task counts
+    toward the job that submitted its stage."""
+    root = os.path.dirname(os.path.abspath(__file__)) + os.sep
+    stage_job: dict[int, tuple[str, str]] = {}
+    out: dict[str, dict] = {}
+
+    def cell(group, site):
+        g = out.setdefault(group, {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0, "by_call_site": {}})
+        return g, g["by_call_site"].setdefault(site, {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0})
+
+    with open(event_log) as f:
+        for line in f:
+            e = json.loads(line)
+            kind = e.get("Event")
+            if kind == "SparkListenerJobStart":
+                props = e.get("Properties") or {}
+                group = props.get("spark.jobGroup.id")
+                if group is None:
+                    continue
+                site = props.get("callSite.short", "?").replace(root, "")
+                for st in e.get("Stage IDs", []):
+                    stage_job.setdefault(st, (group, site))
+                for c in cell(group, site):
+                    c["jobs"] += 1
+            elif kind == "SparkListenerTaskEnd" and e.get("Stage ID") in stage_job:
+                tm = e.get("Task Metrics") or {}
+                for c in cell(*stage_job[e["Stage ID"]]):
+                    c["tasks"] += 1
+                    c["run_s"] += tm.get("Executor Run Time", 0) / 1e3
+                    c["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
+    return out
+
+
+def _name_lake_writes(sc) -> None:
+    """Give lake writes a call site: PySpark sets none for a DataFrame
+    write, and the broadcast jobs a write runs inherit it."""
+    from debezium_connector_cassandra_spark.lake.table import LakeTable
+
+    for name in ("overwrite_buckets", "overwrite_all", "append"):
+        def named(self, *a, _plain=getattr(LakeTable, name), _name=name, **kw):
+            sc._jsc.setCallSite(f"LakeTable.{_name} of {os.path.basename(self.path)}")
+            try:
+                return _plain(self, *a, **kw)
+            finally:
+                sc._jsc.setCallSite(None)
+
+        setattr(LakeTable, name, named)
+
+
+def bench_jobs(seed: int = 1, timed_batches: int = 3) -> None:
+    """Per-phase attribution of a steady_merge-shaped run: for each batch
+    (the set-up batch, then ``timed_batches`` timed ones) one JSON line with
+    its jobs, tasks, executor run time and executor CPU time, in total and
+    by call site (the engine line that submitted the job, or the lake
+    write that ran it), read from an uncompressed Spark event log after the
+    session stops."""
+    from debezium_connector_cassandra_spark.session import get_spark
+
+    workdir = tempfile.mkdtemp(prefix="cdc_bx_jobs_")
+    ev_dir = os.path.join(workdir, "eventlog")
+    os.makedirs(ev_dir)
+    spark = get_spark(app_name="cdc-bench-extra-jobs", extra_conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": ev_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
+    sc = spark.sparkContext
+    _name_lake_writes(sc)
+    try:
+        runner, setup_segments = _steady_runner(spark, seed, timed_batches, workdir)
+        walls = {}
+        for label, run in _steady_batches(runner, setup_segments, timed_batches):
+            sc.setJobGroup(label, label)
+            t0 = time.perf_counter()
+            run()
+            walls[label] = round(time.perf_counter() - t0, 2)
+        spark.stop()
+        (log,) = [os.path.join(ev_dir, f) for f in os.listdir(ev_dir)]
+        groups = _jobs_by_group(log)
+        for label, wall in walls.items():
+            g = groups.get(label, {})
+            sites = sorted(g.get("by_call_site", {}).items(), key=lambda kv: -kv[1]["cpu_s"])
+            print(json.dumps({
+                "batch": label,
+                "wall_s": wall,
+                **{k: round(g.get(k, 0), 2) for k in ("jobs", "tasks", "run_s", "cpu_s")},
+                "by_call_site": {
+                    site: {k: round(v, 2) for k, v in c.items()} for site, c in sites
+                },
+            }), flush=True)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
+def bench_skew(n_events: int = 2_000_000, pairs: int = 3) -> None:
+    """Skew stress: the same ``bench.py`` pipeline shape (``n_events`` in 8
+    segments, 4 segments per batch, 32 state buckets, n_events/100
+    conversations x 50 turns, seed 42) drained once with conversations
+    chosen uniformly and once with 40% of all events on one conversation,
+    ``pairs`` times in alternating order. Prints one JSON line per run and
+    a summary with the medians and hot/uniform ratio of the apply wall."""
+    from debezium_connector_cassandra_spark.session import get_spark
+    from debezium_connector_cassandra_spark.sources.generator import (
+        gen_mutation_log,
+        write_mutation_log,
+    )
+    from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
+
+    spark = get_spark(app_name="cdc-bench-extra-skew")
+    walls: dict[str, list[float]] = {"uniform": [], "hot40": []}
+    rows: dict[str, int] = {}
+    for trial in range(pairs):
+        order = [("uniform", 0.0), ("hot40", 0.4)]
+        for name, hot in order if trial % 2 == 0 else order[::-1]:
+            workdir = tempfile.mkdtemp(prefix="cdc_bx_skew_")
+            try:
+                log = gen_mutation_log(spark, n_events, n_convs=max(n_events // 100, 100), max_turns=50,
+                                       events_per_segment=max(n_events // 8, 1), n_log_partitions=4,
+                                       seed=42, hot_fraction=hot)
+                write_mutation_log(log, f"{workdir}/log")
+                runner = CdcRunner(spark, f"{workdir}/log", f"{workdir}/target",
+                                   segments_per_batch=4, n_buckets=32)
+                t0 = time.perf_counter()
+                n_batches = len(runner.run())
+                walls[name].append(round(time.perf_counter() - t0, 2))
+                rows[name] = runner.target.state.read().count()
+            finally:
+                shutil.rmtree(workdir, ignore_errors=True)
+            print(json.dumps({"trial": trial, "stream": name, "apply_s": walls[name][-1],
+                              "n_batches": n_batches, "state_rows": rows[name]}), flush=True)
+    med = {k: statistics.median(v) for k, v in walls.items()}
+    print(json.dumps({
+        "uniform_apply_sec": walls["uniform"],
+        "hot40_apply_sec": walls["hot40"],
+        "median_uniform": med["uniform"],
+        "median_hot40": med["hot40"],
+        "hot_over_uniform": round(med["hot40"] / med["uniform"], 2),
+        "state_rows": rows,
+    }))
 
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
@@ -188,5 +348,9 @@ if __name__ == "__main__":
         bench_pipeline()
     elif mode == "compile":
         bench_compile(int(sys.argv[2]) if len(sys.argv) > 2 else 1)
+    elif mode == "jobs":
+        bench_jobs(int(sys.argv[2]) if len(sys.argv) > 2 else 1)
+    elif mode == "skew":
+        bench_skew(*[int(a) for a in sys.argv[2:4]])
     else:
         raise SystemExit(f"unknown mode {mode}")

@@ -52,12 +52,6 @@ def n_tokens(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def n_token_pieces(text: Column) -> Column:
-    """Subword-proxy token count — the number a context-length budgeter or
-    per-doc token accountant wants, vs the whitespace word count."""
-    return F.size(token_pieces(text))
-
-
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document token accounting: whitespace words, BPE-ish pieces, the
     piece class mix, and fertility (pieces per word — the subword blow-up

@@ -36,6 +36,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -56,6 +57,20 @@ _PA_TYPES = {
 
 def _pa_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema([(f.name, _PA_TYPES[f.dataType]) for f in schema.fields])
+
+
+def _column_range(path: str, col: str) -> tuple[int, object, object]:
+    """``(num_rows, min, max)`` of ``col`` in one Parquet file, read from its
+    footer alone; min and max are None when a row group carries no
+    statistics for ``col``."""
+    md = pq.read_metadata(path)
+    lo = hi = None
+    if col in md.schema.names:
+        j = md.schema.names.index(col)
+        stats = [md.row_group(i).column(j).statistics for i in range(md.num_row_groups)]
+        if stats and all(st is not None and st.has_min_max for st in stats):
+            lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+    return md.num_rows, lo, hi
 
 
 def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
@@ -281,6 +296,47 @@ class LakeTable:
         new_buckets = {b: list(fs) for b, fs in m["buckets"].items()}
         new_buckets[str(UNBUCKETED)] = [rel_file]
         return self._commit(m, new_buckets)
+
+    def purge_at_or_below(self, col: str, bound) -> tuple[int, int, int]:
+        """Delete every row whose ``col`` is not above ``bound``, planned
+        from Parquet footers on the driver with no Spark job: a file whose
+        ``col`` max is at or below the bound is dropped unread, a file whose
+        min is above it is kept by reference, and only the files that
+        straddle the bound, or carry no statistics, are read and rewritten
+        with pyarrow under a fresh commit dir, in their own bucket. Commits
+        only when a row was purged. Returns ``(n_purged, n_kept, version)``."""
+        m = self.manifest()
+        rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
+        n_purged = n_kept = 0
+        new_buckets: dict[str, list[str]] = {}
+        for b, files in m["buckets"].items():
+            kept_files = []
+            for i, f in enumerate(files):
+                path = os.path.join(self.path, f)
+                n, lo, hi = _column_range(path, col)
+                if hi is not None and hi <= bound:
+                    n_purged += n
+                    continue
+                if lo is not None and lo > bound:
+                    n_kept += n
+                    kept_files.append(f)
+                    continue
+                table = pq.read_table(path)
+                kept = table.filter(pc.greater(table[col], bound))
+                n_kept += kept.num_rows
+                n_purged += table.num_rows - kept.num_rows
+                if kept.num_rows == table.num_rows:
+                    kept_files.append(f)
+                elif kept.num_rows:
+                    os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
+                    rel_file = os.path.join(rel_dir, f"bucket{b}-{i}.parquet")
+                    pq.write_table(kept, os.path.join(self.path, rel_file))
+                    kept_files.append(rel_file)
+            if kept_files:
+                new_buckets[b] = kept_files
+        if n_purged == 0:
+            return 0, n_kept, m["version"]
+        return n_purged, n_kept, self._commit(m, new_buckets)
 
     def _commit(self, base_manifest: dict, new_buckets: dict, schema: T.StructType | None = None) -> int:
         new_m = dict(base_manifest)

@@ -19,8 +19,9 @@ once. This is what makes replay order-insensitive and lets segments process
 in parallel (SURVEY §4 "key semantic transform").
 
 Scale notes: tombstones are a small fraction of the stream and are
-pre-aggregated (per key / per conv) before joining, so AQE turns these joins
-into broadcasts at runtime; the range join is an equi-join on conv_id with a
+pre-aggregated (per key / per conv) before joining, so these joins broadcast
+(AQE decides at runtime on a large batch; on a small batch the static
+planner sees the cached tombstone rows' real size); the range join is an equi-join on conv_id with a
 residual bound predicate — never a cartesian product.
 """
 
@@ -81,26 +82,6 @@ def extract_tombstones(
         .agg(F.expr("max(wt) AS wt"))
     )
     return TombstoneSet(row=row, partition=partition, range=rng)
-
-
-def union_tombstones(a: TombstoneSet, b: TombstoneSet) -> TombstoneSet:
-    """Member-wise union; None members (statically empty) cost nothing."""
-
-    def u(x, y, regroup_keys=None):
-        if x is None:
-            return y
-        if y is None:
-            return x
-        out = x.unionByName(y)
-        if regroup_keys:
-            out = out.groupBy(*regroup_keys).agg(F.max("wt").alias("wt"))
-        return out
-
-    return TombstoneSet(
-        row=u(a.row, b.row, ["conv_id", "turn_idx"]),
-        partition=u(a.partition, b.partition, ["conv_id"]),
-        range=u(a.range, b.range, ["conv_id", "lo", "hi", "lo_incl", "hi_incl"]),
-    )
 
 
 def pair_range_markers(log: DataFrame) -> DataFrame:
@@ -195,52 +176,54 @@ def tomb_wt_for_keys(
     return out.withColumn("tomb_wt", F.expr(tomb)).drop(*wt_cols)
 
 
-def tombstones_to_rows(tombs: TombstoneSet) -> DataFrame:
-    """Flatten a TombstoneSet to a single storable relation (the persistent
-    tombstone store — Cassandra's analog of tombstones retained until
+def tombstone_rows(batch: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
+    """The batch's tombstones of ``kinds`` as rows of the persistent
+    tombstone store (Cassandra's analog of tombstones retained until
     gc_grace, needed so an out-of-order upsert arriving in a *later* batch
-    still loses to an earlier-seen delete with a higher writetime)."""
-    parts = []
-    if tombs.row is not None:
-        parts.append(
-            tombs.row.select(
-                F.lit("d").alias("kind"), "conv_id",
-                F.col("turn_idx").alias("lo"), F.col("turn_idx").alias("hi"),
-                F.lit(True).alias("lo_incl"), F.lit(True).alias("hi_incl"), "wt",
-            )
+    still loses to an earlier-seen delete with a higher writetime):
+    ``(kind, conv_id, lo, hi, lo_incl, hi_incl, wt)``, one row per distinct
+    target with its max writetime, from ONE aggregate over every kind. A row
+    delete targets ``[turn_idx, turn_idx]``, a partition delete has NULL
+    bounds, a range keeps its bounds and their inclusivity methods (ranges
+    pre-aggregate at bounds grain, as in ``extract_tombstones``)."""
+    # a log without range deletes may lack the range bound columns
+    rng = "r" in kinds
+
+    def bound(col):
+        r_turn = f" WHEN 'r' THEN {col}.turn_idx" if rng else ""
+        return f"CASE op WHEN 'd' THEN turn_idx{r_turn} END"
+
+    def incl(col, method):
+        return f"op <> 'r' OR {col}.method = '{method}'" if rng else "true"
+
+    return (
+        batch.where(F.col("op").isin(*kinds))
+        .selectExpr(
+            "op AS kind",
+            "conv_id",
+            f"{bound('range_start')} AS lo",
+            f"{bound('range_end')} AS hi",
+            f"{incl('range_start', 'INCL_START_BOUND')} AS lo_incl",
+            f"{incl('range_end', 'INCL_END_BOUND')} AS hi_incl",
+            "writetime AS wt",
         )
-    if tombs.partition is not None:
-        parts.append(
-            tombs.partition.select(
-                F.lit("p").alias("kind"), "conv_id",
-                F.lit(None).cast("int").alias("lo"), F.lit(None).cast("int").alias("hi"),
-                F.lit(True).alias("lo_incl"), F.lit(True).alias("hi_incl"), "wt",
-            )
-        )
-    if tombs.range is not None:
-        parts.append(
-            tombs.range.select(
-                F.lit("r").alias("kind"), "conv_id", "lo", "hi", "lo_incl", "hi_incl", "wt"
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        .groupBy("kind", "conv_id", "lo", "hi", "lo_incl", "hi_incl")
+        .agg(F.expr("max(wt) AS wt"))
+    )
 
 
-def rows_to_tombstones(df: DataFrame) -> TombstoneSet:
-    """Inverse of tombstones_to_rows (reading the persistent store)."""
+def rows_to_tombstones(df: DataFrame, kinds: tuple[str, ...] = ("d", "p", "r")) -> TombstoneSet:
+    """The join relations of tombstone-store rows (``tombstone_rows`` or a
+    store read), each pre-aggregated to its join grain; kinds not in
+    ``kinds`` are statically empty (None)."""
+
+    def of(kind, *keys):
+        if kind not in kinds:
+            return None
+        return df.where(F.col("kind") == kind).groupBy(*keys).agg(F.max("wt").alias("wt"))
+
     return TombstoneSet(
-        row=(
-            df.where(F.col("kind") == "d")
-            .groupBy("conv_id", F.col("lo").alias("turn_idx"))
-            .agg(F.max("wt").alias("wt"))
-        ),
-        partition=df.where(F.col("kind") == "p").groupBy("conv_id").agg(F.max("wt").alias("wt")),
-        range=(
-            df.where(F.col("kind") == "r")
-            .groupBy("conv_id", "lo", "hi", "lo_incl", "hi_incl")
-            .agg(F.max("wt").alias("wt"))
-        ),
+        row=of("d", "conv_id", F.col("lo").alias("turn_idx")),
+        partition=of("p", "conv_id"),
+        range=of("r", "conv_id", "lo", "hi", "lo_incl", "hi_incl"),
     )

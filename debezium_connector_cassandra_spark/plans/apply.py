@@ -16,13 +16,24 @@ Scale shape of one batch (the plan .explain should show):
   positions (predicate pushdown on position)
 - one shuffle for the per-key reduction (hash agg with map-side combine — hot
   conv_ids collapse before the exchange)
-- tombstone relations pre-aggregated, joined broadcast (AQE decides at
-  runtime from actual size)
+- tombstone relations pre-aggregated, joined broadcast
 - target read restricted to touched buckets; COW write of those buckets only
+
+Each batch is planned for its size (``is_small_batch``, from facts the
+pre-scan and the manifests already hold). A small batch — tombstones within
+the driver-flush bound, state and event bytes within ``defaultParallelism``
+advisory-size partitions — runs static: AQE off, ``defaultParallelism``
+shuffle partitions, its tombstone rows computed once, cached (the planner
+broadcasts them at their real size) and collected for the flush. A large
+batch keeps AQE, which decides broadcasts at runtime from actual sizes,
+coalesces partitions and splits skewed joins. The pre-scan always runs
+static.
 """
 
 from __future__ import annotations
 
+import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -39,11 +50,9 @@ from ..operators.lww import (
 )
 from ..operators.tombstones import (
     TombstoneSet,
-    extract_tombstones,
     rows_to_tombstones,
     tomb_wt_for_keys,
-    tombstones_to_rows,
-    union_tombstones,
+    tombstone_rows,
 )
 
 TOMBSTONE_STORE_SCHEMA = T.StructType(
@@ -117,6 +126,31 @@ class CdcTarget:
         return self.state.read(buckets=buckets, version=version).select(*cols)
 
 
+# a batch with at most this many tombstones flushes them from the driver,
+# with no Spark job (offset-flush analog); it bounds the small plan too
+DRIVER_FLUSH_MAX_TOMBSTONES = 20_000
+
+_PLAN_CONF = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+@contextmanager
+def static_plan(*sessions: SparkSession):
+    """Plan the queries run inside with AQE off and
+    ``spark.sql.shuffle.partitions`` = ``defaultParallelism``, on every
+    session given; each session's own values come back on exit, also when
+    the body raises."""
+    saved = [(s, {k: s.conf.get(k) for k in _PLAN_CONF}) for s in sessions]
+    try:
+        for s, _ in saved:
+            s.conf.set("spark.sql.adaptive.enabled", "false")
+            s.conf.set("spark.sql.shuffle.partitions", str(s.sparkContext.defaultParallelism))
+        yield
+    finally:
+        for s, conf in saved:
+            for k, v in conf.items():
+                s.conf.set(k, v)
+
+
 _KINDS = ("d", "p", "r")
 
 
@@ -133,7 +167,8 @@ def prescan(log: DataFrame, targets: dict[str, CdcTarget]) -> list[dict]:
     ``n_d``/``n_p``/``n_r`` over supported rows, and ``bucket_pairs``: the
     touched (state bucket, tombstone-store bucket) pairs of ``targets[fqtn]``,
     computed with ``bucket_expr`` itself. The pair set is bounded by the
-    bucket-count product, never by event count."""
+    bucket-count product, never by event count, so the pre-scan always runs
+    static (``static_plan``): AQE has nothing to re-plan in it."""
     multi = "keyspace" in log.columns and "table" in log.columns
     keys = [c for c in ("keyspace", "table", "segment_id", "log_partition") if c in log.columns]
     unsup = F.lit(False)
@@ -154,18 +189,19 @@ def prescan(log: DataFrame, targets: dict[str, CdcTarget]) -> list[dict]:
             pairs = pairs.when((F.col("keyspace") == ks) & (F.col("table") == table), pair(t))
     else:
         pairs = pair(targets[""])
-    rows = (
-        log.groupBy(*keys)
-        .agg(
-            F.count("*").alias("n"),
-            F.max("position").alias("max_pos"),
-            F.max("writetime").alias("max_wt"),
-            F.sum(unsup.cast("long")).alias("n_unsup"),
-            *[F.sum(((F.col("op") == k) & ~unsup).cast("long")).alias(f"n_{k}") for k in _KINDS],
-            F.collect_set(pairs).alias("bucket_pairs"),
+    with static_plan(log.sparkSession):
+        rows = (
+            log.groupBy(*keys)
+            .agg(
+                F.count("*").alias("n"),
+                F.max("position").alias("max_pos"),
+                F.max("writetime").alias("max_wt"),
+                F.sum(unsup.cast("long")).alias("n_unsup"),
+                *[F.sum(((F.col("op") == k) & ~unsup).cast("long")).alias(f"n_{k}") for k in _KINDS],
+                F.collect_set(pairs).alias("bucket_pairs"),
+            )
+            .collect()
         )
-        .collect()
-    )
     return [
         {
             **r.asDict(),
@@ -192,6 +228,30 @@ def state_buckets(stats: dict) -> list[int]:
     return sorted({sb for sb, _ in stats["bucket_pairs"]})
 
 
+def is_small_batch(target: CdcTarget, batch: DataFrame, stats: dict) -> bool:
+    """Whether a batch takes the static plan: its tombstones fit the driver
+    flush, and its state and event bytes fit in ``defaultParallelism``
+    partitions of the session's ``advisoryPartitionSizeInBytes``. State
+    bytes are the sizes of the touched buckets' files in the manifest,
+    event bytes Catalyst's size estimate of the batch plan (the scanned
+    files' bytes for a log read). Metadata only, no Spark job."""
+    if sum(stats[k] for k in _KINDS) > DRIVER_FLUSH_MAX_TOMBSTONES:
+        return False
+    spark = batch.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    state = target.state
+    files = state.manifest()["buckets"]
+    state_bytes = sum(
+        os.path.getsize(os.path.join(state.path, f))
+        for b in state_buckets(stats)
+        for f in files.get(str(b), ())
+    )
+    event_bytes = int(batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return state_bytes + event_bytes <= spark.sparkContext.defaultParallelism * advisory
+
+
 def apply_batch(
     target: CdcTarget,
     batch: DataFrame,
@@ -204,6 +264,9 @@ def apply_batch(
     already run for offsets and lineage, so the batch is scanned exactly
     once at full width, by the reduction. When absent, ``prescan`` computes
     it here in one narrow job.
+
+    The plan is chosen per batch from those stats and the manifests
+    (``is_small_batch``; the module docstring has the rule).
 
     Steps map to SURVEY operators: D3-D12 are upstream in decode ->
     R6 (reduce+merge) -> tombstone persistence (Cassandra gc_grace analog).
@@ -219,22 +282,59 @@ def apply_batch(
     """
     if stats is None:
         stats = batch_stats(prescan(batch, {"": target}))
-    n_events = stats["n"]
-    kind_counts = {k: stats[k] for k in _KINDS}
-    n_tombs = sum(kind_counts.values())
+    if is_small_batch(target, batch, stats):
+        with static_plan(batch.sparkSession, target.state.spark):
+            return _apply(target, batch, stats, small=True)
+    return _apply(target, batch, stats, small=False)
 
-    stored_empty = target.tombstones.is_empty()
 
-    # the batch's tombstones of every kind it carries, for the store flush.
-    # Only the conv-grain kinds are joined: the row-delete ('d') kind is
-    # FOLDED into the key reduction below (same grouping key, zero extra
-    # shuffle) and applied to the target inside the merge join via
-    # _kill_wt — so every tombstone join is a small broadcastable
-    # conv-grain relation.
-    new_tombs = extract_tombstones(
-        batch, kinds=tuple(k for k in _KINDS if kind_counts[k])
-    )
+def _apply(target: CdcTarget, batch: DataFrame, stats: dict, small: bool) -> dict:
+    kinds = tuple(k for k in _KINDS if stats[k])
+    n_tombs = sum(stats[k] for k in kinds)
 
+    # the batch's tombstones of every kind it carries, as store rows, for
+    # the flush and the joins. The row-delete ('d') kind is FOLDED into the
+    # key reduction below (same grouping key, zero extra shuffle) and
+    # applied to the target inside the merge join via _kill_wt, so only the
+    # conv-grain kinds are joined: small broadcastable relations
+    new_rows = tombstone_rows(batch, kinds) if kinds else None
+    cached = small and new_rows is not None
+    if cached:
+        new_rows = new_rows.cache()
+    try:
+        # collected first, which materializes the cache the merge then reads
+        flushed = new_rows.collect() if cached else None
+        new_version = _merge(target, batch, stats, new_rows)
+        # --- persist new tombstones for future out-of-order batches -----
+        if new_rows is not None:
+            if flushed is None and n_tombs <= DRIVER_FLUSH_MAX_TOMBSTONES:
+                flushed = new_rows.collect()
+            if flushed is not None:
+                # driver-side flush, no Spark job (offset-flush analog);
+                # rows in (kind, conv_id, lo) order compress better than in
+                # hash order
+                rows = sorted((r.asDict() for r in flushed), key=_store_order)
+                target.tombstones.append_small(rows)
+            else:
+                target.tombstones.append(new_rows)
+    finally:
+        if cached:
+            new_rows.unpersist()
+    return {
+        "n_events": stats["n"],
+        "n_buckets_rewritten": len(state_buckets(stats)),
+        "n_new_tombstones": n_tombs,
+        "state_version": new_version,
+    }
+
+
+def _store_order(row: dict) -> tuple:
+    return row["kind"], row["conv_id"], row["lo"] is not None, row["lo"] or 0
+
+
+def _merge(target: CdcTarget, batch: DataFrame, stats: dict, new_rows: DataFrame | None) -> int:
+    """Reduce the batch, apply tombstones, merge the touched state buckets
+    copy-on-write; returns the new state version."""
     # the pre-scan's touched (state bucket, tombstone-store bucket) pairs:
     # the batch's conv_ids, upsert/delete keys and partition/range targets
     # alike, so no discovery job re-reads the batch
@@ -245,15 +345,16 @@ def apply_batch(
     # NOT cached: its one consumer is the merge, which reads it once
     reduced = reduce_events(batch)
 
-    pr_tombs = TombstoneSet(row=None, partition=new_tombs.partition, range=new_tombs.range)
-    if stored_empty:
+    conv_kinds = tuple(k for k in ("p", "r") if stats[k])
+    pr_rows = new_rows.where(F.col("kind").isin(*conv_kinds)) if conv_kinds else None
+    pr_tombs = rows_to_tombstones(pr_rows, conv_kinds) if conv_kinds else TombstoneSet(None, None, None)
+    if target.tombstones.is_empty():
         join_tombs = pr_tombs
     else:
         # the tombstone store is bucketed by conv_id too — read only the
         # buckets the batch's conversations hash into
-        store_buckets = sorted({tb for _, tb in pairs})
-        stored = rows_to_tombstones(target.tombstones.read(buckets=store_buckets))
-        join_tombs = union_tombstones(pr_tombs, stored)
+        stored = target.tombstones.read(buckets=sorted({tb for _, tb in pairs}))
+        join_tombs = rows_to_tombstones(stored if pr_rows is None else pr_rows.unionByName(stored))
     if join_tombs.row is None and join_tombs.partition is None and join_tombs.range is None:
         batch_state = finalize_state(reduced)
     else:
@@ -266,34 +367,14 @@ def apply_batch(
         merged = drop_invisible(batch_state)
     else:
         tgt = target.state.read(buckets=bucket_ids)
-        if new_tombs.partition is not None or new_tombs.range is not None:
+        if conv_kinds:
             # conv-grain kills for target keys absent from the batch
             tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
         merged = merge_states(tgt, batch_state)
 
     if bucket_ids:
-        new_version = target.state.overwrite_buckets(merged, bucket_ids)
-    else:
-        new_version = target.state.current_version()
-
-    # --- persist new tombstones for future out-of-order batches -------
-    if n_tombs:
-        # the 'd' rows come from extract_tombstones' narrow 'd'-only
-        # aggregate (the same max writetime per key as _d_wt): reading them
-        # from the uncached reduction would run it a second time
-        tomb_rows = tombstones_to_rows(new_tombs)
-        if n_tombs <= 20_000:
-            # driver-side flush, no Spark job (offset-flush analog)
-            target.tombstones.append_small([r.asDict() for r in tomb_rows.collect()])
-        else:
-            target.tombstones.append(tomb_rows)
-
-    return {
-        "n_events": n_events,
-        "n_buckets_rewritten": len(bucket_ids),
-        "n_new_tombstones": n_tombs,
-        "state_version": new_version,
-    }
+        return target.state.overwrite_buckets(merged, bucket_ids)
+    return target.state.current_version()
 
 
 def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:
@@ -305,25 +386,10 @@ def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:
     unbounded-growth relation: every batch's conv-grain tombstones would
     accumulate forever into the rows_to_tombstones read above.
 
-    Returns ``{"n_purged", "n_kept", "version"}``; a no-op purge skips the
-    rewrite commit entirely."""
-    store = target.tombstones
-    if store.is_empty():
-        return {"n_purged": 0, "n_kept": 0, "version": store.current_version()}
-    counts = (
-        store.read()
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum((F.col("wt") > writetime_horizon).cast("long")), F.lit(0)
-            ).alias("k"),
-        )
-        .collect()[0]
-    )
-    n_kept = int(counts["k"])
-    n_purged = int(counts["n"]) - n_kept
-    if n_purged == 0:
-        return {"n_purged": 0, "n_kept": n_kept, "version": store.current_version()}
-    kept = store.read().where(F.col("wt") > writetime_horizon)
-    version = store.overwrite_all(kept)
+    The purge is planned from each store file's Parquet-footer ``wt``
+    min/max (``LakeTable.purge_at_or_below``): files wholly at or below the
+    horizon drop, files wholly above it stay, only straddlers are rewritten,
+    and no Spark job runs. Returns ``{"n_purged", "n_kept", "version"}``; a
+    no-op purge commits nothing."""
+    n_purged, n_kept, version = target.tombstones.purge_at_or_below("wt", writetime_horizon)
     return {"n_purged": n_purged, "n_kept": n_kept, "version": version}

@@ -4,7 +4,16 @@ Local-mode knobs mirror what a 1000-executor deployment would set cluster-wide:
 AQE on (runtime coalescing + skew-join splitting), Arrow enabled for every
 pandas-UDF exchange, shuffle partitions sized to the parallelism at hand.
 
-Compile once, not every micro-batch. A CDC batch plans ~23 short Spark
+These are the session's defaults, the plan of a large batch. The apply plan
+overrides two of them per batch (``plans.apply.is_small_batch``): a small
+batch — tombstones within the driver-flush bound, state and event bytes
+within ``defaultParallelism`` partitions of
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — and every pre-scan run
+with AQE off and ``spark.sql.shuffle.partitions`` = ``defaultParallelism``,
+restored afterwards. On a ~20k-event batch AQE's re-planning at every
+exchange and 64 partitions cost more than they recoup.
+
+Compile once, not every micro-batch. A CDC batch plans several short Spark
 queries, and the same plan shapes recur in every batch. Three settings make
 the JVM compile each shape once and reuse it:
 

@@ -9,8 +9,9 @@ Reference analogs:
   *within* a batch they parallelize freely because the LWW reduction is
   replay-order-insensitive (the key semantic transform, SURVEY §4).
 - S4 incremental tail / idx watermark (CommitLogIdxParser.java:58-105): the
-  offsets table stores (segment_id, position) per log partition; the batch
-  filter ``(segment_id, position) > watermark`` is pushed down to the
+  offsets table stores (segment_id, position) per log partition;
+  ``CdcRunner.run_batch`` reads only pending segments and filters an open
+  segment's rows at or below its watermark, predicates pushed down to the
   Parquet scan — segment_id is the physical partition column, so fully
   processed segments are pruned without opening a file, and a partially
   processed segment re-reads only rows past the checkpointed position.
@@ -20,8 +21,6 @@ from __future__ import annotations
 
 import os
 import re
-
-from pyspark.sql import DataFrame, functions as F
 
 _SEGMENT_DIR_RE = re.compile(r"^segment_id=(\d+)$")
 
@@ -85,37 +84,3 @@ class CommitLogTransfer:
                 return True
         return False
 
-
-def offset_filter(
-    offsets: dict[int, tuple[int, int]],
-    reprocess_segments: set[int] | None = None,
-) -> F.Column:
-    """Build the incremental predicate from checkpointed offsets.
-
-    ``offsets``: log_partition -> (segment_id, position) high-watermark.
-    ``reprocess_segments``: segments whose offset check is BYPASSED — the
-    error-reprocess path (reference handleMutation:259 bypass via
-    reprocessingCommitLogs; safe because the merge is idempotent).
-
-    The number of log partitions is small and fixed (reference
-    num.of.change.event.queues), so this compiles to a compact OR-chain that
-    Catalyst pushes into the scan.
-    """
-    cond = F.lit(False)
-    seen = F.lit(False)
-    for lp, (seg, pos) in sorted(offsets.items()):
-        is_lp = F.col("log_partition") == lp
-        seen = seen | is_lp
-        ahead = (F.col("segment_id") > seg) | (
-            (F.col("segment_id") == seg) & (F.col("position") > pos)
-        )
-        cond = cond | (is_lp & ahead)
-    cond = cond | ~seen  # partitions with no checkpoint yet: everything is new
-    if reprocess_segments:
-        cond = cond | F.col("segment_id").isin(*[int(s) for s in reprocess_segments])
-    return cond
-
-
-def scan_segments(log_df: DataFrame, segment_ids: list[int]) -> DataFrame:
-    """Restrict the log to a batch's segments — partition-pruned scan."""
-    return log_df.where(F.col("segment_id").isin(*[int(s) for s in segment_ids]))
