@@ -35,6 +35,7 @@ import os
 import time
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -76,6 +77,82 @@ def _column_range(path: str, col: str) -> tuple[int, object, object]:
 def bucket_expr(key_col: str, n_buckets: int) -> F.Column:
     """Pure bucket function — recomputable anywhere, never persisted."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+# XXH64 primes; Spark's xxhash64 is the reference XXH64 over a string's
+# UTF-8 bytes with seed 42
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p)
+    for p in (
+        0x9E3779B185EBCA87,
+        0xC2B2AE3D27D4EB4F,
+        0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63,
+        0x27D4EB2F165667C5,
+    )
+)
+_SEED = 42
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _round(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def _xxh64(data: np.ndarray) -> np.ndarray:
+    """XXH64 (seed 42) of each row of ``data``, an ``(n, L)`` uint8 array
+    of equal-length byte strings, as uint64."""
+    n, length = data.shape
+
+    def words(off: int, size: int) -> np.ndarray:  # little-endian lanes
+        return np.ascontiguousarray(data[:, off : off + size]).view(f"<u{size}")[:, 0].astype(np.uint64)
+
+    seed = np.full(n, _SEED, dtype=np.uint64)
+    off = 0
+    if length >= 32:
+        v = [seed + _P1 + _P2, seed + _P2, seed.copy(), seed - _P1]
+        while off + 32 <= length:
+            v = [_round(v[i], words(off + 8 * i, 8)) for i in range(4)]
+            off += 32
+        h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for vi in v:
+            h = (h ^ _round(np.zeros(n, dtype=np.uint64), vi)) * _P1 + _P4
+    else:
+        h = seed + _P5
+    h = h + np.uint64(length)
+    while off + 8 <= length:
+        h = _rotl(h ^ _round(np.zeros(n, dtype=np.uint64), words(off, 8)), 27) * _P1 + _P4
+        off += 8
+    if off + 4 <= length:
+        h = _rotl(h ^ (words(off, 4) * _P1), 23) * _P2 + _P3
+        off += 4
+    while off < length:
+        h = _rotl(h ^ (data[:, off].astype(np.uint64) * _P5), 11) * _P1
+        off += 1
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def bucket_of(keys, n_buckets: int) -> np.ndarray:
+    """``bucket_expr`` on the driver: the bucket id of every non-null string
+    key (a pyarrow array, chunked or not, or a list), computed with numpy,
+    no Spark job (one vectorized pass per distinct key length)."""
+    if isinstance(keys, pa.ChunkedArray):
+        keys = keys.combine_chunks()
+    keys = keys.cast(pa.string()) if isinstance(keys, pa.Array) else pa.array(keys, pa.string())
+    offsets = np.frombuffer(keys.buffers()[1], dtype=np.int32)[keys.offset : keys.offset + len(keys) + 1]
+    data = np.frombuffer(keys.buffers()[2] or b"", dtype=np.uint8)
+    starts, lengths = offsets[:-1], np.diff(offsets)
+    hashes = np.empty(len(keys), dtype=np.uint64)
+    for length in np.unique(lengths):
+        rows = np.flatnonzero(lengths == length)
+        hashes[rows] = _xxh64(data[starts[rows, None] + np.arange(length)])
+    # Spark's pmod over the signed 64-bit hash
+    return np.mod(hashes.view(np.int64), n_buckets).astype(np.int32)
 
 
 class LakeTable:
@@ -300,42 +377,50 @@ class LakeTable:
     def purge_at_or_below(self, col: str, bound) -> tuple[int, int, int]:
         """Delete every row whose ``col`` is not above ``bound``, planned
         from Parquet footers on the driver with no Spark job: a file whose
-        ``col`` max is at or below the bound is dropped unread, a file whose
-        min is above it is kept by reference, and only the files that
-        straddle the bound, or carry no statistics, are read and rewritten
-        with pyarrow under a fresh commit dir, in their own bucket. Commits
-        only when a row was purged. Returns ``(n_purged, n_kept, version)``."""
+        ``col`` max is at or below the bound is dropped unread, and a
+        bucketed file whose min is above it is kept by reference. The rest
+        (bucketed files that straddle the bound or carry no statistics, and
+        every file of the UNBUCKETED slot) are read with pyarrow, and their
+        surviving rows are written back into their key buckets
+        (``bucket_of``), one file per bucket under a fresh commit dir. The
+        UNBUCKETED slot is therefore empty after a sweep, and bucket-pruned
+        reads skip every other bucket. Commits only when a row was purged or
+        moved. Returns ``(n_purged, n_kept, version)``."""
         m = self.manifest()
-        rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
         n_purged = n_kept = 0
         new_buckets: dict[str, list[str]] = {}
+        rewrite: list[pa.Table] = []
         for b, files in m["buckets"].items():
-            kept_files = []
-            for i, f in enumerate(files):
+            for f in files:
                 path = os.path.join(self.path, f)
                 n, lo, hi = _column_range(path, col)
                 if hi is not None and hi <= bound:
                     n_purged += n
                     continue
-                if lo is not None and lo > bound:
+                if int(b) != UNBUCKETED and lo is not None and lo > bound:
                     n_kept += n
-                    kept_files.append(f)
+                    new_buckets.setdefault(b, []).append(f)
                     continue
                 table = pq.read_table(path)
                 kept = table.filter(pc.greater(table[col], bound))
                 n_kept += kept.num_rows
                 n_purged += table.num_rows - kept.num_rows
-                if kept.num_rows == table.num_rows:
-                    kept_files.append(f)
+                if int(b) != UNBUCKETED and kept.num_rows == table.num_rows:
+                    new_buckets.setdefault(b, []).append(f)
                 elif kept.num_rows:
-                    os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-                    rel_file = os.path.join(rel_dir, f"bucket{b}-{i}.parquet")
-                    pq.write_table(kept, os.path.join(self.path, rel_file))
-                    kept_files.append(rel_file)
-            if kept_files:
-                new_buckets[b] = kept_files
-        if n_purged == 0:
+                    rewrite.append(kept)
+        if n_purged == 0 and not rewrite:
             return 0, n_kept, m["version"]
+        if rewrite:
+            pa_schema = _pa_schema(T.StructType.fromJson(m["schema"]))
+            kept = pa.concat_tables([t.select(pa_schema.names).cast(pa_schema) for t in rewrite])
+            buckets = bucket_of(kept[m["key_col"]], m["n_buckets"])
+            rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
+            os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
+            for b in np.unique(buckets):
+                rel_file = os.path.join(rel_dir, f"bucket{b}.parquet")
+                pq.write_table(kept.filter(pa.array(buckets == b)), os.path.join(self.path, rel_file))
+                new_buckets.setdefault(str(b), []).append(rel_file)
         return n_purged, n_kept, self._commit(m, new_buckets)
 
     def _commit(self, base_manifest: dict, new_buckets: dict, schema: T.StructType | None = None) -> int:

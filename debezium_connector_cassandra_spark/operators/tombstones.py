@@ -20,9 +20,9 @@ in parallel (SURVEY §4 "key semantic transform").
 
 Scale notes: tombstones are a small fraction of the stream and are
 pre-aggregated (per key / per conv) before joining, so these joins broadcast
-(AQE decides at runtime on a large batch; on a small batch the static
-planner sees the cached tombstone rows' real size); the range join is an equi-join on conv_id with a
-residual bound predicate — never a cartesian product.
+(the static planner sees the cached tombstone rows' real size once the
+driver flush has collected them); the range join is an equi-join on conv_id
+with a residual bound predicate — never a cartesian product.
 """
 
 from __future__ import annotations

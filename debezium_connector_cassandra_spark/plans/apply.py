@@ -19,20 +19,18 @@ Scale shape of one batch (the plan .explain should show):
 - tombstone relations pre-aggregated, joined broadcast
 - target read restricted to touched buckets; COW write of those buckets only
 
-Each batch is planned for its size (``is_small_batch``, from facts the
-pre-scan and the manifests already hold). A small batch — tombstones within
-the driver-flush bound, state and event bytes within ``defaultParallelism``
-advisory-size partitions — runs static: AQE off, ``defaultParallelism``
-shuffle partitions, its tombstone rows computed once, cached (the planner
-broadcasts them at their real size) and collected for the flush. A large
-batch keeps AQE, which decides broadcasts at runtime from actual sizes,
-coalesces partitions and splits skewed joins. The pre-scan always runs
-static.
+Every batch runs one static plan (``static_plan``): AQE off and
+``defaultParallelism`` shuffle partitions, the pre-scan included. The batch's
+tombstone rows are computed once and cached; a batch within the driver-flush
+bound collects them before the merge, which materializes the cache at its
+real size, so the planner broadcasts it, and the flush writes the collected
+rows. AQE's runtime re-planning bought nothing measurable on 1M-event
+batches, uniform or with 40% of the events on one conversation, and cost
+20k-event batches ~28% more CPU per event (``BENCH/batch_plan_r08.json``).
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -127,7 +125,7 @@ class CdcTarget:
 
 
 # a batch with at most this many tombstones flushes them from the driver,
-# with no Spark job (offset-flush analog); it bounds the small plan too
+# with no Spark job (offset-flush analog)
 DRIVER_FLUSH_MAX_TOMBSTONES = 20_000
 
 _PLAN_CONF = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
@@ -228,30 +226,6 @@ def state_buckets(stats: dict) -> list[int]:
     return sorted({sb for sb, _ in stats["bucket_pairs"]})
 
 
-def is_small_batch(target: CdcTarget, batch: DataFrame, stats: dict) -> bool:
-    """Whether a batch takes the static plan: its tombstones fit the driver
-    flush, and its state and event bytes fit in ``defaultParallelism``
-    partitions of the session's ``advisoryPartitionSizeInBytes``. State
-    bytes are the sizes of the touched buckets' files in the manifest,
-    event bytes Catalyst's size estimate of the batch plan (the scanned
-    files' bytes for a log read). Metadata only, no Spark job."""
-    if sum(stats[k] for k in _KINDS) > DRIVER_FLUSH_MAX_TOMBSTONES:
-        return False
-    spark = batch.sparkSession
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    state = target.state
-    files = state.manifest()["buckets"]
-    state_bytes = sum(
-        os.path.getsize(os.path.join(state.path, f))
-        for b in state_buckets(stats)
-        for f in files.get(str(b), ())
-    )
-    event_bytes = int(batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return state_bytes + event_bytes <= spark.sparkContext.defaultParallelism * advisory
-
-
 def apply_batch(
     target: CdcTarget,
     batch: DataFrame,
@@ -265,8 +239,7 @@ def apply_batch(
     once at full width, by the reduction. When absent, ``prescan`` computes
     it here in one narrow job.
 
-    The plan is chosen per batch from those stats and the manifests
-    (``is_small_batch``; the module docstring has the rule).
+    The batch runs under ``static_plan`` (module docstring).
 
     Steps map to SURVEY operators: D3-D12 are upstream in decode ->
     R6 (reduce+merge) -> tombstone persistence (Cassandra gc_grace analog).
@@ -282,44 +255,31 @@ def apply_batch(
     """
     if stats is None:
         stats = batch_stats(prescan(batch, {"": target}))
-    if is_small_batch(target, batch, stats):
-        with static_plan(batch.sparkSession, target.state.spark):
-            return _apply(target, batch, stats, small=True)
-    return _apply(target, batch, stats, small=False)
-
-
-def _apply(target: CdcTarget, batch: DataFrame, stats: dict, small: bool) -> dict:
     kinds = tuple(k for k in _KINDS if stats[k])
     n_tombs = sum(stats[k] for k in kinds)
 
     # the batch's tombstones of every kind it carries, as store rows, for
-    # the flush and the joins. The row-delete ('d') kind is FOLDED into the
-    # key reduction below (same grouping key, zero extra shuffle) and
-    # applied to the target inside the merge join via _kill_wt, so only the
-    # conv-grain kinds are joined: small broadcastable relations
-    new_rows = tombstone_rows(batch, kinds) if kinds else None
-    cached = small and new_rows is not None
-    if cached:
-        new_rows = new_rows.cache()
-    try:
-        # collected first, which materializes the cache the merge then reads
-        flushed = new_rows.collect() if cached else None
-        new_version = _merge(target, batch, stats, new_rows)
-        # --- persist new tombstones for future out-of-order batches -----
-        if new_rows is not None:
-            if flushed is None and n_tombs <= DRIVER_FLUSH_MAX_TOMBSTONES:
-                flushed = new_rows.collect()
+    # the flush and the joins, computed once. The row-delete ('d') kind is
+    # FOLDED into the key reduction (same grouping key, zero extra shuffle)
+    # and applied to the target inside the merge join via _kill_wt, so only
+    # the conv-grain kinds are joined: small broadcastable relations
+    with static_plan(batch.sparkSession, target.state.spark):
+        new_rows = tombstone_rows(batch, kinds).cache() if kinds else None
+        try:
+            # collected before the merge, which then reads the cache
+            flushed = new_rows.collect() if kinds and n_tombs <= DRIVER_FLUSH_MAX_TOMBSTONES else None
+            new_version = _merge(target, batch, stats, new_rows)
+            # --- persist new tombstones for future out-of-order batches --
             if flushed is not None:
                 # driver-side flush, no Spark job (offset-flush analog);
                 # rows in (kind, conv_id, lo) order compress better than in
                 # hash order
-                rows = sorted((r.asDict() for r in flushed), key=_store_order)
-                target.tombstones.append_small(rows)
-            else:
+                target.tombstones.append_small(sorted((r.asDict() for r in flushed), key=_store_order))
+            elif new_rows is not None:
                 target.tombstones.append(new_rows)
-    finally:
-        if cached:
-            new_rows.unpersist()
+        finally:
+            if new_rows is not None:
+                new_rows.unpersist()
     return {
         "n_events": stats["n"],
         "n_buckets_rewritten": len(state_buckets(stats)),
@@ -388,8 +348,10 @@ def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:
 
     The purge is planned from each store file's Parquet-footer ``wt``
     min/max (``LakeTable.purge_at_or_below``): files wholly at or below the
-    horizon drop, files wholly above it stay, only straddlers are rewritten,
-    and no Spark job runs. Returns ``{"n_purged", "n_kept", "version"}``; a
-    no-op purge commits nothing."""
+    horizon drop, bucketed files wholly above it stay, and only straddlers
+    and the driver-flushed (unbucketed) files are rewritten, into their
+    conv_id buckets, so the bucket-pruned store read above stays pruned. No
+    Spark job runs. Returns ``{"n_purged", "n_kept", "version"}``; a sweep
+    that purges and moves nothing commits nothing."""
     n_purged, n_kept, version = target.tombstones.purge_at_or_below("wt", writetime_horizon)
     return {"n_purged": n_purged, "n_kept": n_kept, "version": version}
