@@ -27,8 +27,9 @@ from debezium_connector_cassandra_spark.operators.lww import (
     reduce_events,
 )
 from debezium_connector_cassandra_spark.operators.tombstones import (
-    extract_tombstones,
-    tomb_wt_for_keys,
+    tomb_wt,
+    tombstone_relation,
+    tombstone_rows,
 )
 
 # ---------------------------------------------------------------------------
@@ -1478,9 +1479,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(False).alias("snapshot"),
         )
         as_of = flat.agg(F.max("writetime")).collect()[0][0]
-        tombs = extract_tombstones(log)
-        tombs.row = None  # 'd' folds into the key reduction
-        reduced = tomb_wt_for_keys(reduce_events(log), tombs, keys_unique=True)
+        # 'd' folds into the key reduction
+        rel = tombstone_relation(tombstone_rows(log, ("p", "r")))
+        reduced = tomb_wt(reduce_events(log), rel)
         state = drop_invisible(finalize_state(reduced, as_of_us=as_of))
         return state.select("conv_id", "turn_idx", "role", "text")
 

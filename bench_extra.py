@@ -10,7 +10,7 @@ Usage:
   python bench_extra.py queries [name ...]   # per-query isolation
   python bench_extra.py pipeline             # end-to-end pipeline wall
   python bench_extra.py compile [seed]       # per-batch compile cost
-  python bench_extra.py jobs [seed]          # per-batch jobs/tasks/CPU by call site
+  python bench_extra.py jobs [seed]          # per-batch and per-job jobs/tasks/CPU/records
   python bench_extra.py skew [n_events] [pairs]  # uniform vs 40%-hot-key stress
 """
 
@@ -197,18 +197,16 @@ def bench_compile(seed: int = 1, timed_batches: int = 3) -> None:
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def _jobs_by_group(event_log: str) -> dict[str, dict]:
-    """Jobs, tasks, executor run time and executor CPU time per job group
-    and call site, from an uncompressed Spark event log. A task counts
-    toward the job that submitted its stage."""
+def _jobs_from_event_log(event_log: str) -> list[dict]:
+    """Every job of a job group in an uncompressed Spark event log, in
+    submission order: ``job``, ``group``, ``call_site`` and ``stages``, one
+    dict per stage that ran tasks with its ``tasks``, executor ``run_s`` and
+    ``cpu_s``, ``input_records``, ``shuffle_read_records`` and
+    ``shuffle_write_records``. A stage counts toward the first job that
+    lists it."""
     root = os.path.dirname(os.path.abspath(__file__)) + os.sep
-    stage_job: dict[int, tuple[str, str]] = {}
-    out: dict[str, dict] = {}
-
-    def cell(group, site):
-        g = out.setdefault(group, {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0, "by_call_site": {}})
-        return g, g["by_call_site"].setdefault(site, {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0})
-
+    jobs: list[dict] = []
+    stage_job: dict[int, dict] = {}
     with open(event_log) as f:
         for line in f:
             e = json.loads(line)
@@ -218,17 +216,42 @@ def _jobs_by_group(event_log: str) -> dict[str, dict]:
                 group = props.get("spark.jobGroup.id")
                 if group is None:
                     continue
-                site = props.get("callSite.short", "?").replace(root, "")
+                job = {"job": e["Job ID"], "group": group,
+                       "call_site": props.get("callSite.short", "?").replace(root, ""), "stages": {}}
+                jobs.append(job)
                 for st in e.get("Stage IDs", []):
-                    stage_job.setdefault(st, (group, site))
-                for c in cell(group, site):
-                    c["jobs"] += 1
+                    stage_job.setdefault(st, job)
             elif kind == "SparkListenerTaskEnd" and e.get("Stage ID") in stage_job:
                 tm = e.get("Task Metrics") or {}
-                for c in cell(*stage_job[e["Stage ID"]]):
-                    c["tasks"] += 1
-                    c["run_s"] += tm.get("Executor Run Time", 0) / 1e3
-                    c["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
+                st = stage_job[e["Stage ID"]]["stages"].setdefault(e["Stage ID"], {
+                    "stage": e["Stage ID"], "tasks": 0, "run_s": 0.0, "cpu_s": 0.0, "input_records": 0,
+                    "shuffle_read_records": 0, "shuffle_write_records": 0})
+                st["tasks"] += 1
+                st["run_s"] += tm.get("Executor Run Time", 0) / 1e3
+                st["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
+                st["input_records"] += (tm.get("Input Metrics") or {}).get("Records Read", 0)
+                st["shuffle_read_records"] += (tm.get("Shuffle Read Metrics") or {}).get("Total Records Read", 0)
+                st["shuffle_write_records"] += (tm.get("Shuffle Write Metrics") or {}).get("Shuffle Records Written", 0)
+    for job in jobs:
+        job["stages"] = [
+            {k: round(v, 2) if isinstance(v, float) else v for k, v in st.items()}
+            for _, st in sorted(job["stages"].items())
+        ]
+    return jobs
+
+
+def _jobs_by_group(jobs: list[dict]) -> dict[str, dict]:
+    """Jobs, tasks, executor run time and executor CPU time per job group
+    and call site, from ``_jobs_from_event_log``."""
+    out: dict[str, dict] = {}
+    for job in jobs:
+        g = out.setdefault(job["group"], {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0, "by_call_site": {}})
+        c = g["by_call_site"].setdefault(job["call_site"], {"jobs": 0, "tasks": 0, "run_s": 0.0, "cpu_s": 0.0})
+        for cell in (g, c):
+            cell["jobs"] += 1
+            for st in job["stages"]:
+                for k in ("tasks", "run_s", "cpu_s"):
+                    cell[k] += st[k]
     return out
 
 
@@ -253,8 +276,10 @@ def bench_jobs(seed: int = 1, timed_batches: int = 3) -> None:
     (the set-up batch, then ``timed_batches`` timed ones) one JSON line with
     its jobs, tasks, executor run time and executor CPU time, in total and
     by call site (the engine line that submitted the job, or the lake
-    write that ran it), read from an uncompressed Spark event log after the
-    session stops."""
+    write that ran it), then one line per job of the batch with its stages
+    (tasks, executor time, input and shuffle records), so the jobs a lake
+    write runs under its call site (broadcasts) show one by one. Read from
+    an uncompressed Spark event log after the session stops."""
     from debezium_connector_cassandra_spark.session import get_spark
 
     workdir = tempfile.mkdtemp(prefix="cdc_bx_jobs_")
@@ -278,7 +303,8 @@ def bench_jobs(seed: int = 1, timed_batches: int = 3) -> None:
             walls[label] = round(time.perf_counter() - t0, 2)
         spark.stop()
         (log,) = [os.path.join(ev_dir, f) for f in os.listdir(ev_dir)]
-        groups = _jobs_by_group(log)
+        jobs = _jobs_from_event_log(log)
+        groups = _jobs_by_group(jobs)
         for label, wall in walls.items():
             g = groups.get(label, {})
             sites = sorted(g.get("by_call_site", {}).items(), key=lambda kv: -kv[1]["cpu_s"])
@@ -290,6 +316,9 @@ def bench_jobs(seed: int = 1, timed_batches: int = 3) -> None:
                     site: {k: round(v, 2) for k, v in c.items()} for site, c in sites
                 },
             }), flush=True)
+            for job in jobs:
+                if job["group"] == label:
+                    print(json.dumps({"batch": label, **{k: v for k, v in job.items() if k != "group"}}), flush=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

@@ -264,6 +264,10 @@ class LakeTable:
         (
             df.withColumn(BUCKET_COL, bucket_expr(key_col, n_buckets))
             .repartition(F.col(BUCKET_COL))
+            # one key run per bucket file, not one per upstream partition;
+            # the partitioned write sorts by BUCKET_COL anyway, so this
+            # ordering replaces that sort instead of adding one
+            .sortWithinPartitions(BUCKET_COL, key_col)
             .write.mode("overwrite")
             .partitionBy(BUCKET_COL)
             .parquet(out_dir)

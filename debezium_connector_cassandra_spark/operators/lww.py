@@ -18,11 +18,18 @@ Spark formulation (order-insensitive, hence segment-parallel):
    map side before the shuffle, which is exactly the salted-partial /
    final-reduce two-phase shape the skew note in SURVEY §4 calls for,
    provided free by Spark's partial aggregation).
-2. ``finalize_state`` — compare each winning cell / liveness against the max
-   applicable tombstone writetime (strict >: delete wins ties) and null out
-   the losers; drop rows with nothing left.
+2. ``finalize_state`` — compare each winning cell / liveness against the
+   batch's folded row-delete writetime ``_d_wt`` (strict >: delete wins
+   ties) and null out the losers; drop rows with nothing left but keep
+   row-delete carriers (``_kill_wt``) for the merge.
 3. ``merge_states``   — full-outer merge of two state relations (target ⨝
-   batch) picking, per column, the side with the higher cell writetime.
+   batch) picking, per column, the side with the higher cell writetime;
+   the batch's ``_kill_wt`` kills target cells inside the join. The
+   conversation-grain tombstones (partition/range, and every stored one)
+   apply once, AFTER the merge: ``kill_state`` over
+   ``tombstones.tomb_wt(merged, rel)`` (plans/apply.py ``_merge``).
+   Single-pass readers join ``tomb_wt`` to the reduction instead and let
+   ``finalize_state`` compare against it.
 
 A cell whose winning write carries ``deletion_ts`` (TTL expiry / cell
 tombstone, reference populateRegularColumns:575-588) survives as an explicit
@@ -169,8 +176,9 @@ def finalize_state(reduced_with_tomb: DataFrame, as_of_us: int | None = None) ->
 
     The effective tombstone writetime per key is
     ``greatest(_d_wt, tomb_wt)`` where ``_d_wt`` is the folded row-delete
-    aggregate and ``tomb_wt`` (optional column) carries partition/range/
-    stored-tombstone contributions from the (small, broadcast) joins.
+    aggregate and ``tomb_wt`` (optional column, ``tombstones.tomb_wt``)
+    carries partition/range contributions from the one broadcast join of a
+    single-pass reader.
 
     Survival rule: writetime strictly greater than the tombstone writetime
     (delete wins ties). A surviving cell with deletion_ts is a null
@@ -238,37 +246,35 @@ def finalize_state(reduced_with_tomb: DataFrame, as_of_us: int | None = None) ->
 
 def drop_invisible(state: DataFrame) -> DataFrame:
     """Drop kill-carrier rows and the _kill_wt column — yields pure STATE."""
-    payload = state_payload_columns(state)
-    visible = " OR ".join(
+    return state.where(_visible(state_payload_columns(state))).drop("_kill_wt")
+
+
+def _visible(payload: list[str]) -> str:
+    """SQL predicate: a STATE row holds a live cell or row liveness."""
+    return " OR ".join(
         ["_live_wt IS NOT NULL"] + [f"{ident('_wt_' + c)} IS NOT NULL" for c in payload]
     )
-    return state.where(visible).drop("_kill_wt")
 
 
 def kill_state(state: DataFrame) -> DataFrame:
     """Apply ``tomb_wt`` to an already-materialized STATE relation (the
-    target side of a merge): null out cells/liveness with writetime <=
-    tomb_wt, drop rows with nothing left."""
+    merged rows of a batch): null out cells/liveness with writetime <=
+    tomb_wt, drop rows with nothing left. One SQL-string projection."""
     payload = state_payload_columns(state)
-    tomb = F.coalesce(F.col("tomb_wt"), F.lit(NEG_INF))
+    tomb = f"coalesce(tomb_wt, CAST({NEG_INF} AS BIGINT))"
     cols, wts = [], []
-    alive_any = F.lit(False)
     for c in payload:
-        w = F.col(f"_wt_{c}")
-        alive = w.isNotNull() & (w > tomb)
-        cols.append(F.when(alive, F.col(c)).alias(c))
-        wts.append(F.when(alive, w).alias(f"_wt_{c}"))
-        alive_any = alive_any | alive
-    live_wt = F.when(F.col("_live_wt") > tomb, F.col("_live_wt"))
-    out = state.select(
+        w = ident(f"_wt_{c}")
+        alive = f"({w} IS NOT NULL AND {w} > {tomb})"
+        cols.append(f"CASE WHEN {alive} THEN {ident(c)} END AS {ident(c)}")
+        wts.append(f"CASE WHEN {alive} THEN {w} END AS {w}")
+    return state.selectExpr(
         "conv_id",
         "turn_idx",
         *cols,
-        live_wt.alias("_live_wt"),
+        f"CASE WHEN _live_wt > {tomb} THEN _live_wt END AS _live_wt",
         *wts,
-        (alive_any | live_wt.isNotNull()).alias("_visible"),
-    )
-    return out.where(F.col("_visible")).drop("_visible")
+    ).where(_visible(payload))
 
 
 def validate_unique_writetimes(batch: DataFrame) -> None:
@@ -328,40 +334,37 @@ def merge_states(target: DataFrame, batch: DataFrame) -> DataFrame:
     may carry MORE payload columns than the target (schema evolution applied
     to the lake before the merge): missing target columns are treated as
     never-written. Rows with nothing left (fully deleted) drop out."""
-    t = target.alias("t")
-    b = batch.alias("b")
     t_payload = set(state_payload_columns(target))
     b_payload = set(state_payload_columns(batch))
     payload = sorted(t_payload | b_payload)
-    joined = t.join(b, ["conv_id", "turn_idx"], "full_outer")
-    kill = F.coalesce(F.col("b._kill_wt"), F.lit(NEG_INF))
+    # one SQL-string projection (a Column-object build cost ~10 py4j round
+    # trips per payload column per query construction)
+    neg = f"CAST({NEG_INF} AS BIGINT)"
+    kill = f"coalesce(b._kill_wt, {neg})"
 
-    def side(alias: str, c: str, present: bool):
-        return F.col(f"{alias}.{c}") if present else F.lit(None)
+    def side(alias: str, c: str, present: bool) -> str:
+        return f"{alias}.{ident(c)}" if present else "NULL"
 
     cols, wts = [], []
-    visible = F.lit(False)
     for c in payload:
-        twt_raw = side("t", f"_wt_{c}", c in t_payload).cast("long")
-        bwt_raw = side("b", f"_wt_{c}", c in b_payload).cast("long")
-        t_alive = F.when(twt_raw > kill, twt_raw)  # batch tombstones kill target cells
-        b_wins = F.coalesce(bwt_raw, F.lit(NEG_INF)) >= F.coalesce(t_alive, F.lit(NEG_INF))
+        twt = f"CAST({side('t', '_wt_' + c, c in t_payload)} AS BIGINT)"
+        bwt = f"CAST({side('b', '_wt_' + c, c in b_payload)} AS BIGINT)"
+        t_alive = f"CASE WHEN {twt} > {kill} THEN {twt} END"  # batch tombstones kill target cells
+        b_wins = f"coalesce({bwt}, {neg}) >= coalesce({t_alive}, {neg})"
         cols.append(
-            F.when(b_wins, side("b", c, c in b_payload))
-            .otherwise(F.when(t_alive.isNotNull(), side("t", c, c in t_payload)))
-            .alias(c)
+            f"CASE WHEN {b_wins} THEN {side('b', c, c in b_payload)} "
+            f"WHEN ({t_alive}) IS NOT NULL THEN {side('t', c, c in t_payload)} END AS {ident(c)}"
         )
-        wt = F.when(b_wins, bwt_raw).otherwise(t_alive).cast("long")
-        wts.append(wt.alias(f"_wt_{c}"))
-        visible = visible | wt.isNotNull()
-    t_live = F.when(F.col("t._live_wt") > kill, F.col("t._live_wt"))
-    live_wt = F.greatest(t_live, F.col("b._live_wt"))
-    visible = visible | live_wt.isNotNull()
-    return joined.select(
-        "conv_id",
-        "turn_idx",
-        *cols,
-        live_wt.alias("_live_wt"),
-        *wts,
-        visible.alias("_visible"),
-    ).where(F.col("_visible")).drop("_visible")
+        wts.append(f"CASE WHEN {b_wins} THEN {bwt} ELSE {t_alive} END AS {ident('_wt_' + c)}")
+    return (
+        target.alias("t")
+        .join(batch.alias("b"), ["conv_id", "turn_idx"], "full_outer")
+        .selectExpr(
+            "conv_id",
+            "turn_idx",
+            *cols,
+            f"greatest(CASE WHEN t._live_wt > {kill} THEN t._live_wt END, b._live_wt) AS _live_wt",
+            *wts,
+        )
+        .where(_visible(payload))
+    )

@@ -33,7 +33,7 @@ from functools import reduce as _reduce
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .lww import drop_invisible, finalize_state, reduce_events
-from .tombstones import extract_tombstones, tomb_wt_for_keys
+from .tombstones import tomb_wt, tombstone_relation, tombstone_rows
 
 DEFAULT_OPS = ("i", "u", "d", "p", "r")
 
@@ -44,18 +44,16 @@ def materialize_state(
     ops: tuple[str, ...] = DEFAULT_OPS,
 ) -> DataFrame:
     """One in-memory pass of the apply heart: key reduction (row deletes
-    folded into the aggregation), conv-grain tombstone joins, finalize.
+    folded into the aggregation), the conv-grain tombstone join, finalize.
     Mirrors ``plans.apply.apply_batch`` without the lake tables."""
     opset = set(ops)
     reduced = reduce_events(log)
     if opset & {"p", "r"}:
-        # conv-grain tombstone relations are only BUILT when the op set can
-        # contain them (assembling-then-discarding them cost ~0.1 s of
+        # the conv-grain tombstone relation is only BUILT when the op set
+        # can contain it (assembling-then-discarding it cost ~0.1 s of
         # driver plan-build time per query); 'd' folds into the reduction
-        tombs = extract_tombstones(
-            log, kinds=tuple(k for k in ("p", "r") if k in opset)
-        )
-        reduced = tomb_wt_for_keys(reduced, tombs, keys_unique=True)
+        rows = tombstone_rows(log, tuple(k for k in ("p", "r") if k in opset))
+        reduced = tomb_wt(reduced, tombstone_relation(rows))
     state = drop_invisible(finalize_state(reduced))
     return state.select("conv_id", "turn_idx", *payload)
 

@@ -18,70 +18,27 @@ every candidate key the **max applicable tombstone writetime** and compare
 once. This is what makes replay order-insensitive and lets segments process
 in parallel (SURVEY §4 "key semantic transform").
 
-Scale notes: tombstones are a small fraction of the stream and are
-pre-aggregated (per key / per conv) before joining, so these joins broadcast
-(the static planner sees the cached tombstone rows' real size once the
-driver flush has collected them); the range join is an equi-join on conv_id
-with a residual bound predicate — never a cartesian product.
+Every tombstone takes one form: rows of the persistent tombstone store
+(``tombstone_rows``), folded by ``tombstone_relation`` into ONE relation at
+conversation grain — the max partition-delete writetime plus the list of
+row/range spans — which ``tomb_wt`` joins on conv_id alone.
+
+Scale notes: tombstones are a small fraction of the stream and the relation
+holds one row per conversation that has any, so ``tomb_wt`` broadcasts it by
+hint, an equi-join on conv_id — never a cartesian product, never a key-grain
+self-join. The hint matters on a batch over the driver-flush bound: its
+tombstone rows are cached but not yet collected when the merge is planned,
+and the static planner, blind to their size, shuffled every merged row into
+a sort-merge join instead (1M-event batches: ~8% more executor CPU). The
+span fold is a higher-order ``aggregate`` that Spark interprets
+(CodegenFallback), so each key costs O(spans of its conversation): cheap
+while a conversation holds few row/range tombstones, which the GC sweep
+keeps true.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, functions as F
-
-
-@dataclass
-class TombstoneSet:
-    """The three tombstone relations extracted from a decoded batch.
-
-    A member may be None when it is statically known empty (metadata-level
-    knowledge — lets the planner skip the join entirely)."""
-
-    row: DataFrame | None        # (conv_id, turn_idx, wt)   op='d', pre-agg max wt
-    partition: DataFrame | None  # (conv_id, wt)             op='p', pre-agg max wt
-    range: DataFrame | None      # (conv_id, lo, hi, lo_incl, hi_incl, wt)  op='r'
-
-
-def extract_tombstones(
-    batch: DataFrame, kinds: tuple[str, ...] = ("d", "p", "r")
-) -> TombstoneSet:
-    # SQL-string predicates/projections: one py4j round trip each (these
-    # three relations are built on every query construction — see lww.py);
-    # ``kinds`` lets a caller that statically knows an op kind is absent
-    # skip assembling that relation entirely
-    _max_wt = F.expr("max(writetime) AS wt")
-    row = (
-        batch.where("op = 'd'").groupBy("conv_id", "turn_idx").agg(_max_wt)
-        if "d" in kinds
-        else None
-    )
-    partition = (
-        batch.where("op = 'p'").groupBy("conv_id").agg(_max_wt)
-        if "p" in kinds
-        else None
-    )
-    # ranges pre-aggregate at BOUNDS grain (identical bounds keep max wt):
-    # a hot partition receiving thousands of range deletes over a bounded
-    # clustering space collapses to the distinct-bounds count before any
-    # join — same reason row/partition tombstones pre-aggregate
-    if "r" not in kinds:
-        return TombstoneSet(row=row, partition=partition, range=None)
-    rng = (
-        batch.where("op = 'r'")
-        .selectExpr(
-            "conv_id",
-            "range_start.turn_idx AS lo",
-            "range_end.turn_idx AS hi",
-            "range_start.method = 'INCL_START_BOUND' AS lo_incl",
-            "range_end.method = 'INCL_END_BOUND' AS hi_incl",
-            "writetime AS wt",
-        )
-        .groupBy("conv_id", "lo", "hi", "lo_incl", "hi_incl")
-        .agg(F.expr("max(wt) AS wt"))
-    )
-    return TombstoneSet(row=row, partition=partition, range=rng)
 
 
 def pair_range_markers(log: DataFrame) -> DataFrame:
@@ -123,59 +80,6 @@ def pair_range_markers(log: DataFrame) -> DataFrame:
     return rest.unionByName(paired)
 
 
-def tomb_wt_for_keys(
-    keys: DataFrame, tombs: TombstoneSet, keys_unique: bool = False
-) -> DataFrame:
-    """For a (conv_id, turn_idx) key relation, compute max applicable
-    tombstone writetime as column ``tomb_wt`` (NULL when none applies).
-
-    ``keys`` may carry arbitrary extra columns; they are preserved.
-    Up to three left joins, each against a pre-aggregated (hence small,
-    AQE-broadcastable) tombstone relation; the range join is equi on conv_id
-    with a residual bound filter — never a cartesian. Relations known empty
-    (None) cost nothing.
-
-    ``keys_unique=True`` asserts the caller's relation already has at most
-    one row per (conv_id, turn_idx) — true for a reduction output or a
-    state table — skipping the defensive dropDuplicates aggregation in
-    front of the range join (one fewer shuffle+agg on the hot apply path).
-    """
-    out = keys
-    wt_cols = []
-    if tombs.row is not None:
-        out = out.join(tombs.row.withColumnRenamed("wt", "d_wt"), ["conv_id", "turn_idx"], "left")
-        wt_cols.append("d_wt")
-    if tombs.partition is not None:
-        out = out.join(tombs.partition.withColumnRenamed("wt", "p_wt"), ["conv_id"], "left")
-        wt_cols.append("p_wt")
-    if tombs.range is not None:
-        r_keys = keys.select("conv_id", "turn_idx")
-        if not keys_unique:
-            r_keys = r_keys.dropDuplicates()
-        r_applicable = (
-            r_keys
-            .join(tombs.range, "conv_id")
-            # bound predicate with inclusivity methods (reference RangeData
-            # bound kinds, CassandraSchemaFactory.java:347-423)
-            .where(
-                "(CASE WHEN lo_incl THEN turn_idx >= lo ELSE turn_idx > lo END)"
-                " AND (CASE WHEN hi_incl THEN turn_idx <= hi ELSE turn_idx < hi END)"
-            )
-            .groupBy("conv_id", "turn_idx")
-            .agg(F.expr("max(wt) AS r_wt"))
-        )
-        out = out.join(r_applicable, ["conv_id", "turn_idx"], "left")
-        wt_cols.append("r_wt")
-
-    if not wt_cols:
-        tomb = "CAST(NULL AS BIGINT)"
-    elif len(wt_cols) == 1:
-        tomb = wt_cols[0]
-    else:
-        tomb = f"greatest({', '.join(wt_cols)})"
-    return out.withColumn("tomb_wt", F.expr(tomb)).drop(*wt_cols)
-
-
 def tombstone_rows(batch: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
     """The batch's tombstones of ``kinds`` as rows of the persistent
     tombstone store (Cassandra's analog of tombstones retained until
@@ -185,7 +89,9 @@ def tombstone_rows(batch: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
     target with its max writetime, from ONE aggregate over every kind. A row
     delete targets ``[turn_idx, turn_idx]``, a partition delete has NULL
     bounds, a range keeps its bounds and their inclusivity methods (ranges
-    pre-aggregate at bounds grain, as in ``extract_tombstones``)."""
+    pre-aggregate at bounds grain: a hot partition receiving thousands of
+    range deletes over a bounded clustering space collapses to its distinct
+    bounds)."""
     # a log without range deletes may lack the range bound columns
     rng = "r" in kinds
 
@@ -212,18 +118,40 @@ def tombstone_rows(batch: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
     )
 
 
-def rows_to_tombstones(df: DataFrame, kinds: tuple[str, ...] = ("d", "p", "r")) -> TombstoneSet:
-    """The join relations of tombstone-store rows (``tombstone_rows`` or a
-    store read), each pre-aggregated to its join grain; kinds not in
-    ``kinds`` are statically empty (None)."""
+def tombstone_relation(rows: DataFrame) -> DataFrame:
+    """Tombstone-store rows (``tombstone_rows`` or a store read) as ONE
+    relation at conversation grain, from one ``groupBy(conv_id)``: ``_p_wt``,
+    the max partition-delete writetime (NULL when none), and ``_spans``, the
+    conversation's row and range tombstones as ``(lo, hi, lo_incl, hi_incl,
+    wt)`` structs (a row delete is the inclusive span ``[turn, turn]``)."""
+    return rows.groupBy("conv_id").agg(
+        F.expr("max(CASE WHEN kind = 'p' THEN wt END) AS _p_wt"),
+        F.expr(
+            "collect_list(CASE WHEN kind <> 'p' THEN named_struct("
+            "'lo', lo, 'hi', hi, 'lo_incl', lo_incl, 'hi_incl', hi_incl, 'wt', wt"
+            ") END) AS _spans"
+        ),
+    )
 
-    def of(kind, *keys):
-        if kind not in kinds:
-            return None
-        return df.where(F.col("kind") == kind).groupBy(*keys).agg(F.max("wt").alias("wt"))
 
-    return TombstoneSet(
-        row=of("d", "conv_id", F.col("lo").alias("turn_idx")),
-        partition=of("p", "conv_id"),
-        range=of("r", "conv_id", "lo", "hi", "lo_incl", "hi_incl"),
+# the bound predicate carries the inclusivity methods (reference RangeData
+# bound kinds, CassandraSchemaFactory.java:347-423)
+_TOMB_WT = (
+    "greatest(_p_wt, aggregate(_spans, CAST(NULL AS BIGINT), (acc, s) -> CASE WHEN"
+    " (CASE WHEN s.lo_incl THEN turn_idx >= s.lo ELSE turn_idx > s.lo END)"
+    " AND (CASE WHEN s.hi_incl THEN turn_idx <= s.hi ELSE turn_idx < s.hi END)"
+    " THEN greatest(acc, s.wt) ELSE acc END))"
+)
+
+
+def tomb_wt(keys: DataFrame, rel: DataFrame) -> DataFrame:
+    """``keys`` (any relation with ``conv_id``/``turn_idx``; extra columns
+    are preserved) with column ``tomb_wt``: the max writetime of the
+    tombstones in ``rel`` (a ``tombstone_relation``) that apply to the key,
+    NULL when none does. One broadcast left join on conv_id; the spans are
+    folded per row, so ``keys`` need not be unique."""
+    return (
+        keys.join(F.broadcast(rel), "conv_id", "left")
+        .withColumn("tomb_wt", F.expr(_TOMB_WT))
+        .drop("_p_wt", "_spans")
     )

@@ -1,9 +1,10 @@
 """The per-batch apply plan — Spark lifecycle replacing SURVEY §3's three
 Java entry points:
 
-    read log slice -> decode/envelope -> dedup -> tombstone union ->
-    per-key cell-LWW reduce -> finalize vs tombstones ->
-    kill + merge target (COW, touched buckets only) -> persist new tombstones
+    read log slice -> decode/envelope -> dedup ->
+    per-key cell-LWW reduce (row deletes folded) -> finalize ->
+    merge target (touched buckets only) -> kill vs tombstones, once ->
+    COW write -> persist new tombstones
 
 Exactly-once contract (north_rule): the merge is idempotent (cell writetimes
 are compared strictly, so re-applying an already-applied batch is a no-op),
@@ -15,16 +16,18 @@ Scale shape of one batch (the plan .explain should show):
 - parquet scan of only the new segments (partition pruning on segment_id) and
   positions (predicate pushdown on position)
 - one shuffle for the per-key reduction (hash agg with map-side combine — hot
-  conv_ids collapse before the exchange)
-- tombstone relations pre-aggregated, joined broadcast
-- target read restricted to touched buckets; COW write of those buckets only
+  conv_ids collapse before the exchange); row deletes fold into it
+- target read restricted to touched buckets, scanned once by the merge
+- ONE tombstone relation at conversation grain (the batch's partition/range
+  rows plus the touched store buckets, one ``groupBy(conv_id)``), joined
+  broadcast on conv_id to the merged rows, after the merge
+- COW write of the touched buckets only
 
 Every batch runs one static plan (``static_plan``): AQE off and
 ``defaultParallelism`` shuffle partitions, the pre-scan included. The batch's
 tombstone rows are computed once and cached; a batch within the driver-flush
-bound collects them before the merge, which materializes the cache at its
-real size, so the planner broadcasts it, and the flush writes the collected
-rows. AQE's runtime re-planning bought nothing measurable on 1M-event
+bound collects them before the merge, which then reads the cache, and the
+flush writes the collected rows. AQE's runtime re-planning bought nothing measurable on 1M-event
 batches, uniform or with 40% of the events on one conversation, and cost
 20k-event batches ~28% more CPU per event (``BENCH/batch_plan_r08.json``).
 """
@@ -46,12 +49,7 @@ from ..operators.lww import (
     merge_states,
     reduce_events,
 )
-from ..operators.tombstones import (
-    TombstoneSet,
-    rows_to_tombstones,
-    tomb_wt_for_keys,
-    tombstone_rows,
-)
+from ..operators.tombstones import tomb_wt, tombstone_relation, tombstone_rows
 
 TOMBSTONE_STORE_SCHEMA = T.StructType(
     [
@@ -259,10 +257,10 @@ def apply_batch(
     n_tombs = sum(stats[k] for k in kinds)
 
     # the batch's tombstones of every kind it carries, as store rows, for
-    # the flush and the joins, computed once. The row-delete ('d') kind is
-    # FOLDED into the key reduction (same grouping key, zero extra shuffle)
-    # and applied to the target inside the merge join via _kill_wt, so only
-    # the conv-grain kinds are joined: small broadcastable relations
+    # the flush and the tombstone relation, computed once. The row-delete
+    # ('d') kind is FOLDED into the key reduction (same grouping key, zero
+    # extra shuffle) and applied to the target inside the merge join via
+    # _kill_wt, so only its conv-grain kinds enter the relation
     with static_plan(batch.sparkSession, target.state.spark):
         new_rows = tombstone_rows(batch, kinds).cache() if kinds else None
         try:
@@ -293,44 +291,40 @@ def _store_order(row: dict) -> tuple:
 
 
 def _merge(target: CdcTarget, batch: DataFrame, stats: dict, new_rows: DataFrame | None) -> int:
-    """Reduce the batch, apply tombstones, merge the touched state buckets
-    copy-on-write; returns the new state version."""
+    """Reduce the batch, merge it into the touched state buckets, apply the
+    conv-grain tombstones once to the merged rows, write copy-on-write;
+    returns the new state version.
+
+    Applying them after the merge is exact: "keep a cell iff its writetime
+    > W" is monotone, so it commutes with ``merge_states``' per-column max,
+    and every stored tombstone already killed the target cells it covers
+    when it arrived, so applying it again changes nothing."""
     # the pre-scan's touched (state bucket, tombstone-store bucket) pairs:
     # the batch's conv_ids, upsert/delete keys and partition/range targets
     # alike, so no discovery job re-reads the batch
     pairs = stats["bucket_pairs"]
     bucket_ids = state_buckets(stats)
 
-    # --- per-key reduction (i/u/d in ONE hash agg) ---------------------
+    # --- per-key reduction (i/u/d in ONE hash agg), row deletes folded --
     # NOT cached: its one consumer is the merge, which reads it once
-    reduced = reduce_events(batch)
+    batch_state = finalize_state(reduce_events(batch))
 
-    conv_kinds = tuple(k for k in ("p", "r") if stats[k])
-    pr_rows = new_rows.where(F.col("kind").isin(*conv_kinds)) if conv_kinds else None
-    pr_tombs = rows_to_tombstones(pr_rows, conv_kinds) if conv_kinds else TombstoneSet(None, None, None)
-    if target.tombstones.is_empty():
-        join_tombs = pr_tombs
-    else:
-        # the tombstone store is bucketed by conv_id too — read only the
-        # buckets the batch's conversations hash into
-        stored = target.tombstones.read(buckets=sorted({tb for _, tb in pairs}))
-        join_tombs = rows_to_tombstones(stored if pr_rows is None else pr_rows.unionByName(stored))
-    if join_tombs.row is None and join_tombs.partition is None and join_tombs.range is None:
-        batch_state = finalize_state(reduced)
-    else:
-        batch_state = finalize_state(
-            tomb_wt_for_keys(reduced, join_tombs, keys_unique=True)
-        )
-
-    # --- kill + merge target (only touched buckets are read/rewritten)
+    # --- merge target (only touched buckets are read/rewritten) --------
     if target.state.is_empty():
         merged = drop_invisible(batch_state)
     else:
-        tgt = target.state.read(buckets=bucket_ids)
-        if conv_kinds:
-            # conv-grain kills for target keys absent from the batch
-            tgt = kill_state(tomb_wt_for_keys(tgt, pr_tombs, keys_unique=True))
-        merged = merge_states(tgt, batch_state)
+        merged = merge_states(target.state.read(buckets=bucket_ids), batch_state)
+
+    # --- the batch's partition/range tombstones and the stored ones -----
+    # the tombstone store is bucketed by conv_id too — read only the
+    # buckets the batch's conversations hash into
+    conv_kinds = tuple(k for k in ("p", "r") if stats[k])
+    tombs = new_rows.where(F.col("kind").isin(*conv_kinds)) if conv_kinds else None
+    if not target.tombstones.is_empty():
+        stored = target.tombstones.read(buckets=sorted({tb for _, tb in pairs}))
+        tombs = stored if tombs is None else tombs.unionByName(stored)
+    if tombs is not None:
+        merged = kill_state(tomb_wt(merged, tombstone_relation(tombs)))
 
     if bucket_ids:
         return target.state.overwrite_buckets(merged, bucket_ids)
@@ -344,7 +338,7 @@ def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:
     writetime_inversion_window_us) — tombstones below it can never affect
     future batches. Without this the store is the design's one
     unbounded-growth relation: every batch's conv-grain tombstones would
-    accumulate forever into the rows_to_tombstones read above.
+    accumulate forever into the tombstone relation ``_merge`` builds.
 
     The purge is planned from each store file's Parquet-footer ``wt``
     min/max (``LakeTable.purge_at_or_below``): files wholly at or below the

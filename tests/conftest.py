@@ -16,9 +16,10 @@ def spark():
 
 
 def assert_keys_unique(df):
-    """At most one row per (conv_id, turn_idx): the claim behind every
-    ``tomb_wt_for_keys(..., keys_unique=True)`` call on a reduction output
-    or a state table."""
+    """At most one row per (conv_id, turn_idx): what ``merge_states``
+    assumes of both sides — a reduction output and a state table — so its
+    full-outer join pairs each key once (``tomb_wt`` works per row and
+    needs no uniqueness)."""
     dups = df.groupBy("conv_id", "turn_idx").count().where("count > 1").limit(5).collect()
     assert not dups, f"duplicate (conv_id, turn_idx) keys: {dups}"
 

@@ -82,8 +82,9 @@ def test_plan_settings_restored_when_apply_raises(spark, tmp_path, monkeypatch, 
 
 
 def test_small_batch_job_count(spark, tmp_path):
-    """A steady batch (apply plus the GC sweep) runs a handful of jobs: the
-    pre-scan, the tombstone collect, the merge write and its broadcasts."""
+    """A steady batch (apply plus the GC sweep) runs four jobs: the
+    pre-scan, the tombstone collect, the one tombstone relation's broadcast
+    and the merge write (the sweep runs none)."""
     log = gen_mutation_log(spark, 10_000, n_convs=200, max_turns=20, events_per_segment=2_000, seed=31)
     write_mutation_log(log, str(tmp_path / "log"))
     runner = CdcRunner(
@@ -101,7 +102,7 @@ def test_small_batch_job_count(spark, tmp_path):
         runner.run(max_batches=1)
         per_batch.append(dag.numTotalJobs() - before)
     assert len(per_batch) == 5
-    assert all(n <= 10 for n in per_batch), per_batch
+    assert all(n <= 4 for n in per_batch), per_batch
 
 
 @pytest.mark.parametrize("flush", ["driver", "spark"])

@@ -6,7 +6,11 @@ formulations), duplicate deliveries, ops on never-upserted keys, and
 batch splits at arbitrary points.
 """
 
+import shutil
+import tempfile
+
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import types as T
 
@@ -16,9 +20,11 @@ from debezium_connector_cassandra_spark.operators.lww import (
     reduce_events,
 )
 from debezium_connector_cassandra_spark.operators.tombstones import (
-    extract_tombstones,
-    tomb_wt_for_keys,
+    tomb_wt,
+    tombstone_relation,
+    tombstone_rows,
 )
+from debezium_connector_cassandra_spark.plans.apply import CdcTarget, apply_batch
 
 from .conftest import assert_keys_unique
 from .oracle import replay
@@ -103,16 +109,36 @@ def mutation_log(draw):
 
 
 def _engine_state(spark, rows):
+    """The single-pass path: one reduction, the tombstone relation joined
+    to it, finalize."""
     log = spark.createDataFrame(rows, LOG_SCHEMA)
-    tombs = extract_tombstones(log)
-    tombs.row = None
     keys = reduce_events(log)
     # the random logs carry exact duplicates; the reduction still yields
-    # one row per key (apply_batch's keys_unique=True rests on it)
+    # one row per key (merging it into a state table rests on it)
     assert_keys_unique(keys)
-    reduced = tomb_wt_for_keys(keys, tombs)
-    state = drop_invisible(finalize_state(reduced))
-    pdf = state.select("conv_id", "turn_idx", *PAYLOAD).toPandas()
+    rel = tombstone_relation(tombstone_rows(log, ("p", "r")))
+    state = drop_invisible(finalize_state(tomb_wt(keys, rel)))
+    return _sorted(state.select("conv_id", "turn_idx", *PAYLOAD))
+
+
+def _applied_state(spark, rows):
+    """The incremental path: one ``apply_batch`` per segment, in segment
+    order, into a fresh ``CdcTarget`` (so stored tombstones meet later
+    out-of-order upserts)."""
+    log = spark.createDataFrame(rows, LOG_SCHEMA)
+    path = tempfile.mkdtemp(prefix="cdc_prop_")
+    try:
+        target = CdcTarget.create(spark, path, n_buckets=4, payload={c: T.StringType() for c in PAYLOAD})
+        for seg in sorted({r[0] for r in rows}):
+            apply_batch(target, log.where(log.segment_id == seg))
+        assert_keys_unique(target.state.read())
+        return _sorted(target.read_transcripts())
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _sorted(df):
+    pdf = df.toPandas()
     pdf = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     return pdf.where(pd.notnull(pdf), None)
 
@@ -122,9 +148,10 @@ def _engine_state(spark, rows):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
+@pytest.mark.parametrize("engine", [_engine_state, _applied_state], ids=["single_pass", "per_segment_apply"])
 @given(mutation_log())
-def test_random_logs_match_replay_oracle(spark, log_rows):
-    eng = _engine_state(spark, log_rows)
+def test_random_logs_match_replay_oracle(spark, engine, log_rows):
+    eng = engine(spark, log_rows)
     pdf = pd.DataFrame(
         log_rows,
         columns=[
