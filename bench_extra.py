@@ -260,7 +260,7 @@ def _name_lake_writes(sc) -> None:
     write, and the broadcast jobs a write runs inherit it."""
     from debezium_connector_cassandra_spark.lake.table import LakeTable
 
-    for name in ("overwrite_buckets", "overwrite_all", "append"):
+    for name in ("overwrite_buckets", "overwrite_all"):
         def named(self, *a, _plain=getattr(LakeTable, name), _name=name, **kw):
             sc._jsc.setCallSite(f"LakeTable.{_name} of {os.path.basename(self.path)}")
             try:

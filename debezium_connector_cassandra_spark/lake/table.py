@@ -14,7 +14,9 @@ minimal ACID table layer with the four properties the CDC pipeline needs:
    rewrites only those buckets; untouched buckets are carried forward by
    reference in the new manifest. At 100 TB / thousands of buckets this is
    what keeps per-batch write amplification proportional to the touched key
-   range, not the table size.
+   range, not the table size. Appends (``append_small``) land in their key
+   buckets too, written from the driver with pyarrow, so a pruned read of
+   a bucket returns exactly that bucket's rows whatever wrote them.
 3. **Schema evolution** — ``add_column`` commits a manifest with the widened
    schema; old data files simply lack the column and the Parquet reader
    fills NULLs (read-schema projection), mirroring Iceberg's add-column and
@@ -42,9 +44,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 BUCKET_COL = "_bucket"
-# bucket id for small driver-side appends that skip hash-bucketing; pruned
-# reads always include it (bounded in size by compaction)
-UNBUCKETED = -1
 
 _PA_TYPES = {
     T.StringType(): pa.string(),
@@ -245,7 +244,7 @@ class LakeTable:
         schema = T.StructType.fromJson(m["schema"])
         files: list[str] = []
         for b, fs in m["buckets"].items():
-            if buckets is not None and int(b) not in buckets and int(b) != UNBUCKETED:
+            if buckets is not None and int(b) not in buckets:
                 continue
             files.extend(os.path.join(self.path, f) for f in fs)
         if not files:
@@ -302,20 +301,9 @@ class LakeTable:
         added = self._write_files(df, m["key_col"], m["n_buckets"])
         return self._commit(m, {str(b): fs for b, fs in added.items()})
 
-    def append(self, df: DataFrame) -> int:
-        """Append-only commit (used by the offsets/lineage/metrics/tombstone
-        bookkeeping tables — the analog of the reference's properties-file
-        offset flush, FileOffsetWriter.java:96-119, made atomic)."""
-        m = self.manifest()
-        added = self._write_files(df, m["key_col"], m["n_buckets"])
-        new_buckets = {b: list(fs) for b, fs in m["buckets"].items()}
-        for b, fs in added.items():
-            new_buckets.setdefault(str(b), []).extend(fs)
-        return self._commit(m, new_buckets)
-
-    # one-small-file-per-batch appends compact when the UNBUCKETED slot
-    # exceeds this many files (bounds manifest size AND recovery-read fan-in
-    # over unbounded batch counts)
+    # an append that finds this many files in a bucket compacts them, with
+    # its own rows, into one file (bounds manifest size AND read fan-in over
+    # unbounded batch counts)
     COMPACT_THRESHOLD = 64
 
     # optional pandas-level rewrite applied during compaction (e.g. the
@@ -324,76 +312,71 @@ class LakeTable:
     # only CURRENT values, FileOffsetWriter.java:96-119)
     compaction_transform = None
 
-    def append_small(self, rows: list[dict]) -> int:
-        """Driver-side append of a handful of rows, no Spark job: one Parquet
-        file written with pyarrow into the UNBUCKETED slot. This is the
-        direct analog of the reference's offset flush — a tiny synchronous
-        write on the driver (FileOffsetWriter.flush), made atomic by the
-        manifest pointer swap. Used by the offsets/lineage/metrics tables
-        and small tombstone batches; bucket-pruned reads always include the
-        unbucketed slot. Auto-compacts past COMPACT_THRESHOLD files."""
-        if not rows:
-            return self.current_version()
+    def append_small(self, rows: list[dict] | pa.Table) -> int:
+        """The table's one append: rows (dicts or a pyarrow Table) written
+        from the driver with pyarrow, no Spark job — the direct analog of
+        the reference's offset flush, a synchronous write on the driver
+        (FileOffsetWriter.flush), made atomic by the manifest pointer swap.
+        The rows are split by key bucket (``bucket_of``) into one file per
+        touched bucket, all in one commit, so bucket-pruned reads see them
+        in their own bucket only. A bucket already holding
+        ``COMPACT_THRESHOLD`` files is compacted in the same commit: its
+        files and the new rows become one file (``compaction_transform``
+        applied). Used by the tombstone store and the bookkeeping tables."""
         m = self.manifest()
-        schema = T.StructType.fromJson(m["schema"])
-        commit_id = uuid.uuid4().hex[:12]
-        rel_dir = os.path.join("data", f"commit-{commit_id}")
-        os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-        rel_file = os.path.join(rel_dir, "unbucketed.parquet")
-        names = [f.name for f in schema.fields]
-        table = pa.table(
-            {n: [r.get(n) for r in rows] for n in names}, schema=_pa_schema(schema)
-        )
-        pq.write_table(table, os.path.join(self.path, rel_file))
-        new_buckets = {b: list(fs) for b, fs in m["buckets"].items()}
-        new_buckets.setdefault(str(UNBUCKETED), []).append(rel_file)
-        v = self._commit(m, new_buckets)
-        if len(new_buckets[str(UNBUCKETED)]) > self.COMPACT_THRESHOLD:
-            v = self.compact_unbucketed()
-        return v
-
-    def compact_unbucketed(self) -> int:
-        """Merge every UNBUCKETED small file into ONE parquet file (driver-
-        side pyarrow — the files are offset-flush grain, no Spark job),
-        applying ``compaction_transform`` (pandas -> pandas) when set. Keeps
-        bookkeeping reads O(1) files regardless of batch count."""
-        m = self.manifest()
-        files = m["buckets"].get(str(UNBUCKETED), [])
-        if len(files) <= 1:
+        schema = _pa_schema(T.StructType.fromJson(m["schema"]))
+        if isinstance(rows, pa.Table):
+            table = rows.select(schema.names).cast(schema)
+        else:
+            table = pa.table({n: [r.get(n) for r in rows] for n in schema.names}, schema=schema)
+        if not table.num_rows:
             return m["version"]
-        schema = T.StructType.fromJson(m["schema"])
-        tables = [pq.read_table(os.path.join(self.path, f)) for f in files]
-        merged = pa.concat_tables(tables)
-        if self.compaction_transform is not None:
-            import pandas as pd  # noqa: F401
-
-            df = self.compaction_transform(merged.to_pandas())
-            merged = pa.Table.from_pandas(df, schema=_pa_schema(schema), preserve_index=False)
-        commit_id = uuid.uuid4().hex[:12]
-        rel_dir = os.path.join("data", f"commit-{commit_id}")
-        os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-        rel_file = os.path.join(rel_dir, "compacted.parquet")
-        pq.write_table(merged, os.path.join(self.path, rel_file))
         new_buckets = {b: list(fs) for b, fs in m["buckets"].items()}
-        new_buckets[str(UNBUCKETED)] = [rel_file]
+        ids = bucket_of(table[m["key_col"]], m["n_buckets"])
+        parts = {}
+        for b in np.unique(ids).tolist():
+            part = table.filter(pa.array(ids == b))
+            if len(new_buckets.get(str(b), [])) >= self.COMPACT_THRESHOLD:
+                part = self._compacted(new_buckets.pop(str(b)), part, schema)
+            parts[b] = part
+        self._add_files(new_buckets, parts)
         return self._commit(m, new_buckets)
+
+    def _compacted(self, files: list[str], rows: pa.Table, schema: pa.Schema) -> pa.Table:
+        """One bucket's ``files`` and new ``rows`` as one table of
+        ``schema`` (files written by Spark or before an added column read
+        under it), with ``compaction_transform`` (pandas -> pandas) applied
+        when set."""
+        merged = pa.concat_tables([pq.read_table(os.path.join(self.path, f), schema=schema) for f in files] + [rows])
+        if self.compaction_transform is None:
+            return merged
+        df = self.compaction_transform(merged.to_pandas())
+        return pa.Table.from_pandas(df, schema=schema, preserve_index=False)
+
+    def _add_files(self, buckets: dict[str, list[str]], tables: dict[int | str, pa.Table]) -> None:
+        """Write each table as one Parquet file of its bucket, under one
+        fresh commit directory, and add the file to ``buckets``."""
+        rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
+        os.makedirs(os.path.join(self.path, rel_dir))
+        for b, t in tables.items():
+            rel_file = os.path.join(rel_dir, f"bucket{b}.parquet")
+            pq.write_table(t, os.path.join(self.path, rel_file))
+            buckets.setdefault(str(b), []).append(rel_file)
 
     def purge_at_or_below(self, col: str, bound) -> tuple[int, int, int]:
         """Delete every row whose ``col`` is not above ``bound``, planned
         from Parquet footers on the driver with no Spark job: a file whose
-        ``col`` max is at or below the bound is dropped unread, and a
-        bucketed file whose min is above it is kept by reference. The rest
-        (bucketed files that straddle the bound or carry no statistics, and
-        every file of the UNBUCKETED slot) are read with pyarrow, and their
-        surviving rows are written back into their key buckets
-        (``bucket_of``), one file per bucket under a fresh commit dir. The
-        UNBUCKETED slot is therefore empty after a sweep, and bucket-pruned
-        reads skip every other bucket. Commits only when a row was purged or
-        moved. Returns ``(n_purged, n_kept, version)``."""
+        ``col`` max is at or below the bound is dropped unread, and one
+        whose min is above it is kept by reference. The rest (files that
+        straddle the bound or carry no statistics) are read with pyarrow,
+        and each bucket's surviving rows are written back into that same
+        bucket as one file. Commits only when a row was purged. Returns
+        ``(n_purged, n_kept, version)``."""
         m = self.manifest()
+        schema = _pa_schema(T.StructType.fromJson(m["schema"]))
         n_purged = n_kept = 0
         new_buckets: dict[str, list[str]] = {}
-        rewrite: list[pa.Table] = []
+        rewrite: dict[str, list[pa.Table]] = {}
         for b, files in m["buckets"].items():
             for f in files:
                 path = os.path.join(self.path, f)
@@ -401,30 +384,22 @@ class LakeTable:
                 if hi is not None and hi <= bound:
                     n_purged += n
                     continue
-                if int(b) != UNBUCKETED and lo is not None and lo > bound:
+                if lo is not None and lo > bound:
                     n_kept += n
                     new_buckets.setdefault(b, []).append(f)
                     continue
-                table = pq.read_table(path)
+                table = pq.read_table(path, schema=schema)
                 kept = table.filter(pc.greater(table[col], bound))
                 n_kept += kept.num_rows
                 n_purged += table.num_rows - kept.num_rows
-                if int(b) != UNBUCKETED and kept.num_rows == table.num_rows:
+                if kept.num_rows == table.num_rows:
                     new_buckets.setdefault(b, []).append(f)
                 elif kept.num_rows:
-                    rewrite.append(kept)
-        if n_purged == 0 and not rewrite:
+                    rewrite.setdefault(b, []).append(kept)
+        if n_purged == 0:
             return 0, n_kept, m["version"]
         if rewrite:
-            pa_schema = _pa_schema(T.StructType.fromJson(m["schema"]))
-            kept = pa.concat_tables([t.select(pa_schema.names).cast(pa_schema) for t in rewrite])
-            buckets = bucket_of(kept[m["key_col"]], m["n_buckets"])
-            rel_dir = os.path.join("data", f"commit-{uuid.uuid4().hex[:12]}")
-            os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
-            for b in np.unique(buckets):
-                rel_file = os.path.join(rel_dir, f"bucket{b}.parquet")
-                pq.write_table(kept.filter(pa.array(buckets == b)), os.path.join(self.path, rel_file))
-                new_buckets.setdefault(str(b), []).append(rel_file)
+            self._add_files(new_buckets, {b: pa.concat_tables(ts) for b, ts in rewrite.items()})
         return n_purged, n_kept, self._commit(m, new_buckets)
 
     def _commit(self, base_manifest: dict, new_buckets: dict, schema: T.StructType | None = None) -> int:
@@ -484,16 +459,3 @@ class LakeTable:
             ]
         )
         return self._commit(m, m["buckets"], schema=new_schema)
-
-    # -- maintenance -------------------------------------------------------
-    def buckets_for_keys(self, keys_df: DataFrame, key_col: str | None = None) -> list[int]:
-        """Distinct bucket ids a key relation touches (drives COW pruning).
-        The result is at most n_buckets integers — safe to collect."""
-        m = self.manifest()
-        kc = key_col or m["key_col"]
-        rows = (
-            keys_df.select(bucket_expr(kc, m["n_buckets"]).alias("b"))
-            .distinct()
-            .collect()
-        )
-        return sorted(r["b"] for r in rows)

@@ -134,43 +134,6 @@ def reduce_events(batch: DataFrame) -> DataFrame:
     return keyed.groupBy("conv_id", "turn_idx").agg(*aggs)
 
 
-def reduce_events_salted(batch: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Explicit two-phase salted reduction for pathologically hot keys.
-
-    Spark's hash aggregation already performs map-side partial combine, which
-    is the implicit salted-partial/final shape and handles most skew; this
-    explicit variant exists for the cases where a single (conv_id, turn_idx)
-    key's PARTIAL states still overwhelm one reducer (e.g. a conversation
-    receiving a large fraction of the whole stream — the north_rule skew
-    scenario): phase 1 reduces within (key, salt) — salt = hash of the event
-    position, so identical duplicates land on the same salt and stay
-    idempotent — phase 2 merges the <= salt_buckets partial states per key.
-
-    Result is identical to reduce_events (max is associative/commutative).
-    """
-    fields = _batch_payload_fields(batch)
-    keyed = batch.where(F.col("op").isin("i", "u", "d")).withColumn(
-        "_salt", F.pmod(F.xxhash64("segment_id", "position"), F.lit(salt_buckets))
-    )
-    aggs = [_winner(c, t) for c, t in fields]
-    aggs.append(F.max(F.when(F.col("op") == "i", F.col("writetime"))).alias("_live_wt"))
-    aggs.append(F.max(F.when(F.col("op") == "d", F.col("writetime"))).alias("_d_wt"))
-    partial = keyed.groupBy("conv_id", "turn_idx", "_salt").agg(*aggs)
-
-    def final_winner(c: str, t) -> F.Column:
-        w = F.col(f"_w_{c}")
-        if _orderable(t):
-            return F.max(w).alias(f"_w_{c}")
-        return F.max_by(
-            w, F.when(w.isNotNull(), F.struct(w["wt"], w["seg"], w["pos"]))
-        ).alias(f"_w_{c}")
-
-    final_aggs = [final_winner(c, t) for c, t in fields]
-    final_aggs.append(F.max("_live_wt").alias("_live_wt"))
-    final_aggs.append(F.max("_d_wt").alias("_d_wt"))
-    return partial.groupBy("conv_id", "turn_idx").agg(*final_aggs)
-
-
 def finalize_state(reduced_with_tomb: DataFrame, as_of_us: int | None = None) -> DataFrame:
     """Turn a reduced relation into STATE-shaped rows + kill metadata.
 

@@ -26,14 +26,13 @@ row/range spans — which ``tomb_wt`` joins on conv_id alone.
 Scale notes: tombstones are a small fraction of the stream and the relation
 holds one row per conversation that has any, so ``tomb_wt`` broadcasts it by
 hint, an equi-join on conv_id — never a cartesian product, never a key-grain
-self-join. The hint matters on a batch over the driver-flush bound: its
-tombstone rows are cached but not yet collected when the merge is planned,
-and the static planner, blind to their size, shuffled every merged row into
-a sort-merge join instead (1M-event batches: ~8% more executor CPU). The
-span fold is a higher-order ``aggregate`` that Spark interprets
-(CodegenFallback), so each key costs O(spans of its conversation): cheap
-while a conversation holds few row/range tombstones, which the GC sweep
-keeps true.
+self-join. The hint keeps the join a broadcast whatever the static planner
+estimates for the relation (an aggregate over cached and stored rows):
+planned from an estimate, a 1M-event batch shuffled every merged row into a
+sort-merge join instead (~8% more executor CPU). The span fold is a
+higher-order ``aggregate`` that Spark interprets (CodegenFallback), so each
+key costs O(spans of its conversation): cheap while a conversation holds few
+row/range tombstones, which the GC sweep keeps true.
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ Java entry points:
     read log slice -> decode/envelope -> dedup ->
     per-key cell-LWW reduce (row deletes folded) -> finalize ->
     merge target (touched buckets only) -> kill vs tombstones, once ->
-    COW write -> persist new tombstones
+    COW write -> append new tombstones from the driver
 
 Exactly-once contract (north_rule): the merge is idempotent (cell writetimes
 are compared strictly, so re-applying an already-applied batch is a no-op),
@@ -25,11 +25,14 @@ Scale shape of one batch (the plan .explain should show):
 
 Every batch runs one static plan (``static_plan``): AQE off and
 ``defaultParallelism`` shuffle partitions, the pre-scan included. The batch's
-tombstone rows are computed once and cached; a batch within the driver-flush
-bound collects them before the merge, which then reads the cache, and the
-flush writes the collected rows. AQE's runtime re-planning bought nothing measurable on 1M-event
-batches, uniform or with 40% of the events on one conversation, and cost
-20k-event batches ~28% more CPU per event (``BENCH/batch_plan_r08.json``).
+tombstone rows are computed once and cached. They are collected to the
+driver as Arrow before the merge, which then reads the cache, and after the
+state commit the collected rows are appended to the store with pyarrow
+(``LakeTable.append_small``, into their conv_id buckets), whatever the
+batch size. AQE's runtime re-planning bought nothing measurable on
+1M-event batches, uniform or with 40% of the events on one conversation,
+and cost 20k-event batches ~28% more CPU per event
+(``BENCH/batch_plan_r08.json``).
 """
 
 from __future__ import annotations
@@ -121,10 +124,6 @@ class CdcTarget:
         ]
         return self.state.read(buckets=buckets, version=version).select(*cols)
 
-
-# a batch with at most this many tombstones flushes them from the driver,
-# with no Spark job (offset-flush analog)
-DRIVER_FLUSH_MAX_TOMBSTONES = 20_000
 
 _PLAN_CONF = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
@@ -264,17 +263,16 @@ def apply_batch(
     with static_plan(batch.sparkSession, target.state.spark):
         new_rows = tombstone_rows(batch, kinds).cache() if kinds else None
         try:
-            # collected before the merge, which then reads the cache
-            flushed = new_rows.collect() if kinds and n_tombs <= DRIVER_FLUSH_MAX_TOMBSTONES else None
+            # collected as Arrow before the merge, which then reads the
+            # cache; rows in (kind, conv_id, lo) order compress better than
+            # in hash order
+            if kinds:
+                flushed = new_rows.toArrow().sort_by([(c, "ascending") for c in ("kind", "conv_id", "lo")])
             new_version = _merge(target, batch, stats, new_rows)
             # --- persist new tombstones for future out-of-order batches --
-            if flushed is not None:
-                # driver-side flush, no Spark job (offset-flush analog);
-                # rows in (kind, conv_id, lo) order compress better than in
-                # hash order
-                target.tombstones.append_small(sorted((r.asDict() for r in flushed), key=_store_order))
-            elif new_rows is not None:
-                target.tombstones.append(new_rows)
+            # driver-side append, no Spark job (offset-flush analog)
+            if kinds:
+                target.tombstones.append_small(flushed)
         finally:
             if new_rows is not None:
                 new_rows.unpersist()
@@ -284,10 +282,6 @@ def apply_batch(
         "n_new_tombstones": n_tombs,
         "state_version": new_version,
     }
-
-
-def _store_order(row: dict) -> tuple:
-    return row["kind"], row["conv_id"], row["lo"] is not None, row["lo"] or 0
 
 
 def _merge(target: CdcTarget, batch: DataFrame, stats: dict, new_rows: DataFrame | None) -> int:
@@ -342,10 +336,9 @@ def gc_tombstones(target: CdcTarget, writetime_horizon: int) -> dict:
 
     The purge is planned from each store file's Parquet-footer ``wt``
     min/max (``LakeTable.purge_at_or_below``): files wholly at or below the
-    horizon drop, bucketed files wholly above it stay, and only straddlers
-    and the driver-flushed (unbucketed) files are rewritten, into their
-    conv_id buckets, so the bucket-pruned store read above stays pruned. No
-    Spark job runs. Returns ``{"n_purged", "n_kept", "version"}``; a sweep
-    that purges and moves nothing commits nothing."""
+    horizon drop, files wholly above it stay, and only straddlers are
+    rewritten, each bucket's survivors into that same bucket. No Spark job
+    runs. Returns ``{"n_purged", "n_kept", "version"}``; a sweep that purges
+    nothing commits nothing."""
     n_purged, n_kept, version = target.tombstones.purge_at_or_below("wt", writetime_horizon)
     return {"n_purged": n_purged, "n_kept": n_kept, "version": version}

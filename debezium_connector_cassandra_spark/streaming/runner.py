@@ -36,7 +36,6 @@ from ..plans.apply import CdcTarget, apply_batch, gc_tombstones, state_buckets
 from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
 from .ingest import COMPLETES, Batch, drain, gc_sweep, open_bookkeeping
-from .ingest import prune_offsets as _prune_offsets  # noqa: F401  (importable here too)
 
 
 class CdcRunner:

@@ -128,7 +128,7 @@ class CdcStream(StreamDriver):
             # now. Context lands BEFORE the apply — a crash-replayed batch
             # just appends duplicates, which finalize_ranges dedupes.
             markers = batch_df.where(F.col("op") == "r")
-            self._range_ctx.append(
+            self._range_ctx.append_small(
                 markers.select(
                     "conv_id",
                     "segment_id",
@@ -143,7 +143,7 @@ class CdcStream(StreamDriver):
                         F.col("range_start.turn_idx"), F.col("range_end.turn_idx")
                     ).alias("turn_idx"),
                     "schema_version",
-                )
+                ).toArrow()
             )
             batch_df = batch_df.where(F.col("op") != "r")
             stats = {**stats, "n": stats["n"] - stats["r"], "r": 0}

@@ -7,11 +7,13 @@ tombstone GC plans its purge from Parquet footers and leaves the store
 bucketed.
 """
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from debezium_connector_cassandra_spark.lake.table import UNBUCKETED, LakeTable, bucket_expr, bucket_of
-from debezium_connector_cassandra_spark.plans import apply as apply_mod
+from debezium_connector_cassandra_spark.lake.table import LakeTable, bucket_expr, bucket_of
 from debezium_connector_cassandra_spark.plans.apply import CdcTarget, apply_batch, gc_tombstones
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
@@ -63,12 +65,6 @@ def test_every_batch_runs_static(spark, tmp_path, monkeypatch, session_plan):
     assert seen == [static]
     assert {k: spark.conf.get(k) for k in session_plan} == session_plan
 
-    # a batch over the driver-flush bound flushes with Spark, on the same plan
-    monkeypatch.setattr(apply_mod, "DRIVER_FLUSH_MAX_TOMBSTONES", 10)
-    runner.run(max_batches=1)
-    assert seen == [static, static]
-    assert {k: spark.conf.get(k) for k in session_plan} == session_plan
-
 
 def test_plan_settings_restored_when_apply_raises(spark, tmp_path, monkeypatch, session_plan):
     log = gen_mutation_log(spark, 500, n_convs=20, seed=42)
@@ -105,10 +101,7 @@ def test_small_batch_job_count(spark, tmp_path):
     assert all(n <= 4 for n in per_batch), per_batch
 
 
-@pytest.mark.parametrize("flush", ["driver", "spark"])
-def test_both_flushes_match_oracle(spark, tmp_path, monkeypatch, flush):
-    if flush == "spark":
-        monkeypatch.setattr(apply_mod, "DRIVER_FLUSH_MAX_TOMBSTONES", 0)
+def test_tombstone_flush_matches_oracle(spark, tmp_path):
     log = gen_mutation_log(spark, 1_500, n_convs=25, events_per_segment=300, seed=43)
     target = run_and_compare(spark, tmp_path, log, batch_by_segment=True)
     n_tombs = log.where(F.col("op").isin("d", "p", "r")).count()
@@ -123,23 +116,27 @@ def _tombs(wts):
 
 
 def test_gc_purges_from_footers_into_buckets(spark, tmp_path):
-    """One store file wholly below the horizon, one wholly above (written
-    by Spark, bucketed), one straddling it: the first drops unread, the
-    second is kept by reference, the straddler's survivors move into their
-    key buckets, and the counts equal a full count. Afterwards a pruned
-    read of one bucket returns exactly that bucket's rows."""
+    """Three appends: one wholly below the horizon, one wholly above it, one
+    straddling it. The first's files drop unread, the second's are kept by
+    reference, the straddler's survivors are rewritten inside their own
+    buckets, and the counts equal a full count. Afterwards every store file
+    holds only rows of its bucket, and a pruned read of one bucket returns
+    exactly that bucket's rows."""
     target = CdcTarget.create(spark, str(tmp_path / "t"), n_buckets=16)
     store = target.tombstones
-    store.append_small(_tombs(range(1, 11)))  # below
-    store.append(spark.createDataFrame(_tombs(range(100, 111)), store.schema()))  # above
-    store.append_small(_tombs(range(40, 61)))  # straddles 50
+    n = store.manifest()["n_buckets"]
 
     def files():
         return {f for fs in store.manifest()["buckets"].values() for f in fs}
 
-    before = files()
-    below, straddler = store.manifest()["buckets"][str(UNBUCKETED)]  # append order
-    above = before - {below, straddler}
+    def appended(wts):
+        before = files()
+        store.append_small(_tombs(wts))
+        return files() - before
+
+    below = appended(range(1, 11))
+    above = appended(range(100, 111))
+    straddler = appended(range(40, 61))
     n_total = store.read().count()
     n_above = store.read().where(F.col("wt") > 50).count()
 
@@ -147,11 +144,14 @@ def test_gc_purges_from_footers_into_buckets(spark, tmp_path):
     after = files()
     assert (res["n_purged"], res["n_kept"]) == (n_total - n_above, n_above)
     assert res["version"] == store.current_version()
-    assert above <= after and below not in after and straddler not in after
-    assert str(UNBUCKETED) not in store.manifest()["buckets"]
+    assert above <= after and not below & after
+    assert straddler - after and after - above - straddler  # rewritten survivors
     assert sorted(r["wt"] for r in store.read().collect()) == list(range(51, 61)) + list(range(100, 111))
 
-    n = store.manifest()["n_buckets"]
+    for b, fs in store.manifest()["buckets"].items():
+        for f in fs:
+            keys = pq.read_table(os.path.join(store.path, f))["conv_id"]
+            assert set(bucket_of(keys, n).tolist()) == {int(b)}
     for b in range(n):
         got = {r["conv_id"] for r in store.read(buckets=[b]).collect()}
         want = {r["conv_id"] for r in store.read().where(bucket_expr("conv_id", n) == b).collect()}
@@ -164,18 +164,6 @@ def test_gc_purges_from_footers_into_buckets(spark, tmp_path):
     assert gc_tombstones(target, 70) == {"n_purged": 0, "n_kept": 11, "version": version + 1}
     assert dag.numTotalJobs() == before_jobs
     assert files() == above
-
-
-def test_gc_moves_unbucketed_rows_without_purging(spark, tmp_path):
-    """A sweep that purges nothing still moves the UNBUCKETED slot's rows
-    into buckets, so later store reads prune."""
-    target = CdcTarget.create(spark, str(tmp_path / "t"), n_buckets=16)
-    store = target.tombstones
-    store.append_small(_tombs(range(100, 140)))
-    res = gc_tombstones(target, 50)
-    assert (res["n_purged"], res["n_kept"]) == (0, 40)
-    assert set(store.manifest()["buckets"]) == {str(b) for b in bucket_of([f"c{w}" for w in range(100, 140)], 4)}
-    assert gc_tombstones(target, 50)["version"] == res["version"]
 
 
 def test_bucket_of_matches_spark(spark):

@@ -1,19 +1,24 @@
-"""Bookkeeping compaction — file counts stay bounded over unbounded batch
-counts and offset recovery reads O(1) files (verdict: small-file growth was
-a driver/planning scale-killer at 10^5 batches)."""
+"""Append compaction — per-bucket file counts stay bounded over unbounded
+batch counts and offset recovery reads O(1) files (verdict: small-file
+growth was a driver/planning scale-killer at 10^5 batches)."""
 
-from pyspark.sql import types as T
+from collections import Counter
 
-from debezium_connector_cassandra_spark.lake.table import UNBUCKETED, LakeTable
+from pyspark.sql import functions as F, types as T
+
+from debezium_connector_cassandra_spark.lake.table import LakeTable, bucket_expr
+from debezium_connector_cassandra_spark.operators.tombstones import tombstone_rows
+from debezium_connector_cassandra_spark.plans.apply import CdcTarget, apply_batch
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
     write_mutation_log,
 )
+from debezium_connector_cassandra_spark.streaming.ingest import prune_offsets
 from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
 
 
-def _unbucketed_files(table: LakeTable) -> int:
-    return len(table.manifest()["buckets"].get(str(UNBUCKETED), []))
+def _max_bucket_files(table: LakeTable) -> int:
+    return max((len(fs) for fs in table.manifest()["buckets"].values()), default=0)
 
 
 def test_append_small_auto_compacts(spark, tmp_path):
@@ -27,7 +32,7 @@ def test_append_small_auto_compacts(spark, tmp_path):
     t.COMPACT_THRESHOLD = 8
     for i in range(100):
         t.append_small([{"k": i % 4, "v": i}])
-    assert _unbucketed_files(t) <= 9  # threshold + at most the newest file
+    assert _max_bucket_files(t) <= 9  # threshold + at most the newest file
     # no rows lost
     assert t.read().count() == 100
     assert t.read().groupBy().sum("v").collect()[0][0] == sum(range(100))
@@ -44,23 +49,39 @@ def test_compaction_transform_prunes(spark, tmp_path):
     )
     t = LakeTable.create(spark, str(tmp_path / "o"), schema, key_col="log_partition", n_buckets=1)
     t.COMPACT_THRESHOLD = 8
-
-    from debezium_connector_cassandra_spark.streaming.runner import _prune_offsets
-
-    t.compaction_transform = _prune_offsets
-    for i in range(50):
+    t.compaction_transform = prune_offsets
+    # every 8th append after the first finds 8 files and compacts them with
+    # its own rows; the 49th is one of them
+    for i in range(49):
         t.append_small(
             [
                 {"log_partition": p, "segment_id": i, "position": 16 * i, "updated_at": i}
                 for p in (0, 1)
             ]
         )
-    t.compact_unbucketed()
     rows = t.read().collect()
     # only the watermark row per partition survives
     assert len(rows) == 2
-    assert {(r["log_partition"], r["segment_id"]) for r in rows} == {(0, 49), (1, 49)}
-    assert _unbucketed_files(t) == 1
+    assert {(r["log_partition"], r["segment_id"]) for r in rows} == {(0, 48), (1, 48)}
+    assert _max_bucket_files(t) == 1
+
+
+def test_compaction_reads_spark_written_files(spark, tmp_path):
+    """A bucket holding a Spark-written file (non-null Parquet fields) and
+    driver-written ones compacts into one file with every row."""
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("v", T.LongType(), False),
+        ]
+    )
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, key_col="conv_id", n_buckets=1)
+    t.overwrite_all(spark.createDataFrame([("a", 0)], schema))
+    t.COMPACT_THRESHOLD = 2
+    t.append_small([{"conv_id": "a", "v": 1}])
+    t.append_small([{"conv_id": "b", "v": 2}])  # finds 2 files: compacts
+    assert _max_bucket_files(t) == 1
+    assert sorted(r["v"] for r in t.read().collect()) == [0, 1, 2]
 
 
 def test_runner_bookkeeping_bounded_over_many_batches(spark, tmp_path):
@@ -77,9 +98,9 @@ def test_runner_bookkeeping_bounded_over_many_batches(spark, tmp_path):
     runner.metrics.COMPACT_THRESHOLD = 6
     results = runner.run()
     assert len(results) == 20
-    assert _unbucketed_files(runner.offsets) <= 7
-    assert _unbucketed_files(runner.lineage) <= 7
-    assert _unbucketed_files(runner.metrics) <= 7
+    assert _max_bucket_files(runner.offsets) <= 7
+    assert _max_bucket_files(runner.lineage) <= 7
+    assert _max_bucket_files(runner.metrics) <= 7
     # recovery state correct after pruning: restart and compare watermarks
     r2 = CdcRunner(spark, log_path, str(tmp_path / "t"), n_buckets=4)
     assert r2.checkpointed_offsets() == runner.checkpointed_offsets()
@@ -87,3 +108,30 @@ def test_runner_bookkeeping_bounded_over_many_batches(spark, tmp_path):
     assert r2.pending_segments() == []
     # metrics history survives compaction in full
     assert runner.metrics.read().count() == 20
+
+
+def test_tombstone_store_compacts_per_bucket(spark, tmp_path):
+    """A tombstone store with no GC that takes more flushes than its
+    compaction threshold keeps every bucket's file count bounded, loses no
+    row, and still answers a bucket-pruned read with exactly that bucket's
+    rows."""
+    log = gen_mutation_log(spark, 1_600, n_convs=20, events_per_segment=200, seed=44)
+    target = CdcTarget.create(spark, str(tmp_path / "t"), n_buckets=16)
+    store = target.tombstones
+    store.COMPACT_THRESHOLD = 2
+    segs = sorted(r[0] for r in log.select("segment_id").distinct().collect())
+    assert len(segs) > store.COMPACT_THRESHOLD
+    n_rows = 0
+    for seg in segs:
+        batch = log.where(F.col("segment_id") == seg)
+        apply_batch(target, batch)
+        n_rows += tombstone_rows(batch, ("d", "p", "r")).count()
+
+    m = store.manifest()
+    assert all(len(fs) <= store.COMPACT_THRESHOLD + 1 for fs in m["buckets"].values())
+    assert store.read().count() == n_rows
+    n = m["n_buckets"]
+    for b in range(n):
+        got = Counter(store.read(buckets=[b]).collect())
+        want = Counter(store.read().where(bucket_expr("conv_id", n) == b).collect())
+        assert got == want

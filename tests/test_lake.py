@@ -4,7 +4,7 @@ time travel, schema evolution, small appends."""
 import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
-from debezium_connector_cassandra_spark.lake.table import LakeTable, bucket_expr
+from debezium_connector_cassandra_spark.lake.table import LakeTable, bucket_expr, bucket_of
 
 SCHEMA = T.StructType(
     [
@@ -42,8 +42,7 @@ def test_bucket_pruned_cow(spark, tmp_path):
     t.overwrite_all(df)
     # rewrite only k0's bucket with a new value
     keys = _df(spark, [("k0", 999)])
-    buckets = t.buckets_for_keys(keys.select("conv_id"))
-    assert len(buckets) == 1
+    buckets = bucket_of(["k0"], 8).tolist()
     untouched = t.read(buckets=[b for b in range(8) if b not in buckets])
     survivors = t.read(buckets=buckets).where(F.col("conv_id") != "k0")
     t.overwrite_buckets(survivors.unionByName(keys), buckets)
@@ -66,13 +65,15 @@ def test_schema_evolution_reads_null(spark, tmp_path):
     assert [f.name for f in t.schema().fields] == ["conv_id", "v", "extra"]
 
 
-def test_append_small_and_prune_includes_unbucketed(spark, tmp_path):
+def test_append_small_lands_in_key_bucket(spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA, "conv_id", 4)
     t.overwrite_all(_df(spark, [("a", 1)]))
     t.append_small([{"conv_id": "zz", "v": 7}])
-    # pruned read for bucket of 'a' still surfaces the unbucketed append
-    got = {r["conv_id"] for r in t.read(buckets=t.buckets_for_keys(_df(spark, [("a", 0)]))).collect()}
-    assert "zz" in got and "a" in got
+    (own,) = bucket_of(["zz"], 4)
+    assert ("zz", 7) in {(r["conv_id"], r["v"]) for r in t.read(buckets=[own]).collect()}
+    for b in range(4):
+        if b != own:
+            assert "zz" not in {r["conv_id"] for r in t.read(buckets=[b]).collect()}
 
 
 def test_crash_mid_commit_leaves_old_version(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Structured Streaming front-end + salted reduction equivalence."""
+"""Structured Streaming front-end."""
 
 import math
 import os
@@ -6,10 +6,6 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from debezium_connector_cassandra_spark.operators.lww import (
-    reduce_events,
-    reduce_events_salted,
-)
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
     write_mutation_log,
@@ -19,15 +15,6 @@ from debezium_connector_cassandra_spark.streaming.stream import CdcStream
 
 from .conftest import assert_state_equal
 from .oracle import replay
-
-
-def test_salted_reduce_identical(spark):
-    """Two-phase salted reduction must equal the single-phase reduce
-    (max is associative/commutative), including on a hot key."""
-    log = gen_mutation_log(spark, 1500, n_convs=20, hot_fraction=0.4, seed=30)
-    a = reduce_events(log).orderBy("conv_id", "turn_idx").collect()
-    b = reduce_events_salted(log, salt_buckets=8).orderBy("conv_id", "turn_idx").collect()
-    assert a == b
 
 
 def test_structured_streaming_drain(spark, tmp_path):

@@ -17,12 +17,7 @@ from debezium_connector_cassandra_spark.functions.types import (
     VarintMode,
 )
 from debezium_connector_cassandra_spark.model import TableSpec
-from debezium_connector_cassandra_spark.operators.lww import (
-    drop_invisible,
-    finalize_state,
-    reduce_events,
-    reduce_events_salted,
-)
+from debezium_connector_cassandra_spark.operators.lww import drop_invisible, finalize_state, reduce_events
 
 
 # ---------------------------------------------------------------------------
@@ -260,9 +255,6 @@ def test_lww_map_cell_latest_wins(spark):
     st = drop_invisible(finalize_state(reduce_events(log))).collect()
     assert len(st) == 1
     assert st[0]["attrs"] == {"b": 2}
-
-    st2 = drop_invisible(finalize_state(reduce_events_salted(log, salt_buckets=4))).collect()
-    assert st2[0]["attrs"] == {"b": 2}
 
 
 def test_lww_map_cell_equal_wt_position_tiebreak(spark):
