@@ -31,10 +31,16 @@ Others raise — collection/UDT payloads use the JSON codec.
 A fixed-width header plus length-prefixed tails is what makes both
 directions vectorizable: every header field is arithmetic over the record
 start offsets (one structured-dtype view), and the string tails move with
-the segment index trick (repeat + arange), one fancy-index per column. The
-encoder and the decoder are each one numpy kernel per Arrow batch inside
-``mapInPandas`` — no per-row Python. ``_encode_cells_py`` is the scalar
-reference packer the vectorized encoder is tested byte-for-byte against.
+the segment index trick (repeat + arange), one fancy-index per column.
+
+The decoder (hot path) is one scalar Arrow UDF on the ``payload`` column
+alone (``decode_payload_binary``): it builds the cells ``StructArray``
+from Arrow buffers, so Spark prunes it from plans that never read
+``cells`` and pushes filters on the other columns below it. The encoder
+(producer side, where a log is written) is one numpy kernel per Arrow
+batch inside ``mapInPandas``. Neither runs per-row Python.
+``_encode_cells_py`` is the scalar reference packer the vectorized encoder
+is tested byte-for-byte against.
 """
 
 from __future__ import annotations
@@ -44,7 +50,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..model import TRANSCRIPTS_SPEC
 
@@ -97,9 +105,11 @@ def _segment_index(pos: np.ndarray, lens: np.ndarray) -> np.ndarray:
 
 
 def _varbinary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
-    """(int64 offsets, uint8 data) of a large_string / large_binary array."""
+    """(int64 offsets, uint8 data) of a string / binary array, either
+    offset width."""
     _, offs, data = arr.buffers()
-    offsets = np.frombuffer(offs, dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
+    width = np.int64 if arr.type in (pa.large_string(), pa.large_binary()) else np.int32
+    offsets = np.frombuffer(offs, dtype=width)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
     return offsets, (
         np.frombuffer(data, dtype=np.uint8) if data is not None else np.empty(0, np.uint8)
     )
@@ -152,12 +162,16 @@ def _encode_cells_py(cells, spec=TRANSCRIPTS_SPEC) -> bytes | None:
 def _flat_value(v: F.Column, kind: str) -> F.Column:
     """A cell value as the encoder kernel reads it. Nullable integers
     degrade to float64 across Arrow -> pandas (silent precision loss past
-    2^53), so numeric kinds ship non-null with the NULL flag beside them."""
-    if kind in ("int", "bool"):
+    2^53), so numeric kinds ship non-null with the NULL flag beside them.
+    Timestamps flatten to epoch micros JVM-side: across Arrow -> pandas
+    they would arrive as session-local wall-clock datetimes."""
+    if kind == "ts":
+        v = F.unix_micros(v)
+    if kind in ("int", "bool", "ts"):
         return F.coalesce(v.cast("long"), F.lit(0).cast("long"))
     if kind == "double":
         return F.coalesce(v, F.lit(0.0))
-    return v  # str: object with None; ts: datetime64 with NaT
+    return v  # str: object with None
 
 
 def _encode_batch(pdf: pd.DataFrame, spec) -> np.ndarray:
@@ -165,8 +179,6 @@ def _encode_batch(pdf: pd.DataFrame, spec) -> np.ndarray:
     ``_c{i}_*`` columns) into payloads — pure numpy. The headers fill one
     structured array; the string tails scatter with the segment index.
     Returns an object array of bytes, None where the cells struct is NULL."""
-    import pyarrow as pa
-
     kinds = _spec_kinds(spec)
     present = pdf["_has_cells"].to_numpy(dtype=bool)
     dtype = _header_dtype(len(kinds))
@@ -191,11 +203,9 @@ def _encode_batch(pdf: pd.DataFrame, spec) -> np.ndarray:
             lens = np.where(has_val, np.diff(offs), 0)
             tails.append((data, offs[:-1], lens))
             slot = lens
-        elif kind == "ts":
-            slot = col("value", "datetime64[ns]").view(np.int64) // 1000
         elif kind == "double":
             slot = col("value", np.float64).view(np.int64)
-        else:
+        else:  # int / bool / ts (epoch micros)
             slot = col("value", np.int64)
         head["slots"][:, i] = np.where(has_val, slot, 0)
 
@@ -221,7 +231,8 @@ def encode_payload_binary(df: DataFrame, spec=TRANSCRIPTS_SPEC) -> DataFrame:
     """cells -> binary payload under ``spec``'s layout (producer side). The
     cells struct is flattened to primitive columns JVM-side first so the
     kernel sees numpy-native Series; the payload column replaces cells at
-    the end of the row."""
+    the end of the row. It stays a ``mapInPandas``: it runs only where a
+    log is written."""
     kinds = _spec_kinds(spec)
     passthrough = [f for f in df.schema.fields if f.name != "cells"]
     pass_names = [f.name for f in passthrough]
@@ -250,108 +261,78 @@ def encode_payload_binary(df: DataFrame, spec=TRANSCRIPTS_SPEC) -> DataFrame:
 # decoder (hot path)
 # ---------------------------------------------------------------------------
 
-def _decode_batch(payload: pd.Series, spec) -> dict[str, np.ndarray | pd.Series]:
-    """Decode one Arrow batch of payloads into flat ``_c{i}_value`` /
-    ``_c{i}_del`` / ``_c{i}_set`` columns — pure numpy. NULL payloads
-    (tombstone ops) yield all-unset rows; the caller masks the struct to
-    NULL JVM-side."""
-    import pyarrow as pa
+def _cells_type(spec) -> T.StructType:
+    """The decoded cells type: NULL for a NULL payload, and inside a present
+    struct every cell is a (non-NULL) struct."""
+    _spec_kinds(spec)  # unsupported types fail at plan construction
 
+    def cell(dtype):
+        return T.StructType().add("value", dtype).add("deletion_ts", T.LongType()).add("set", T.BooleanType())
+
+    return T.StructType([T.StructField(name, cell(dtype), False) for name, dtype in spec.payload])
+
+
+def _bitmap(mask: np.ndarray) -> pa.Buffer:
+    """An Arrow validity (or boolean data) bitmap."""
+    return pa.py_buffer(np.packbits(mask, bitorder="little"))
+
+
+def _decode_cells(payload: pa.Array, spec) -> pa.StructArray:
+    """Decode one Arrow batch of payloads into ``spec``'s cells, straight
+    from the Arrow buffers: the header slots become each numeric column's
+    value buffer at its width (epoch micros for timestamps), the string
+    tails gather into one data buffer per column, and the header bitmaps
+    become the validity masks. No pandas, and no value becomes a Python
+    object. A NULL payload (tombstone op) is a NULL cells struct, like
+    ``from_json(NULL)`` in the JSON twin."""
     kinds = _spec_kinds(spec)
     dtype = _header_dtype(len(kinds))
-    arr = pa.array(payload, type=pa.large_binary(), from_pandas=True)
-    offsets, data = _varbinary_buffers(arr)
-    present = arr.is_valid().to_numpy(zero_copy_only=False)
-    present_idx = np.flatnonzero(present)
-    starts = offsets[:-1][present]
+    arrow_type = to_arrow_type(_cells_type(spec))
     n_rows = len(payload)
-    head = data[(starts[:, None] + np.arange(dtype.itemsize)).ravel()].view(dtype)
-
-    def expand(vals: np.ndarray) -> np.ndarray:
-        """Scatter per-present-record object values back to batch grain."""
-        full = np.full(n_rows, None, dtype=object)
-        full[present_idx] = vals
-        return full
-
-    out: dict[str, np.ndarray | pd.Series] = {}
+    offsets, data = _varbinary_buffers(payload)
+    present = payload.is_valid().to_numpy(zero_copy_only=False)
+    head = np.zeros(n_rows, dtype=dtype)  # a NULL payload: every cell unset
+    starts = offsets[:-1]
+    head[present] = data[(starts[present, None] + np.arange(dtype.itemsize)).ravel()].view(dtype)
     pos = starts + dtype.itemsize  # next string tail, per record
-    for i, kind in enumerate(kinds):
+    cells = []
+    for i, (kind, field) in enumerate(zip(kinds, arrow_type)):
         byte, bit = i // 8, 1 << (i % 8)
         is_set = (head["set"][:, byte] & bit) > 0
-        has_val = is_set & ~((head["null"][:, byte] & bit) > 0)
-        has_del = (head["del"][:, byte] & bit) > 0
+        has_val = is_set & ((head["null"][:, byte] & bit) == 0)
         slot = head["slots"][:, i]
-        if kind == "ts":
-            full = np.full(n_rows, np.datetime64("NaT"), dtype="datetime64[ns]")
-            full[present_idx[has_val]] = (slot[has_val] * 1000).astype("datetime64[ns]")
-            out[f"_c{i}_value"] = pd.Series(full)
-        else:
-            if kind == "str":
-                lens = np.where(has_val, slot, 0)
-                buf = data[_segment_index(pos, lens)]
-                pos = pos + lens
-                # zero-copy Arrow string build — utf-8 materializes C-side
-                vals = pa.LargeStringArray.from_buffers(
-                    len(lens),
-                    pa.py_buffer(np.concatenate([[0], np.cumsum(lens)])),
-                    pa.py_buffer(buf),
-                ).to_numpy(zero_copy_only=False)
-            elif kind == "double":
-                vals = slot.view(np.float64).astype(object)
-            elif kind == "bool":
-                vals = (slot != 0).astype(object)
-            else:
-                vals = slot.astype(object)
-            vals[~has_val] = None
-            out[f"_c{i}_value"] = expand(vals)
-        dels = head["dels"][:, i].astype(object)
-        dels[~has_del] = None
-        out[f"_c{i}_del"] = expand(dels)
-        set_full = np.zeros(n_rows, dtype=bool)
-        set_full[present_idx] = is_set
-        out[f"_c{i}_set"] = set_full
-    return out
+        vtype = field.type.field("value").type
+        if kind == "str":
+            lens = np.where(has_val, slot, 0)
+            offs = np.zeros(n_rows + 1, np.int64 if pa.types.is_large_string(vtype) else np.int32)
+            np.cumsum(lens, dtype=offs.dtype, out=offs[1:])
+            buffers = [pa.py_buffer(offs), pa.py_buffer(data[_segment_index(pos, lens)])]
+            pos = pos + lens
+        elif kind == "bool":
+            buffers = [_bitmap(slot != 0)]
+        else:  # int, double bit pattern, timestamp micros: the slot's bytes at the value's width
+            buffers = [pa.py_buffer(slot.astype(f"<i{vtype.bit_width // 8}"))]
+        has_del = (head["del"][:, byte] & bit) > 0
+        children = [
+            pa.Array.from_buffers(vtype, n_rows, [_bitmap(has_val), *buffers]),
+            pa.Array.from_buffers(pa.int64(), n_rows, [_bitmap(has_del), pa.py_buffer(head["dels"][:, i].copy())]),
+            pa.Array.from_buffers(pa.bool_(), n_rows, [None, _bitmap(is_set)]),
+        ]
+        cells.append(pa.StructArray.from_arrays(children, fields=list(field.type)))
+    return pa.StructArray.from_arrays(cells, fields=list(arrow_type), mask=pa.array(~present))
 
 
 def decode_payload_binary(df: DataFrame, spec=TRANSCRIPTS_SPEC) -> DataFrame:
-    """Binary payload -> ``spec``'s typed cells. mapInPandas with a flat
-    intermediate schema (numpy-friendly primitive columns); the cells struct
-    reassembles JVM-side in whole-stage codegen, with NULL-payload rows
-    mapping to a NULL struct exactly like ``from_json(NULL)`` in the JSON
-    twin. Drops the multi-table routing columns, like
+    """Binary payload -> ``spec``'s typed cells: one scalar Arrow UDF over
+    the ``payload`` column alone, so only payload bytes go to Python and the
+    other columns stay in the JVM. Being an expression on one column, the
+    decode is pruned from plans that never read ``cells`` (no Python runs,
+    ``payload`` is not scanned), and filters on other columns push below
+    it. Drops the payload and the multi-table routing columns, like
     ``decode.decode_payload_jvm``."""
-    passthrough = [f for f in df.schema.fields if f.name not in ("payload", "keyspace", "table")]
-    pass_names = [f.name for f in passthrough]
-    flat_fields = []
-    for i, (_, dtype) in enumerate(spec.payload):
-        flat_fields += [
-            T.StructField(f"_c{i}_value", dtype, True),
-            T.StructField(f"_c{i}_del", T.LongType(), True),
-            T.StructField(f"_c{i}_set", T.BooleanType(), True),
-        ]
-    out_schema = T.StructType(
-        passthrough + [T.StructField("_has_cells", T.BooleanType(), False)] + flat_fields
-    )
-    _spec_kinds(spec)  # unsupported types fail at plan construction
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {c: pdf[c] for c in pass_names}
-            cols["_has_cells"] = pdf["payload"].notna()
-            cols.update(_decode_batch(pdf["payload"], spec))
-            yield pd.DataFrame(cols)
+    @F.arrow_udf(_cells_type(spec))
+    def decode_cells(payload: pa.Array) -> pa.Array:
+        return _decode_cells(payload, spec)
 
-    flat = df.drop("keyspace", "table").mapInPandas(run, out_schema)
-    cells = F.struct(
-        *[
-            F.struct(
-                F.col(f"_c{i}_value").alias("value"),
-                F.col(f"_c{i}_del").alias("deletion_ts"),
-                F.col(f"_c{i}_set").alias("set"),
-            ).alias(name)
-            for i, (name, _) in enumerate(spec.payload)
-        ]
-    )
-    return flat.withColumn("cells", F.when(F.col("_has_cells"), cells)).drop(
-        "_has_cells", *[f.name for f in flat_fields]
-    )
+    return df.withColumn("cells", decode_cells("payload")).drop("payload", "keyspace", "table")

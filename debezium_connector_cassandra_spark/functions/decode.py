@@ -11,7 +11,7 @@ Covers SURVEY §2.2:
 - S5  serialized-payload decode analog — from_json parsing a JSON payload
       into typed cells, standing in for Cassandra's CommitLogReader
       (Cassandra4CommitLogSegmentReader.java:29-33); the binary layout's
-      vectorized decoder is functions/binary_codec.py.
+      decoder is functions/binary_codec.py's Arrow column function.
 
 Everything here is pure Catalyst column expressions (whole-stage codegen, no
 Python in the hot loop).
@@ -227,7 +227,7 @@ def explode_mt_batch_mutations(log: DataFrame) -> DataFrame:
 # stand-in for Cassandra's binary mutation encoding), decoded against the
 # table's TableSpec (the SchemaHolder lookup): JSON bytes parse with
 # from_json inside whole-stage codegen; the binary layout decodes with
-# functions/binary_codec.py's vectorized numpy kernel.
+# functions/binary_codec.py's scalar Arrow UDF on the payload column.
 # ---------------------------------------------------------------------------
 
 # full MICROSECOND precision — the default to_json format truncates to

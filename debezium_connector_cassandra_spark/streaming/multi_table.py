@@ -84,7 +84,7 @@ class MultiTableRunner:
         if payload_format not in ("json", "binary"):
             raise ValueError(f"unknown payload_format {payload_format!r}")
         # 'json' = per-table from_json (codegen); 'binary' = the per-TableSpec
-        # binary layout + vectorized numpy decoder (functions/binary_codec.py)
+        # binary layout + Arrow column decoder (functions/binary_codec.py)
         self.payload_format = payload_format
         # logged-batch mode: the log carries per-keyspace atomic multi-change
         # records whose changes may span TABLES (the reference Mutation

@@ -20,6 +20,7 @@ from debezium_connector_cassandra_spark.functions.decode import (
 from debezium_connector_cassandra_spark.model import TRANSCRIPTS_SPEC
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
+    read_mutation_log,
     write_mutation_log,
 )
 from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
@@ -104,6 +105,33 @@ def test_binary_pipeline_state_equals_plain(spark, log, tmp_path):
     r_bin.run()
     assert _sorted_rows(r_plain.target.read_transcripts()) == \
         _sorted_rows(r_bin.target.read_transcripts())
+
+
+@pytest.mark.parametrize(
+    "enc_tz,dec_tz", [("America/Los_Angeles", "UTC"), ("UTC", "America/Los_Angeles")]
+)
+def test_timestamps_survive_a_session_time_zone_change(spark, tmp_path, enc_tz, dec_tz):
+    """Timestamp slots hold epoch micros whatever the session time zone: a
+    log encoded under one zone decodes to the same instants under another
+    (same-zone round trips cannot show a wall-clock encoding)."""
+    plain, binary = str(tmp_path / "plain"), str(tmp_path / "bin")
+    write_mutation_log(
+        gen_mutation_log(spark, 3000, n_convs=30, max_turns=10, events_per_segment=1000, seed=3),
+        plain,
+    )
+    cols = ["segment_id", "position", "cells"]
+    want = _sorted_rows(read_mutation_log(spark, plain).select(*cols))
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", enc_tz)
+        write_mutation_log(encode_payload_binary(read_mutation_log(spark, plain)), binary)
+        spark.conf.set("spark.sql.session.timeZone", dec_tz)
+        got = _sorted_rows(
+            decode_payload_binary(read_mutation_log(spark, binary, schema="infer")).select(*cols)
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert got == want
 
 
 def test_null_payload_is_null_struct(spark, log):

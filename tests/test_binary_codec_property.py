@@ -3,16 +3,23 @@
 random values of every supported cell kind) — no Spark in the loop, so
 hypothesis can hammer it. Two specs: the transcript table and a numeric one
 covering every kind the codec supports. The vectorized encoder kernel must
-also emit the scalar reference packer's bytes exactly."""
+also emit the scalar reference packer's bytes exactly, and the decode
+kernel (payload ``pyarrow`` array in, cells ``StructArray`` out) must
+produce valid Arrow arrays of the decoder's Spark type, nullability
+included."""
 
 import struct
 
 import pandas as pd
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from debezium_connector_cassandra_spark.functions.binary_codec import (
-    _decode_batch,
+    _cells_type,
+    _decode_cells,
     _encode_batch,
     _encode_cells_py,
     _spec_kinds,
@@ -64,6 +71,37 @@ def _rows(spec):
     return st.lists(st.one_of(st.none(), _cells(spec)), min_size=1, max_size=8)
 
 
+def _decoded_type(spec) -> T.StructType:
+    """The decoded cells type, written out: NULL-able cells struct, non-NULL
+    cell structs, every leaf NULL-able."""
+    return T.StructType(
+        [
+            T.StructField(
+                name,
+                T.StructType(
+                    [
+                        T.StructField("value", dtype, True),
+                        T.StructField("deletion_ts", T.LongType(), True),
+                        T.StructField("set", T.BooleanType(), True),
+                    ]
+                ),
+                False,
+            )
+            for name, dtype in spec.payload
+        ]
+    )
+
+
+def _decode(payloads, spec) -> pa.StructArray:
+    """Run the decode kernel as the Arrow UDF does, checking the result."""
+    dec = _decode_cells(payloads, spec)
+    assert _cells_type(spec) == _decoded_type(spec)
+    assert dec.type == to_arrow_type(_decoded_type(spec))
+    assert len(dec) == len(payloads)
+    dec.validate(full=True)
+    return dec
+
+
 def _flat_frame(rows, spec) -> pd.DataFrame:
     """The flattened columns encode_payload_binary ships to the kernel."""
     kinds = _spec_kinds(spec)
@@ -75,8 +113,8 @@ def _flat_frame(rows, spec) -> pd.DataFrame:
         flat[f"_c{i}_null"] = [v is None for v in values]
         flat[f"_c{i}_hasdel"] = [c is not None and c["deletion_ts"] is not None for c in cs]
         flat[f"_c{i}_del"] = [0 if c is None or c["deletion_ts"] is None else c["deletion_ts"] for c in cs]
-        if kind == "ts":
-            flat[f"_c{i}_value"] = pd.Series(values, dtype="datetime64[ns]")
+        if kind == "ts":  # epoch micros, as unix_micros flattens them
+            flat[f"_c{i}_value"] = pd.Series([0 if v is None else v.value // 1000 for v in values], dtype="int64")
         elif kind == "str":
             flat[f"_c{i}_value"] = pd.Series(values, dtype=object)
         elif kind == "double":
@@ -88,9 +126,9 @@ def _flat_frame(rows, spec) -> pd.DataFrame:
 
 def _same(got, want, kind) -> bool:
     if want is None:
-        return got is None or got is pd.NaT or (kind == "ts" and pd.isna(got))
-    if kind == "ts":
-        return pd.Timestamp(got) == want
+        return got is None
+    if kind == "ts":  # a UTC instant
+        return pd.Timestamp(got).tz_convert(None) == want
     if kind == "double":  # bit-exact, NaN payloads and -0.0 included
         return struct.pack("<d", got) == struct.pack("<d", want)
     if kind == "str":
@@ -99,24 +137,21 @@ def _same(got, want, kind) -> bool:
 
 
 def _check_roundtrip(rows, spec):
-    payloads = pd.Series([_encode_cells_py(r, spec) for r in rows], dtype=object)
-    assert list(_encode_batch(_flat_frame(rows, spec), spec)) == list(payloads)
-    dec = _decode_batch(payloads, spec)
+    payloads = [_encode_cells_py(r, spec) for r in rows]
+    assert list(_encode_batch(_flat_frame(rows, spec), spec)) == payloads
+    dec = _decode(pa.array(payloads, type=pa.binary()), spec).to_pylist()
     for i, r in enumerate(rows):
-        for j, ((name, _), kind) in enumerate(zip(spec.payload, _spec_kinds(spec))):
-            got_v = dec[f"_c{j}_value"][i]
-            if r is None:
-                assert dec[f"_c{j}_set"][i] == False  # noqa: E712
-                assert _same(got_v, None, kind)
-                assert dec[f"_c{j}_del"][i] is None
-                continue
+        if r is None:  # no payload: a NULL cells struct
+            assert dec[i] is None
+            continue
+        for name, kind in zip(spec.payload_dict, _spec_kinds(spec)):
             # decode-visible form: unset cells lose their value; dels
             # survive regardless
-            c = r[name]
+            c, got = r[name], dec[i][name]
             want_v = c["value"] if c["set"] else None
-            assert bool(dec[f"_c{j}_set"][i]) == c["set"], (i, name)
-            assert dec[f"_c{j}_del"][i] == c["deletion_ts"], (i, name)
-            assert _same(got_v, want_v, kind), (i, name, got_v, want_v)
+            assert got["set"] is c["set"], (i, name)
+            assert got["deletion_ts"] == c["deletion_ts"], (i, name)
+            assert _same(got["value"], want_v, kind), (i, name, got["value"], want_v)
 
 
 @settings(max_examples=300, deadline=None)
@@ -129,3 +164,13 @@ def test_roundtrip_arbitrary_cells(rows):
 @given(_rows(NUMERIC_SPEC))
 def test_roundtrip_arbitrary_numeric_cells(rows):
     _check_roundtrip(rows, NUMERIC_SPEC)
+
+
+@pytest.mark.parametrize("spec", [TRANSCRIPTS_SPEC, NUMERIC_SPEC], ids=["transcripts", "numeric"])
+@pytest.mark.parametrize("payload_type", [pa.binary(), pa.large_binary()])
+def test_tombstone_only_and_empty_batches(spec, payload_type):
+    """A batch of tombstone ops only (every payload NULL) decodes to all-NULL
+    cells structs; a zero-row batch to a zero-row array of the same type."""
+    dec = _decode(pa.array([None] * 5, type=payload_type), spec)
+    assert dec.null_count == 5
+    assert len(_decode(pa.array([], type=payload_type), spec)) == 0

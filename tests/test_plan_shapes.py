@@ -266,3 +266,46 @@ def test_interval_join_is_equi_join(spark, queries):
         >= 1
     )
     assert _count(plan, "Generate") >= 1  # the interval->bucket explode
+
+
+def test_binary_decode_is_a_column_function(spark, tmp_path_factory):
+    """The binary decode is one Arrow UDF on ``payload``: a plan that never
+    reads ``cells`` (the batch's tombstone rows) runs no Python and does not
+    scan ``payload``; the key reduction runs exactly one ArrowEvalPython,
+    with the ``op IN (i,u,d)`` filter below it, so partition and range
+    deletes are never decoded."""
+    from debezium_connector_cassandra_spark.functions.binary_codec import (
+        decode_payload_binary,
+        encode_payload_binary,
+    )
+    from debezium_connector_cassandra_spark.operators.lww import reduce_events
+    from debezium_connector_cassandra_spark.operators.tombstones import tombstone_rows
+    from debezium_connector_cassandra_spark.sources.generator import (
+        gen_mutation_log,
+        read_mutation_log,
+        write_mutation_log,
+    )
+
+    path = str(tmp_path_factory.mktemp("binlog") / "log")
+    log = gen_mutation_log(spark, 600, n_convs=10, events_per_segment=300, seed=5)
+    write_mutation_log(encode_payload_binary(log), path)
+    raw = read_mutation_log(spark, path, schema="infer")
+
+    tombs = _plan(spark, tombstone_rows(decode_payload_binary(raw), ("d", "p", "r")))
+    for op in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+        assert _count(tombs, op) == 0, op
+    read_schemas = re.findall(r"ReadSchema: (.*)", tombs)
+    assert read_schemas and not any("payload" in s for s in read_schemas)
+
+    reduced = reduce_events(decode_payload_binary(raw))
+    plan = _plan(spark, reduced)
+    assert _count(plan, "ArrowEvalPython") == 1
+    assert _count(plan, "MapInPandas") == 0
+    tree = spark._jvm.PythonSQLUtils.explainString(reduced._jdf.queryExecution(), "simple").splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" +-:"))
+
+    (udf,) = [i for i, line in enumerate(tree) if "ArrowEvalPython" in line]
+    filters = [i for i, line in enumerate(tree) if re.search(r"Filter .*op#\d+ IN \(i,u,d\)", line)]
+    assert filters and all(i > udf and depth(tree[i]) > depth(tree[udf]) for i in filters)
