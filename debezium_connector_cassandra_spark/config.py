@@ -161,6 +161,10 @@ class CdcConfig:
             "gc_grace_us": int(gc_grace) if gc_grace is not None else None,
             "gc_every_batches": self._int("spark.tombstone.gc.every.batches"),
         }
+        if "spark.payload.format" in self.props:
+            # a configured payload codec means the log carries payload bytes:
+            # read the on-disk schema (it keeps ``payload``) and decode them
+            out.update(decode_binary=True, log_schema="infer")
         return out
 
     def build_runner(self, spark, log_path: str, target_path: str, **overrides):

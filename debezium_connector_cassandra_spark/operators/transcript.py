@@ -33,37 +33,37 @@ ASSEMBLY_SCHEMA = T.StructType(
 )
 
 
-def open_assembly(spark, path: str, target):
-    """Open (or create) a maintained transcript view at ``path``. The view
+def open_assembly(
+    spark, path: str, target, role_col: str | None = "role", text_col: str = "text"
+) -> None:
+    """Open (or create) a maintained transcript view at ``path`` and make it
+    part of ``target``, whose ``apply_batch`` then refreshes it. The view
     MUST share the state's bucket function: ``refresh_assembly`` rewrites
     the state bucket ids a batch's pre-scan reports as assembly buckets."""
     from ..lake.table import LakeTable
 
     n_buckets = target.state.manifest()["n_buckets"]
-    return LakeTable.open_or_create(spark, path, ASSEMBLY_SCHEMA, "conv_id", n_buckets)
+    target.assembly = LakeTable.open_or_create(spark, path, ASSEMBLY_SCHEMA, "conv_id", n_buckets)
+    target.assembly_cols = (role_col, text_col)
 
 
-def refresh_assembly(
-    assembly,
-    target,
-    buckets: list[int],
-    role_col: str | None = "role",
-    text_col: str = "text",
-) -> None:
-    """Maintained-view refresh step shared by every ingest front-end
-    (CdcRunner, CdcStream, MultiTableRunner/Stream, SnapshotProcessor):
-    re-assemble the given state buckets — the batch's touched buckets from
-    its pre-scan — and COW-swap them.  Whole-bucket recompute-from-state is
-    idempotent under replay and drops fully-deleted conversations; the
-    assembly table shares the state's bucket function, so state bucket ids
-    are assembly bucket ids and the state read is file-pruned to them."""
+def refresh_assembly(target, buckets: list[int]) -> None:
+    """The maintained-view refresh, run by ``plans.apply.apply_batch`` after
+    every state commit of a target that holds a view, whichever front-end
+    or snapshot applied the batch: re-assemble the given state buckets —
+    the batch's touched buckets from its pre-scan — and COW-swap them.
+    Whole-bucket recompute-from-state is idempotent under replay and drops
+    fully-deleted conversations; the assembly table shares the state's
+    bucket function, so state bucket ids are assembly bucket ids and the
+    state read is file-pruned to them."""
     if not buckets:
         return
+    role_col, text_col = target.assembly_cols
     touched = target.read_transcripts(buckets=buckets)
     new_rows = assemble_transcripts(
         touched, role_col=role_col, text_col=text_col
     ).select(*[f.name for f in ASSEMBLY_SCHEMA.fields])
-    assembly.overwrite_buckets(new_rows, buckets)
+    target.assembly.overwrite_buckets(new_rows, buckets)
 
 
 def incremental_transcripts(

@@ -4,7 +4,8 @@ Java entry points:
     read log slice -> decode/envelope -> dedup ->
     per-key cell-LWW reduce (row deletes folded) -> finalize ->
     merge target (touched buckets only) -> kill vs tombstones, once ->
-    COW write -> append new tombstones from the driver
+    COW write -> append new tombstones from the driver ->
+    refresh the maintained transcript view (touched buckets, if any)
 
 Exactly-once contract (north_rule): the merge is idempotent (cell writetimes
 are compared strictly, so re-applying an already-applied batch is a no-op),
@@ -45,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from ..functions.decode import UNSUPPORTED_KINDS
 from ..lake.table import LakeTable, bucket_expr
 from ..model import STATE_SCHEMA, state_schema_for
+from ..operators import transcript
 from ..operators.lww import (
     drop_invisible,
     finalize_state,
@@ -72,10 +74,13 @@ class CdcTarget:
     """The materialized target: state table + persistent tombstone store
     (Cassandra keeps tombstones until gc_grace for exactly this reason: an
     out-of-order write arriving later must still lose to an earlier delete
-    with a higher writetime)."""
+    with a higher writetime), plus the optional maintained transcript view
+    (``operators.transcript.open_assembly``) and its (role, text) columns."""
 
     state: LakeTable
     tombstones: LakeTable
+    assembly: LakeTable | None = None
+    assembly_cols: tuple[str | None, str] = ("role", "text")
 
     @classmethod
     def create(
@@ -236,7 +241,8 @@ def apply_batch(
     once at full width, by the reduction. When absent, ``prescan`` computes
     it here in one narrow job.
 
-    The batch runs under ``static_plan`` (module docstring).
+    The batch runs under ``static_plan`` (module docstring). A maintained
+    view (``target.assembly``) is refreshed last, before the caller's offsets.
 
     Steps map to SURVEY operators: D3-D12 are upstream in decode ->
     R6 (reduce+merge) -> tombstone persistence (Cassandra gc_grace analog).
@@ -276,6 +282,8 @@ def apply_batch(
         finally:
             if new_rows is not None:
                 new_rows.unpersist()
+    if target.assembly is not None:
+        transcript.refresh_assembly(target, state_buckets(stats))
     return {
         "n_events": stats["n"],
         "n_buckets_rewritten": len(state_buckets(stats)),

@@ -198,7 +198,7 @@ class SnapshotProcessor:
         interrupted snapshots restart from scratch, which is safe because
         snapshot inserts are idempotent upserts (same property the reference
         relies on, SnapshotProcessor.java:51-55)."""
-        from ..plans.apply import apply_batch, batch_stats, prescan, state_buckets  # local: avoids a cycle
+        from ..plans.apply import apply_batch  # local: avoids a cycle
 
         if not self.tables_to_snapshot(mode):
             self.metrics.set_table_count(0)
@@ -208,11 +208,8 @@ class SnapshotProcessor:
         self.metrics.start_snapshot()
         fqtn = "agents.transcripts"
         try:
-            mutations = snapshot_to_mutations(source, snapshot_writetime)
-            pre = batch_stats(prescan(mutations, {"": self.runner.target}))
-            stats = apply_batch(self.runner.target, mutations, stats=pre)
-            # snapshot rows change state too — the maintained view follows
-            self.runner._refresh_assembly(state_buckets(pre))
+            # apply_batch refreshes the maintained view, if any, too
+            stats = apply_batch(self.runner.target, snapshot_to_mutations(source, snapshot_writetime))
             self.metrics.set_rows_scanned(fqtn, stats.get("n_events", 0))
             self.metrics.complete_table()
         except Exception:

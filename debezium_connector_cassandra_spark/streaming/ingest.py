@@ -1,11 +1,12 @@
 """The ingest core shared by the four CDC front-ends.
 
 ``CdcRunner``, ``CdcStream``, ``MultiTableRunner`` and ``MultiTableStream``
-each own a source, a decode and their call to ``apply_batch``. The batch
-lifecycle around that call lives here, once: ``Batch`` runs the one narrow
-pre-scan (``plans.apply.prescan``) and ``Batch.commit`` writes offsets,
-lineage and one ``_metrics`` row; ``drain`` is the pull loop with its GC
-cadence and ``StreamDriver`` the push driver.
+each own a source. Each runner owns one slice step (``_apply``: decode,
+checks, ``apply_batch``), which its pull and push front-ends both call. The
+batch lifecycle around that step lives here, once: ``Batch`` runs the one
+narrow pre-scan (``plans.apply.prescan``) and ``Batch.commit`` writes
+offsets, lineage and one ``_metrics`` row; ``drain`` is the pull loop with
+its GC cadence and ``StreamDriver`` the push driver.
 
 Exactly-once: the state commit inside ``apply_batch`` lands BEFORE the
 offsets and lineage; a crash between the two replays the batch, which is a

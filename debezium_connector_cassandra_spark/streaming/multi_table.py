@@ -14,7 +14,8 @@ Spark formulation:
   (fqtn, segment, log_partition): per-table offsets/lineage stats, op-kind
   counts and touched buckets;
 - per table: filter + decode with that table's cells schema, then the
-  standard apply_batch into that table's own CdcTarget;
+  standard apply_batch into that table's own CdcTarget — one slice step
+  (``MultiTableRunner._apply``) shared by the runner and the stream;
 - bookkeeping is PER TABLE (fqtn column): offsets are (fqtn, log_partition)
   watermarks, lineage rows are (fqtn, segment) grained. A segment is globally
   'done' when every table's apply committed — the runner commits each
@@ -41,7 +42,7 @@ from ..model import (
     MULTI_TABLE_LOG_SCHEMA,
     TableSpec,
 )
-from ..plans.apply import CdcTarget, apply_batch, batch_stats, gc_tombstones, prescan, state_buckets
+from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
 from ..sources.log_scan import discover_segments
 from .ingest import COMPLETES, Batch, StreamDriver, drain, gc_sweep, open_bookkeeping
 
@@ -91,9 +92,9 @@ class MultiTableRunner:
         # shape, handleMutation:255-272); _read_log explodes before anything
         self.batch_mutations = batch_mutations
         # maintained per-table transcript views: {fqtn: {"text": col,
-        # "role": col|None}} — refreshed after every state commit with the
-        # shared recompute-from-state step (operators.transcript.
-        # refresh_assembly); tables absent from the dict have no view
+        # "role": col|None}} — part of each table's target, refreshed by
+        # apply_batch after every state commit; tables absent from the dict
+        # have no view
         self.maintain_assembly: dict[str, dict] = dict(maintain_assembly or {})
         for fqtn, cfg in self.maintain_assembly.items():
             if fqtn not in self.specs:
@@ -105,7 +106,6 @@ class MultiTableRunner:
                         f"maintain_assembly[{fqtn!r}]: column {cfg[key]!r} "
                         f"not in payload {sorted(payload_cols)}"
                     )
-        self.assemblies: dict[str, LakeTable] = {}
         self.targets: dict[str, CdcTarget] = {}
         for fqtn, spec in self.specs.items():
             self._ensure_target(fqtn, spec)
@@ -143,7 +143,8 @@ class MultiTableRunner:
         if fqtn in self.maintain_assembly:
             from ..operators.transcript import open_assembly
 
-            self.assemblies[fqtn] = open_assembly(self.spark, f"{path}/assembly", self.targets[fqtn])
+            cfg = self.maintain_assembly[fqtn]
+            open_assembly(self.spark, f"{path}/assembly", self.targets[fqtn], cfg.get("role"), cfg["text"])
 
     def apply_table_changes(self, up_to_segment: int, discovered: list[int]) -> None:
         """Replay table create/drop DDL effective at or before
@@ -203,46 +204,46 @@ class MultiTableRunner:
         )
         return explode_mt_batch_mutations(log) if self.batch_mutations else log
 
-    def _decode(self, df: DataFrame, spec: TableSpec) -> DataFrame:
-        """One table's payload decode against its own TableSpec."""
-        return decode_payload(df, spec, self.payload_format)
+    def _apply(self, fqtn: str, log: DataFrame, stats: dict, segments=None) -> dict:
+        """The per-table slice step both front-ends share (``run_batch`` and
+        ``MultiTableStream``'s micro-batches): filter the batch to the table
+        and to ``segments``, decode against the table's spec, then
+        ``apply_batch`` with the pre-scan's ``stats``. With
+        ``export_changes`` (runner only: it consumes whole segments, so the
+        decoded slice is per-segment complete) the slice is exported too."""
+        spec = self.specs[fqtn]
+        sub = log.where((F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table))
+        if segments is not None:
+            sub = sub.where(F.col("segment_id").isin(*[int(s) for s in segments]))
+        sub = decode_payload(sub, spec, self.payload_format)
+        applied = apply_batch(self.targets[fqtn], sub, stats=stats)
+        if self.export_changes:
+            from ..lake.changes import envelope_rows
 
-    @staticmethod
-    def _of_table(df: DataFrame, spec: TableSpec) -> DataFrame:
-        return df.where((F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table))
+            self.changes_tables[fqtn].write_segments(
+                envelope_rows(
+                    sub,
+                    tombstones_on_delete=self.tombstones_on_delete,
+                    keyspace=spec.keyspace,
+                    table=spec.table,
+                ),
+                segments,
+            )
+        return applied
 
     # -- one batch --------------------------------------------------------------
     def run_batch(self, segment_ids: list[int]) -> dict:
         log = self._read_log(segment_ids)
         batch = Batch(self, log, segment_ids)
         results = {}
-        for fqtn, spec in self.specs.items():
+        for fqtn in self.specs:
             done = self._done.setdefault(fqtn, set())
             pending = [s for s in segment_ids if s not in done]
             if not pending:
                 continue
             stats = batch.stats(fqtn, pending)
             if stats["n"]:
-                sub = self._decode(
-                    self._of_table(log, spec).where(F.col("segment_id").isin(*[int(s) for s in pending])),
-                    spec,
-                )
-                results[fqtn] = apply_batch(self.targets[fqtn], sub, stats=stats)
-                self._refresh_assembly(fqtn, state_buckets(stats))
-                if self.export_changes:
-                    # MT batches consume whole segments, so the decoded slice
-                    # is per-segment complete — export directly from it
-                    from ..lake.changes import envelope_rows
-
-                    self.changes_tables[fqtn].write_segments(
-                        envelope_rows(
-                            sub,
-                            tombstones_on_delete=self.tombstones_on_delete,
-                            keyspace=spec.keyspace,
-                            table=spec.table,
-                        ),
-                        pending,
-                    )
+                results[fqtn] = self._apply(fqtn, log, stats, pending)
             else:
                 results[fqtn] = {"n_events": 0}
             # this table's bookkeeping lands right after its apply commits —
@@ -273,26 +274,11 @@ class MultiTableRunner:
         return drain(self, max_batches)
 
     # -- user-facing reads ----------------------------------------------------
-    def _refresh_assembly(self, fqtn: str, buckets: list[int]) -> None:
-        """Maintained-view step (no-op for tables without a view)."""
-        if fqtn not in self.assemblies:
-            return
-        from ..operators.transcript import refresh_assembly
-
-        cfg = self.maintain_assembly[fqtn]
-        refresh_assembly(
-            self.assemblies[fqtn],
-            self.targets[fqtn],
-            buckets,
-            role_col=cfg.get("role"),
-            text_col=cfg["text"],
-        )
-
     def read_assembly(self, fqtn: str) -> DataFrame:
         """The maintained per-conversation view of one table."""
-        if fqtn not in self.assemblies:
+        if fqtn not in self.targets or self.targets[fqtn].assembly is None:
             raise ValueError(f"no maintained assembly for {fqtn!r}")
-        return self.assemblies[fqtn].read().select(
+        return self.targets[fqtn].assembly.read().select(
             "conv_id", "n_turns", "last_turn", "total_chars", "transcript"
         )
 
@@ -335,9 +321,7 @@ class MultiTableRunner:
             for fqtn in todo:
                 src = self.specs[fqtn].normalize(sources[fqtn])
                 mutations = snapshot_to_mutations(src, snapshot_writetime)
-                stats = batch_stats(prescan(mutations, {"": self.targets[fqtn]}))
-                out[fqtn] = apply_batch(self.targets[fqtn], mutations, stats=stats)
-                self._refresh_assembly(fqtn, state_buckets(stats))
+                out[fqtn] = apply_batch(self.targets[fqtn], mutations)
                 self.metrics_snapshot.set_rows_scanned(
                     fqtn, out[fqtn].get("n_events", 0)
                 )
@@ -373,18 +357,18 @@ class MultiTableStream(StreamDriver):
     CdcStream (no watermark pre-filter; see its module docstring) and the
     same ``streamed`` status effects (see the ingest core's status table).
 
-    Table lifecycle DDL (table_changes) is a batch-front-end feature: the
-    create/drop ledger needs the discovered segment range, which a streaming
-    micro-batch does not see — a runner configured with table_changes is
-    refused here.
+    Table lifecycle DDL (table_changes) needs the discovered segment range
+    and export_changes rewrites whole segments; a micro-batch has neither,
+    so both options are refused here.
     """
 
     def __init__(self, runner: MultiTableRunner, max_files_per_trigger: int | None = None):
-        if runner.table_changes:
+        if runner.table_changes or runner.export_changes:
             raise ValueError(
-                "table_changes (create/drop DDL ledger) requires the batch "
-                "front-end — a streaming micro-batch cannot see the "
-                "discovered segment range; use MultiTableRunner.run()"
+                "table_changes (create/drop DDL ledger) and export_changes "
+                "require the batch front-end — a streaming micro-batch sees "
+                "neither the discovered segment range nor whole segments; "
+                "use MultiTableRunner.run()"
             )
         self.runner = runner
         self.max_files_per_trigger = max_files_per_trigger
@@ -404,10 +388,9 @@ class MultiTableStream(StreamDriver):
 
             batch_df = explode_mt_batch_mutations(batch_df)
         batch = Batch(r, batch_df)
-        for fqtn, spec in r.specs.items():
+        for fqtn in r.specs:
             stats = batch.stats(fqtn)
             if stats["n"]:
-                apply_batch(r.targets[fqtn], r._decode(r._of_table(batch_df, spec), spec), stats=stats)
-                r._refresh_assembly(fqtn, state_buckets(stats))
+                r._apply(fqtn, batch_df, stats)
         if batch.rows:
             batch.commit("streamed")

@@ -4,8 +4,12 @@ One iteration: discover unprocessed segments -> scan the log slice
 (partition-pruned, position-pushdown) -> decode/envelope -> apply_batch. The
 pre-scan, the commit, the drain loop and the GC sweep are the ingest core's
 (streaming/ingest.py), which states the exactly-once contract and what each
-lineage status does. The log is read twice per batch: by the narrow pre-scan
-and by the reduction inside apply_batch.
+lineage status does. The slice step after the pre-scan (``_apply``: DDL
+replay, decode, checks, routing, apply_batch) is shared with the streaming
+front-end (streaming/stream.py). The log slice is scanned three times per
+batch: by the narrow pre-scan, by the tombstone-row collect inside
+apply_batch (when the batch carries tombstones) and by the reduction of its
+merge.
 
 Offset filtering is applied ONLY to segments known to be partially applied
 (status 'open': the position-limited live tail), up to the offset watermarks
@@ -32,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.decode import decode_payload, split_unsupported, with_envelope
 from ..lake.table import LakeTable
 from ..model import LINEAGE_SCHEMA, OFFSETS_SCHEMA, TRANSCRIPTS_SPEC
-from ..plans.apply import CdcTarget, apply_batch, gc_tombstones, state_buckets
+from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
 from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
 from .ingest import COMPLETES, Batch, drain, gc_sweep, open_bookkeeping
@@ -124,17 +128,13 @@ class CdcRunner:
         else:
             self.target = CdcTarget.create(spark, target_path, n_buckets=n_buckets)
         # maintained downstream view (incremental view maintenance in the
-        # ingest loop): a per-conversation transcript assembly kept exactly
-        # up to date — after each state commit the buckets containing this
-        # batch's conversations are re-assembled FROM STATE and COW-swapped.
-        # Deterministic-from-state => idempotent under batch replay, and the
-        # refresh lands BEFORE offsets (same crash-safety side as the state).
-        self.maintain_assembly = maintain_assembly
-        self.assembly = None
+        # ingest loop): a per-conversation transcript assembly that is part
+        # of the target — apply_batch re-assembles the touched buckets FROM
+        # STATE after each state commit, before offsets land
         if maintain_assembly:
             from ..operators.transcript import open_assembly
 
-            self.assembly = open_assembly(spark, f"{target_path}/assembly", self.target)
+            open_assembly(spark, f"{target_path}/assembly", self.target)
         # single-writer in-memory bookkeeping caches (recovered from the
         # tables once, here; maintained by the ingest core's commit)
         statuses = open_bookkeeping(
@@ -277,12 +277,6 @@ class CdcRunner:
         truncates the LAST segment at a byte position — the live-segment
         incremental-tail mode (S4): a later batch resumes past the
         checkpointed position."""
-        if self.schema_changes:
-            # R9: replay DDL onto the lake BEFORE applying batches that carry
-            # the new shape (SchemaChangeListener scenario)
-            from .schema_evolution import replay_schema_changes
-
-            replay_schema_changes(self.target, self.schema_changes, max(segment_ids))
         log = self._read(segment_ids)
         # resume-past-checkpoint filter, scoped to OPEN (partially applied)
         # segments only — see module docstring for why a global watermark
@@ -304,18 +298,7 @@ class CdcRunner:
         # the ingest core's one narrow pre-scan, over the raw slice: skipped
         # rows still advance offsets/lineage, as the reference reads past them
         batch = Batch(self, log, segment_ids)
-        log = self._decode(self._classify(log))
-        if self.validate_writetimes:
-            from ..operators.lww import validate_unique_writetimes
-
-            validate_unique_writetimes(log)
-        if self.routing_mode is not None:
-            from ..operators.routing import route_df
-
-            log = route_df(log, self.routing_mode, self.n_queues).drop("queue")
-        stats = batch.stats()
-        applied = apply_batch(self.target, log, stats=stats)
-        self._refresh_assembly(state_buckets(stats))
+        applied = self._apply(batch, self._classify(log), batch.stats())
 
         # a position-limited tail leaves the last segment un-finalized
         open_segment = max(segment_ids) if position_limit is not None and not reprocess else None
@@ -331,6 +314,28 @@ class CdcRunner:
             for seg in finalized:
                 self.commit_log_transfer.on_success(seg)
         return {**out, "n_skipped": batch.n_skipped, **applied}
+
+    def _apply(self, batch: Batch, log: DataFrame, stats: dict) -> dict:
+        """The slice step both front-ends run on a classified slice (this
+        runner's ``run_batch`` and ``CdcStream``'s micro-batches): R9 DDL
+        replay, decode, the opt-in writetime check, R1 routing, then
+        ``apply_batch`` with the pre-scan's ``stats``."""
+        if self.schema_changes:
+            # R9: replay DDL onto the lake BEFORE applying batches that carry
+            # the new shape (SchemaChangeListener scenario)
+            from .schema_evolution import replay_schema_changes
+
+            replay_schema_changes(self.target, self.schema_changes, max(batch.segment_ids))
+        log = self._decode(log)
+        if self.validate_writetimes:
+            from ..operators.lww import validate_unique_writetimes
+
+            validate_unique_writetimes(log)
+        if self.routing_mode is not None:
+            from ..operators.routing import route_df
+
+            log = route_df(log, self.routing_mode, self.n_queues).drop("queue")
+        return apply_batch(self.target, log, stats=stats)
 
     def _export(self, segment_ids: list[int]) -> None:
         """R4 export half: persist change envelopes for segments this batch
@@ -411,23 +416,11 @@ class CdcRunner:
         }
 
     # -- maintained downstream view (transcript assembly IVM) ----------------
-    def _refresh_assembly(self, buckets: list[int]) -> None:
-        """Re-assemble exactly the state buckets a batch touched and
-        COW-swap them (`LakeTable.overwrite_buckets`); whole-bucket
-        recompute-from-state makes the refresh idempotent AND makes deleted
-        conversations vanish (their bucket is rewritten without them). A
-        no-op without a maintained view."""
-        if self.assembly is None:
-            return
-        from ..operators.transcript import refresh_assembly
-
-        refresh_assembly(self.assembly, self.target, buckets)
-
     def read_assembly(self) -> DataFrame:
         """The maintained per-conversation transcript view."""
-        if self.assembly is None:
+        if self.target.assembly is None:
             raise ValueError("pass maintain_assembly=True to maintain the view")
-        return self.assembly.read().select(
+        return self.target.assembly.read().select(
             "conv_id", "n_turns", "last_turn", "total_chars", "transcript"
         )
 

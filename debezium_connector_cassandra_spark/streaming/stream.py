@@ -5,9 +5,10 @@ This is the push-style dual of CdcRunner's pull loop — the closest Spark
 analog of the reference's directory watcher (S1: blocks on ENTRY_CREATE,
 AbstractDirectoryWatcher.java:24): Spark's file-stream source tracks newly
 appearing files under ``segment_id=N/`` partitions, and each micro-batch
-flows through the ingest core (streaming/ingest.py) and ``apply_batch``
-(idempotent, so Spark's at-least-once foreachBatch contract still yields
-exactly-once table state).
+flows through the ingest core (streaming/ingest.py) and the runner's slice
+step ``CdcRunner._apply`` (idempotent, so Spark's at-least-once foreachBatch
+contract still yields exactly-once table state). Runner options that act on
+whole segments (export_changes, tracing, commit_log_transfer) are refused.
 
 Ordering caveat (why there is NO offset pre-filter here): the file source
 does not deliver files in (segment, position) order — with
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from ..functions.decode import split_unsupported
 from ..lake.table import LakeTable
 from ..model import MUTATION_LOG_SCHEMA
-from ..plans.apply import apply_batch, batch_stats, prescan, state_buckets
+from ..plans.apply import apply_batch
 from .ingest import Batch, StreamDriver
 from .runner import CdcRunner
 
@@ -68,6 +69,11 @@ class CdcStream(StreamDriver):
         most this many segments (the file-delivery analog of an event-time
         watermark bound); an availableNow drain still finalizes everything
         at the end regardless."""
+        if runner.export_changes or runner.commit_log_transfer is not None:
+            raise ValueError(
+                "export_changes/tracing rewrite and commit_log_transfer archives "
+                "whole segments, which a micro-batch never holds; use CdcRunner.run()"
+            )
         self.runner = runner
         self.max_files_per_trigger = max_files_per_trigger
         self.settle_lag_segments = settle_lag_segments
@@ -156,10 +162,7 @@ class CdcStream(StreamDriver):
                 self.finalize_ranges(
                     settle_below=int(self._max_segment_seen) - int(self.settle_lag_segments)
                 )
-        apply_batch(r.target, r._decode(batch_df), stats=stats)
-        # maintained view: refresh the touched buckets BEFORE offsets, same
-        # crash-safety side as the state (idempotent recompute)
-        r._refresh_assembly(state_buckets(stats))
+        r._apply(batch, batch_df, stats)
         batch.commit("streamed")
 
     def finalize_ranges(self, settle_below: int | None = None) -> dict:
@@ -192,22 +195,23 @@ class CdcStream(StreamDriver):
             raise ValueError("finalize_ranges requires unpaired_range_markers=True")
         from pyspark.sql import Window as W
 
-        # identity includes is_start: a start and an end marker sharing one
-        # commit-log position for the same conversation are DIFFERENT
-        # markers — deduping on position alone would drop one of the pair
+        # identity includes is_start and writetime: the markers of one
+        # conversation sharing a commit-log position (one logged batch) are
+        # DIFFERENT markers — deduping on position alone would drop some
         # nondeterministically and mis-pair every later marker of that conv
         ctx = self._range_ctx.read().dropDuplicates(
-            ["conv_id", "segment_id", "position", "is_start"]
+            ["conv_id", "segment_id", "position", "writetime", "is_start"]
         )
         if settle_below is not None:
             later = ctx.where(F.col("segment_id") > settle_below)
             ctx = ctx.where(F.col("segment_id") <= settle_below)
         else:
             later = None
-        # deterministic tie order at a shared position: the start marker
-        # sorts before its end marker (desc on the boolean puts True first)
+        # deterministic tie order at a shared position (all markers of one
+        # logged batch share it): by writetime, which a start and its end
+        # share, then the start before its end (desc puts True first)
         w = W.partitionBy("conv_id").orderBy(
-            "segment_id", "position", F.col("is_start").desc()
+            "segment_id", "position", "writetime", F.col("is_start").desc()
         )
         m = (
             ctx.withColumn("_prev_is_start", F.lag("is_start").over(w))
@@ -251,13 +255,7 @@ class CdcStream(StreamDriver):
                 "schema_version",
                 F.lit(False).alias("snapshot"),
             )
-            stats = batch_stats(prescan(paired, self.runner.targets))
-            n_paired = stats["n"]
-            if n_paired:
-                apply_batch(self.runner.target, paired, stats=stats)
-                # late range tombstones change state for their convs — the
-                # maintained view must follow
-                self.runner._refresh_assembly(state_buckets(stats))
+            n_paired = apply_batch(self.runner.target, paired)["n_events"]
             dangling = m.where(~(is_paired_end | is_consumed_start)).select(
                 *[f.name for f in RANGE_CTX_SCHEMA.fields]
             )

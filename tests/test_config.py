@@ -88,3 +88,28 @@ def test_build_runner_end_to_end(spark, tmp_path):
     assert r.gc_grace_us == 1050000 and r.segments_per_batch == 2
     r.run()
     assert r.target.read_transcripts().count() > 0
+
+
+def test_payload_format_reaches_the_decode(spark, tmp_path):
+    """``spark.payload.format`` means the log carries payload bytes: the
+    configured runner reads them and decodes them, to the same state as a
+    runner wired by hand."""
+    from debezium_connector_cassandra_spark.functions.binary_codec import (
+        encode_payload_binary,
+    )
+    from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
+
+    log = gen_mutation_log(spark, 600, n_convs=15, events_per_segment=200, seed=71)
+    log_path = str(tmp_path / "log")
+    write_mutation_log(encode_payload_binary(log), log_path)
+    c = CdcConfig({"spark.payload.format": "binary", "spark.n.buckets": "4"})
+    r = c.build_runner(spark, log_path, str(tmp_path / "t"))
+    r.run()
+    direct = CdcRunner(
+        spark, log_path, str(tmp_path / "t2"), n_buckets=4,
+        log_schema="infer", decode_binary=True, payload_format="binary",
+    )
+    direct.run()
+    got = sorted(map(tuple, r.target.read_transcripts().collect()))
+    assert got == sorted(map(tuple, direct.target.read_transcripts().collect()))
+    assert sum(row[3] is not None for row in got) > 0  # text cells decoded

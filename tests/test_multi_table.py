@@ -241,6 +241,25 @@ def test_multi_table_streaming_parity(spark, mt_log, tmp_path):
     )
     with pytest.raises(ValueError, match="table_changes"):
         MultiTableStream(r_ddl)
+    # so is one that exports changes: a micro-batch holds part of a segment,
+    # and the export rewrites whole segment partitions
+    r_export = MultiTableRunner(
+        spark, mt_log, str(tmp_path / "tx"), SPECS, export_changes=True
+    )
+    with pytest.raises(ValueError, match="export_changes"):
+        MultiTableStream(r_export)
+    # the single-table stream refuses the whole-segment runner options too
+    from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
+    from debezium_connector_cassandra_spark.streaming.stream import CdcStream
+
+    for opts, match in (
+        ({"export_changes": True}, "export_changes"),
+        ({"export_changes": True, "tracing": True}, "tracing"),
+        ({"commit_log_transfer": object()}, "commit_log_transfer"),
+    ):
+        r = CdcRunner(spark, mt_log, str(tmp_path / f"t_{match}"), **opts)
+        with pytest.raises(ValueError, match=match):
+            CdcStream(r)
 
 
 def test_multi_table_batch_mutations_parity(spark, mt_log, tmp_path):

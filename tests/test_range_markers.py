@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from debezium_connector_cassandra_spark.operators.tombstones import pair_range_markers
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
+    pack_batches,
     split_range_markers,
     write_mutation_log,
 )
@@ -50,6 +51,56 @@ def test_unpaired_markers_full_apply_matches_oracle(spark, tmp_path):
     )
     runner.run()
     assert_state_equal(runner.target.read_transcripts(), replay(log.toPandas()))
+
+
+def test_logged_batch_markers_match_oracle(spark, tmp_path):
+    """Logged batches of unpaired markers: after the explode a start marker
+    and its end marker share one (segment, position), and the pairing
+    window orders the start first — the state equals the replay of the
+    original paired log."""
+    log = gen_mutation_log(spark, 4000, seed=5)
+    log_path = str(tmp_path / "log")
+    write_mutation_log(pack_batches(split_range_markers(log), position_stride=16), log_path)
+    runner = CdcRunner(
+        spark, log_path, str(tmp_path / "t"), n_buckets=4,
+        batch_mutations=True, unpaired_range_markers=True,
+    )
+    runner.run()
+    assert_state_equal(runner.target.read_transcripts(), replay(log.toPandas()))
+
+
+def test_markers_of_one_logged_batch_pair_in_any_arrival_order(spark, tmp_path):
+    """All markers of an exploded logged batch share one (segment, position)
+    and may reach the pairing in any order: ties order by writetime (a
+    start and its end share one), then start before end — in the batch
+    window and in the stream's marker context alike."""
+    from debezium_connector_cassandra_spark.streaming.stream import CdcStream
+
+    S1 = (0, 1000, "r", "c1", None, 200, None, (2, True), None)
+    E1 = (0, 1000, "r", "c1", None, 200, None, None, (4, True))
+    S2 = (0, 1000, "r", "c1", None, 201, None, (8, True), None)
+    E2 = (0, 1000, "r", "c1", None, 201, None, None, (9, True))
+    markers = [E2, S2, E1, S1]
+    paired = pair_range_markers(_marker_rows(spark, markers).coalesce(1)).collect()
+    assert sorted(
+        (r["range_start"]["turn_idx"], r["range_end"]["turn_idx"]) for r in paired
+    ) == [(2, 4), (8, 9)]
+
+    log_path = str(tmp_path / "log")
+    ins = [
+        (0, t * 16, "i", "c1", t, 100, ("user", f"m{t}", None, None), None, None)
+        for t in range(1, 11)
+    ]
+    _marker_rows(spark, ins).write.partitionBy("segment_id").parquet(log_path)
+    runner = CdcRunner(
+        spark, log_path, str(tmp_path / "t"), n_buckets=4,
+        unpaired_range_markers=True,
+    )
+    stream = CdcStream(runner)
+    stream._handle_batch(_marker_rows(spark, ins + markers), 0)
+    assert stream.finalize_ranges() == {"n_paired": 2, "n_dangling": 0}
+    alive = sorted(r["turn_idx"] for r in runner.target.read_transcripts().collect())
+    assert alive == [1, 5, 6, 7, 10]
 
 
 def test_streaming_marker_drain_matches_batch_front_end(spark, tmp_path):

@@ -20,6 +20,7 @@ from debezium_connector_cassandra_spark.sources.snapshot import (
 )
 from debezium_connector_cassandra_spark.streaming.runner import CdcRunner
 from debezium_connector_cassandra_spark.streaming.schema_evolution import SchemaChange
+from debezium_connector_cassandra_spark.streaming.stream import CdcStream
 
 from .conftest import assert_state_equal
 from .oracle import replay
@@ -181,10 +182,13 @@ def test_snapshot_empty_table(spark, log_dir, tmp_path):
     assert stats is not None and stats["n_events"] == 0
 
 
-def test_schema_evolution_mid_stream(spark, tmp_path):
+@pytest.mark.parametrize("front_end", ["runner", "stream"])
+def test_schema_evolution_mid_stream(spark, tmp_path, front_end):
     """SchemaChangeListenerTest analog: segment 0 writes the original shape,
     a schema change adds column 'meta' effective at segment 1, segment 1
-    events carry the new cell; old rows read NULL meta."""
+    events carry the new cell; old rows read NULL meta. The streaming
+    front-end replays the DDL through the runner's slice step too, so both
+    end with the same state."""
     cell = T.StructType(
         [
             T.StructField("value", T.StringType(), True),
@@ -258,14 +262,40 @@ def test_schema_evolution_mid_stream(spark, tmp_path):
         schema_changes=(SchemaChange(2, "ADD COLUMN meta string", effective_segment=1),),
         log_schema="infer",
     )
-    runner.run(max_batches=1)  # segment 0, pre-evolution
-    assert "meta" not in [f.name for f in runner.target.state.schema().fields]
-    runner.run()  # segment 1 triggers the ALTER, then applies
+    if front_end == "runner":
+        runner.run(max_batches=1)  # segment 0, pre-evolution
+        assert "meta" not in [f.name for f in runner.target.state.schema().fields]
+        runner.run()  # segment 1 triggers the ALTER, then applies
+    else:
+        CdcStream(runner, max_files_per_trigger=1).run_available(str(tmp_path / "ckpt"))
     got = runner.target.read_transcripts().toPandas().sort_values("turn_idx").reset_index(drop=True)
     assert list(got.columns) == ["conv_id", "turn_idx", "role", "text", "tool", "ts", "meta"]
     assert got.loc[0, "meta"] == "m0"   # sparse update onto pre-evolution row
     assert got.loc[0, "text"] == "v1 text"  # old cell survives
     assert got.loc[1, "meta"] == "m2"
+
+
+@pytest.mark.parametrize("front_end", ["runner", "stream"])
+def test_duplicate_writetime_refused_by_both_front_ends(spark, tmp_path, front_end):
+    """validate_writetimes=True holds on either front-end: two upserts of
+    one key at one writetime fail the drain instead of resolving by
+    arrival order."""
+    from tests.test_apply import _manual_log
+
+    rows = [
+        (0, 0, 0, "i", "c1", 1, 1000, ("user", "a", None, None)),
+        (0, 16, 0, "u", "c1", 1, 1000, ("user", "b", None, None)),
+    ]
+    write_mutation_log(_manual_log(spark, rows), str(tmp_path / "log"))
+    runner = CdcRunner(
+        spark, str(tmp_path / "log"), str(tmp_path / "t"), n_buckets=4,
+        validate_writetimes=True,
+    )
+    with pytest.raises(Exception, match="duplicate writetime"):
+        if front_end == "runner":
+            runner.run()
+        else:
+            CdcStream(runner).run_available(str(tmp_path / "ckpt"))
 
 
 def test_ttl_expiry_exact_horizon(spark):
