@@ -161,18 +161,21 @@ class CdcConfig:
             "gc_grace_us": int(gc_grace) if gc_grace is not None else None,
             "gc_every_batches": self._int("spark.tombstone.gc.every.batches"),
         }
-        if "spark.payload.format" in self.props:
-            # a configured payload codec means the log carries payload bytes:
-            # read the on-disk schema (it keeps ``payload``) and decode them
-            out.update(decode_binary=True, log_schema="infer")
         return out
 
     def build_runner(self, spark, log_path: str, target_path: str, **overrides):
         """Construct a CdcRunner from this configuration (the
         CassandraConnectorTask wiring analog)."""
+        from .sources.log_scan import on_disk_columns
         from .streaming.runner import CdcRunner
 
-        kwargs = {**self.runner_kwargs(), **overrides}
+        kwargs = self.runner_kwargs()
+        if "payload" in (on_disk_columns(spark, log_path) or ()):
+            # the log carries serialized payload bytes (S5): read the on-disk
+            # schema, which keeps ``payload``, and decode them with the
+            # configured codec (``spark.payload.format``)
+            kwargs.update(decode_binary=True, log_schema="infer")
+        kwargs.update(overrides)
         return CdcRunner(spark, log_path, target_path, **kwargs)
 
     def build_multi_runner(

@@ -143,8 +143,11 @@ def explode_batch_mutations(log: DataFrame) -> DataFrame:
     rows (model.MUTATION_LOG_SCHEMA order).
 
     Every change carries the batch's offset; a member's NULL writetime
-    inherits the batch default (the no-USING-TIMESTAMP case). Pure Catalyst
-    explode — whole-stage codegen, the array never round-trips Python."""
+    inherits the batch default (the no-USING-TIMESTAMP case). Column
+    ``batch_member`` (appended last) is the change's index in its batch: the
+    log order among changes that share one offset, which range-marker
+    pairing needs. Pure Catalyst explode — whole-stage codegen, the array
+    never round-trips Python."""
     extra = [
         c
         for c in log.columns
@@ -164,7 +167,7 @@ def explode_batch_mutations(log: DataFrame) -> DataFrame:
         "position",
         "log_partition",
         "writetime AS _batch_wt",
-        "explode(changes) AS c",
+        "posexplode(changes) AS (batch_member, c)",
         "schema_version",
         "snapshot",
         *extra,
@@ -182,6 +185,7 @@ def explode_batch_mutations(log: DataFrame) -> DataFrame:
         "schema_version",
         "snapshot",
         *extra,
+        "batch_member",
     )
 
 

@@ -53,9 +53,10 @@ def pair_range_markers(log: DataFrame) -> DataFrame:
     Spark formulation: markers of one partition key pair by log order —
     lag(range_start) over (conv_id ORDER BY segment_id, position) pulls each
     end marker's preceding start marker. An exploded logged batch puts all
-    its markers at one (segment, position), so ties order by writetime (a
-    start and its end share one) and then start first, the order
-    ``CdcStream.finalize_ranges`` uses too; the paired event keeps the END
+    its markers at one (segment, position); there they order by their index
+    in the batch (``batch_member``, the log order), and a start orders
+    before an end at a position they still share, the order
+    ``CdcStream.finalize_ranges`` uses too. The paired event keeps the END
     marker's (writetime, segment, position) identity. Only op='r' rows enter
     the window shuffle (a small fraction of the stream); scope is one batch,
     matching the reference's per-commit-log pairing context. Malformed
@@ -66,9 +67,8 @@ def pair_range_markers(log: DataFrame) -> DataFrame:
 
     markers = log.where(F.col("op") == "r")
     rest = log.where(F.col("op") != "r")
-    w = W.partitionBy("conv_id").orderBy(
-        "segment_id", "position", "writetime", F.col("range_start").isNotNull().desc()
-    )
+    order = ["segment_id", "position"] + [c for c in ("batch_member",) if c in log.columns]
+    w = W.partitionBy("conv_id").orderBy(*order, F.col("range_start").isNotNull().desc())
     prev_start = F.lag(F.col("range_start")).over(w)
     prev_was_start = F.lag(F.col("range_start").isNotNull()).over(w)
     paired = (

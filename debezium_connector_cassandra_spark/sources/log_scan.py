@@ -35,6 +35,26 @@ def discover_segments(log_path: str) -> list[int]:
     return sorted(out)
 
 
+def on_disk_columns(spark, log_path: str) -> list[str] | None:
+    """The column names of the mutation log on disk, or None when the log is
+    not written yet. ONLY that case maps to None: a transient IO or
+    permission error raises, so a schema probe cannot silently read as
+    "no such column"."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(log_path).columns
+    except AnalysisException as e:
+        msg = str(e)
+        if (
+            "PATH_NOT_FOUND" in msg
+            or "Path does not exist" in msg
+            or "UNABLE_TO_INFER_SCHEMA" in msg
+        ):
+            return None
+        raise
+
+
 class CommitLogTransfer:
     """R7 post-processing plug-in surface — the reference's CommitLogTransfer
     (core/.../CommitLogTransfer.java; default impl moves processed segments

@@ -204,32 +204,33 @@ class MultiTableRunner:
         )
         return explode_mt_batch_mutations(log) if self.batch_mutations else log
 
-    def _apply(self, fqtn: str, log: DataFrame, stats: dict, segments=None) -> dict:
-        """The per-table slice step both front-ends share (``run_batch`` and
-        ``MultiTableStream``'s micro-batches): filter the batch to the table
-        and to ``segments``, decode against the table's spec, then
-        ``apply_batch`` with the pre-scan's ``stats``. With
-        ``export_changes`` (runner only: it consumes whole segments, so the
-        decoded slice is per-segment complete) the slice is exported too."""
+    def _of_table(self, fqtn: str, log: DataFrame) -> DataFrame:
+        """The table's rows of ``log``, decoded against its spec."""
         spec = self.specs[fqtn]
         sub = log.where((F.col("keyspace") == spec.keyspace) & (F.col("table") == spec.table))
-        if segments is not None:
-            sub = sub.where(F.col("segment_id").isin(*[int(s) for s in segments]))
-        sub = decode_payload(sub, spec, self.payload_format)
-        applied = apply_batch(self.targets[fqtn], sub, stats=stats)
-        if self.export_changes:
-            from ..lake.changes import envelope_rows
+        return decode_payload(sub, spec, self.payload_format)
 
-            self.changes_tables[fqtn].write_segments(
-                envelope_rows(
-                    sub,
-                    tombstones_on_delete=self.tombstones_on_delete,
-                    keyspace=spec.keyspace,
-                    table=spec.table,
-                ),
-                segments,
-            )
-        return applied
+    def _apply(self, fqtn: str, log: DataFrame, stats: dict) -> dict:
+        """The per-table slice step both front-ends share (``run_batch`` and
+        ``MultiTableStream``'s micro-batches): the table's decoded rows,
+        then ``apply_batch`` with the pre-scan's ``stats``."""
+        return apply_batch(self.targets[fqtn], self._of_table(fqtn, log), stats=stats)
+
+    def _export(self, fqtn: str, log: DataFrame, segment_ids: list[int]) -> None:
+        """R4 export half: the batch consumes whole segments, so the table's
+        decoded rows are per-segment complete — export directly from them."""
+        from ..lake.changes import envelope_rows
+
+        spec = self.specs[fqtn]
+        self.changes_tables[fqtn].write_segments(
+            envelope_rows(
+                self._of_table(fqtn, log),
+                tombstones_on_delete=self.tombstones_on_delete,
+                keyspace=spec.keyspace,
+                table=spec.table,
+            ),
+            segment_ids,
+        )
 
     # -- one batch --------------------------------------------------------------
     def run_batch(self, segment_ids: list[int]) -> dict:
@@ -243,7 +244,10 @@ class MultiTableRunner:
                 continue
             stats = batch.stats(fqtn, pending)
             if stats["n"]:
-                results[fqtn] = self._apply(fqtn, log, stats, pending)
+                sub = log.where(F.col("segment_id").isin(*[int(s) for s in pending]))
+                results[fqtn] = self._apply(fqtn, sub, stats)
+                if self.export_changes:
+                    self._export(fqtn, sub, pending)
             else:
                 results[fqtn] = {"n_events": 0}
             # this table's bookkeeping lands right after its apply commits —

@@ -38,7 +38,7 @@ from ..lake.table import LakeTable
 from ..model import LINEAGE_SCHEMA, OFFSETS_SCHEMA, TRANSCRIPTS_SPEC
 from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
 from ..sources.generator import read_mutation_log
-from ..sources.log_scan import discover_segments
+from ..sources.log_scan import discover_segments, on_disk_columns
 from .ingest import COMPLETES, Batch, drain, gc_sweep, open_bookkeeping
 
 
@@ -164,23 +164,8 @@ class CdcRunner:
         from ..model import BATCH_LOG_SCHEMA, MUTATION_LOG_SCHEMA
 
         base = BATCH_LOG_SCHEMA if self.batch_mutations else None
-        try:
-            on_disk = {f.name for f in self.spark.read.parquet(self.log_path).schema.fields}
-        except Exception as e:
-            # ONLY the log-not-written-yet case may fall back silently: a
-            # transient IO/permission error here would otherwise disable the
-            # table_kind auto-include guard this probe exists to enforce
-            from pyspark.errors import AnalysisException
-
-            msg = str(e)
-            if isinstance(e, AnalysisException) and (
-                "PATH_NOT_FOUND" in msg
-                or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg
-            ):
-                return base  # log not written yet — canonical schema
-            raise
-        if "table_kind" not in on_disk:
+        # a log not written yet reads with the canonical schema
+        if "table_kind" not in (on_disk_columns(self.spark, self.log_path) or ()):
             return base
         import warnings
 

@@ -45,6 +45,9 @@ RANGE_CTX_SCHEMA = T.StructType(
         T.StructField("segment_id", T.LongType(), False),
         T.StructField("position", T.LongType(), False),
         T.StructField("log_partition", T.IntegerType(), False),
+        # index in its logged batch (0 in a flat log): the log order among
+        # the markers of one batch, which share its position
+        T.StructField("batch_member", T.IntegerType(), False),
         T.StructField("writetime", T.LongType(), False),
         T.StructField("is_start", T.BooleanType(), False),
         T.StructField("method", T.StringType(), True),
@@ -134,12 +137,14 @@ class CdcStream(StreamDriver):
             # now. Context lands BEFORE the apply — a crash-replayed batch
             # just appends duplicates, which finalize_ranges dedupes.
             markers = batch_df.where(F.col("op") == "r")
+            member = F.col("batch_member") if r.batch_mutations else F.lit(0)
             self._range_ctx.append_small(
                 markers.select(
                     "conv_id",
                     "segment_id",
                     "position",
                     "log_partition",
+                    member.alias("batch_member"),
                     "writetime",
                     F.col("range_start").isNotNull().alias("is_start"),
                     F.coalesce(
@@ -195,23 +200,24 @@ class CdcStream(StreamDriver):
             raise ValueError("finalize_ranges requires unpaired_range_markers=True")
         from pyspark.sql import Window as W
 
-        # identity includes is_start and writetime: the markers of one
-        # conversation sharing a commit-log position (one logged batch) are
-        # DIFFERENT markers — deduping on position alone would drop some
-        # nondeterministically and mis-pair every later marker of that conv
+        # identity includes batch_member and is_start: the markers of one
+        # conversation sharing a commit-log position (one logged batch, or
+        # one mutation carrying both bounds) are DIFFERENT markers — deduping
+        # on position alone would drop some nondeterministically and
+        # mis-pair every later marker of that conv
         ctx = self._range_ctx.read().dropDuplicates(
-            ["conv_id", "segment_id", "position", "writetime", "is_start"]
+            ["conv_id", "segment_id", "position", "batch_member", "is_start"]
         )
         if settle_below is not None:
             later = ctx.where(F.col("segment_id") > settle_below)
             ctx = ctx.where(F.col("segment_id") <= settle_below)
         else:
             later = None
-        # deterministic tie order at a shared position (all markers of one
-        # logged batch share it): by writetime, which a start and its end
-        # share, then the start before its end (desc puts True first)
+        # log order: the markers of one logged batch share its position and
+        # order by their index in it; a start orders before an end at a
+        # position they still share (desc puts True first)
         w = W.partitionBy("conv_id").orderBy(
-            "segment_id", "position", "writetime", F.col("is_start").desc()
+            "segment_id", "position", "batch_member", F.col("is_start").desc()
         )
         m = (
             ctx.withColumn("_prev_is_start", F.lag("is_start").over(w))

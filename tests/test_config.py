@@ -91,9 +91,9 @@ def test_build_runner_end_to_end(spark, tmp_path):
 
 
 def test_payload_format_reaches_the_decode(spark, tmp_path):
-    """``spark.payload.format`` means the log carries payload bytes: the
-    configured runner reads them and decodes them, to the same state as a
-    runner wired by hand."""
+    """A log that carries payload bytes is read with its ``payload`` column
+    and decoded with the ``spark.payload.format`` codec, to the same state
+    as a runner wired by hand."""
     from debezium_connector_cassandra_spark.functions.binary_codec import (
         encode_payload_binary,
     )
@@ -113,3 +113,21 @@ def test_payload_format_reaches_the_decode(spark, tmp_path):
     got = sorted(map(tuple, r.target.read_transcripts().collect()))
     assert got == sorted(map(tuple, direct.target.read_transcripts().collect()))
     assert sum(row[3] is not None for row in got) > 0  # text cells decoded
+
+
+def test_default_payload_format_set_explicitly_on_a_cells_log(spark, tmp_path):
+    """Setting ``spark.payload.format`` to its default changes nothing: a
+    log with typed cells and no payload column drains as without the key."""
+    log = gen_mutation_log(spark, 600, n_convs=15, events_per_segment=200, seed=71)
+    log_path = str(tmp_path / "log")
+    write_mutation_log(log, log_path)
+    states = []
+    for name, props in (
+        ("t", {"spark.n.buckets": "4"}),
+        ("t2", {"spark.n.buckets": "4", "spark.payload.format": "json"}),
+    ):
+        r = CdcConfig(props).build_runner(spark, log_path, str(tmp_path / name))
+        assert r.decode_binary is False
+        r.run()
+        states.append(sorted(map(tuple, r.target.read_transcripts().collect())))
+    assert states[0] == states[1] and len(states[0]) > 0

@@ -1,6 +1,7 @@
 """D9 full form — unpaired range-tombstone bound markers paired per
 partition in log order (reference RangeTombstoneContext.java:20-40)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from debezium_connector_cassandra_spark.operators.tombstones import pair_range_markers
@@ -69,38 +70,44 @@ def test_logged_batch_markers_match_oracle(spark, tmp_path):
     assert_state_equal(runner.target.read_transcripts(), replay(log.toPandas()))
 
 
-def test_markers_of_one_logged_batch_pair_in_any_arrival_order(spark, tmp_path):
-    """All markers of an exploded logged batch share one (segment, position)
-    and may reach the pairing in any order: ties order by writetime (a
-    start and its end share one), then start before end — in the batch
-    window and in the stream's marker context alike."""
+@pytest.mark.parametrize("front_end", ["runner", "stream"])
+def test_two_ranges_in_one_logged_batch_pair_in_batch_order(spark, tmp_path, front_end):
+    """One logged batch without per-statement USING TIMESTAMP carries two
+    range deletes of one conversation, S1 E1 S2 E2: every marker shares the
+    batch's offset and writetime, so only the member's index in the batch
+    tells the log order. Both front-ends pair (S1,E1)=[1,3] and
+    (S2,E2)=[8,9] — never S1 S2 E1 E2, which would apply the wrong range."""
     from debezium_connector_cassandra_spark.streaming.stream import CdcStream
 
-    S1 = (0, 1000, "r", "c1", None, 200, None, (2, True), None)
-    E1 = (0, 1000, "r", "c1", None, 200, None, None, (4, True))
-    S2 = (0, 1000, "r", "c1", None, 201, None, (8, True), None)
-    E2 = (0, 1000, "r", "c1", None, 201, None, None, (9, True))
-    markers = [E2, S2, E1, S1]
-    paired = pair_range_markers(_marker_rows(spark, markers).coalesce(1)).collect()
-    assert sorted(
-        (r["range_start"]["turn_idx"], r["range_end"]["turn_idx"]) for r in paired
-    ) == [(2, 4), (8, 9)]
-
-    log_path = str(tmp_path / "log")
     ins = [
         (0, t * 16, "i", "c1", t, 100, ("user", f"m{t}", None, None), None, None)
         for t in range(1, 11)
     ]
-    _marker_rows(spark, ins).write.partitionBy("segment_id").parquet(log_path)
+    # positions 1024..1048 pack into one batch of four at stride 16
+    markers = [
+        (0, 1024, "r", "c1", None, 200, None, (1, True), None),
+        (0, 1032, "r", "c1", None, 200, None, None, (3, True)),
+        (0, 1040, "r", "c1", None, 200, None, (8, True), None),
+        (0, 1048, "r", "c1", None, 200, None, None, (9, True)),
+    ]
+    packed = pack_batches(
+        _marker_rows(spark, ins + markers), group_size=4, position_stride=16
+    ).withColumn(  # members take the batch writetime
+        "changes",
+        F.transform("changes", lambda c: c.withField("writetime", F.lit(None).cast("long"))),
+    )
+    log_path = str(tmp_path / "log")
+    write_mutation_log(packed, log_path)
     runner = CdcRunner(
         spark, log_path, str(tmp_path / "t"), n_buckets=4,
-        unpaired_range_markers=True,
+        batch_mutations=True, unpaired_range_markers=True,
     )
-    stream = CdcStream(runner)
-    stream._handle_batch(_marker_rows(spark, ins + markers), 0)
-    assert stream.finalize_ranges() == {"n_paired": 2, "n_dangling": 0}
+    if front_end == "runner":
+        runner.run()
+    else:
+        CdcStream(runner).run_available(str(tmp_path / "ckpt"))
     alive = sorted(r["turn_idx"] for r in runner.target.read_transcripts().collect())
-    assert alive == [1, 5, 6, 7, 10]
+    assert alive == [4, 5, 6, 7, 10]
 
 
 def test_streaming_marker_drain_matches_batch_front_end(spark, tmp_path):
