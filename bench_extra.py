@@ -12,6 +12,7 @@ Usage:
   python bench_extra.py compile [seed]       # per-batch compile cost
   python bench_extra.py jobs [seed]          # per-batch and per-job jobs/tasks/CPU/records
   python bench_extra.py skew [n_events] [pairs]  # uniform vs 40%-hot-key stress
+  python bench_extra.py bytes [seed]         # bytes one batch writes, by table, kind and column
 """
 
 from __future__ import annotations
@@ -369,6 +370,116 @@ def bench_skew(n_events: int = 2_000_000, pairs: int = 3) -> None:
         "state_rows": rows,
     }))
 
+def _files(root: str) -> dict[str, int]:
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            out[os.path.join(d, n)] = os.path.getsize(os.path.join(d, n))
+    return out
+
+
+def _file_kind(name: str) -> str:
+    if name.endswith(".crc"):
+        return "crc"
+    if name == "_SUCCESS":
+        return "success"
+    if name.endswith(".parquet"):
+        return "parquet"
+    if name.endswith(".json"):
+        return "manifest"
+    return "other"
+
+
+def _column_bytes(files: list[str]) -> dict[str, dict]:
+    """Per column of ``files`` (Parquet): compressed bytes, bytes per row,
+    compression and encodings, summed over every row group's footer entry."""
+    import pyarrow.parquet as pq
+
+    cols: dict[str, dict] = {}
+    rows = 0
+    for f in files:
+        md = pq.read_metadata(f)
+        rows += md.num_rows
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                c = rg.column(j)
+                e = cols.setdefault(c.path_in_schema, {"bytes": 0, "compression": set(), "encodings": set()})
+                e["bytes"] += c.total_compressed_size
+                e["compression"].add(c.compression)
+                e["encodings"].update(c.encodings)
+    return {
+        name: {"bytes": e["bytes"], "b_per_row": round(e["bytes"] / rows, 2) if rows else 0.0,
+               "compression": sorted(e["compression"]), "encodings": sorted(e["encodings"])}
+        for name, e in sorted(cols.items(), key=lambda kv: -kv[1]["bytes"])
+    }
+
+
+def _last_pid() -> int:
+    """The last process id given out in this PID namespace; the difference
+    of two readings, modulo ``pid_max``, counts the processes created in
+    between by this namespace alone."""
+    with open("/proc/sys/kernel/ns_last_pid") as f:
+        return int(f.read())
+
+
+def _pid_max() -> int:
+    with open("/proc/sys/kernel/pid_max") as f:
+        return int(f.read())
+
+
+def _reaped_child_cpu_s(pid: int) -> float:
+    """CPU of ``pid``'s children that exited and were reaped (cutime + cstime)."""
+    with open(f"/proc/{pid}/stat") as f:
+        raw = f.read()
+    fields = raw[raw.rindex(")") + 2 :].split()
+    return (int(fields[13]) + int(fields[14])) / os.sysconf("SC_CLK_TCK")
+
+
+def bench_bytes(seed: int = 1) -> None:
+    """What one steady_merge-shaped batch writes: the set-up batch, then one
+    timed batch (apply and GC sweep). Prints one JSON line per table of the
+    target with the files and bytes the timed batch created by kind
+    (``parquet``, ``manifest`` json, Hadoop ``crc`` sidecars, ``success``
+    markers), one line per state column (compressed bytes, B/row,
+    compression and encodings, from the new state files' footers), and a
+    summary line with the batch's events, total bytes and B/event, the
+    processes created during the batch (in this PID namespace) and the CPU
+    of the JVM's reaped child processes."""
+    from debezium_connector_cassandra_spark.session import get_spark
+
+    spark = get_spark(app_name="cdc-bench-extra-bytes")
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    workdir = tempfile.mkdtemp(prefix="cdc_bx_bytes_")
+    root = os.path.join(workdir, "target")
+    try:
+        runner, setup_segments = _steady_runner(spark, seed, 1, workdir)
+        batches = dict(_steady_batches(runner, setup_segments, 1))
+        batches["setup"]()
+        before, pid0, child = _files(root), _last_pid(), _reaped_child_cpu_s(pid)
+        n_events = sum(r["n_events"] for r in batches["timed1"]())
+        procs, child = (_last_pid() - pid0) % _pid_max(), _reaped_child_cpu_s(pid) - child
+        new = {p: n for p, n in _files(root).items() if p not in before}  # as perfbench counts
+        tables: dict[str, dict] = {}
+        for p, n in new.items():
+            table = os.path.relpath(p, root).split(os.sep)[0]
+            k = tables.setdefault(table, {}).setdefault(_file_kind(os.path.basename(p)), {"files": 0, "bytes": 0})
+            k["files"] += 1
+            k["bytes"] += n
+        for table, kinds in sorted(tables.items()):
+            print(json.dumps({"table": table, "bytes": sum(k["bytes"] for k in kinds.values()), **kinds}), flush=True)
+        state = [p for p in new if os.path.relpath(p, root).startswith("state" + os.sep) and p.endswith(".parquet")]
+        for col, e in _column_bytes(state).items():
+            print(json.dumps({"table": "state", "column": col, **e}), flush=True)
+        total = sum(new.values())
+        print(json.dumps({"seed": seed, "n_events": n_events, "bytes": total,
+                          "bytes_per_event": round(total / n_events, 2),
+                          "processes_created": procs,
+                          "jvm_reaped_child_cpu_s": round(child, 2)}), flush=True)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if mode == "queries":
@@ -381,5 +492,7 @@ if __name__ == "__main__":
         bench_jobs(int(sys.argv[2]) if len(sys.argv) > 2 else 1)
     elif mode == "skew":
         bench_skew(*[int(a) for a in sys.argv[2:4]])
+    elif mode == "bytes":
+        bench_bytes(int(sys.argv[2]) if len(sys.argv) > 2 else 1)
     else:
         raise SystemExit(f"unknown mode {mode}")

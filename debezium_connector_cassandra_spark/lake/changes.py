@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.decode import with_envelope
+from .table import spark_write_options
 
 
 def envelope_rows(
@@ -102,12 +103,14 @@ class ChangesExport:
         Dynamic partition overwrite: only the partitions present in the
         DataFrame are replaced; other segments' exports are untouched. At
         cluster scale this is the Iceberg `REPLACE WHERE segment_id IN (...)`
-        commit shape.
+        commit shape. Files take the lake's file encoding
+        (``lake.table.spark_write_options``).
         """
         (
             envelopes.where(F.col("segment_id").isin(*[int(s) for s in segment_ids]))
             .repartition("segment_id")
             .write.mode("overwrite")
+            .options(**spark_write_options(envelopes.schema))
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("segment_id")
             .parquet(self.path)

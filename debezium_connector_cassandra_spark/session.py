@@ -29,6 +29,17 @@ the JVM compile each shape once and reuse it:
   metaspace over an unbounded run. It is a static setting, so it is set
   before the session exists.
 
+Timestamps are written as INT64 microseconds
+(``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``), not Spark's
+legacy 12-byte INT96: 8 bytes that delta-encode, and the Parquet type every
+other reader agrees on. It is part of the lake's file encoding
+(``lake.table``, property 5), but Spark reads it from the session
+(``SQLConf``), which overrides a writer option, so it is set here and holds
+for every Parquet write of the session, the producer's log included. The
+lake writers set their codec per write (zstd); the session codec stays
+snappy, so the log is compressed as before. INT96 files written earlier
+still read back, because each file is decoded by its own footer.
+
 The JIT flag goes into ``spark.driver.defaultJavaOptions``, which Spark puts
 in front of the caller's ``spark.driver.extraJavaOptions``, so a caller that
 sets its own options keeps it. It covers the driver JVM only, and only when
@@ -84,6 +95,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # INT64 timestamps, not INT96 (module docstring)
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")

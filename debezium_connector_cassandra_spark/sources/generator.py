@@ -18,6 +18,8 @@ funneled into conv_0 to exercise salted reduction + AQE skew handling
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..model import MUTATION_LOG_SCHEMA
@@ -581,16 +583,28 @@ def write_mutation_log(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").partitionBy("segment_id").parquet(path)
 
 
-def read_mutation_log(spark: SparkSession, path: str, schema=None) -> DataFrame:
+def read_mutation_log(spark: SparkSession, path: str, schema=None, segments=None) -> DataFrame:
     """Read the log. ``schema=None`` uses the canonical schema; pass
     ``"infer"`` for evolved logs whose cells struct is wider (schema-change
-    scenario), or an explicit StructType."""
+    scenario), or an explicit StructType. ``segments`` restricts the read to
+    those segment ids by reading their ``segment_id=N`` directories under
+    ``basePath``, so Spark lists only their files; a read of the whole log
+    lists every file of every segment before it prunes by ``segment_id``."""
+    reader, paths = spark.read, [path]
+    if segments is not None:
+        dirs = [os.path.join(path, f"segment_id={int(s)}") for s in segments]
+        dirs = [d for d in dirs if os.path.isdir(d) and os.listdir(d)]
+        if dirs:  # else the filter below leaves the whole-log read empty
+            reader, paths = reader.option("basePath", path), dirs
     if schema == "infer":
-        df = spark.read.parquet(path)
+        df = reader.parquet(*paths)
         names = [f.name for f in MUTATION_LOG_SCHEMA.fields if f.name in df.columns]
         extra = [c for c in df.columns if c not in names]
-        return df.select(*names, *extra)
-    schema = schema or MUTATION_LOG_SCHEMA
-    df = spark.read.schema(schema).parquet(path)
-    # partition column comes back last; restore canonical order
-    return df.select(*[f.name for f in schema.fields])
+        df = df.select(*names, *extra)
+    else:
+        schema = schema or MUTATION_LOG_SCHEMA
+        # partition column comes back last; restore canonical order
+        df = reader.schema(schema).parquet(*paths).select(*[f.name for f in schema.fields])
+    if segments is not None:
+        df = df.where(F.col("segment_id").isin(*[int(s) for s in segments]))
+    return df

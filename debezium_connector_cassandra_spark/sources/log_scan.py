@@ -12,9 +12,11 @@ Reference analogs:
   offsets table stores (segment_id, position) per log partition;
   ``CdcRunner.run_batch`` reads only pending segments and filters an open
   segment's rows at or below its watermark, predicates pushed down to the
-  Parquet scan — segment_id is the physical partition column, so fully
-  processed segments are pruned without opening a file, and a partially
-  processed segment re-reads only rows past the checkpointed position.
+  Parquet scan — segment_id is the physical partition column, and a batch
+  lists only its own ``segment_id=N`` directories
+  (``generator.read_mutation_log(segments=...)``), so fully processed
+  segments are never listed or opened, and a partially processed segment
+  re-reads only rows past the checkpointed position.
 """
 
 from __future__ import annotations

@@ -43,6 +43,7 @@ from ..model import (
     TableSpec,
 )
 from ..plans.apply import CdcTarget, apply_batch, gc_tombstones
+from ..sources.generator import read_mutation_log
 from ..sources.log_scan import discover_segments
 from .ingest import COMPLETES, Batch, StreamDriver, drain, gc_sweep, open_bookkeeping
 
@@ -199,9 +200,7 @@ class MultiTableRunner:
         from ..model import MT_BATCH_LOG_SCHEMA
 
         schema = MT_BATCH_LOG_SCHEMA if self.batch_mutations else MULTI_TABLE_LOG_SCHEMA
-        log = self.spark.read.schema(schema).parquet(self.log_path).where(
-            F.col("segment_id").isin(*[int(s) for s in segment_ids])
-        )
+        log = read_mutation_log(self.spark, self.log_path, schema=schema, segments=segment_ids)
         return explode_mt_batch_mutations(log) if self.batch_mutations else log
 
     def _of_table(self, fqtn: str, log: DataFrame) -> DataFrame:

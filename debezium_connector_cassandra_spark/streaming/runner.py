@@ -198,13 +198,11 @@ class CdcRunner:
 
     # -- the per-row pipeline (shared with CdcStream) ----------------------
     def _read(self, segment_ids: list[int]) -> DataFrame:
-        """Scan the named segments (partition-pruned). Logged batches
-        explode first, so every change of a batch shares its offset and
-        (default) writetime and the offset checkpoint advances atomically
-        per batch (handleMutation:255-272)."""
-        log = read_mutation_log(self.spark, self.log_path, schema=self.log_schema).where(
-            F.col("segment_id").isin(*[int(s) for s in segment_ids])
-        )
+        """Scan the named segments (only their directories are listed).
+        Logged batches explode first, so every change of a batch shares its
+        offset and (default) writetime and the offset checkpoint advances
+        atomically per batch (handleMutation:255-272)."""
+        log = read_mutation_log(self.spark, self.log_path, schema=self.log_schema, segments=segment_ids)
         if self.batch_mutations:
             from ..functions.decode import explode_batch_mutations
 

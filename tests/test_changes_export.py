@@ -10,6 +10,7 @@ position-limited tails (overwrite-by-segment idempotence).
 import pytest
 from pyspark.sql import functions as F
 
+from debezium_connector_cassandra_spark.lake.changes import ChangesExport
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
     write_mutation_log,
@@ -134,3 +135,25 @@ def test_export_pairs_unpaired_range_markers(spark, tmp_path):
     runner.run()
     t_rows = runner.changes.read().where(F.col("envelope_op") == "t")
     assert t_rows.count() == n_r
+
+
+def test_export_files_have_the_lake_encoding(spark, tmp_path):
+    """The export writes with the lake's file encoding, nested 64-bit
+    fields included, and leaves no ``_SUCCESS`` marker."""
+    import os
+
+    from tests.test_lake import assert_lake_encoding, assert_no_success_markers
+
+    env = spark.range(300).select(
+        (F.col("id") % 2).alias("segment_id"),
+        (F.col("id") * 16).alias("position"),
+        F.struct((F.col("id") * 1013).alias("wt"), F.concat(F.lit("t"), F.col("id").cast("string")).alias("text")).alias("after"),
+    )
+    out = ChangesExport(spark, str(tmp_path / "changes"))
+    out.write_segments(env, [0, 1])
+    files = [os.path.join(d, f) for d, _, fs in os.walk(out.path) for f in fs if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        assert_lake_encoding(f)
+    assert_no_success_markers(out.path)
+    assert out.read().count() == 300

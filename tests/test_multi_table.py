@@ -101,6 +101,15 @@ def _oracle_for(spark, mt_log, spec):
     return oracle
 
 
+def test_batch_reads_only_its_segments(spark, mt_log, tmp_path):
+    """A multi-table batch lists only its own segments' directories."""
+    from .test_runner import _segments_of
+
+    runner = MultiTableRunner(spark, mt_log, str(tmp_path / "tgt"), SPECS)
+    assert len(runner.pending_segments()) == 8
+    assert _segments_of(runner._read_log([1, 5]).inputFiles()) == {1, 5}
+
+
 def test_multi_table_states_match_oracle(spark, mt_log, tmp_path):
     runner = MultiTableRunner(
         spark, mt_log, str(tmp_path / "tgt"), SPECS, segments_per_batch=3

@@ -5,12 +5,15 @@ Mirrors FileOffsetWriterTest / ErrorCommitLogReprocessingTest /
 SnapshotProcessorTest / SchemaChangeListenerTest scenarios (SURVEY §5).
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Row, types as T
 
 from debezium_connector_cassandra_spark.sources.generator import (
     gen_mutation_log,
+    pack_batches,
     write_mutation_log,
 )
 from debezium_connector_cassandra_spark.sources.snapshot import (
@@ -455,3 +458,28 @@ def test_error_isolation_with_commit_log_transfer(spark, tmp_path):
     runner.reprocess([2])
     assert runner.errored_segments() == set()
     assert_state_equal(runner.target.read_transcripts(), replay(log.toPandas()))
+
+
+def _segments_of(files):
+    return {int(re.search(r"segment_id=(\d+)", f).group(1)) for f in files}
+
+
+@pytest.mark.parametrize("shape", ["plain", "infer", "batch_mutations"])
+def test_batch_reads_only_its_segments(spark, tmp_path, shape):
+    """A batch's relation holds only its own segments' files: the runner
+    lists their ``segment_id=N`` directories, not the whole log (a
+    whole-log read lists every segment, then prunes by segment_id)."""
+    log = gen_mutation_log(spark, 1200, n_convs=20, events_per_segment=200, seed=41)
+    if shape == "batch_mutations":
+        log = pack_batches(log, group_size=4)
+    path = str(tmp_path / "log")
+    write_mutation_log(log, path)
+    runner = CdcRunner(
+        spark, path, str(tmp_path / "t"), n_buckets=2,
+        log_schema="infer" if shape == "infer" else None,
+        batch_mutations=shape == "batch_mutations",
+    )
+    assert len(runner.pending_segments()) == 6
+    batch = runner._read([2, 4])
+    assert _segments_of(batch.inputFiles()) == {2, 4}
+    assert {r["segment_id"] for r in batch.select("segment_id").distinct().collect()} == {2, 4}

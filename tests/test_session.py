@@ -19,6 +19,12 @@ def test_jvm_runs_at_c1_tier(spark):
     assert "-XX:TieredStopAtLevel=1" in args
 
 
+def test_timestamps_are_written_as_int64_micros(spark):
+    """Part of the lake's file encoding: Spark takes the Parquet timestamp
+    type from the session, so ``get_spark`` sets it (not INT96)."""
+    assert spark.conf.get("spark.sql.parquet.outputTimestampType") == "TIMESTAMP_MICROS"
+
+
 def test_later_batches_reuse_generated_classes(spark, tmp_path):
     log = gen_mutation_log(spark, 10_000, n_convs=200, max_turns=20, events_per_segment=2_000, seed=31)
     write_mutation_log(log, str(tmp_path / "log"))
